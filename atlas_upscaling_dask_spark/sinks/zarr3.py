@@ -29,11 +29,15 @@ Scale design mirrors the v2 module: export is ONE exchange — a hash
 repartition on the shard key + sortWithinPartitions so each task
 streams its shards in key order, holding exactly one encoded shard in
 memory before the atomic file publish (unsharded export is the same
-zero-shuffle mapInArrow as v2).  The scan derives the shard grid
-arithmetically from ``spark.range`` (nothing materialized on the
-driver), reads each shard's index executor-side, validates its crc32c,
-and decodes only present inner chunks — absent inner chunks and absent
-whole shards synthesize ``fill_value`` blocks in-kernel.  Output
+zero-shuffle mapInArrow as v2).  A write is ONE Spark job: the kernels
+infer each row's chunk shape from its own coordinates and return that
+evidence in their receipts, the driver checks that every level sits on
+one regular grid, and only then publishes the ``zarr.json`` documents —
+metadata last, as the store's commit marker.  The scan derives the
+shard grid arithmetically from ``spark.range`` (nothing materialized on
+the driver), reads each shard's index executor-side, validates its
+crc32c, and decodes only present inner chunks — absent inner chunks and
+absent whole shards synthesize ``fill_value`` blocks in-kernel.  Output
 batches flush at the same byte bound as the v2 scan.
 """
 
@@ -50,7 +54,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..volume import CHUNK_SCHEMA, PAYLOAD_DTYPE, VolumeMeta, _chunk_batch
-from .ome_zarr import _put_bytes
+from .ome_zarr import (
+    _finish_grids,
+    _note_grid,
+    _padded_block,
+    _put_bytes,
+    _receipt_batches,
+    _receipt_schema,
+    _row_coords,
+    _row_grid,
+    _with_level,
+)
 
 MISSING = (1 << 64) - 1
 
@@ -178,21 +192,39 @@ def write_zarr3(
     ``sharding_indexed`` shards (chunk grid addresses shards, index at
     end, crc32c-checked).  All-zero chunks are omitted (= fill_value);
     shards with no surviving chunk write no object at all.
+
+    One Spark job: the write kernel (:func:`export_zarr3_frame`)
+    publishes the chunk objects, and its receipts tell the driver each
+    level's chunk shape and array shape (max origin+extent, overridden
+    per level by ``shapes``).  A frame that does not sit on one regular
+    grid per level, or whose levels are not 0..n-1, raises and leaves
+    no store behind.  The ``zarr.json`` documents are published last:
+    they are the commit marker, so a reader that finds them finds every
+    chunk.  Overwrite is destructive (K3).
     """
     import shutil
 
-    from .ome_zarr import derive_level_grids
-
     _check_shard(shard)
-    chunks, grids = derive_level_grids(chunks, shapes, "write_zarr3")
-    levels = sorted(grids)
-
+    _codecs_json(codec, clevel)  # reject a bad codec before the overwrite
+    frame = export_zarr3_frame(chunks, path, codec, clevel, shard)
     if os.path.exists(path):
         shutil.rmtree(path)  # K3 destructive overwrite
+    try:
+        totals, grids = _finish_grids(
+            frame.collect(), _COUNTERS3, shapes, "write_zarr3"
+        )
+    except Exception:
+        shutil.rmtree(path, ignore_errors=True)
+        raise
+    _publish_metadata(path, grids, meta, codec, clevel, shard, name)
+    return totals
 
-    # ---- driver-side metadata ----
+
+def _publish_metadata(path, grids, meta, codec, clevel, shard, name) -> None:
+    """Array ``zarr.json`` per level, then the group ``zarr.json`` that
+    names them — written after every chunk object exists."""
     datasets = []
-    for i in levels:
+    for i in sorted(grids):
         kz, ky, kx, zd, yd, xd = grids[i]
         if shard is None:
             codecs = _codecs_json(codec, clevel)
@@ -272,29 +304,8 @@ def write_zarr3(
     }
     _put_bytes(os.path.join(path, "zarr.json"), json.dumps(group, indent=4).encode())
 
-    frame = export_zarr3_frame(chunks, path, grids, codec, clevel, shard)
-    receipts = (
-        frame.groupBy("level")
-        .agg(
-            F.sum("n_objects").alias("n_objects"),
-            F.sum("n_chunks").alias("n_chunks"),
-            F.sum("n_bytes").alias("n_bytes"),
-            F.sum("n_skipped").alias("n_skipped"),
-        )
-        .collect()
-    )
-    return {
-        int(r["level"]): {
-            "n_objects": int(r["n_objects"]),
-            "n_chunks": int(r["n_chunks"]),
-            "n_bytes": int(r["n_bytes"]),
-            "n_skipped": int(r["n_skipped"]),
-        }
-        for r in receipts
-    }
 
-
-_RECEIPT3 = "level int, n_objects long, n_chunks long, n_bytes long, n_skipped long"
+_COUNTERS3 = ("n_objects", "n_chunks", "n_bytes", "n_skipped")
 
 
 def _check_shard(shard) -> None:
@@ -313,7 +324,7 @@ def _compress_raw_payloads(chunks: DataFrame) -> DataFrame:
     moves megabytes instead of the full logical volume.  Rows whose
     payload is already compressed pass through untouched.  Result-
     invariant: every consumer decodes per row via the ``codec`` column
-    (``_decode_rows`` → ``_decode_payload``)."""
+    (``_padded_block`` → ``_decode_payload``)."""
     schema = chunks.schema
     names = [f.name for f in schema.fields]
     ci, pi = names.index("codec"), names.index("payload")
@@ -343,22 +354,24 @@ def _compress_raw_payloads(chunks: DataFrame) -> DataFrame:
 def export_zarr3_frame(
     chunks: DataFrame,
     path: str,
-    grids: dict[int, tuple],
     codec: str,
     clevel: int,
     shard: tuple[int, int, int] | None,
 ) -> DataFrame:
     """The unexecuted write-kernel frame (see ``export_ome_zarr_frame``
-    for the audit rationale).  Unsharded: zero-shuffle mapInArrow.
-    Sharded: ONE hash exchange on (level, shard key) + in-partition
-    sort, then a streaming kernel that holds one encoded shard."""
+    for the audit rationale and the receipt's grid evidence).
+    Unsharded: zero-shuffle mapInArrow.  Sharded: ONE hash exchange on
+    (level, shard key) + in-partition sort, then a streaming kernel
+    that holds one encoded shard."""
     cols = [
         "level", "cz", "cy", "cx", "z0", "y0", "x0", "dz", "dy", "dx",
         "codec", "payload",
     ]
+    chunks = _with_level(chunks)
+    schema = _receipt_schema(_COUNTERS3)
     if shard is None:
         return chunks.select(*cols).mapInArrow(
-            _unsharded_kernel(path, grids, codec, clevel), schema=_RECEIPT3
+            _unsharded_kernel(path, codec, clevel), schema=schema
         )
     _check_shard(shard)
     sz, sy, sx = (int(s) for s in shard)
@@ -386,39 +399,11 @@ def export_zarr3_frame(
         .sortWithinPartitions("level", "_sz", "_sy", "_sx")
     )
     return spread.mapInArrow(
-        _sharded_kernel(path, grids, codec, clevel, (sz, sy, sx)),
-        schema=_RECEIPT3,
+        _sharded_kernel(path, codec, clevel, (sz, sy, sx)), schema=schema
     )
 
 
-def _decode_rows(d: dict, i: int, grids: dict[int, tuple]):
-    from ..volume import _decode_payload
-
-    lvl = d["level"][i]
-    kz, ky, kx, zd, yd, xd = grids[lvl]
-    dz, dy, dx = d["dz"][i], d["dy"][i], d["dx"][i]
-    z0, y0, x0 = d["z0"][i], d["y0"][i], d["x0"][i]
-    if z0 % kz or y0 % ky or x0 % kx:
-        raise ValueError(
-            f"write_zarr3: chunk origin ({z0},{y0},{x0}) not aligned to "
-            f"grid ({kz},{ky},{kx}) at level {lvl}; rechunk() first"
-        )
-    block = np.frombuffer(
-        _decode_payload(
-            d["payload"][i], d["codec"][i], dz * dy * dx * PAYLOAD_DTYPE.itemsize
-        ),
-        dtype=PAYLOAD_DTYPE,
-    ).reshape(dz, dy, dx)
-    if not block.any():
-        return lvl, None, None  # fill chunk: omit
-    if (dz, dy, dx) != (kz, ky, kx):
-        full = np.zeros((kz, ky, kx), dtype=PAYLOAD_DTYPE)
-        full[:dz, :dy, :dx] = block
-        block = full
-    return lvl, (z0 // kz, y0 // ky, x0 // kx), np.ascontiguousarray(block).tobytes()
-
-
-def _unsharded_kernel(path, grids, codec, clevel):
+def _unsharded_kernel(path, codec, clevel):
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from atlas_upscaling_dask_spark.malloc_tuning import pin_large_alloc_reuse
         pin_large_alloc_reuse()
@@ -427,61 +412,55 @@ def _unsharded_kernel(path, grids, codec, clevel):
         for batch in batches:
             d = batch.to_pydict()
             for i in range(len(d["cz"])):
-                lvl, key, raw = _decode_rows(d, i, grids)
-                st = stats.setdefault(lvl, [0, 0, 0, 0])
-                if key is None:
+                lvl = d["level"][i]
+                c, o, e = _row_coords(d, i)
+                k = _row_grid("write_zarr3", lvl, c, o, e)
+                st = _note_grid(stats, lvl, 4, k, o, e)
+                raw = _padded_block(d, i, e, k)
+                if raw is None:
                     st[3] += 1
                     continue
                 data = _encode_chunk(raw, codec, clevel, zc)
                 _put_bytes(
-                    os.path.join(path, str(lvl), "c", *(str(k) for k in key)),
+                    os.path.join(path, str(lvl), "c", *(str(v) for v in c)),
                     data,
                 )
                 st[0] += 1
                 st[1] += 1
                 st[2] += len(data)
-        for lvl, (o, n, b, s) in stats.items():
-            yield _receipt3(lvl, o, n, b, s)
+        yield from _receipt_batches(stats, _COUNTERS3)
 
     return kernel
 
 
-def _receipt3(lvl, o, n, b, s):
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array([lvl], type=pa.int32()),
-            pa.array([o], type=pa.int64()),
-            pa.array([n], type=pa.int64()),
-            pa.array([b], type=pa.int64()),
-            pa.array([s], type=pa.int64()),
-        ],
-        ["level", "n_objects", "n_chunks", "n_bytes", "n_skipped"],
-    )
+def _shard_bytes(parts: dict[tuple, bytes], shard: tuple) -> bytes:
+    """One shard object: payload concat + (offset,nbytes) index in C
+    order over the inner-chunk grid + crc32c, index at end."""
+    sz, sy, sx = shard
+    idx = np.full((sz * sy * sx, 2), MISSING, dtype=np.uint64)
+    blobs: list[bytes] = []
+    off = 0
+    for (iz, iy, ix), data in sorted(parts.items()):
+        pos = (iz * sy + iy) * sx + ix
+        idx[pos, 0] = off
+        idx[pos, 1] = len(data)
+        blobs.append(data)
+        off += len(data)
+    raw_idx = idx.tobytes()
+    return b"".join(blobs) + raw_idx + struct.pack("<I", crc32c(raw_idx))
 
 
-def _sharded_kernel(path, grids, codec, clevel, shard):
+def _sharded_kernel(path, codec, clevel, shard):
     sz, sy, sx = shard
 
     def flush(lvl, skey, parts, stats):
-        # assemble one shard: payload concat + (offset,nbytes) index in
-        # C order over the sz*sy*sx inner-chunk grid + crc32c, at end
         if not parts:
             return
-        idx = np.full((sz * sy * sx, 2), MISSING, dtype=np.uint64)
-        blobs: list[bytes] = []
-        off = 0
-        for (iz, iy, ix), data in sorted(parts.items()):
-            pos = (iz * sy + iy) * sx + ix
-            idx[pos, 0] = off
-            idx[pos, 1] = len(data)
-            blobs.append(data)
-            off += len(data)
-        raw_idx = idx.tobytes()
-        payload = b"".join(blobs) + raw_idx + struct.pack("<I", crc32c(raw_idx))
+        payload = _shard_bytes(parts, shard)
         _put_bytes(
             os.path.join(path, str(lvl), "c", *(str(k) for k in skey)), payload
         )
-        st = stats.setdefault(lvl, [0, 0, 0, 0])
+        st = stats[lvl]
         st[0] += 1
         st[1] += len(parts)
         st[2] += len(payload)
@@ -496,34 +475,28 @@ def _sharded_kernel(path, grids, codec, clevel, shard):
         for batch in batches:
             d = batch.to_pydict()
             for i in range(len(d["cz"])):
-                lvl, key, raw = _decode_rows(d, i, grids)
+                lvl = d["level"][i]
+                c, o, e = _row_coords(d, i)
+                # the row check ties the chunk coords the shard key was
+                # hashed on to the origins, so the index slot below can
+                # never wrap into another chunk's entry
+                k = _row_grid("write_zarr3", lvl, c, o, e)
                 skey = (d["_sz"][i], d["_sy"][i], d["_sx"][i])
                 if cur is not None and (lvl, skey) != cur:
                     flush(cur[0], cur[1], parts, stats)
                     parts = {}
                 cur = (lvl, skey)
-                st = stats.setdefault(lvl, [0, 0, 0, 0])
-                if key is None:
+                st = _note_grid(stats, lvl, 4, k, o, e)
+                raw = _padded_block(d, i, e, k)
+                if raw is None:
                     st[3] += 1
                     continue
-                # the shard file is addressed by the PARTITION key
-                # (cz DIV s); the index slot must come from the SAME
-                # chunk coordinate or an inconsistent frame (cz not
-                # matching z0//kz) would wrap a negative slot into
-                # another chunk's entry and corrupt the shard silently
-                if (key[0] // sz, key[1] // sy, key[2] // sx) != skey:
-                    raise ValueError(
-                        f"write_zarr3: chunk coords cz/cy/cx disagree "
-                        f"with origins z0/y0/x0 (origin-derived chunk "
-                        f"{key} is outside shard {skey}); fix the frame"
-                    )
-                inner = (key[0] - skey[0] * sz, key[1] - skey[1] * sy,
-                         key[2] - skey[2] * sx)
+                inner = (c[0] - skey[0] * sz, c[1] - skey[1] * sy,
+                         c[2] - skey[2] * sx)
                 parts[inner] = _encode_chunk(raw, codec, clevel, zc)
         if cur is not None:
             flush(cur[0], cur[1], parts, stats)
-        for lvl, (o, n, b, s) in stats.items():
-            yield _receipt3(lvl, o, n, b, s)
+        yield from _receipt_batches(stats, _COUNTERS3)
 
     return kernel
 
@@ -975,7 +948,6 @@ def _update_zarr3_plan(
         if c.get("name") in ("zstd", "gzip"):
             clevel = int((c.get("configuration") or {}).get("level", 1))
     lvl_dir = os.path.join(path, str(level), "c")
-    grids = {int(level): (kz, ky, kx, *meta["shape"])}
 
     cols = [
         "cz", "cy", "cx", "z0", "y0", "x0", "dz", "dy", "dx",
@@ -1033,27 +1005,11 @@ def _update_zarr3_plan(
                 changed = True
         if not changed:
             return  # pure no-op (e.g. zeroing an already-absent chunk)
-        if not existing:
-            # whole shard now fill: publish an all-MISSING index rather
-            # than os.remove — keeps the atomic old-or-new visibility
-            # contract (a concurrent scan's exists() probe + open would
-            # otherwise race a deletion)
-            idx = np.full((n_inner, 2), MISSING, dtype=np.uint64)
-            raw_idx = idx.tobytes()
-            _put_bytes(fpath, raw_idx + struct.pack("<I", crc32c(raw_idx)))
-            stats[0] += 1
-            return
-        idx = np.full((n_inner, 2), MISSING, dtype=np.uint64)
-        blobs, off = [], 0
-        for (iz, iy, ix), data in sorted(existing.items()):
-            pos = (iz * sy + iy) * sx + ix
-            idx[pos, 0], idx[pos, 1] = off, len(data)
-            blobs.append(data)
-            off += len(data)
-        raw_idx = idx.tobytes()
-        _put_bytes(
-            fpath, b"".join(blobs) + raw_idx + struct.pack("<I", crc32c(raw_idx))
-        )
+        # a shard left with no chunk publishes an all-MISSING index
+        # rather than os.remove — keeps the atomic old-or-new visibility
+        # contract (a concurrent scan's exists() probe + open would
+        # otherwise race a deletion)
+        _put_bytes(fpath, _shard_bytes(existing, (sz, sy, sx)))
         stats[0] += 1
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -1066,29 +1022,19 @@ def _update_zarr3_plan(
         for batch in batches:
             d = batch.to_pydict()
             for i in range(len(d["cz"])):
-                lvl, key, raw = _decode_rows(d, i, grids)
+                c, o, e = _row_coords(d, i)
+                # on the store's grid, so the slot stays inside the shard
+                _row_grid("update_zarr3", level, c, o, e, (kz, ky, kx))
+                raw = _padded_block(d, i, e, (kz, ky, kx))
                 skey = (d["_sz"][i], d["_sy"][i], d["_sx"][i])
                 if cur is not None and skey != cur:
                     rewrite(cur, parts, stats)
                     parts = {}
                 cur = skey
-                ckey = (d["cz"][i], d["cy"][i], d["cx"][i])
-                if key is not None and key != ckey:
-                    raise ValueError(
-                        f"update_zarr3: chunk coords {ckey} disagree with "
-                        f"origin-derived {key}; fix the frame"
-                    )
-                inner = (
-                    ckey[0] - skey[0] * sz,
-                    ckey[1] - skey[1] * sy,
-                    ckey[2] - skey[2] * sx,
-                )
-                if not all(0 <= v < s for v, s in zip(inner, (sz, sy, sx))):
-                    raise ValueError(
-                        f"update_zarr3: chunk {ckey} outside shard {skey}"
-                    )
+                inner = (c[0] - skey[0] * sz, c[1] - skey[1] * sy,
+                         c[2] - skey[2] * sx)
                 parts[inner] = (
-                    None if key is None else _encode_chunk(raw, codec, clevel, zc)
+                    None if raw is None else _encode_chunk(raw, codec, clevel, zc)
                 )
         if cur is not None:
             rewrite(cur, parts, stats)

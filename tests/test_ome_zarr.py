@@ -536,3 +536,68 @@ def test_ome_zarr_file_as_grid_dir_reads_as_fill(spark, tmp_path):
     assert len(got) == 512
     assert sum(got.values()) == int(block.sum())  # cz=0 is all fill
     assert got[(4, 0, 5)] == 1  # the real chunk still decodes
+
+
+def test_ome_zarr_write_runs_upstream_once(spark, tmp_path):
+    # the level grids come from the write job's receipts: no pre-pass
+    # recomputes the upstream kernels before the write
+    from pyspark.sql import functions as F
+
+    from atlas_upscaling_dask_spark.operators.pyramid import decimate_chunks
+    from atlas_upscaling_dask_spark.sinks.ome_zarr import write_ome_zarr
+
+    base = synthetic_chunks(spark, VolumeMeta(16, 16, 16), chunk=(8, 8, 8))
+    frame = base.withColumn("level", F.lit(0)).unionByName(
+        decimate_chunks(base, 2).withColumn("level", F.lit(1))
+    )
+    acc = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for b in batches:
+            acc.add(b.num_rows)
+            yield b
+
+    write_ome_zarr(
+        frame.mapInArrow(count, schema=frame.schema),
+        str(tmp_path / "once.zarr"),
+        VolumeMeta(16, 16, 16),
+    )
+    assert acc.value == frame.count()
+
+
+def test_ome_zarr_gapped_frame_raises_and_leaves_no_store(spark, tmp_path):
+    import pandas as pd
+
+    from atlas_upscaling_dask_spark.sinks.ome_zarr import (
+        read_zarr_level,
+        write_ome_zarr,
+    )
+
+    # the cz=0 chunk is 4 deep but its cz=1 neighbour starts at z0=8 on
+    # an 8-deep grid: z in [4, 8) is covered by no row
+    gapped = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "volume_id": ["v", "v"],
+                "cz": [0, 1], "cy": [0, 0], "cx": [0, 0],
+                "z0": [0, 8], "y0": [0, 0], "x0": [0, 0],
+                "dz": [4, 8], "dy": [8, 8], "dx": [8, 8],
+                "codec": ["raw", "raw"],
+                "payload": [
+                    np.ones((4, 8, 8), dtype=PAYLOAD_DTYPE).tobytes(),
+                    np.ones((8, 8, 8), dtype=PAYLOAD_DTYPE).tobytes(),
+                ],
+            }
+        )
+    )
+    out = str(tmp_path / "gap.zarr")
+    meta = VolumeMeta(16, 16, 16)
+    with pytest.raises(ValueError, match="disagree"):
+        write_ome_zarr(gapped, out, meta)
+    assert not any(".zarray" in files for _, _, files in os.walk(out))
+
+    chunks = synthetic_chunks(spark, meta, chunk=(8, 8, 8))
+    write_ome_zarr(chunks, out, meta)
+    np.testing.assert_array_equal(
+        read_zarr_level(out, 0), _dense_from_chunks(chunks, (16, 16, 16))
+    )

@@ -960,3 +960,72 @@ def test_zarr3_reshard_refuses_multiple_scale_transforms(spark, tmp_path):
     open(grp_path, "w").write(json.dumps(grp))
     with pytest.raises(ValueError, match="exactly one"):
         reshard_zarr3(spark, src, str(tmp_path / "multi_dst.zarr"), shard=None)
+
+
+def _counted_pyramid(spark):
+    """A two-level chunk frame behind a ``mapInArrow`` that adds its rows
+    to an accumulator.  The writer cannot prune a Python kernel, so the
+    accumulator counts how many times a write ran the upstream."""
+    from pyspark.sql import functions as F
+
+    from atlas_upscaling_dask_spark.operators.pyramid import decimate_chunks
+
+    base = synthetic_chunks(spark, VolumeMeta(16, 16, 16), chunk=(8, 8, 8))
+    frame = base.withColumn("level", F.lit(0)).unionByName(
+        decimate_chunks(base, 2).withColumn("level", F.lit(1))
+    )
+    acc = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for b in batches:
+            acc.add(b.num_rows)
+            yield b
+
+    return frame.mapInArrow(count, schema=frame.schema), frame.count(), acc
+
+
+def test_zarr3_write_runs_upstream_once(spark, tmp_path):
+    # the level grids come from the write job's receipts: no pre-pass
+    # recomputes the upstream kernels before the write
+    frame, n_rows, acc = _counted_pyramid(spark)
+    write_zarr3(
+        frame, str(tmp_path / "once.zarr"), VolumeMeta(16, 16, 16),
+        shard=(2, 2, 2),
+    )
+    assert acc.value == n_rows
+
+
+def _gapped_frame(spark):
+    # the cz=0 chunk is 4 deep but its cz=1 neighbour starts at z0=8 on
+    # an 8-deep grid: z in [4, 8) is covered by no row
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "volume_id": ["v", "v"],
+                "cz": [0, 1], "cy": [0, 0], "cx": [0, 0],
+                "z0": [0, 8], "y0": [0, 0], "x0": [0, 0],
+                "dz": [4, 8], "dy": [8, 8], "dx": [8, 8],
+                "codec": ["raw", "raw"],
+                "payload": [
+                    np.ones((4, 8, 8), dtype=PAYLOAD_DTYPE).tobytes(),
+                    np.ones((8, 8, 8), dtype=PAYLOAD_DTYPE).tobytes(),
+                ],
+            }
+        )
+    )
+
+
+def test_zarr3_gapped_frame_raises_and_leaves_no_store(spark, tmp_path):
+    out = str(tmp_path / "gap.zarr")
+    meta = VolumeMeta(16, 16, 16)
+    with pytest.raises(ValueError, match="disagree"):
+        write_zarr3(_gapped_frame(spark), out, meta, shard=(2, 2, 2))
+    assert not any("zarr.json" in files for _, _, files in os.walk(out))
+
+    chunks = synthetic_chunks(spark, meta, chunk=(8, 8, 8))
+    write_zarr3(chunks, out, meta, shard=(2, 2, 2))
+    np.testing.assert_array_equal(
+        read_zarr3_level(out, 0), _dense(chunks, (16, 16, 16))
+    )

@@ -78,9 +78,13 @@ def check(name: str, plan: str, rules: dict) -> list[str]:
                 f"expected exactly {allowed} group-hash spread exchange(s), "
                 f"found {found}"
             )
-        # the spread exchange is exempt from the shuffle budget below;
-        # rewrite the plan so count_shuffles no longer sees it
-        plan = _SPREAD_EXCHANGE_RE.sub("(0) SpreadExempt", plan, count=allowed)
+        # the asserted spread exchanges are exempt from the shuffle
+        # budget below; rewrite the plan so count_shuffles no longer
+        # sees them.  Guarded: re.sub's count=0 means "replace all".
+        if allowed > 0:
+            plan = _SPREAD_EXCHANGE_RE.sub(
+                "(0) SpreadExempt", plan, count=allowed
+            )
     if rules.get("pushdown") and "PushedFilters: [" not in plan.replace(
         "PushedFilters: []", ""
     ):
@@ -916,11 +920,13 @@ def audited_queries():
         ),
         # multi-index Hamming join: band equi-join + pair distinct —
         # never an all-pairs product (budget covers the non-broadcast
-        # shape; at sf the band sides broadcast → measured 1).  +1 for
-        # the fixture's group-hash id exchange (r12)
+        # shape; at sf the band sides broadcast → measured 1).  No
+        # spread_exchanges rule: hamming_near_dup localCheckpoints its
+        # input, so the fixture's group-hash id exchange sits behind
+        # the checkpoint and never appears in this plan
         "image_phash_neardup": (
             QUERIES["image_phash_neardup"],
-            {"max_shuffles": 3, "spread_exchanges": 1},
+            {"max_shuffles": 3},
         ),
         # AllPairs/PPJoin exact set-similarity: candidate generation is
         # an equi-join on rare prefix tokens, NEVER a cross product.
@@ -1022,8 +1028,8 @@ def audited_queries():
             {"no_shuffle": True, "no_python_udf": True},
         ),
         # OME-Zarr write kernel: select → mapInArrow publishing chunk
-        # files executor-side — zero shuffle (the receipt agg outside
-        # this frame moves ≤ levels×partitions 32-byte rows).
+        # files executor-side — zero shuffle (its ≤ levels×partitions
+        # receipt rows are collected and summed on the driver).
         "zarr_export": (
             _zarr_export,
             {"no_shuffle": True, "no_python_udf": True},
@@ -1123,12 +1129,9 @@ def _zarr_export(spark, sf_dir: str):
     import tempfile
 
     from atlas_upscaling_dask_spark.sinks.ome_zarr import export_ome_zarr_frame
-    from atlas_upscaling_dask_spark.volume import VolumeMeta
 
     out = tempfile.mkdtemp(prefix="audit_zarr_out_") + "/vol.zarr"
-    return export_ome_zarr_frame(
-        _chunk_table(spark), out, VolumeMeta(16, 16, 16)
-    )
+    return export_ome_zarr_frame(_chunk_table(spark), out)
 
 
 def _tiff_ordered_export(spark, sf_dir: str):
@@ -1159,14 +1162,10 @@ def _zarr3_scan(spark, sf_dir: str):
 def _zarr3_export(spark, sf_dir: str):
     import tempfile
 
-    from pyspark.sql import functions as F
-
     from atlas_upscaling_dask_spark.sinks.zarr3 import export_zarr3_frame
 
     out = tempfile.mkdtemp(prefix="audit_zarr3_out_") + "/vol.zarr"
-    grids = {0: (8, 8, 8, 16, 16, 16)}
-    chunks = _chunk_table(spark).withColumn("level", F.lit(0).cast("int"))
-    return export_zarr3_frame(chunks, out, grids, "zstd", 1, (2, 2, 2))
+    return export_zarr3_frame(_chunk_table(spark), out, "zstd", 1, (2, 2, 2))
 
 
 def _mhd_scan(spark, sf_dir: str):
