@@ -20,6 +20,19 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """A quarter of the host's RAM (``/proc/meminfo`` MemTotal), capped at
+    32g.  In local mode the driver JVM also runs every task, and its RSS
+    grows well past the heap, so a 32g heap on a 16 GB host ends with the
+    kernel OOM-killing the JVM."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = int(next(ln for ln in fh if ln.startswith("MemTotal")).split()[1])
+    except (OSError, StopIteration, ValueError):
+        return "32g"
+    return f"{min(kb // 4 // 1024, 32 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "atlas_upscaling_dask_spark",
     master: str | None = None,
@@ -37,6 +50,8 @@ def get_spark(
       semantics (and DuckDB-oracle comparability).
     * Arrow enabled — every pandas/Python boundary is batched.
     * Parquet zstd — the reference's Blosc-zstd chunk codec analog.
+    * Driver heap ``SPARK_GRAFT_DRIVER_MEM``, else a quarter of RAM
+      capped at 32g.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -55,7 +70,10 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -68,12 +68,20 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+# name -> physical-plan scale invariants, checked by tools/audit_plans.py
+# (rule keys are documented there); the comment above each ``audit=``
+# says why the plan must have that shape.
+AUDITS: dict[str, dict] = {}
 
 
-def _register(name: str, fn: QueryFn, sql: str | None) -> None:
+def _register(
+    name: str, fn: QueryFn, sql: str | None, audit: dict | None = None
+) -> None:
     QUERIES[name] = fn
     if sql is not None:
         ORACLES[name] = sql
+    if audit is not None:
+        AUDITS[name] = audit
 
 
 # ---------------------------------------------------------------------------
@@ -415,6 +423,8 @@ SELECT l_orderkey, l_linenumber, l_partkey,
        coalesce(p_brand, '?') AS part_brand
 FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
 """,
+    # broadcast dim join: no shuffled join for a 25-row dim
+    audit={"broadcast": True, "codegen": True, "max_shuffles": 0},
 )
 
 
@@ -476,6 +486,8 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """,
+    # TPC-H Q1-style agg: exactly one exchange (partial→final agg)
+    audit={"max_shuffles": 1, "pushdown": True, "codegen": True},
 )
 
 
@@ -911,6 +923,8 @@ SELECT l_orderkey * 2 + a.range AS z,
        l_partkey AS label
 FROM lineitem, range(2) a, range(2) b, range(2) c
 """,
+    # flagship narrow upscale: zero shuffles, codegen'd
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1047,6 +1061,9 @@ SELECT win_hash,
        CAST(max(doc_id) AS BIGINT) AS last_doc
 FROM ex GROUP BY win_hash HAVING count(DISTINCT doc_id) > 1
 """,
+    # substring-dup detection: narrow windowed explode + one
+    # aggregate (countDistinct expand) — fixed-width md5 keys
+    audit={"max_shuffles": 2, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1097,6 +1114,11 @@ SELECT span_hash,
        CAST(max(doc_id) AS BIGINT) AS last_doc
 FROM segs GROUP BY span_hash HAVING count(DISTINCT doc_id) > 1
 """,
+    # content-defined span dedup: segmentation is fully array-side;
+    # the only exchanges are the span-hash aggregation's two phases
+    # (COUNT DISTINCT doc_id: partial on (hash, doc) then final on
+    # hash — both segment-row-sized, never token-row-sized)
+    audit={"max_shuffles": 2, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1137,6 +1159,10 @@ SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
        CAST(sum(p) AS DOUBLE) / count(*) AS lm_score
 FROM terms GROUP BY doc_id
 """,
+    # bigram LM: count-table aggs + scoring joins, all keyed on
+    # bounded vocab keys; V must arrive broadcast, never collected
+    audit={"max_shuffles": 6, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -1180,6 +1206,9 @@ SELECT s1, s2, pair_count,
        CAST(row_number() OVER (ORDER BY pair_count DESC, s1, s2) AS INTEGER) AS rank
 FROM agg ORDER BY pair_count DESC, s1, s2 LIMIT 20
 """,
+    # BPE iteration-1 pair table: word-count exchange + pair-count
+    # exchange + the ≤20-row rank window
+    audit={"max_shuffles": 4, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1223,6 +1252,9 @@ SELECT k AS user_id, epoch_us(t) AS ts_us, eid AS event_id, v AS value,
        CAST(count(*) AS INTEGER) AS n_terms
 FROM j GROUP BY k, t, eid, v
 """,
+    # EWMA: rank window + key-partitioned self-join + final agg —
+    # every wide op keys on user_id, so the exchanges collapse
+    audit={"max_shuffles": 4, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1256,6 +1288,10 @@ SELECT e.event_id, e.event_type, e.value, m.mean, m.std,
 FROM events e JOIN m USING (event_type)
 WHERE abs((e.value - m.mean) / m.std) > 2.5
 """,
+    # z-score screen: ONE stats exchange; the event-side scan joins
+    # broadcast and never shuffles
+    audit={"max_shuffles": 1, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -1289,6 +1325,8 @@ SELECT doc_id,
        array_to_string(t[i*48+1:i*48+64], ' ') AS chunk_text
 FROM c, unnest(generate_series(0, n_chunks - 1, 1)) AS s(i)
 """,
+    # context-window chunking: pure narrow explode
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1450,6 +1488,10 @@ SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity,
        (l_quantity < p_lo OR l_quantity > p_hi) AS was_clipped
 FROM lineitem JOIN pct USING (l_returnflag)
 """,
+    # z-scored stats broadcast back; scan side never shuffles — and
+    # the histogram/winsorize/centroid group share the same shape
+    audit={"max_shuffles": 1, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -1576,6 +1618,8 @@ SELECT c_custkey, c_name,
 FROM customer
 ORDER BY dist ASC, c_custkey ASC LIMIT 10
 """,
+    # edit-distance top-k must be TakeOrderedAndProject, not a sort
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1618,6 +1662,9 @@ SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us, o.o_orderkey
 FROM events e ASOF LEFT JOIN o
   ON e.user_id = o.o_custkey AND e.ts <= o.o_orderdate
 """,
+    # forward as-of: same union+window shape as backward — one
+    # exchange per side, never a quadratic intermediate
+    audit={"max_shuffles": 3, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1655,6 +1702,8 @@ SELECT band, prev + 1 AS gap_start, o_orderkey - 1 AS gap_end,
        o_orderkey - prev - 1 AS n_missing
 FROM l WHERE o_orderkey - prev > 1
 """,
+    # gaps-and-islands: one key-partitioned lag window
+    audit={"max_shuffles": 1, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1691,6 +1740,10 @@ SELECT strftime(first_day, '%Y-%m-%d') AS day, new_users,
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS total_users
 FROM d
 """,
+    # cumulative users: first-seen exchange + day agg + the running
+    # sum over the tiny day frame (single-partition window is fine
+    # at |days| rows)
+    audit={"max_shuffles": 4, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1707,6 +1760,10 @@ _register(
 SELECT min(doc_id) AS keep_id, count(*) AS n_copies, text
 FROM documents GROUP BY text
 """,
+    # exact dedup: ONE shuffle on the 128-bit fingerprint, nothing
+    # else — the whole-corpus dedup pass at 100 TB is a single
+    # map-side-combined exchange
+    audit={"max_shuffles": 1, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1772,6 +1829,16 @@ SELECT d1, d2, inter, s1.n AS n1, s2.n AS n2,
 FROM inter JOIN sz s1 ON d1 = s1.doc_id JOIN sz s2 ON d2 = s2.doc_id
 WHERE inter / (s1.n + s2.n - inter) >= 0.6
 """,
+    # AllPairs/PPJoin exact set-similarity: candidate generation is
+    # an equi-join on rare prefix tokens, NEVER a cross product.
+    # The sorted-array table is localCheckpoint'd (3 consumers →
+    # computed once), so the audited plan covers the candidate +
+    # verify stages: prefix join, pair distinct, two array joins —
+    # all equi-joins on (tok | d1 | d2), zero cartesians; budget 4
+    # (at sf the optimizer broadcasts the small sides → measured 1)
+    # +1 exchange: the explicit verify-stage repartition of the
+    # candidate pair frame (CPU-bound array_intersect stage)
+    audit={"max_shuffles": 5, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -1781,7 +1848,7 @@ def _dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # use_dictionary=True pins the oracle-portability backend (DuckDB
     # reproduces the dense_rank shingle ids exactly); the library
     # DEFAULT is the xxhash64 scale backend with no global window —
-    # audited as `dedup_minhash_scale` in tools/audit_plans.py.
+    # audited as `FIXTURES["dedup_minhash_scale"]` in tools/audit_plans.py.
     return minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"),
         num_hashes=16,
@@ -2021,6 +2088,10 @@ FROM (
   FROM scored
 ) WHERE rk <= 5
 """,
+    # IVF ANN: broadcast probe join onto bucket-assigned corpus +
+    # per-query top-k window — the corpus is never shuffled by
+    # anything except the final k-row-per-query window
+    audit={"broadcast": True, "max_shuffles": 1},
 )
 
 
@@ -2090,6 +2161,12 @@ SELECT query_id, neighbor_id, adist, CAST(rk AS INTEGER) AS rk FROM (
   FROM dist
 ) WHERE rk <= 5
 """,
+    # PQ ADC scan (r13: fused Arrow kernel, one all-covering
+    # bucket): encode + LUT scoring + partition-local top-k in ONE
+    # narrow pass; the single exchange is the per-query ranking
+    # window — |Q|·|corpus| pair rows never move (was: 2 exchanges
+    # + 2 broadcasts + a pair aggregation)
+    audit={"max_shuffles": 1, "no_python_udf": True},
 )
 
 
@@ -2188,6 +2265,13 @@ SELECT query_id, neighbor_id, adist, CAST(rk AS INTEGER) AS rk FROM (
   FROM dist
 ) WHERE rk <= 5
 """,
+    # IVFADC: assignment+encode+LUT scoring fused into ONE narrow
+    # Arrow kernel emitting partition-local top-k — the single
+    # exchange is the final per-query ranking window over
+    # ≤ |Q|·k·n_partitions rows.  A second exchange here would mean
+    # query×corpus pair rows are moving again (the pq_topk
+    # scale-killer this operator replaces).
+    audit={"max_shuffles": 1, "no_python_udf": True},
 )
 
 
@@ -2231,7 +2315,14 @@ FROM lineitem"""
     return "\nUNION ALL\n".join(parts)
 
 
-_register("profile_lineitem", _profile_lineitem_q, _profile_oracle_sql())
+_register(
+    "profile_lineitem",
+    _profile_lineitem_q,
+    _profile_oracle_sql(),
+    # profiling: ONE aggregation (Expand partial + final) — per-
+    # column job loops would show up as extra exchanges here
+    audit={"max_shuffles": 2, "no_python_udf": True},
+)
 
 
 def _profile_drift_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2304,6 +2395,13 @@ t AS (
 )
 SELECT "column", CAST(sum(term) AS DOUBLE) / 2 AS tv FROM t GROUP BY "column"
 """,
+    # drift: 1-row min/max broadcast (a BroadcastNestedLoopJoin —
+    # broadcast, but not the BroadcastHashJoin the rule matches) +
+    # one scan per side (each a (column,bin) count agg) +
+    # full-outer join of two tiny histogram frames +
+    # |cols·bins|-row window — 5 exchanges, none data-sized after
+    # the two counts
+    audit={"max_shuffles": 5, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -2331,6 +2429,11 @@ FROM j2
 WHERE (mad = 0 AND value <> med)
    OR (mad > 0 AND abs((0.6745 * (value - med)) / mad) > 3.5)
 """,
+    # MAD: two tiny grouped medians broadcast back onto the scan —
+    # the data-sized side never shuffles (3 exchanges: 2 stats aggs
+    # + the med-join feeding the second agg)
+    audit={"max_shuffles": 3, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -2352,6 +2455,9 @@ SELECT event_id, user_id,
          AS rolling_med
 FROM events
 """,
+    # rolling median: ONE keyed window exchange; per-row state is
+    # the O(window) frame array, never a per-key global sort
+    audit={"max_shuffles": 1, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -2401,6 +2507,8 @@ SELECT l_orderkey, l_linenumber,
           + CAST(l_discount AS DOUBLE)) + CAST(l_tax AS DOUBLE) AS vals_sum
 FROM lineitem
 """,
+    # map HOF battery: pure narrow projection — zero exchanges
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -2430,6 +2538,9 @@ SELECT doc_id, bucket,
          AS weight
 FROM c
 """,
+    # hashing-trick featurization: explode → doc_id repartition →
+    # count agg + norm window both REUSE that one exchange
+    audit={"max_shuffles": 1, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -2492,6 +2603,10 @@ SELECT 'ship_in_epoch', 'expr', n, CAST(c4 AS BIGINT), c4 = 0 FROM m
 UNION ALL
 SELECT 'quantity_cap_30', 'expr', n, CAST(c5 AS BIGINT), c5 = 0 FROM m
 """,
+    # Deequ-style suite: every constraint folds into ONE
+    # aggregation (Expand partial -> final, 2 exchanges); a
+    # per-constraint job loop would blow this budget immediately
+    audit={"max_shuffles": 2, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -2547,6 +2662,10 @@ dropped AS (
 SELECT a.vec_id, a.bucket, d.d2 IS NULL AS is_kept
 FROM assigned a LEFT JOIN dropped d ON a.vec_id = d.d2
 """,
+    # SemDeDup: the pair search must be the bucket equi-join (two
+    # keyed exchanges: bucket join + drop-set distinct) — a cross
+    # product here would be corpus² at scale
+    audit={"max_shuffles": 2},
 )
 
 
@@ -2626,6 +2745,9 @@ SELECT doc_id AS media_id,
        CAST(1.0 AS DOUBLE) AS zero_crossing_rate
 FROM documents
 """,
+    # audio codec row: encode + decode + features are consecutive
+    # Arrow kernels over the same rows — fully narrow, zero shuffle
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -2734,6 +2856,11 @@ _register(
 WITH {_PHASH_HASHES_CTE.strip()}
 SELECT doc_id AS media_id, phash FROM hs
 """,
+    # pHash: decode → DCT → hash is ONE narrow Arrow pass after the
+    # single group-hash exchange of the one-split doc_id frame
+    # (r12 — partition-from-work, same shape as image_phash_webp:
+    # the exchange moves 8-byte ids, never payloads)
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -2759,6 +2886,13 @@ SELECT h1.doc_id AS d1, h2.doc_id AS d2,
 FROM hs h1 JOIN hs h2 ON h1.doc_id < h2.doc_id
 WHERE bit_count(xor(h1.phash, h2.phash)) <= 7
 """,
+    # multi-index Hamming join: band equi-join + pair distinct —
+    # never an all-pairs product (budget covers the non-broadcast
+    # shape; at sf the band sides broadcast → measured 1).  No
+    # spread_exchanges rule: hamming_near_dup localCheckpoints its
+    # input, so the fixture's group-hash id exchange sits behind
+    # the checkpoint and never appears in this plan
+    audit={"max_shuffles": 3},
 )
 
 
@@ -2876,6 +3010,9 @@ _register(
 WITH {_PHASH_HASHES_CTE.strip()}
 SELECT doc_id AS media_id, phash FROM hs
 """,
+    # the JPEG twin: from-spec Huffman+iDCT decode inside the same
+    # single narrow Arrow pass — format changes, plan shape doesn't
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -2955,7 +3092,14 @@ SELECT doc_id AS media_id,
 FROM documents
 """
 
-_register("jpeg_decode_blocks", _jpeg_decode_blocks, _JPEG_BLOCKS_SQL)
+_register(
+    "jpeg_decode_blocks",
+    _jpeg_decode_blocks,
+    _JPEG_BLOCKS_SQL,
+    # bit-exact JPEG decode gate row: encode → decode → project,
+    # one narrow pass, nothing moves
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
+)
 
 
 def _jpeg_decode_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3024,7 +3168,13 @@ def _jpeg_decode_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register("jpeg_decode_progressive", _jpeg_decode_progressive, _JPEG_BLOCKS_SQL)
+_register(
+    "jpeg_decode_progressive",
+    _jpeg_decode_progressive,
+    _JPEG_BLOCKS_SQL,
+    # progressive (SOF2) decode gate row: same narrow single pass
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
+)
 
 
 def _jpeg_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3097,6 +3247,9 @@ SELECT doc_id AS media_id,
          AS n_components
 FROM documents
 """,
+    # header-only image profiling: marker walk, no entropy decode,
+    # one narrow pass
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -3171,6 +3324,10 @@ _register(
 WITH {_PHASH_HASHES_CTE.strip()}
 SELECT doc_id AS media_id, phash FROM hs
 """,
+    # the GIF twin: from-spec LZW decode + palette lookup inside
+    # the same narrow Arrow pass, after the one group-hash id
+    # exchange (r12 — see image_phash_values)
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -3246,6 +3403,10 @@ _register(
 WITH {_PHASH_HASHES_CTE.strip()}
 SELECT doc_id AS media_id, phash FROM hs
 """,
+    # VP8L decode through the DCT hash: ONE group-hash exchange
+    # (codec parallelism from the work, not the file layout), then
+    # kernel-only
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -3331,6 +3492,11 @@ SELECT doc_id AS media_id,
            AS INTEGER)), 360)) AS sha256
 FROM documents, range(0, 4, 2) f
 """,
+    # animated WebP compositing digests: ONE group-hash exchange
+    # (r10 verdict #6: the partition-from-work lesson applied —
+    # the sf-dir documents table is one input split, and without
+    # the repartition every ANMF kernel would serialize on a core)
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -3427,6 +3593,9 @@ FROM documents d,
       FROM range(0, 32) xs, range(0, 32) ys) p
 GROUP BY d.doc_id
 """,
+    # VP8 lossy keyframe decode digest: same shape — one
+    # group-hash exchange, then kernel-only
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -3509,6 +3678,9 @@ FROM documents d,
       FROM range(0, 32) xs, range(0, 32) ys) p
 GROUP BY d.doc_id
 """,
+    # lossy-with-alpha stills (ALPH + VP8): one group-hash
+    # exchange, then kernel-only
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -3594,6 +3766,9 @@ SELECT doc_id AS media_id,
            AS INTEGER)), 360)) AS sha256
 FROM documents, range(0, 4, 2) f
 """,
+    # animated-GIF frame sampling: sequential composite per payload
+    # but still ONE narrow pass over the corpus — no exchange
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -3656,6 +3831,8 @@ SELECT doc_id AS media_id,
        CAST(100 AS INTEGER) AS total_delay_cs
 FROM documents
 """,
+    # header-only GIF profiling: block walk, no LZW work, narrow
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -3741,6 +3918,9 @@ _register(
 WITH {_AFP_HASHES_CTE.strip()}
 SELECT doc_id AS media_id, afp FROM hs
 """,
+    # spectral fingerprinting: synth + decode + DFT in ONE narrow
+    # Arrow pass — zero exchanges, like its image twin
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -3875,6 +4055,10 @@ _register(
 WITH {_VIDEO_HASHES_CTE.strip()}
 SELECT doc_id AS media_id, frame_idx, phash FROM vh
 """,
+    # per-frame video hashing: synth + page decode + DCT in one
+    # narrow Arrow pass after the single group-hash id exchange
+    # (r12 — see image_phash_values)
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -3985,6 +4169,9 @@ _register(
 WITH {_VIDEO_HASHES_CTE.strip()}
 SELECT doc_id AS media_id, frame_idx, phash FROM vh
 """,
+    # MJPEG-AVI frame fingerprints: idx1 random access + from-spec
+    # JPEG decode, still ONE narrow Arrow pass over the corpus
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -4044,6 +4231,8 @@ SELECT doc_id AS media_id,
        true AS has_index
 FROM documents
 """,
+    # header-only AVI census: hdrl/idx1 walk, zero JPEG work
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -4143,6 +4332,8 @@ SELECT doc_id AS media_id,
          AS INTEGER) AS sample_rate
 FROM documents
 """,
+    # header-only MP4 census: ISO-BMFF box walk, decode never runs
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -4224,6 +4415,9 @@ _register(
 SELECT doc_id, {_URL_CANON_SQL} AS canonical_url
 FROM documents
 """,
+    # URL canonicalization: pure built-in/HOF projection — zero
+    # exchanges AND zero Python (codegen end to end)
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -4252,6 +4446,9 @@ SELECT CASE
 FROM documents
 GROUP BY 1
 """,
+    # eTLD+1: broadcast public-suffix joins + ONE hash agg — the
+    # only exchange is the final group-by
+    audit={"broadcast": True, "max_shuffles": 1, "no_python_udf": True},
 )
 
 
@@ -4324,6 +4521,9 @@ SELECT doc_id,
          ELSE 'city.kobe.jp' END AS registrable_domain
 FROM documents
 """,
+    # full-PSL eTLD+1 (wildcards + exceptions): every rule kind is
+    # a broadcast hash join, zero exchanges end to end
+    audit={"broadcast": True, "no_shuffle": True, "no_python_udf": True},
 )
 
 
@@ -4399,6 +4599,8 @@ SELECT doc_id,
        '.example.com/p?a=1&b=2'
 FROM documents
 """,
+    # sitemap <url> entries: one regex/HOF projection + explode
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -4449,6 +4651,8 @@ SELECT 'h' || CAST(doc_id AS VARCHAR) || '.example.com' AS host,
             END AS crawl_delay
 FROM documents
 """,
+    # per-host Crawl-delay: kernel over the tiny robots table
+    audit={"no_shuffle": True},
 )
 
 
@@ -4518,6 +4722,8 @@ SELECT doc_id, CAST(ttl_sec AS BIGINT) AS ttl_sec,
        freshness_source
 FROM t
 """,
+    # RFC 9111 freshness → recrawl times: pure expressions
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -4608,6 +4814,8 @@ SELECT doc_id AS media_id,
             ELSE 'default' END AS freshness_source
 FROM m
 """,
+    # composed WARC -> recrawl schedule: kernel + pure projection
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -4667,6 +4875,11 @@ SELECT 'http://r' || CAST(g AS VARCHAR) || '.example.com/hop/' ||
          AS unresolved
 FROM m
 """,
+    # redirect-chain resolution: pointer doubling — the VISIBLE
+    # plan is the last doubling round (localCheckpoint truncates
+    # earlier rounds), one self-join; log2(max_hops) such rounds
+    # total, never a per-hop walk
+    audit={"max_shuffles": 3, "no_python_udf": True},
 )
 
 
@@ -4778,6 +4991,10 @@ SELECT CAST(fetch_ts AS BIGINT) AS fetch_ts,
          AS unresolved
 FROM sched
 """,
+    # composed frontier transform: redirect doubling (log-bounded)
+    # + canonical join-back + BROADCAST politeness join; budget
+    # covers the doubling rounds plus the join-back
+    audit={"max_shuffles": 6, "no_python_udf": True},
 )
 
 
@@ -4833,6 +5050,8 @@ SELECT canonical_url,
 FROM c
 GROUP BY 1
 """,
+    # canonical-URL dedup: narrow canonicalize + one hash agg
+    audit={"max_shuffles": 1, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -4886,6 +5105,9 @@ SELECT doc_id,
               '.example.net/lib' END AS link_url
 FROM documents, range(4) f
 """,
+    # link-graph extraction: codegen'd href extract + explode +
+    # RFC 3986 resolution — zero Python, zero exchanges
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -4931,6 +5153,9 @@ SELECT doc_id,
               '.example.com/q/r' END AS url
 FROM documents, range(2) f
 """,
+    # sitemap URL discovery: codegen'd loc extract + explode +
+    # canonicalize — zero Python, zero exchanges
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -4999,7 +5224,15 @@ def _crawl_pagerank_oracle() -> str:
     return pagerank_oracle_sql(_CRAWL_EDGES_CTE.strip(), n_iter=3, top_k=10)
 
 
-_register("crawl_pagerank", _crawl_pagerank_q, _crawl_pagerank_oracle())
+_register(
+    "crawl_pagerank",
+    _crawl_pagerank_q,
+    _crawl_pagerank_oracle(),
+    # composed crawl PageRank: extraction is narrow; the audited
+    # exchanges are the edge-distinct + per-iteration rank aggs
+    # (same budget shape as graph_pagerank + 1 for the distinct)
+    audit={"max_shuffles": 3, "no_python_udf": True},
+)
 
 
 def _pdf_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5123,6 +5356,8 @@ SELECT doc_id AS media_id,
        (doc_id - doc_id % 5) % 15 = 5 AS has_cid_fonts
 FROM documents
 """,
+    # PDF census: one group-hash exchange, then header-only kernel
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -5174,6 +5409,9 @@ JOIN range(0, 3) i
   ON i.range < 1 + (d.doc_id - d.doc_id % 5) % 3
 GROUP BY d.doc_id
 """,
+    # PDF text extraction: one group-hash exchange, linear-scan +
+    # inflate kernel (the filter on encrypted groups is codegen)
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -5302,6 +5540,9 @@ SELECT doc_id AS media_id,
          END AS INTEGER) AS sample_rate
 FROM documents
 """,
+    # unified mixed-corpus census: magic dispatch to 7 per-format
+    # header parsers, one narrow pass, zero entropy decode
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -5428,6 +5669,8 @@ SELECT doc_id AS media_id,
             AS BIGINT) AS n_frames
 FROM documents
 """,
+    # WebP container census: one Arrow kernel pass, no exchanges
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -5490,6 +5733,9 @@ SELECT doc_id,
        (doc_id % 10 >= 8) OR (doc_id % 5 NOT IN (1, 3)) AS allowed
 FROM documents
 """,
+    # RFC 9309 gate: rules BROADCAST to the URL side, one verdict
+    # group-by — URLs never ship to the robots table
+    audit={"broadcast": True, "max_shuffles": 1},
 )
 
 
@@ -5589,6 +5835,8 @@ SELECT 'response', 200, count(*) FROM documents
 UNION ALL
 SELECT 'response', 404, count(*) FROM documents WHERE doc_id % 5 = 0
 """,
+    # WARC record census: narrow framing walk + one hash agg
+    audit={"max_shuffles": 1, "spread_exchanges": 1},
 )
 
 
@@ -5619,6 +5867,9 @@ SELECT doc_id AS media_id,
        CAST(doc_id % 11 AS VARCHAR) || ' & tail' AS text
 FROM documents
 """,
+    # WARC → HTML title/text: container kernel + codegen'd regex
+    # extraction, zero exchanges end to end
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -5709,6 +5960,8 @@ SELECT canonical_url,
 FROM keyed
 GROUP BY 1
 """,
+    # canonical-link dedup: narrow double-canonicalize + one agg
+    audit={"max_shuffles": 1, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -5774,6 +6027,9 @@ SELECT doc_id,
             WHEN doc_id % 3 = 1 THEN 'fr-ca' END AS page_lang
 FROM documents
 """,
+    # page metadata (OpenGraph/description/canonical-link/lang):
+    # one narrow regexp projection
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -5850,6 +6106,8 @@ SELECT doc_id AS media_id,
        '<p>ok ' || CAST(doc_id AS VARCHAR) || '</p>' AS first_text
 FROM documents
 """,
+    # error containment census: kernel + one hash agg
+    audit={"max_shuffles": 1, "spread_exchanges": 1},
 )
 
 
@@ -5929,6 +6187,10 @@ SELECT doc_id AS media_id,
        '<p>bb ' || CAST(doc_id AS VARCHAR) || '</p>' AS last_text
 FROM documents
 """,
+    # .warc.zst container scan: kernel + one hash agg; the zstd /
+    # brotli decode is executor-local (pyarrow codecs), no extra
+    # exchange vs the plain-warc row
+    audit={"max_shuffles": 1, "spread_exchanges": 1},
 )
 
 
@@ -6010,6 +6272,10 @@ SELECT doc_id AS media_id,
        'text/html' AS mime
 FROM documents
 """,
+    # CDXJ capture index: archive -> index rows is ONE narrow
+    # kernel pass, zero exchanges (sorting/bucketing the index is
+    # the CALLER's layout decision at 100 TB)
+    audit={"max_shuffles": 0, "spread_exchanges": 1, "no_python_udf": False},
 )
 
 
@@ -6058,6 +6324,9 @@ SELECT doc_id,
          AS main_text
 FROM documents
 """,
+    # boilerplate removal: split/transform/filter HOFs — zero
+    # Python, zero exchanges, codegen end to end
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -6144,6 +6413,9 @@ SELECT doc_id AS media_id,
        CAST(doc_id % 7 AS VARCHAR) AS text
 FROM documents
 """,
+    # charset-aware variant: BOM/header/meta sniff + fallback
+    # decode, still one narrow chain
+    audit={"max_shuffles": 0, "spread_exchanges": 1},
 )
 
 
@@ -6179,6 +6451,9 @@ SELECT canonical_url,
 FROM c
 GROUP BY 1
 """,
+    # the composed crawl-hygiene chain: WARC → responses →
+    # canonical-URL dedup — one group-by is the only exchange
+    audit={"max_shuffles": 1, "spread_exchanges": 1},
 )
 
 
@@ -6194,7 +6469,18 @@ from .extensions.text import STOPWORDS as _STOPWORDS
 
 _STOPLIST_SQL = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
 
-_register("prepare_rag_corpus", _prepare_rag_corpus_q, _rag_oracle())
+_register(
+    "prepare_rag_corpus",
+    _prepare_rag_corpus_q,
+    _rag_oracle(),
+    # RAG-prep composition: dedup window (1, materialized once via
+    # the checkpoint — without it the gate+dedup subtree re-executes
+    # per consumer: 20 exchanges) + the LM count/score chain (~8,
+    # all keyed on vocab-bounded keys) + score join + 1-row mean
+    # agg; chunk/split stages add NO exchange
+    audit={"max_shuffles": 12, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
+)
 
 _register(
     "text_stats",
@@ -6301,6 +6587,9 @@ WITH ranked AS (
 SELECT doc_id, text, lang, source, n_chars
 FROM ranked WHERE q > 0 AND rk <= q
 """,
+    # domain mixing: downsample = ONE window shuffle keyed by source;
+    # upsample = narrow projection + explode, zero exchanges
+    audit={"max_shuffles": 1, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -6336,6 +6625,7 @@ SELECT doc_id, text, lang, source, n_chars, CAST(epoch AS INTEGER) AS epoch
 FROM c, unnest(generate_series(1, n)) AS t(epoch)
 WHERE n >= 1
 """,
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -6377,6 +6667,9 @@ SELECT doc_id,
             + (-0.08::DOUBLE) * chars_per_token) >= 0.0::DOUBLE AS keep
 FROM s
 """,
+    # linear quality model: weights fold into ONE codegen'd narrow
+    # projection — model scoring at 100 TB costs zero exchanges
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -6423,6 +6716,8 @@ SELECT COALESCE(lang_pred, 'ALL') AS lang,
 FROM base
 GROUP BY ROLLUP(lang_pred)
 """,
+    # corpus dashboard: rollup + countDistinct expand — bounded
+    audit={"max_shuffles": 3, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -6446,6 +6741,9 @@ SELECT token, n, CAST(rank AS INTEGER) AS rank FROM (
   FROM counts
 ) WHERE rank <= 100
 """,
+    # vocab induction: ONE count shuffle; the top-k boundary is a
+    # rank filter, never a global sort of the vocabulary
+    audit={"max_shuffles": 2, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -6574,6 +6872,8 @@ SELECT doc_id AS media_id,
 FROM bytes
 GROUP BY doc_id, n, sha256, i % 3
 """,
+    # Arrow-batched feature extraction + posexplode: fully narrow
+    audit={"no_shuffle": True},
 )
 
 
@@ -6667,6 +6967,9 @@ _register(
 WITH {VOX_CTE}
 SELECT z, y, x, label FROM voxels
 """,
+    # TIFF scan → COO: grid repartition is the ONLY exchange; the
+    # strip reads and the payload explode are narrow
+    audit={"max_shuffles": 1},
 )
 
 
@@ -6741,6 +7044,8 @@ WITH {VOX_CTE}
 SELECT z, y, x, {_morton_sql(["z", "y", "x"], bits=4)} AS morton
 FROM voxels
 """,
+    # Morton codes: pure shift/mask projection — zero exchanges
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -6787,6 +7092,10 @@ won AS (
 )
 SELECT doc_id, text, lang, source, n_chars FROM won WHERE op != 'delete'
 """,
+    # CDC apply: union + ONE keyed max-struct aggregate — the same
+    # single-shuffle lower bound a warehouse MERGE pays, with
+    # map-side partials (an election window would forfeit them)
+    audit={"max_shuffles": 1, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -7429,6 +7738,9 @@ ranked AS (
 )
 SELECT z, y, x, label FROM ranked WHERE rk = 1
 """,
+    # majority-vote downsample: block-count agg + argmax window,
+    # both keyed on the block — two exchanges, no more
+    audit={"max_shuffles": 2, "codegen": True},
 )
 
 
@@ -7648,6 +7960,8 @@ SELECT label, CAST(dim AS INTEGER) AS dim,
        COUNT(*) AS n
 FROM e GROUP BY 1, 2
 """,
+    # fixed-point centroids: one explode + one (label,dim) agg
+    audit={"max_shuffles": 2, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -7738,6 +8052,8 @@ SELECT e.*,
        doc_id = min(doc_id) OVER (PARTITION BY norm_text) AS is_canonical
 FROM e
 """,
+    # composed doc pipeline: narrow select + ONE window shuffle
+    audit={"max_shuffles": 2, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -7802,6 +8118,9 @@ WHERE c_mktsegment = 'BUILDING'
 GROUP BY l_orderkey, o_orderdate, o_orderpriority
 ORDER BY revenue DESC, l_orderkey LIMIT 10
 """,
+    # 3-way join + top-k: two big-side exchanges + one agg exchange;
+    # top-k must be TakeOrderedAndProject, never a global sort
+    audit={"max_shuffles": 3, "pushdown": True, "codegen": True},
 )
 
 
@@ -8145,6 +8464,8 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_discount BETWEEN 0.05 AND 0.07
   AND l_quantity < 24
 """,
+    # Q6: filter+agg only — both predicates must reach the scan
+    audit={"max_shuffles": 1, "pushdown": True, "codegen": True},
 )
 
 
@@ -8224,6 +8545,9 @@ FROM (SELECT c_custkey, COUNT(o_orderkey) AS c_count
       GROUP BY c_custkey)
 GROUP BY c_count
 """,
+    # Q13: join + per-cust agg + distribution agg; the per-cust agg
+    # must reuse the join's hash partitioning (no extra exchange)
+    audit={"max_shuffles": 3, "codegen": True},
 )
 
 
@@ -8877,6 +9201,10 @@ SELECT doc_id,
        CAST(((1103515245 * ((doc_id + 7) % 2147483648) + 12345) % 2147483648) % 8 AS INTEGER) AS shard
 FROM documents
 """,
+    # deterministic LCG shuffle + repetition signals: pure narrow
+    # projections — reshuffling/rescoring 100 TB must cost zero
+    # exchanges
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -8910,6 +9238,9 @@ SELECT doc_id, shard, shuffle_pos, n_tokens,
        CAST((c - n_tokens) // 256 AS BIGINT) AS pack_id
 FROM cum
 """,
+    # token packing: the running sum is windowed per shard — exactly
+    # one exchange, never a global sort
+    audit={"max_shuffles": 1, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -8946,6 +9277,9 @@ SELECT shard, pack_id,
 FROM packed
 GROUP BY shard, pack_id
 """,
+    # pack assembly: per-shard offset window + per-pack aggregate —
+    # two exchanges, in-aggregate sort_array instead of a global sort
+    audit={"max_shuffles": 2, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -8972,6 +9306,7 @@ SELECT doc_id,
        CAST(MAX(c) AS DOUBLE) / CAST(SUM(c) AS DOUBLE) AS top_word_frac
 FROM per GROUP BY doc_id
 """,
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -9011,6 +9346,9 @@ SELECT h.doc_id, h.n_contaminated, t.n_shingles,
        CAST(h.n_contaminated AS DOUBLE) / CAST(t.n_shingles AS DOUBLE) AS contamination_frac
 FROM hits h JOIN totals t ON h.doc_id = t.doc_id
 """,
+    # contamination screen: shingle distinct, totals, semi-join,
+    # per-doc agg — bounded exchange count
+    audit={"max_shuffles": 2, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -9087,6 +9425,9 @@ SELECT doc_id, source, shard, shuffle_pos, n_tokens,
        CAST((c - n_tokens) // 256 AS BIGINT) AS pack_id
 FROM cum
 """,
+    # full training-set assembly: dedup window + decontamination
+    # joins + pack window — bounded, and NEVER a global sort
+    audit={"max_shuffles": 5, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -9299,6 +9640,8 @@ filled AS (
 SELECT user_id, epoch_us(ts) AS grid_us, f AS value
 FROM filled WHERE is_grid = 1
 """,
+    # per-key grid + forward fill: bounds agg + one per-key window
+    audit={"max_shuffles": 3, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -9396,6 +9739,10 @@ SELECT user_id, event_type,
 FROM i
 WINDOW wl AS (PARTITION BY user_id ORDER BY island)
 """,
+    # SCD2 history build: lag window, island groupBy, and lead
+    # window ALL cluster on the key — Spark reuses the one hash
+    # exchange (subset-key clustering) for all three
+    audit={"max_shuffles": 1, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -9458,6 +9805,11 @@ SELECT fct.event_id, fct.user_id, fct.at_us, d.segment, d.version
 FROM fct ASOF LEFT JOIN d
   ON fct.user_id = d.user_id AND fct.at_us >= d.vfu
 """,
+    # SCD2 read side: build (1 exchange; same-instant dedup agg
+    # reuses the key clustering) + as-of union scan (1 exchange on
+    # the union frame) — NEVER a per-fact range probe or a
+    # fact×interval join
+    audit={"max_shuffles": 2, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -10033,7 +10385,14 @@ def _bm25_oracle() -> str:
     return bm25_oracle_sql(BM25_TERMS, k=25)
 
 
-_register("bm25_topk", _bm25_topk_q, _bm25_oracle())
+_register(
+    "bm25_topk",
+    _bm25_topk_q,
+    _bm25_oracle(),
+    # BM25: one corpus-stats reduce + broadcast 1-row stats + narrow
+    # scoring; top-k must be TakeOrderedAndProject, never a sort
+    audit={"max_shuffles": 2, "codegen": True, "no_python_udf": True},
+)
 
 
 def _ndv_sketch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10088,6 +10447,9 @@ SELECT s.l_returnflag AS l_returnflag,
        e.ndv_exact AS ndv_exact
 FROM sk s JOIN exact e ON s.l_returnflag = e.l_returnflag
 """,
+    # KMV sketch build+merge+exact-NDV join: every exchange is
+    # partial-aggregated or keyed; sketches themselves are KB-sized
+    audit={"max_shuffles": 8, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -10149,6 +10511,10 @@ SELECT a.l_returnflag AS l_returnflag, a.nonempty AS nonempty,
        e.ndv_exact AS ndv_exact
 FROM agg a JOIN exact e ON a.l_returnflag = e.l_returnflag
 """,
+    # HLL twin: duplicate-insensitive register max needs NO distinct
+    # — (group, bucket) partial agg + group collect + the merge's
+    # explode re-agg; everything past the scan is register-sized
+    audit={"max_shuffles": 8, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -10195,6 +10561,10 @@ FROM base b
 JOIN ph p ON b.k = p.k AND b.phase = p.phase
 JOIN lv l ON b.k = l.k
 """,
+    # zscore pattern doubled: two tiny stats aggs broadcast back —
+    # the event-sized scan side must never shuffle
+    audit={"max_shuffles": 2, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -10246,6 +10616,10 @@ SELECT CAST(i AS INTEGER) AS i, CAST(j AS INTEGER) AS j,
          / CAST(n * (n - 1) * 1099511627776::HUGEINT AS DOUBLE) AS cov
 FROM agg
 """,
+    # covariance: the only exchange is the d(d+1)/2-per-partition
+    # partial frame's aggregation — partition-count-sized, never
+    # data-sized (the Arrow kernel is the sanctioned Python path)
+    audit={"max_shuffles": 1},
 )
 
 
@@ -10348,6 +10722,10 @@ SELECT d.eid AS event_id, d.k AS event_type, d.residual AS residual,
 FROM dec d JOIN m ON d.k = m.k
 WHERE abs((d.residual - m.mean) / m.std) > 2.5
 """,
+    # composed decompose -> zscore: three tiny stats aggs, ALL
+    # broadcast back; the event scan still never shuffles
+    audit={"max_shuffles": 3, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -10416,6 +10794,9 @@ _register(
     "tfrecord_roundtrip",
     _tfrecord_roundtrip_q,
     "SELECT doc_id, text, lang, source, n_chars FROM documents",
+    # TFRecord scan half of the roundtrip: one path-repartition
+    # exchange, then executor-local framing + proto decode
+    audit={"max_shuffles": 1},
 )
 
 
@@ -10451,6 +10832,8 @@ _register(
     "tfrecord_roundtrip_gzip",
     _tfrecord_roundtrip_gzip_q,
     "SELECT doc_id, text, lang, source, n_chars FROM documents",
+    # GZIP transport adds no plan shape vs the plain tfrecord row
+    audit={"max_shuffles": 1},
 )
 
 
@@ -10762,6 +11145,10 @@ SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
        n_triangles
 FROM tri
 """,
+    # degree-orientation triangles: equi-joins only over the
+    # CHECKPOINTED oriented edge list — a cartesian anywhere here
+    # would be quadratic at scale
+    audit={"max_shuffles": 10, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -10779,7 +11166,15 @@ def _graph_pagerank_oracle() -> str:
     return pagerank_oracle_sql(GRAPH_EDGES_CTE.strip(), n_iter=3, top_k=10)
 
 
-_register("graph_pagerank", _graph_pagerank_q, _graph_pagerank_oracle())
+_register(
+    "graph_pagerank",
+    _graph_pagerank_q,
+    _graph_pagerank_oracle(),
+    # integer PageRank: each unrolled round localCheckpoints (plan
+    # stays linear in n_iter), so the audited final fragment is just
+    # the top-k — which must add NO exchange of its own
+    audit={"max_shuffles": 2, "no_python_udf": True},
+)
 
 
 def _resample_interpolate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10838,6 +11233,9 @@ SELECT user_id, epoch_us(ts) AS grid_us,
             ELSE nv END AS value
 FROM nb WHERE is_grid = 1
 """,
+    # linear gap-fill: bounds agg + one per-key window — the grid
+    # explode and interpolation stay inside those two exchanges
+    audit={"max_shuffles": 3, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -10866,6 +11264,9 @@ SELECT doc_id, n_chars, priority FROM (
 )
 ORDER BY priority DESC, doc_id ASC LIMIT 50
 """,
+    # A-ES weighted sample: narrow priority projection + per-
+    # partition heaps — sampling must never globally sort or shuffle
+    audit={"no_shuffle": True, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -10940,6 +11341,10 @@ SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS cnt,
 FROM lineitem
 GROUP BY l_returnflag, l_linestatus
 """,
+    # materialized-view maintenance: base partial + delta partial +
+    # state merge — three keyed aggregations, map-side partials; at
+    # steady state only the delta partial and the merge run
+    audit={"max_shuffles": 4, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -11001,6 +11406,9 @@ j AS (
 )
 SELECT * FROM j WHERE status <> 'unchanged'
 """,
+    # snapshot diff: ONE co-partitioned full-outer join (both sides
+    # hashed on the key) — diff output is churn-sized
+    audit={"max_shuffles": 3, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -11076,6 +11484,10 @@ SELECT e.l_returnflag AS l_returnflag, e.q25, e.q50, e.q75,
        e.sample_size, x.q50_exact
 FROM est e JOIN exact x ON e.l_returnflag = x.l_returnflag
 """,
+    # mergeable quantile sketch: rank windows + collect + the
+    # sample-sized estimate — every exchange keyed, none data-sized
+    # after the first
+    audit={"max_shuffles": 8, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -11108,6 +11520,12 @@ SELECT a.id AS id_a, b.id AS id_b,
 FROM s a JOIN s b ON a.id < b.id
 WHERE levenshtein(a.nm, b.nm) <= 2
 """,
+    # PassJoin exact edit-distance: candidates come from an
+    # EQUI-join on (segment, length-class, index) — never a
+    # cartesian (the only nested-loop is the bounded-by-contract
+    # short-string bucket, len <= d).  Budget covers distinct
+    # names, segment join, candidate distinct, and id expansion.
+    audit={"max_shuffles": 6, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -11162,6 +11580,12 @@ SELECT a.c_custkey AS id_a, b.c_custkey AS id_b, a.rn AS rn_a, b.rn AS rn_b,
 FROM r a JOIN r b ON b.rn > a.rn AND b.rn - a.rn < 10
 WHERE a.c_nationkey = b.c_nationkey
 """,
+    # sorted-neighborhood blocking: the ranked frame is
+    # localCheckpoint'd (one distinct + one range exchange, run
+    # ONCE upstream of this audited plan — rank comes from
+    # monotonically_increasing_id, not a re-shuffling window);
+    # downstream: bucket join sides + id joins, all narrow
+    audit={"max_shuffles": 4, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -11231,6 +11655,10 @@ SELECT ndv_a_est, ndv_b_est, union_est,
        union_exact, inter_exact
 FROM est, exact
 """,
+    # KMV set ops: sketch build (distinct + rank + collect) per
+    # side; combining is all 1-row broadcast nested loops —
+    # kilobytes, never a data-sized exchange
+    audit={"max_shuffles": 7, "codegen": True, "no_python_udf": True},
 )
 
 
@@ -11277,6 +11705,11 @@ SELECT top.token AS token, top.n AS n_exact, est.cms_est AS cms_est,
        top.rank AS rank
 FROM top JOIN est USING (token)
 """,
+    # count-min: explode + ONE partial-aggregated count exchange
+    # for the sketch, top-k heap for the probes, broadcast probe
+    # join (the sketch is <= depth*width rows by construction)
+    audit={"max_shuffles": 3, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -11306,6 +11739,11 @@ _register(
 SELECT o_orderkey, o_custkey FROM orders
 WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_nationkey = 7)
 """,
+    # Bloom semi-join reduction: bitmap build aggregates <=
+    # m_bits/64 words; the big side is screened by BROADCAST
+    # bitmap + hits joins before any exchange of matched rows
+    audit={"max_shuffles": 2, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -11639,6 +12077,12 @@ JOIN sz s1 ON i.d_in = s1.doc_id
 JOIN sz s2 ON i.d_out = s2.doc_id
 WHERE CAST(i.inter AS DOUBLE) / s1.n >= 0.7
 """,
+    # containment join: post-checkpoint plan is prefix-probe ⋈
+    # posting + verify joins — pair-distinct exchange plus the
+    # explicit narrow repartition that parallelizes the CPU-bound
+    # verify; the array-table joins broadcast at this scale
+    audit={"max_shuffles": 2, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -11720,6 +12164,10 @@ SELECT c.doc_id, c.cluster_id, q.quality,
          AS is_canonical
 FROM clus c JOIN q USING (doc_id)
 """,
+    # canonical-quality dedup: components fixpoint is checkpointed;
+    # the residual plan is one quality join + one cluster window
+    audit={"max_shuffles": 1, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -11747,6 +12195,11 @@ SELECT CAST(((rn - 1) * 32) // n AS INTEGER) AS bucket,
        count(*) AS n_rows, min(val) AS lo, max(val) AS hi
 FROM r GROUP BY 1
 """,
+    # equi-depth histogram: range repartition + rank-offsets agg +
+    # bounded (<= n_ranges rows) offsets window + final bucket agg —
+    # and NEVER a global single-partition sort of the data itself
+    audit={"max_shuffles": 5, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -11790,6 +12243,10 @@ CROSS JOIN nb
 ORDER BY lift DESC, p.a, p.b
 LIMIT 20
 """,
+    # basket lift: distinct + size-guard join + pair agg + two item
+    # joins; N is a broadcast 1-row frame (no driver round-trip)
+    audit={"max_shuffles": 5, "broadcast": True, "codegen": True,
+           "no_python_udf": True},
 )
 
 
@@ -12078,4 +12535,15 @@ WHERE NOT EXISTS (
     AND (x.price > a.price OR x.d_us < a.d_us)
 )
 """,
+    # 2-D skyline: the running min over the distinct-price frame is
+    # range-partitioned + per-partition windows + an n_ranges-row
+    # prefix combine.  The ONE permitted SinglePartition exchange is
+    # that combine (row count = the n_ranges constant, independent
+    # of data volume); a second one means the data-sized window
+    # regressed to a global sort.  (The pre-checkpoint range
+    # repartition is audited implicitly: it precedes the
+    # localCheckpoint, so any global sort there would surface as a
+    # SinglePartition in the checkpoint job — covered by the
+    # oracle-checked run in the suite.)
+    audit={"max_shuffles": 4, "no_python_udf": True, "single_partition_budget": 1},
 )

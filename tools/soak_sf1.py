@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""sf0.1 → sf1 scaling soak for the top-5 headline rows (r8 verdict #6).
+"""sf0.1 → sf1 scaling soak: each row timed at 1× and 10× data.
 
 The 100 TB arguments in SCALE.md rest on sf0.1 measurements plus plan
 shape; this harness takes the one order-of-magnitude step that converts
@@ -12,17 +12,23 @@ the strongest claims from argument to record:
    centroids + residual spread, re-normalized) — same statistical
    character, 10× the mass, deterministic (seed 1042).  The driver's
    own testdata is read-only and stops at sf0.1.
-2. Times the five rows at both scales (3 samples, min-of, per-sample
-   JVM GC — the bench.py protocol) and prints one JSON line with the
-   measured time ratios.
+2. Times each row at both scales (an untimed warm pass, then 3
+   samples, min-of, per-sample JVM GC — the bench.py protocol) and
+   prints one JSON line with the measured time ratios.
 
-Scaling-parameter policy (the design-faithful measurement): rows whose
-cost model is Σ(bucket²) keep the EXPECTED BUCKET SIZE constant as the
-corpus grows — ``semantic_dedup`` runs k = n/125 clusters (16 at
-sf0.1, 160 at sf1), exactly how a production deployment holds cluster
-size at the SemDeDup paper's operating point.  Everything else runs
-the suite's own parameters unchanged.  The volume row scales by voxels
-(8× = 2× per axis), so its ratio column is per-8×-data.
+Run:  python tools/soak_sf1.py [ROW ...]   (or ``--gen-only``)
+
+A ROW is any suite query (run at sf0.1 and sf1 unchanged) or one of the
+built-in rows, which take precedence over a suite row of the same name;
+with no ROW the built-in rows run.  Scaling-parameter policy (the
+design-faithful measurement): rows whose cost model is Σ(bucket²) keep
+the EXPECTED BUCKET SIZE constant as the corpus grows —
+``semantic_dedup_gemm`` runs k = n/125 clusters (16 at sf0.1, 160 at
+sf1), exactly how a production deployment holds cluster size at the
+SemDeDup paper's operating point; ``dedup_minhash_lsh`` runs the
+library-default (xxhash64 scale) backend.  The two volume rows
+(``bulk_upscale15_write``, ``zarr3_4x_shard_export``) scale by voxels
+(8× = 2× per axis), so their ratio column is per-8×-data.
 
 Run it ALONE (no concurrent pytest/bench — the perf-pitfalls memory).
 """
@@ -31,7 +37,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -137,18 +145,17 @@ def main() -> None:
     generate_sf1()
     if "--gen-only" in sys.argv:
         return
+    names = [a for a in sys.argv[1:] if not a.startswith("--")]
 
     from pyspark.sql import functions as F
 
     from atlas_upscaling_dask_spark import suite
-    from atlas_upscaling_dask_spark.extensions.dedup import (
-        containment_join,
-        minhash_lsh_pairs,
-    )
+    from atlas_upscaling_dask_spark.extensions.dedup import minhash_lsh_pairs
     from atlas_upscaling_dask_spark.extensions.similarity import semantic_dedup
     from atlas_upscaling_dask_spark.operators.upscale import upscale_chunks
     from atlas_upscaling_dask_spark.session import get_spark
     from atlas_upscaling_dask_spark.sinks.writer import write_volume
+    from atlas_upscaling_dask_spark.sinks.zarr3 import write_zarr3
     from atlas_upscaling_dask_spark.tables import load_table
     from atlas_upscaling_dask_spark.volume import VolumeMeta, synthetic_chunks
 
@@ -158,89 +165,94 @@ def main() -> None:
     def force(df):
         df.write.format("noop").mode("overwrite").save()
 
+    def suite_row(name):
+        q = suite.QUERIES[name]
+        return (lambda: force(q(spark, SF01)), lambda: force(q(spark, SF1)), 10)
+
+    def vol_row(scale_axes: int):
+        # x15 chunk-packed upscale + write of the cached (114,160,176)
+        # volume (scale_axes=2: 8x the voxels)
+        meta = VolumeMeta(114 * scale_axes, 160 * scale_axes, 176 * scale_axes)
+        chunks = synthetic_chunks(spark, meta, chunk=(8, 32, 44)).cache()
+        big = VolumeMeta(meta.dim_z * 15, meta.dim_y * 15, meta.dim_x * 15)
+        out_dir = tempfile.mkdtemp(prefix=f"x15_{scale_axes}x_", dir=scratch)
+        return lambda: write_volume(
+            upscale_chunks(chunks, 15, codec="zstd"),
+            out_dir, big, scale=15, compressor="none",
+        )
+
+    def zarr3_row(scale_axes: int):
+        # the bench's 2.46 GB (912,640,1056) shape, same chunk and shard
+        # geometry (scale_axes=2: 8x the shards, same one-shard-in-memory
+        # bound); the store is removed, untimed, before each sample
+        meta = VolumeMeta(912 * scale_axes, 640 * scale_axes, 1056 * scale_axes)
+        chunks = synthetic_chunks(spark, meta, chunk=(57, 80, 132))
+        path = os.path.join(scratch, f"z3_{scale_axes}x.zarr")
+
+        def run():
+            write_zarr3(chunks, path, meta, shard=(2, 2, 2))
+
+        run.reset = lambda: shutil.rmtree(path, ignore_errors=True)
+        return run
+
+    docs = {sf: load_table(spark, sf, "documents") for sf in (SF01, SF1)}
+    emb = {sf: load_table(spark, sf, "embeddings") for sf in (SF01, SF1)}
+    # name -> (small run, big run, data ratio); built-ins take
+    # precedence over suite rows of the same name
+    builtin = {
+        "prepare_training_set": lambda: suite_row("prepare_training_set"),
+        "dedup_minhash_lsh": lambda: (
+            lambda: force(minhash_lsh_pairs(docs[SF01], use_dictionary=False)),
+            lambda: force(minhash_lsh_pairs(docs[SF1], use_dictionary=False)),
+            10,
+        ),
+        "setsim_containment_join": lambda: suite_row("setsim_containment_join"),
+        "semantic_dedup_gemm": lambda: (
+            lambda: force(semantic_dedup(emb[SF01], 0.3, 16, backend="gemm")),
+            lambda: force(semantic_dedup(emb[SF1], 0.3, 160, backend="gemm")),
+            10,
+        ),
+        "bulk_upscale15_write": lambda: (vol_row(1), vol_row(2), 8),
+        "zarr3_4x_shard_export": lambda: (zarr3_row(1), zarr3_row(2), 8),
+    }
+    unknown = [n for n in names if n not in builtin and n not in suite.QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown rows: {unknown}")
+
     def timed(fn, runs: int = 3) -> list[float]:
+        reset = getattr(fn, "reset", lambda: None)  # untimed cleanup
+        fn()  # untimed warm pass
         out = []
         for _ in range(runs):
+            reset()
             spark.sparkContext._jvm.System.gc()
             t0 = time.perf_counter()
             fn()
             out.append(round(time.perf_counter() - t0, 3))
+        reset()
         return out
 
-    import shutil
-    import tempfile
-
-    def vol_row(scale_axes: int):
-        meta = VolumeMeta(114 * scale_axes, 160 * scale_axes, 176 * scale_axes)
-        chunks = synthetic_chunks(spark, meta, chunk=(8, 32, 44)).cache()
-        out_dir = tempfile.mkdtemp(prefix="soak_x15_")
-        try:
-            force(upscale_chunks(chunks, 15, codec="zstd"))  # warm
-            big = VolumeMeta(meta.dim_z * 15, meta.dim_y * 15, meta.dim_x * 15)
-            return timed(
-                lambda: write_volume(
-                    upscale_chunks(chunks, 15, codec="zstd"),
-                    out_dir, big, scale=15, compressor="none",
-                )
-            )
-        finally:
-            chunks.unpersist(blocking=True)
-            shutil.rmtree(out_dir, ignore_errors=True)
-
     results: dict[str, dict] = {}
-
-    def row(name, small_fn, big_fn, data_ratio):
-        s = timed(small_fn)
-        b = timed(big_fn)
-        results[name] = {
-            "sf0.1_sec": min(s),
-            "sf1_sec": min(b),
-            "data_ratio": data_ratio,
-            "time_ratio": round(min(b) / min(s), 2),
-            "spread": {"sf0.1": s, "sf1": b},
-        }
-        print(f"{name}: {min(s)} -> {min(b)} ({results[name]['time_ratio']}x)",
-              file=sys.stderr)
-
-    docs_s = load_table(spark, SF01, "documents")
-    docs_b = load_table(spark, SF1, "documents")
-    emb_s = load_table(spark, SF01, "embeddings")
-    emb_b = load_table(spark, SF1, "embeddings")
-
-    row(
-        "prepare_training_set",
-        lambda: force(suite.QUERIES["prepare_training_set"](spark, SF01)),
-        lambda: force(suite.QUERIES["prepare_training_set"](spark, SF1)),
-        10,
-    )
-    row(
-        "dedup_minhash_lsh",
-        lambda: force(minhash_lsh_pairs(docs_s, use_dictionary=False)),
-        lambda: force(minhash_lsh_pairs(docs_b, use_dictionary=False)),
-        10,
-    )
-    row(
-        "setsim_containment_join",
-        lambda: force(containment_join(docs_s, threshold=0.7, n=3)),
-        lambda: force(containment_join(docs_b, threshold=0.7, n=3)),
-        10,
-    )
-    row(
-        "semantic_dedup_gemm",
-        lambda: force(semantic_dedup(emb_s, 0.3, 16, backend="gemm")),
-        lambda: force(semantic_dedup(emb_b, 0.3, 160, backend="gemm")),
-        10,
-    )
-    results["bulk_upscale15_write"] = {}
-    s = vol_row(1)
-    b = vol_row(2)
-    results["bulk_upscale15_write"] = {
-        "sf0.1_sec": min(s),
-        "sf1_sec": min(b),
-        "data_ratio": 8,
-        "time_ratio": round(min(b) / min(s), 2),
-        "spread": {"1x": s, "8x": b},
-    }
+    scratch = tempfile.mkdtemp(prefix="soak_sf1_")
+    try:
+        for name in names or builtin:
+            small, big, data_ratio = (
+                builtin[name]() if name in builtin else suite_row(name)
+            )
+            s = timed(small)
+            b = timed(big)
+            results[name] = {
+                "sf0.1_sec": min(s),
+                "sf1_sec": min(b),
+                "data_ratio": data_ratio,
+                "time_ratio": round(min(b) / min(s), 2),
+                "spread": {"sf0.1": s, "sf1": b},
+            }
+            print(f"{name}: {min(s)} -> {min(b)} ({results[name]['time_ratio']}x)",
+                  file=sys.stderr)
+    finally:
+        spark.catalog.clearCache()
+        shutil.rmtree(scratch, ignore_errors=True)
     print(json.dumps({"soak": results}, sort_keys=True))
 
 
