@@ -869,18 +869,22 @@ def pq_topk(
     Either way the scan side never shuffles raw corpus vectors;
     compose with the IVF bucket layout (`build_ivf_index`) for
     sublinear candidate sets.  Returns (query_id, neighbor_id, adist,
-    rk) — approximate distance ascending, self-matches excluded.
+    rk) — approximate distance ascending, self-matches excluded; an
+    empty query set returns an empty frame on both backends.  The
+    kernel carries ids as int64, so it raises ``TypeError`` on a
+    non-integral id column before running any job; ``backend="agg"``
+    takes any id type.
     """
+    if backend not in ("kernel", "agg"):
+        raise ValueError(f"backend must be kernel|agg, got {backend!r}")
+    if backend == "kernel":
+        _require_integral_ids(queries, id_col, corpus)
     books = pq_codebooks(corpus, m, k_sub, id_col, vec_col)
     if refine_iters > 0:  # Lloyd-refined books: better recall, no oracle
         books = refine_pq_codebooks(corpus, books, refine_iters, vec_col=vec_col)
     if backend == "kernel":
-        q_rows = queries.select(id_col, vec_col).collect()
-        if not q_rows:
-            raise ValueError("empty query set")
-        q_ids = [int(r[0]) for r in q_rows]
-        luts = _adc_lut_nanos(books, q_rows)
-        probes = {qid: [0] for qid in q_ids}
+        # one all-covering bucket: every query probes bucket 0
+        q_ids, probes, luts = _adc_probes(queries, None, books, 1, id_col, vec_col)
         cand = corpus.select(
             id_col, vec_col, F.lit(0).alias("bucket")
         )
@@ -888,8 +892,6 @@ def pq_topk(
             cand, None, books, probes, luts, q_ids, k, id_col, vec_col,
             assigned_bucket=True,
         )
-    if backend != "agg":
-        raise ValueError(f"backend must be kernel|agg, got {backend!r}")
     dsub = len(books[0][0])
     spark = corpus.sparkSession
     book_rows = [
@@ -1099,7 +1101,14 @@ def ivf_pq_topk(
     Distances are bitwise equal to `pq_topk` on shared candidates: the
     same codebooks, the same encode fold, per-term round-to-9 carried
     as exact integer nanos.
+
+    The coarse centroids are the ``n_centroids`` lowest-id corpus
+    vectors, so a corpus with fewer vectors than ``n_centroids`` raises
+    ``ValueError`` (naming both counts); lower ``n_centroids`` for a
+    small corpus.  Ids must be integral (``TypeError`` otherwise), and
+    an empty query set returns an empty frame.
     """
+    _require_integral_ids(queries, id_col, corpus)
     # ONE seed collect serves both deterministic quantizers (r13): the
     # coarse centroids and the PQ codebooks are both derived from the
     # lowest-id corpus vectors, so collecting max(n_centroids, k_sub)
@@ -1113,7 +1122,10 @@ def ivf_pq_topk(
         .collect()
     )
     if len(seed_rows) < n_centroids:
-        raise ValueError(f"corpus has fewer than {n_centroids} vectors")
+        raise ValueError(
+            f"ivf_pq_topk: corpus has {len(seed_rows)} vectors, fewer than "
+            f"n_centroids={n_centroids}; lower n_centroids"
+        )
     cents = np.array(
         [r[1] for r in seed_rows[:n_centroids]], dtype=np.float64
     )
@@ -1133,24 +1145,43 @@ def ivf_pq_topk(
     )
 
 
+def _require_integral_ids(queries: DataFrame, id_col: str, corpus=None) -> None:
+    """The ADC kernel carries ids as int64: refuse any other id type
+    from the schemas alone, before a job runs."""
+    from pyspark.sql import types as T
+
+    for what, df in (("queries", queries), ("corpus", corpus)):
+        if df is None:
+            continue
+        dt = df.select(id_col).schema[0].dataType
+        if not isinstance(dt, T.IntegralType):
+            raise TypeError(
+                f"the ADC kernel needs integral ids, but {what}.{id_col} is "
+                f"{dt.simpleString()}; use pq_topk(..., backend=\"agg\") "
+                "for other id types"
+            )
+
+
 def _adc_probes(queries, cents, books, n_probe, id_col, vec_col):
     """Shared IVFADC query prep: collect the (small-by-contract) query
     set, rank its ``n_probe`` nearest coarse buckets (stable argsort,
     lowest-cid tie-break — the oracle's row_number order), and build
-    the per-query integer-nanos ADC LUTs."""
+    the per-query integer-nanos ADC LUTs.  ``cents=None`` is one
+    all-covering bucket 0.  An empty query set yields empty probes."""
     import numpy as np
 
-    ct = np.asarray(cents, dtype=np.float64)
+    ct = None if cents is None else np.asarray(cents, dtype=np.float64)
     q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        raise ValueError("empty query set")
     q_ids = [int(r[0]) for r in q_rows]
     probes = {}
-    for r in q_rows:
+    for qid, r in zip(q_ids, q_rows):
+        if ct is None:
+            probes[qid] = [0]
+            continue
         qv = np.asarray(r[1], dtype=np.float64)
         qv = qv / np.linalg.norm(qv)
         order = np.argsort(-(ct @ qv), kind="stable")[:n_probe]
-        probes[int(r[0])] = [int(b) for b in order]
+        probes[qid] = [int(b) for b in order]
     return q_ids, probes, _adc_lut_nanos(books, q_rows)
 
 
@@ -1175,6 +1206,7 @@ def ivf_pq_index_topk(
 
     from ..fsutil import read_text
 
+    _require_integral_ids(queries, id_col)
     side = json.loads(
         read_text(spark, path.rstrip("/") + "/_ivf_centroids.json")
     )

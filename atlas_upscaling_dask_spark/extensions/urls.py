@@ -115,21 +115,35 @@ def canonicalize_urls(
     URLs without ``://`` pass through trimmed-verbatim (opaque ids
     happen in crawl tables; refusing to guess beats mangling).
     """
+    # Shared sub-expressions are staged as named columns and dropped at
+    # the end: inlined, each of u/base/rest/hostport would be copied
+    # into every expression that reads it, and a 4-row frame planned
+    # ~780k characters of expression tree (under 6k staged).  The
+    # optimizer keeps the stages apart because each is read more than
+    # once.
+    names = [f"__canon_{n}" for n in ("u", "base", "query", "scheme", "rest", "hostport")]
+    u, base, query, scheme, rest, hostport = (F.col(n) for n in names)
     raw = F.trim(F.col(url_col))
-    u = _pct_normalize(raw)
     nofrag = F.substring_index(u, "#", 1)
     has_q = F.instr(nofrag, "?") > 0
-    base = F.substring_index(nofrag, "?", 1)
-    query = F.when(has_q, F.substr(
-        nofrag, F.instr(nofrag, "?") + 1, F.length(nofrag)
-    )).otherwise(F.lit(""))
-
-    scheme = F.lower(F.regexp_extract(base, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
-    has_scheme = scheme != ""
-    # everything past "<scheme>://"
-    rest = F.substr(base, F.length(scheme) + F.lit(4), F.length(base))
+    staged = (
+        df.withColumn(names[0], _pct_normalize(raw))
+        .withColumn(names[1], F.substring_index(nofrag, "?", 1))
+        .withColumn(names[2], F.when(has_q, F.substr(
+            nofrag, F.instr(nofrag, "?") + 1, F.length(nofrag)
+        )).otherwise(F.lit("")))
+        .withColumn(names[3], F.lower(
+            F.regexp_extract(base, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1)
+        ))
+        # everything past "<scheme>://"
+        .withColumn(names[4], F.substr(base, F.length(scheme) + F.lit(4), F.length(base)))
+    )
     slash = F.instr(rest, "/")
-    hostport = F.when(slash > 0, F.substr(rest, F.lit(1), slash - 1)).otherwise(rest)
+    staged = staged.withColumn(
+        names[5],
+        F.when(slash > 0, F.substr(rest, F.lit(1), slash - 1)).otherwise(rest),
+    )
+    has_scheme = scheme != ""
     raw_path = F.when(slash > 0, F.substr(rest, slash, F.length(rest))).otherwise(
         F.lit("")
     )
@@ -183,7 +197,9 @@ def canonicalize_urls(
     ).otherwise(F.lit(""))
 
     canon = F.concat(scheme, F.lit("://"), host, port_part, path, q_part)
-    return df.withColumn(out_col, F.when(has_scheme, canon).otherwise(raw))
+    return staged.withColumn(
+        out_col, F.when(has_scheme, canon).otherwise(raw)
+    ).drop(*names)
 
 
 def suffix_frame(df_or_spark, suffixes=DEFAULT_SUFFIXES) -> DataFrame:

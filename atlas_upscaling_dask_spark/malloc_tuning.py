@@ -1,7 +1,7 @@
 """Per-process glibc malloc tuning for large-buffer kernels.
 
-The chunk-codec kernels (ome_zarr / zarr3 export+scan, MHD/TIFF scan,
-COO codec) allocate and free multi-megabyte buffers per chunk —
+The chunk-codec kernels (every chunk-table kernel, the ome_zarr / zarr3
+writers, the COO codec) allocate and free multi-megabyte buffers per chunk —
 decoded payloads, padded edge blocks, ``tobytes`` copies, compressed
 outputs.  Buffers above glibc's dynamic mmap threshold (~128 KB-32 MB)
 are serviced by ``mmap`` and **returned to the kernel on free**, so
@@ -20,7 +20,8 @@ high-water mark is a few chunk buffers per worker (bounded by the
 Arrow batch size), not data-sized.
 
 Idempotent, best-effort (no-op off glibc/Linux), and called at the
-top of each heavy kernel so it runs exactly once per worker process —
+top of each heavy kernel — for chunk-table output that is the shared
+emitter, ``volume.chunk_kernel`` — so it runs once per worker process;
 kernels are shipped to executors by closure, so a driver-side setting
 would not reach them.
 """
@@ -44,16 +45,10 @@ _PIN_BYTES = 64 * 1024 * 1024
 
 def pin_large_alloc_reuse() -> bool:
     """Raise glibc's mmap/trim thresholds once per process; returns
-    True when the tuning applied (False on non-glibc platforms, or
-    when ``SPARK_GRAFT_NO_MALLOC_PIN`` is set — the A/B escape
-    hatch)."""
+    True when the tuning applied (False on non-glibc platforms)."""
     global _PINNED
     if _PINNED:
         return True
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_MALLOC_PIN"):
-        return False
     try:
         import ctypes
 

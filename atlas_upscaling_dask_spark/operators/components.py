@@ -372,7 +372,7 @@ def connected_components_chunks(
     """
     import pyarrow as pa
 
-    from ..volume import PAYLOAD_DTYPE, _decode_payload
+    from ..volume import PAYLOAD_DTYPE, _decode_block
 
     zdim, ydim, xdim = shape
     if zdim * ydim * xdim >= 2**63:
@@ -423,13 +423,7 @@ def connected_components_chunks(
                 cz, cy, cx = d["cz"][i], d["cy"][i], d["cx"][i]
                 z0, y0, x0 = d["z0"][i], d["y0"][i], d["x0"][i]
                 vid = d["volume_id"][i]
-                block = np.frombuffer(
-                    _decode_payload(
-                        d["payload"][i], d["codec"][i],
-                        dz * dy * dx * PAYLOAD_DTYPE.itemsize,
-                    ),
-                    dtype=PAYLOAD_DTYPE,
-                ).reshape(dz, dy, dx)
+                block = _decode_block(d["payload"][i], d["codec"][i], (dz, dy, dx))
                 comp = _local_ccl(block, z0, y0, x0)
                 rows.append(("chunk", cz, cy, cx, z0, y0, x0, dz, dy, dx, "core"))
                 lab_payloads.append(block.tobytes())

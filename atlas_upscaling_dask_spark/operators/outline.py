@@ -172,17 +172,9 @@ def halo_map_chunks(
     """
     import pyarrow as pa
 
-    from ..volume import (
-        CHUNK_SCHEMA,
-        PAYLOAD_CODECS,
-        PAYLOAD_DTYPE,
-        _decode_payload,
-        _encode_payload,
-    )
+    from ..volume import CHUNK_SCHEMA, _check_codec, _decode_block, chunk_kernel
 
-    if codec is not None and codec not in PAYLOAD_CODECS:
-        raise ValueError(f"unsupported codec {codec!r}")
-    out_codec = codec or "raw"
+    _check_codec(codec)
 
     halo_schema = "volume_id string, cz int, cy int, cx int, z0 long, y0 long, x0 long, dz int, dy int, dx int, codec string, payload binary, side string"
 
@@ -231,13 +223,7 @@ def halo_map_chunks(
                 dz, dy, dx = d["dz"][i], d["dy"][i], d["dx"][i]
                 cz, cy, cx = d["cz"][i], d["cy"][i], d["cx"][i]
                 vid = d["volume_id"][i]
-                block = np.frombuffer(
-                    _decode_payload(
-                        d["payload"][i], d["codec"][i],
-                        dz * dy * dx * PAYLOAD_DTYPE.itemsize,
-                    ),
-                    dtype=PAYLOAD_DTYPE,
-                ).reshape(dz, dy, dx)
+                block = _decode_block(d["payload"][i], d["codec"][i], (dz, dy, dx))
                 rows.append(
                     (vid, cz, cy, cx,
                      d["z0"][i], d["y0"][i], d["x0"][i],
@@ -280,18 +266,13 @@ def halo_map_chunks(
         core = next((g for g in group if g[-1] == "core"), None)
         if core is None:
             return None
-        dz, dy, dx = core[7], core[8], core[9]
-        block = np.frombuffer(
-            _decode_payload(core[11], core[10], dz * dy * dx * PAYLOAD_DTYPE.itemsize),
-            dtype=PAYLOAD_DTYPE,
-        ).reshape(dz, dy, dx)
+        block = _decode_block(core[11], core[10], core[7:10])
         padded = np.pad(block, 1, mode="edge")
         for row in group:
             side = row[-1]
             if side == "core":
                 continue
-            fdz, fdy, fdx = row[7], row[8], row[9]
-            face = np.frombuffer(row[11], dtype=PAYLOAD_DTYPE).reshape(fdz, fdy, fdx)
+            face = _decode_block(row[11], row[10], row[7:10])
             if side == "zlo":
                 padded[0, 1:-1, 1:-1] = face[0]
             elif side == "zhi":
@@ -340,26 +321,14 @@ def halo_map_chunks(
 
         return exchanged.mapInArrow(kernel_rows, schema=out_schema)
 
-    def kernel(batches):
-        from ..volume import _chunk_batch
-
-        FLUSH_ROWS = 64
-        out: tuple[list, list] = ([], [])
+    def stencil(batches):
         for group in _groups(batches):
             built = _padded_of(group)
-            if built is None:
-                continue
-            core, block, padded = built
-            res = block_fn(block, padded).astype(PAYLOAD_DTYPE)
-            out[0].append(core[:10])
-            out[1].append(_encode_payload(res, out_codec))
-            if len(out[0]) >= FLUSH_ROWS:
-                yield _chunk_batch(out[0], out[1], out_codec)
-                out = ([], [])
-        if out[0]:
-            yield _chunk_batch(out[0], out[1], out_codec)
+            if built is not None:
+                core, block, padded = built
+                yield core[0], core[1:4], core[4:7], block_fn(block, padded)
 
-    return exchanged.mapInArrow(kernel, schema=CHUNK_SCHEMA)
+    return exchanged.mapInArrow(chunk_kernel(stencil, codec), schema=CHUNK_SCHEMA)
 
 
 #: the six 1-voxel-shifted views of a halo-padded block, as slices

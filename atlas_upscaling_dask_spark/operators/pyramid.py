@@ -18,6 +18,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..volume import map_chunks
+
 
 def decimate(voxels: DataFrame, stride: int = 2) -> DataFrame:
     """One decimation step: keep voxels whose coords are ≡0 (mod stride),
@@ -50,50 +52,21 @@ def decimate_chunks(chunks: DataFrame, stride: int = 2) -> DataFrame:
     at all (each output chunk is a function of exactly one input
     chunk).
     """
-    from ..volume import CHUNK_SCHEMA, PAYLOAD_DTYPE, _chunk_batch, _decode_payload
-
     if stride < 2:
         raise ValueError(f"stride must be >= 2, got {stride}")
     s = stride
 
-    def kernel(batches):
-        for batch in batches:
-            d = batch.to_pydict()
-            rows, payloads = [], []
-            for i in range(len(d["cz"])):
-                dz, dy, dx = d["dz"][i], d["dy"][i], d["dx"][i]
-                z0, y0, x0 = d["z0"][i], d["y0"][i], d["x0"][i]
-                oz, oy, ox = (-z0) % s, (-y0) % s, (-x0) % s
-                if oz >= dz or oy >= dy or ox >= dx:
-                    continue  # chunk holds no lattice point
-                block = np.frombuffer(
-                    _decode_payload(
-                        d["payload"][i],
-                        d["codec"][i],
-                        dz * dy * dx * PAYLOAD_DTYPE.itemsize,
-                    ),
-                    dtype=PAYLOAD_DTYPE,
-                ).reshape(dz, dy, dx)
-                sub = np.ascontiguousarray(block[oz::s, oy::s, ox::s])
-                rows.append(
-                    (
-                        d["volume_id"][i],
-                        d["cz"][i],
-                        d["cy"][i],
-                        d["cx"][i],
-                        (z0 + oz) // s,
-                        (y0 + oy) // s,
-                        (x0 + ox) // s,
-                        sub.shape[0],
-                        sub.shape[1],
-                        sub.shape[2],
-                    )
-                )
-                payloads.append(sub.tobytes())
-            if rows:
-                yield _chunk_batch(rows, payloads)
+    def decimate_block(key, origin, block):
+        oz, oy, ox = off = tuple((-o) % s for o in origin)
+        if any(f >= e for f, e in zip(off, block.shape)):
+            return  # chunk holds no lattice point
+        yield (
+            key,
+            tuple((o + f) // s for o, f in zip(origin, off)),
+            block[oz::s, oy::s, ox::s],
+        )
 
-    return chunks.mapInArrow(kernel, schema=CHUNK_SCHEMA)
+    return map_chunks(chunks, decimate_block)
 
 
 def downsample_mode_chunks(chunks: DataFrame, stride: int = 2) -> DataFrame:
@@ -110,65 +83,32 @@ def downsample_mode_chunks(chunks: DataFrame, stride: int = 2) -> DataFrame:
     label on tie").  The COO variant pays two key shuffles; this one
     pays none, because a chunk-aligned block never straddles chunks.
     """
-    from ..volume import CHUNK_SCHEMA, PAYLOAD_DTYPE, _chunk_batch, _decode_payload
-
     if stride < 2:
         raise ValueError(f"stride must be >= 2, got {stride}")
     s = stride
 
-    def kernel(batches):
-        for batch in batches:
-            d = batch.to_pydict()
-            rows, payloads = [], []
-            for i in range(len(d["cz"])):
-                dz, dy, dx = d["dz"][i], d["dy"][i], d["dx"][i]
-                z0, y0, x0 = d["z0"][i], d["y0"][i], d["x0"][i]
-                if (z0 % s or y0 % s or x0 % s or dz % s or dy % s or dx % s):
-                    raise ValueError(
-                        "downsample_mode_chunks needs stride-aligned chunks "
-                        f"(origin ({z0},{y0},{x0}) extent ({dz},{dy},{dx}) "
-                        f"vs stride {s}); rechunk first"
-                    )
-                block = np.frombuffer(
-                    _decode_payload(
-                        d["payload"][i],
-                        d["codec"][i],
-                        dz * dy * dx * PAYLOAD_DTYPE.itemsize,
-                    ),
-                    dtype=PAYLOAD_DTYPE,
-                ).reshape(dz, dy, dx)
-                nz, ny, nx = dz // s, dy // s, dx // s
-                votes = (
-                    block.reshape(nz, s, ny, s, nx, s)
-                    .transpose(0, 2, 4, 1, 3, 5)
-                    .reshape(-1, s**3)
-                )
-                srt = np.sort(votes, axis=1)
-                counts = np.empty_like(srt, dtype=np.int16)
-                for j in range(s**3):
-                    counts[:, j] = (srt == srt[:, j : j + 1]).sum(axis=1)
-                mode = srt[np.arange(srt.shape[0]), np.argmax(counts, axis=1)]
-                rows.append(
-                    (
-                        d["volume_id"][i],
-                        d["cz"][i],
-                        d["cy"][i],
-                        d["cx"][i],
-                        z0 // s,
-                        y0 // s,
-                        x0 // s,
-                        nz,
-                        ny,
-                        nx,
-                    )
-                )
-                payloads.append(
-                    np.ascontiguousarray(mode.reshape(nz, ny, nx)).tobytes()
-                )
-            if rows:
-                yield _chunk_batch(rows, payloads)
+    def mode_block(key, origin, block):
+        (z0, y0, x0), (dz, dy, dx) = origin, block.shape
+        if z0 % s or y0 % s or x0 % s or dz % s or dy % s or dx % s:
+            raise ValueError(
+                "downsample_mode_chunks needs stride-aligned chunks "
+                f"(origin ({z0},{y0},{x0}) extent ({dz},{dy},{dx}) "
+                f"vs stride {s}); rechunk first"
+            )
+        nz, ny, nx = dz // s, dy // s, dx // s
+        votes = (
+            block.reshape(nz, s, ny, s, nx, s)
+            .transpose(0, 2, 4, 1, 3, 5)
+            .reshape(-1, s**3)
+        )
+        srt = np.sort(votes, axis=1)
+        counts = np.empty_like(srt, dtype=np.int16)
+        for j in range(s**3):
+            counts[:, j] = (srt == srt[:, j : j + 1]).sum(axis=1)
+        mode = srt[np.arange(srt.shape[0]), np.argmax(counts, axis=1)]
+        yield key, (z0 // s, y0 // s, x0 // s), mode.reshape(nz, ny, nx)
 
-    return chunks.mapInArrow(kernel, schema=CHUNK_SCHEMA)
+    return map_chunks(chunks, mode_block)
 
 
 def build_pyramid(voxels: DataFrame, levels: int, cache_base: bool = True) -> DataFrame:

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..volume import CHUNK_SCHEMA, PAYLOAD_DTYPE
+from ..volume import map_chunks
 
 
 def upscale_coo(voxels: DataFrame, scale: int) -> DataFrame:
@@ -77,66 +77,19 @@ def upscale_chunks(chunks: DataFrame, scale: int, codec: str | None = None) -> D
     reference's Blosc zstd clevel 5 and ~7× faster than 'zlib' here.
     Downstream readers decode via the ``codec`` column.
     """
-    from ..volume import PAYLOAD_CODECS, _chunk_batch, _decode_payload, _encode_payload
-
     if scale < 1:
         raise ValueError(f"scale must be >= 1, got {scale}")
-    if codec is not None and codec not in PAYLOAD_CODECS:
-        raise ValueError(f"unsupported codec {codec!r}")
 
-    # Arrow binary arrays carry int32 offsets (2 GB per array); large
-    # scales (s³ growth) can blow past that if a whole input batch's
-    # outputs land in one RecordBatch — flush per ~512 MB instead.
-    FLUSH_BYTES = 512 * 1024 * 1024
+    def up(key, origin, block):
+        # reshape of the broadcast view materializes the s³ output in
+        # ONE memory pass; the codecs consume the array via the buffer
+        # protocol (no tobytes copy on compress)
+        dz, dy, dx = block.shape
+        yield key, tuple(o * scale for o in origin), np.broadcast_to(
+            block[:, None, :, None, :, None], (dz, scale, dy, scale, dx, scale)
+        ).reshape(dz * scale, dy * scale, dx * scale)
 
-    out_codec = codec or "raw"
-
-    def kernel(batches):
-        from atlas_upscaling_dask_spark.malloc_tuning import pin_large_alloc_reuse
-        pin_large_alloc_reuse()
-        for batch in batches:
-            d = batch.to_pydict()
-            rows, payloads, pending = [], [], 0
-            for vi in range(len(d["cz"])):
-                dz, dy, dx = d["dz"][vi], d["dy"][vi], d["dx"][vi]
-                block = np.frombuffer(
-                    _decode_payload(
-                        d["payload"][vi],
-                        d["codec"][vi],
-                        dz * dy * dx * PAYLOAD_DTYPE.itemsize,
-                    ),
-                    dtype=PAYLOAD_DTYPE,
-                ).reshape(dz, dy, dx)
-                # reshape of the broadcast view materializes the s³ output
-                # in ONE memory pass; the codecs consume the array via
-                # the buffer protocol (no tobytes copy on compress)
-                up = np.broadcast_to(
-                    block[:, None, :, None, :, None],
-                    (dz, scale, dy, scale, dx, scale),
-                ).reshape(dz * scale, dy * scale, dx * scale)
-                payloads.append(_encode_payload(up, out_codec))
-                rows.append(
-                    (
-                        d["volume_id"][vi],
-                        d["cz"][vi],
-                        d["cy"][vi],
-                        d["cx"][vi],
-                        d["z0"][vi] * scale,
-                        d["y0"][vi] * scale,
-                        d["x0"][vi] * scale,
-                        dz * scale,
-                        dy * scale,
-                        dx * scale,
-                    )
-                )
-                pending += len(payloads[-1])
-                if pending >= FLUSH_BYTES:
-                    yield _chunk_batch(rows, payloads, out_codec)
-                    rows, payloads, pending = [], [], 0
-            if rows:
-                yield _chunk_batch(rows, payloads, out_codec)
-
-    return chunks.mapInArrow(kernel, schema=CHUNK_SCHEMA)
+    return map_chunks(chunks, up, codec)
 
 
 def resize_floor(
@@ -248,40 +201,14 @@ def relabel_chunks(chunks: DataFrame, mapping: dict[int, int]) -> DataFrame:
     analog of ``relabel_voxels`` for collapsing fine regions to their
     ontology parents across a 100 TB volume.
     """
-    import pyarrow as pa
-
-    from ..volume import _decode_payload
-
     if not mapping:
         return chunks
     items = sorted(mapping.items())
     keys = np.fromiter((k for k, _ in items), dtype=np.int64)
     vals = np.fromiter((v for _, v in items), dtype=np.int64)
 
-    def kernel(batches):
-        from atlas_upscaling_dask_spark.malloc_tuning import pin_large_alloc_reuse
-        pin_large_alloc_reuse()
-        for batch in batches:
-            d = batch.to_pydict()
-            out_payloads = []
-            for i in range(len(d["cz"])):
-                block = np.frombuffer(
-                    _decode_payload(
-                        d["payload"][i],
-                        d["codec"][i],
-                        d["dz"][i] * d["dy"][i] * d["dx"][i] * PAYLOAD_DTYPE.itemsize,
-                    ),
-                    dtype=PAYLOAD_DTYPE,
-                )
-                idx = np.searchsorted(keys, block)
-                idx_clipped = np.minimum(idx, len(keys) - 1)
-                hit = keys[idx_clipped] == block
-                mapped = np.where(hit, vals[idx_clipped], block).astype(PAYLOAD_DTYPE)
-                out_payloads.append(mapped.tobytes())
-            d["payload"] = out_payloads
-            d["codec"] = ["raw"] * len(out_payloads)
-            yield pa.RecordBatch.from_pydict(
-                d, schema=batch.schema
-            )
+    def relabel(key, origin, block):
+        idx = np.minimum(np.searchsorted(keys, block), len(keys) - 1)
+        yield key, origin, np.where(keys[idx] == block, vals[idx], block)
 
-    return chunks.mapInArrow(kernel, schema=CHUNK_SCHEMA)
+    return map_chunks(chunks, relabel)

@@ -70,20 +70,15 @@ def histogram_chunks(chunks: DataFrame) -> DataFrame:
     """
     import pyarrow as pa
 
-    from ..volume import PAYLOAD_DTYPE, _decode_payload
+    from ..volume import _decode_block
 
     def kernel(batches):
         for batch in batches:
             d = batch.to_pydict()
             labels, counts = [], []
             for i in range(len(d["cz"])):
-                dz, dy, dx = d["dz"][i], d["dy"][i], d["dx"][i]
-                block = np.frombuffer(
-                    _decode_payload(
-                        d["payload"][i], d["codec"][i],
-                        dz * dy * dx * PAYLOAD_DTYPE.itemsize,
-                    ),
-                    dtype=PAYLOAD_DTYPE,
+                block = _decode_block(
+                    d["payload"][i], d["codec"][i], (d["dz"][i], d["dy"][i], d["dx"][i])
                 )
                 u, c = np.unique(block, return_counts=True)
                 labels.append(u.astype(np.int64))
@@ -139,7 +134,7 @@ def upscale_mismatches_chunked(
     """
     import pyarrow as pa
 
-    from ..volume import _decode_payload
+    from ..volume import _decode_block
 
     if scale < 1:
         raise ValueError(f"scale must be >= 1, got {scale}")
@@ -171,10 +166,6 @@ def upscale_mismatches_chunked(
     )
 
     def kernel(batches):
-        import numpy as np
-
-        from ..volume import PAYLOAD_DTYPE
-
         for batch in batches:
             d = batch.to_pydict()
             rows = {"cz": [], "cy": [], "cx": [], "n_mismatch": [], "missing": []}
@@ -187,21 +178,12 @@ def upscale_mismatches_chunked(
                     rows["missing"].append(True)
                     continue
                 dz, dy, dx = d["o_dz"][i], d["o_dy"][i], d["o_dx"][i]
-                item = PAYLOAD_DTYPE.itemsize
-                block = np.frombuffer(
-                    _decode_payload(
-                        d["o_payload"][i], d["o_codec"][i], dz * dy * dx * item
-                    ),
-                    dtype=PAYLOAD_DTYPE,
-                ).reshape(dz, dy, dx)
-                up = np.frombuffer(
-                    _decode_payload(
-                        d["u_payload"][i],
-                        d["u_codec"][i],
-                        d["u_dz"][i] * d["u_dy"][i] * d["u_dx"][i] * item,
-                    ),
-                    dtype=PAYLOAD_DTYPE,
-                ).reshape(d["u_dz"][i], d["u_dy"][i], d["u_dx"][i])
+                block = _decode_block(d["o_payload"][i], d["o_codec"][i], (dz, dy, dx))
+                up = _decode_block(
+                    d["u_payload"][i],
+                    d["u_codec"][i],
+                    (d["u_dz"][i], d["u_dy"][i], d["u_dx"][i]),
+                )
                 if up.shape != (dz * scale, dy * scale, dx * scale):
                     n_bad = int(up.size)
                 else:

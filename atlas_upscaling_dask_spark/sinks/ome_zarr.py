@@ -61,7 +61,8 @@ from ..volume import (
     CHUNK_SCHEMA,
     PAYLOAD_DTYPE,
     VolumeMeta,
-    _chunk_batch,
+    _decode_block,
+    chunk_kernel,
     one_wave_partitions,
 )
 
@@ -72,10 +73,6 @@ _COUNTERS = ("n_chunks", "n_bytes", "n_skipped")
 #: per-process caches: resolved Blosc decode callable, zstd decompressor
 _BLOSC_IMPL = None
 _ZSTD_DEC = None
-
-#: scan kernel output-batch flush threshold (bytes of decoded payload);
-#: module-level so tests can shrink it to exercise the flush path
-_SCAN_FLUSH_BYTES = 256 << 20
 
 
 def _compressor_json(compressor: str, clevel: int) -> dict | None:
@@ -184,15 +181,8 @@ def _padded_block(d: dict, i: int, e: tuple, k: tuple) -> bytes | None:
     """Row ``i``'s decoded block as C-order bytes zero-padded to the
     full ``k`` chunk (Zarr stores edge chunks full-size), or ``None``
     when the block is all zero (a missing chunk reads as fill_value)."""
-    from ..volume import _decode_payload
-
     dz, dy, dx = e
-    block = np.frombuffer(
-        _decode_payload(
-            d["payload"][i], d["codec"][i], dz * dy * dx * PAYLOAD_DTYPE.itemsize
-        ),
-        dtype=PAYLOAD_DTYPE,
-    ).reshape(e)
+    block = _decode_block(d["payload"][i], d["codec"][i], e)
     if not block.any():
         return None
     if tuple(e) != tuple(k):
@@ -623,17 +613,7 @@ def scan_ome_zarr(
         F.expr(f"CAST(id % {nx} AS INT)").alias("cx"),
     )
 
-    # captured DRIVER-side so the closure ships the value to executors
-    flush_bytes = _SCAN_FLUSH_BYTES
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from atlas_upscaling_dask_spark.malloc_tuning import pin_large_alloc_reuse
-        pin_large_alloc_reuse()
-        # flush by BYTES, not input rows: a 10k-coordinate Arrow input
-        # batch of 3 MB blocks would otherwise accumulate ~33 GB in one
-        # output batch and overflow Arrow's 2 GB binary limit (the same
-        # guard upscale.py's kernel applies)
-        rows, payloads, pending = [], [], 0
+    def cells(batches: Iterator[pa.RecordBatch]):
         for batch in batches:
             d = batch.to_pydict()
             for i in range(len(d["cz"])):
@@ -653,7 +633,6 @@ def scan_ome_zarr(
                     # unlinked between the two calls must synthesize
                     # fill, not crash the scan
                     block = _decode_chunk_file(fpath, meta)[:bz, :by, :bx]
-                    block = block.astype(PAYLOAD_DTYPE, copy=False)
                 except (FileNotFoundError, NotADirectoryError):
                     # NotADirectoryError = a grid path component is a
                     # regular file; zarr's DirectoryStore treats any
@@ -664,16 +643,6 @@ def scan_ome_zarr(
                         meta.get("fill_value") or 0,
                         dtype=PAYLOAD_DTYPE,
                     )
-                rows.append(
-                    (volume_id, cz, cy, cx, z0, y0, x0, bz, by, bx)
-                )
-                payload = np.ascontiguousarray(block).tobytes()
-                payloads.append(payload)
-                pending += len(payload)
-                if pending >= flush_bytes:
-                    yield _chunk_batch(rows, payloads)
-                    rows, payloads, pending = [], [], 0
-        if rows:
-            yield _chunk_batch(rows, payloads)
+                yield volume_id, (cz, cy, cx), (z0, y0, x0), block
 
-    return gdf.mapInArrow(kernel, schema=CHUNK_SCHEMA)
+    return gdf.mapInArrow(chunk_kernel(cells), schema=CHUNK_SCHEMA)

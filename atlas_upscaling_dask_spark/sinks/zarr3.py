@@ -38,7 +38,8 @@ shard grid arithmetically from ``spark.range`` (nothing materialized on
 the driver), reads each shard's index executor-side, validates its
 crc32c, and decodes only present inner chunks — absent inner chunks and
 absent whole shards synthesize ``fill_value`` blocks in-kernel.  Output
-batches flush at the same byte bound as the v2 scan.
+batches come from the chunk emitter (``volume.chunk_kernel``), like every
+other chunk-table kernel.
 """
 
 from __future__ import annotations
@@ -53,7 +54,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..volume import CHUNK_SCHEMA, PAYLOAD_DTYPE, VolumeMeta, _chunk_batch
+from ..volume import CHUNK_SCHEMA, PAYLOAD_DTYPE, VolumeMeta, chunk_kernel
 from .ome_zarr import (
     _finish_grids,
     _note_grid,
@@ -67,9 +68,6 @@ from .ome_zarr import (
 )
 
 MISSING = (1 << 64) - 1
-
-#: scan output flush bound (bytes of decoded payload), as in ome_zarr
-_SCAN_FLUSH_BYTES = 256 << 20
 
 
 # ---------------------------------------------------------------------------
@@ -608,26 +606,8 @@ def scan_zarr3(
             total, spark, cell_bytes=kz * ky * kx * 4
         ),
     )
-    flush_bytes = _SCAN_FLUSH_BYTES
 
-    def emit(rows, payloads, cz, cy, cx, block):
-        z0, y0, x0 = cz * kz, cy * ky, cx * kx
-        bz, by, bx = min(kz, zd - z0), min(ky, yd - y0), min(kx, xd - x0)
-        if bz <= 0 or by <= 0 or bx <= 0:
-            return 0  # inner cell entirely past the array edge
-        if block is None:
-            block = np.full((bz, by, bx), fill, dtype=PAYLOAD_DTYPE)
-        else:
-            block = block[:bz, :by, :bx]
-        rows.append((volume_id, cz, cy, cx, z0, y0, x0, bz, by, bx))
-        data = np.ascontiguousarray(block).tobytes()
-        payloads.append(data)
-        return len(data)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from atlas_upscaling_dask_spark.malloc_tuning import pin_large_alloc_reuse
-        pin_large_alloc_reuse()
-        rows, payloads, pending = [], [], 0
+    def cells(batches: Iterator[pa.RecordBatch]):
         cur_key, fh, idx = None, None, None
         try:
             for batch in batches:
@@ -688,17 +668,18 @@ def scan_zarr3(
                                     ),
                                     dtype=PAYLOAD_DTYPE,
                                 ).reshape(kz, ky, kx)
-                    pending += emit(rows, payloads, cz, cy, cx, block)
-                    if pending >= flush_bytes:
-                        yield _chunk_batch(rows, payloads)
-                        rows, payloads, pending = [], [], 0
+                    z0, y0, x0 = cz * kz, cy * ky, cx * kx
+                    bz, by, bx = min(kz, zd - z0), min(ky, yd - y0), min(kx, xd - x0)
+                    if bz <= 0 or by <= 0 or bx <= 0:
+                        continue  # inner cell entirely past the array edge
+                    if block is None:
+                        block = np.full((bz, by, bx), fill, dtype=PAYLOAD_DTYPE)
+                    yield volume_id, (cz, cy, cx), (z0, y0, x0), block[:bz, :by, :bx]
         finally:
             if fh is not None:
                 fh.close()
-        if rows:
-            yield _chunk_batch(rows, payloads)
 
-    return gdf.mapInArrow(kernel, schema=CHUNK_SCHEMA)
+    return gdf.mapInArrow(chunk_kernel(cells), schema=CHUNK_SCHEMA)
 
 
 def reshard_zarr3(

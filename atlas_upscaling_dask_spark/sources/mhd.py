@@ -25,8 +25,8 @@ import numpy as np
 from ..volume import (
     CHUNK_SCHEMA,
     VolumeMeta,
-    _chunk_batch,
     choose_chunks,
+    chunk_kernel,
     one_wave_partitions,
 )
 
@@ -140,8 +140,6 @@ def read_mhd_chunks(spark, mhd_path: str, chunk: tuple[int, int, int] | None = N
     )
 
     def read(batches):
-        from atlas_upscaling_dask_spark.malloc_tuning import pin_large_alloc_reuse
-        pin_large_alloc_reuse()
         dt = np.dtype(dtype_str)
         # slab mode: one contiguous (by × xdim) read per z-plane instead
         # of `by` row reads — ~8× faster measured (sequential I/O beats
@@ -152,7 +150,6 @@ def read_mhd_chunks(spark, mhd_path: str, chunk: tuple[int, int, int] | None = N
         with open(data_file, "rb") as fh:
             for batch in batches:
                 d = batch.to_pydict()
-                rows, payloads = [], []
                 for cz, cy, cx in zip(d["cz"], d["cy"], d["cx"]):
                     z0, y0, x0 = cz * dz, cy * dy, cx * dx
                     bz = min(dz, zdim - z0)
@@ -176,8 +173,6 @@ def read_mhd_chunks(spark, mhd_path: str, chunk: tuple[int, int, int] | None = N
                                 block[zi, yi] = np.frombuffer(
                                     fh.read(bx * itemsize), dtype=dt
                                 )
-                    rows.append(("mhd", cz, cy, cx, z0, y0, x0, bz, by, bx))
-                    payloads.append(block.astype("<u4").tobytes())
-                yield _chunk_batch(rows, payloads)
+                    yield "mhd", (cz, cy, cx), (z0, y0, x0), block
 
-    return grid.mapInArrow(read, schema=CHUNK_SCHEMA), hdr
+    return grid.mapInArrow(chunk_kernel(read), schema=CHUNK_SCHEMA), hdr

@@ -31,8 +31,8 @@ import numpy as np
 from ..volume import (
     CHUNK_SCHEMA,
     VolumeMeta,
-    _chunk_batch,
     choose_chunks,
+    chunk_kernel,
     one_wave_partitions,
 )
 
@@ -343,12 +343,9 @@ def read_tiff_chunks(spark, path: str, chunk: tuple[int, int, int] | None = None
     )
 
     def read(batches):
-        from atlas_upscaling_dask_spark.malloc_tuning import pin_large_alloc_reuse
-        pin_large_alloc_reuse()
         with open(path, "rb") as fh:
             for batch in batches:
                 d = batch.to_pydict()
-                rows, payloads = [], []
                 for cz, cy, cx in zip(d["cz"], d["cy"], d["cx"]):
                     z0, y0, x0 = cz * dz, cy * dy, cx * dx
                     bz = min(dz, zdim - z0)
@@ -359,11 +356,9 @@ def read_tiff_chunks(spark, path: str, chunk: tuple[int, int, int] | None = None
                         block[zi] = _read_page_rows(
                             fh, pages[z0 + zi], y0, by, x0, bx
                         ).astype("<u4")
-                    rows.append(("tiff", cz, cy, cx, z0, y0, x0, bz, by, bx))
-                    payloads.append(block.tobytes())
-                yield _chunk_batch(rows, payloads)
+                    yield "tiff", (cz, cy, cx), (z0, y0, x0), block
 
-    return grid.mapInArrow(read, schema=CHUNK_SCHEMA), info
+    return grid.mapInArrow(chunk_kernel(read), schema=CHUNK_SCHEMA), info
 
 
 class TiffStackWriter:

@@ -101,11 +101,12 @@ FIXTURE_META = VolumeMeta(16, 16, 16)
 
 
 def _chunk_batch(rows: list[tuple], payloads: list[bytes], codec: str = "raw"):
-    """Build an Arrow RecordBatch matching CHUNK_SCHEMA with explicit
-    types (int32/int64 mismatches make the JVM-side accessor throw)."""
+    """Build a non-empty Arrow RecordBatch matching CHUNK_SCHEMA with
+    explicit types (int32/int64 mismatches make the JVM-side accessor
+    throw)."""
     import pyarrow as pa
 
-    cols = list(zip(*rows)) if rows else [[]] * 10
+    cols = list(zip(*rows))
     return pa.RecordBatch.from_arrays(
         [
             pa.array(cols[0], type=pa.string()),
@@ -169,6 +170,96 @@ def _decode_payload(payload: bytes, codec: str, size: int | None = None) -> byte
     raise ValueError(f"unknown chunk codec {codec!r}")
 
 
+# ---------------------------------------------------------------------------
+# The chunk-kernel skeleton.  Every bulk kernel that reads or writes
+# CHUNK_SCHEMA rows goes through these helpers, so the row format, the
+# codecs and the output-batch bound live in this module only.
+# ---------------------------------------------------------------------------
+
+#: output-batch flush bound of every chunk kernel, in encoded payload
+#: bytes.  Arrow binary arrays carry int32 offsets (2 GiB per array),
+#: and a task may own up to ``MAX_TASK_BYTES`` of cells, so a kernel
+#: that batched by input rows could build an unrepresentable array.
+#: Read on the driver when a kernel is built (tests shrink it).
+CHUNK_FLUSH_BYTES = 256 << 20
+
+
+def _decode_block(payload: bytes, codec: str, extent) -> np.ndarray:
+    """One chunk payload → its read-only ``(dz, dy, dx)`` uint32 block."""
+    dz, dy, dx = extent
+    return np.frombuffer(
+        _decode_payload(payload, codec, dz * dy * dx * PAYLOAD_DTYPE.itemsize),
+        dtype=PAYLOAD_DTYPE,
+    ).reshape(dz, dy, dx)
+
+
+def _check_codec(codec: str | None) -> str:
+    """The output codec of a chunk kernel (``None`` → ``'raw'``)."""
+    if codec is not None and codec not in PAYLOAD_CODECS:
+        raise ValueError(f"unsupported codec {codec!r}")
+    return codec or "raw"
+
+
+def _iter_chunks(batches):
+    """CHUNK_SCHEMA input batches → ``(volume_id, key, origin, block)``."""
+    for batch in batches:
+        d = batch.to_pydict()
+        for i in range(batch.num_rows):
+            yield (
+                d["volume_id"][i],
+                (d["cz"][i], d["cy"][i], d["cx"][i]),
+                (d["z0"][i], d["y0"][i], d["x0"][i]),
+                _decode_block(
+                    d["payload"][i], d["codec"][i],
+                    (d["dz"][i], d["dy"][i], d["dx"][i]),
+                ),
+            )
+
+
+def chunk_kernel(items_fn, codec: str | None = None):
+    """The emitter: wrap ``items_fn(batches)``, which yields
+    ``(volume_id, (cz, cy, cx), (z0, y0, x0), block)`` items, as a
+    ``mapInArrow`` kernel producing CHUNK_SCHEMA batches.
+
+    Each block is cast to the payload dtype and encoded with ``codec``
+    inside the worker; a batch is flushed once its payloads reach
+    ``CHUNK_FLUSH_BYTES``.  The kernel pins glibc's allocator thresholds
+    before its first chunk (``malloc_tuning``), so chunk-sized buffers
+    reuse heap pages and the heap stays bounded by that batch size."""
+    out_codec = _check_codec(codec)
+    flush_bytes = CHUNK_FLUSH_BYTES  # captured on the driver
+
+    def kernel(batches):
+        from atlas_upscaling_dask_spark.malloc_tuning import pin_large_alloc_reuse
+
+        pin_large_alloc_reuse()
+        rows, payloads, pending = [], [], 0
+        for vid, key, origin, block in items_fn(batches):
+            block = np.ascontiguousarray(block, dtype=PAYLOAD_DTYPE)
+            rows.append((vid, *key, *origin, *block.shape))
+            payloads.append(_encode_payload(block, out_codec))
+            pending += len(payloads[-1])
+            if pending >= flush_bytes:
+                yield _chunk_batch(rows, payloads, out_codec)
+                rows, payloads, pending = [], [], 0
+        if rows:
+            yield _chunk_batch(rows, payloads, out_codec)
+
+    return kernel
+
+
+def map_chunks(chunks: DataFrame, fn, codec: str | None = None) -> DataFrame:
+    """Narrow chunk → chunk map: ``fn(key, origin, block)`` yields zero
+    or more ``(key, origin, block)`` output chunks of the same volume."""
+
+    def items(batches):
+        for vid, key, origin, block in _iter_chunks(batches):
+            for out in fn(key, origin, block):
+                yield (vid, *out)
+
+    return chunks.mapInArrow(chunk_kernel(items, codec), schema=CHUNK_SCHEMA)
+
+
 def synthetic_voxels(spark: SparkSession, meta: VolumeMeta = FIXTURE_META) -> DataFrame:
     """Deterministic dense label cube (FIXTURES.md §1).
 
@@ -222,31 +313,19 @@ def synthetic_chunks(
     )
 
     def gen(batches):
-        from atlas_upscaling_dask_spark.malloc_tuning import pin_large_alloc_reuse
-        pin_large_alloc_reuse()
         # mapInArrow, not mapInPandas: pandas round-trips every payload
         # through Python bytes objects (~5× slower for multi-MB binaries).
         for batch in batches:
             d = batch.to_pydict()
-            rows, payloads = [], []
             for cz, cy, cx in zip(d["cz"], d["cy"], d["cx"]):
                 z0, y0, x0 = cz * dz, cy * dy, cx * dx
-                bz, by, bx = (
-                    min(dz, zdim - z0),
-                    min(dy, ydim - y0),
-                    min(dx, xdim - x0),
-                )
-                zz = np.arange(z0, z0 + bz, dtype=np.int64)[:, None, None]
-                yy = np.arange(y0, y0 + by, dtype=np.int64)[None, :, None]
-                xx = np.arange(x0, x0 + bx, dtype=np.int64)[None, None, :]
-                block = (
-                    15564 + (zz // 4) * 16 + (yy // 4) * 4 + (xx // 4)
-                ).astype(PAYLOAD_DTYPE)
-                rows.append((volume_id, cz, cy, cx, z0, y0, x0, bz, by, bx))
-                payloads.append(block.tobytes())
-            yield _chunk_batch(rows, payloads)
+                zz = np.arange(z0, min(z0 + dz, zdim), dtype=np.int64)[:, None, None]
+                yy = np.arange(y0, min(y0 + dy, ydim), dtype=np.int64)[None, :, None]
+                xx = np.arange(x0, min(x0 + dx, xdim), dtype=np.int64)[None, None, :]
+                block = 15564 + (zz // 4) * 16 + (yy // 4) * 4 + (xx // 4)
+                yield volume_id, (cz, cy, cx), (z0, y0, x0), block
 
-    return grid.mapInArrow(gen, schema=CHUNK_SCHEMA)
+    return grid.mapInArrow(chunk_kernel(gen), schema=CHUNK_SCHEMA)
 
 
 #: Per-task logical-byte ceiling for grid scans: a straggler or task
@@ -402,54 +481,29 @@ def split_chunks(chunks: DataFrame, factor: tuple[int, int, int]) -> DataFrame:
     shuffle.  Requires each factor to divide the chunk's extent."""
     kz, ky, kx = factor
 
-    def kernel(batches):
-        from atlas_upscaling_dask_spark.malloc_tuning import pin_large_alloc_reuse
-        pin_large_alloc_reuse()
-        for batch in batches:
-            d = batch.to_pydict()
-            rows, payloads = [], []
-            for i in range(len(d["cz"])):
-                dz, dy, dx = d["dz"][i], d["dy"][i], d["dx"][i]
-                if dz % kz or dy % ky or dx % kx:
-                    raise ValueError(
-                        f"split factor {factor} does not divide chunk extent "
-                        f"({dz},{dy},{dx})"
+    def split(key, origin, block):
+        dz, dy, dx = block.shape
+        if dz % kz or dy % ky or dx % kx:
+            raise ValueError(
+                f"split factor {factor} does not divide chunk extent "
+                f"({dz},{dy},{dx})"
+            )
+        (cz, cy, cx), (z0, y0, x0) = key, origin
+        sz, sy, sx = dz // kz, dy // ky, dx // kx
+        for iz in range(kz):
+            for iy in range(ky):
+                for ix in range(kx):
+                    yield (
+                        (cz * kz + iz, cy * ky + iy, cx * kx + ix),
+                        (z0 + iz * sz, y0 + iy * sy, x0 + ix * sx),
+                        block[
+                            iz * sz : (iz + 1) * sz,
+                            iy * sy : (iy + 1) * sy,
+                            ix * sx : (ix + 1) * sx,
+                        ],
                     )
-                block = np.frombuffer(
-                    _decode_payload(
-                        d["payload"][i], d["codec"][i],
-                        dz * dy * dx * PAYLOAD_DTYPE.itemsize,
-                    ),
-                    dtype=PAYLOAD_DTYPE,
-                ).reshape(dz, dy, dx)
-                sz, sy, sx = dz // kz, dy // ky, dx // kx
-                for iz in range(kz):
-                    for iy in range(ky):
-                        for ix in range(kx):
-                            sub = np.ascontiguousarray(
-                                block[
-                                    iz * sz : (iz + 1) * sz,
-                                    iy * sy : (iy + 1) * sy,
-                                    ix * sx : (ix + 1) * sx,
-                                ]
-                            )
-                            rows.append(
-                                (
-                                    d["volume_id"][i],
-                                    d["cz"][i] * kz + iz,
-                                    d["cy"][i] * ky + iy,
-                                    d["cx"][i] * kx + ix,
-                                    d["z0"][i] + iz * sz,
-                                    d["y0"][i] + iy * sy,
-                                    d["x0"][i] + ix * sx,
-                                    sz, sy, sx,
-                                )
-                            )
-                            payloads.append(sub.tobytes())
-            if rows:
-                yield _chunk_batch(rows, payloads)
 
-    return chunks.mapInArrow(kernel, schema=CHUNK_SCHEMA)
+    return map_chunks(chunks, split)
 
 
 def merge_chunks(chunks: DataFrame, factor: tuple[int, int, int]) -> DataFrame:
@@ -473,17 +527,11 @@ def merge_chunks(chunks: DataFrame, factor: tuple[int, int, int]) -> DataFrame:
         bx = int((pdf["x0"] + pdf["dx"]).max()) - x0
         block = np.zeros((bz, by, bx), dtype=PAYLOAD_DTYPE)
         for r in pdf.itertuples(index=False):
-            sub = np.frombuffer(
-                _decode_payload(
-                    r.payload, r.codec, r.dz * r.dy * r.dx * PAYLOAD_DTYPE.itemsize
-                ),
-                dtype=PAYLOAD_DTYPE,
-            ).reshape(r.dz, r.dy, r.dx)
             block[
                 r.z0 - z0 : r.z0 - z0 + r.dz,
                 r.y0 - y0 : r.y0 - y0 + r.dy,
                 r.x0 - x0 : r.x0 - x0 + r.dx,
-            ] = sub
+            ] = _decode_block(r.payload, r.codec, (r.dz, r.dy, r.dx))
         return pd.DataFrame(
             {
                 "volume_id": [pdf["volume_id"].iloc[0]],
@@ -518,34 +566,24 @@ def chunks_to_voxels(chunks: DataFrame) -> DataFrame:
         pin_large_alloc_reuse()
         import pyarrow as pa
 
-        for batch in batches:
-            d = batch.to_pydict()
-            for vi in range(len(d["cz"])):
-                dz, dy, dx = d["dz"][vi], d["dy"][vi], d["dx"][vi]
-                block = np.frombuffer(
-                    _decode_payload(
-                        d["payload"][vi],
-                        d["codec"][vi],
-                        dz * dy * dx * PAYLOAD_DTYPE.itemsize,
-                    ),
-                    dtype=PAYLOAD_DTYPE,
-                ).reshape(dz, dy, dx)
-                zz, yy, xx = np.meshgrid(
-                    np.arange(d["z0"][vi], d["z0"][vi] + dz, dtype=np.int64),
-                    np.arange(d["y0"][vi], d["y0"][vi] + dy, dtype=np.int64),
-                    np.arange(d["x0"][vi], d["x0"][vi] + dx, dtype=np.int64),
-                    indexing="ij",
-                )
-                # zero-copy Arrow arrays straight from the numpy buffers
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(zz.ravel(), type=pa.int64()),
-                        pa.array(yy.ravel(), type=pa.int64()),
-                        pa.array(xx.ravel(), type=pa.int64()),
-                        pa.array(block.ravel().astype(np.int64), type=pa.int64()),
-                    ],
-                    ["z", "y", "x", "label"],
-                )
+        for _vid, _key, (z0, y0, x0), block in _iter_chunks(batches):
+            dz, dy, dx = block.shape
+            zz, yy, xx = np.meshgrid(
+                np.arange(z0, z0 + dz, dtype=np.int64),
+                np.arange(y0, y0 + dy, dtype=np.int64),
+                np.arange(x0, x0 + dx, dtype=np.int64),
+                indexing="ij",
+            )
+            # zero-copy Arrow arrays straight from the numpy buffers
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(zz.ravel(), type=pa.int64()),
+                    pa.array(yy.ravel(), type=pa.int64()),
+                    pa.array(xx.ravel(), type=pa.int64()),
+                    pa.array(block.ravel().astype(np.int64), type=pa.int64()),
+                ],
+                ["z", "y", "x", "label"],
+            )
 
     return chunks.mapInArrow(unpack, schema=VOXEL_SCHEMA)
 

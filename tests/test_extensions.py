@@ -1949,6 +1949,52 @@ def test_pq_topk_kernel_backend_matches_agg(spark, emb):
     assert agg.exceptAll(kern).isEmpty()
 
 
+def _tiny_vectors(spark, n, id_type="long"):
+    rng = np.random.default_rng(3)
+    return spark.createDataFrame(
+        [(i, rng.normal(size=16).tolist()) for i in range(n)],
+        f"vec_id {id_type}, embedding array<double>",
+    )
+
+
+def test_pq_topk_empty_query_set_returns_empty_frame(spark):
+    # both backends: no queries -> an empty result frame, not a raise
+    from atlas_upscaling_dask_spark.extensions.similarity import pq_topk
+
+    corpus = _tiny_vectors(spark, 40)
+    none = corpus.filter(F.col("vec_id") < 0)
+    for backend in ("kernel", "agg"):
+        out = pq_topk(none, corpus, k=3, m=4, k_sub=8, backend=backend)
+        assert out.columns == ["query_id", "neighbor_id", "adist", "rk"]
+        assert out.count() == 0
+
+
+def test_pq_topk_kernel_rejects_non_integral_ids_before_any_job(spark):
+    # the kernel carries ids as int64: a string id column must raise a
+    # TypeError that points at backend="agg", and no job may have run
+    from atlas_upscaling_dask_spark.extensions.similarity import pq_topk
+
+    corpus = _tiny_vectors(spark, 40, id_type="string")
+    sc = spark.sparkContext
+    sc.setJobGroup("pq_topk_id_check", "id dtype check")
+    try:
+        with pytest.raises(TypeError, match='backend="agg"'):
+            pq_topk(corpus.limit(2), corpus, k=3, m=4, k_sub=8)
+        assert not sc.statusTracker().getJobIdsForGroup("pq_topk_id_check")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_ivf_pq_topk_corpus_smaller_than_centroids_raises(spark):
+    # the coarse centroids are the n_centroids lowest-id vectors: too
+    # small a corpus raises, naming both counts
+    from atlas_upscaling_dask_spark.extensions.similarity import ivf_pq_topk
+
+    corpus = _tiny_vectors(spark, 5)
+    with pytest.raises(ValueError, match=r"has 5 vectors.*n_centroids=8"):
+        ivf_pq_topk(corpus, corpus, k=3, n_centroids=8, m=4, k_sub=4)
+
+
 def test_ivf_pq_distances_match_pq_on_shared_pairs(spark, emb):
     # IVFADC prunes candidates but must NOT change distances: every
     # (query, neighbor) it returns carries the exact adist pq_topk's

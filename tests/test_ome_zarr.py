@@ -451,12 +451,14 @@ def test_ome_zarr_scan_flushes_output_batches(spark, tmp_path, monkeypatch):
     # scan of 8 chunks must still return every voxel (multiple yields),
     # proving large stores can't accumulate into one oversized batch.
     import atlas_upscaling_dask_spark.sinks.ome_zarr as oz
+    from atlas_upscaling_dask_spark import volume
 
     meta = VolumeMeta(16, 16, 16)
     chunks = synthetic_chunks(spark, meta, chunk=(8, 8, 8))
     out = str(tmp_path / "flush.zarr")
     oz.write_ome_zarr(chunks, out, meta)
-    monkeypatch.setattr(oz, "_SCAN_FLUSH_BYTES", 1024)  # < one 2 KiB chunk
+    # < one 2 KiB chunk; the emitter reads it when the scan is built
+    monkeypatch.setattr(volume, "CHUNK_FLUSH_BYTES", 1024)
     back = oz.scan_ome_zarr(spark, out, 0).coalesce(1)
     got = sorted(
         (r["z"], r["y"], r["x"], r["label"])
