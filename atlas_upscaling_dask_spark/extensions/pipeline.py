@@ -95,22 +95,48 @@ def prepare_training_set(
     decontamination joins (+1 window with mixture) — at 100 TB nothing
     here is a global sort, and every stage is reproducible (the whole
     output is a pure function of (corpus, benchmark, seed)).
+
+    ``id_col`` must be a key of ``docs`` (the oracle SQL assumes the
+    same): contamination is then a per-document predicate, so it is
+    flagged on the quality-gated corpus before the dedup window, and
+    the window's survivors are anti-joined with the flagged ids.
     """
     from .text import model_quality_margin_expr
     from .training import (
-        contamination,
+        _shingle_rows,
         hash_split_expr,
         mixture_resample,
         shuffle_pos_expr,
     )
 
-    # no spread_small_input here: the dedup window immediately
-    # re-exchanges on its own key, so a doc_id repartition would just
-    # stack a dead exchange under it
-    d = docs
     # 1 — quality gate (margin cut is exact; no sigmoid in the filter)
-    d = d.filter(model_quality_margin_expr(text_col, quality_weights) >= 0)
-    # 2 — exact-dedup canonical election on the 128-bit content key
+    d = docs.filter(model_quality_margin_expr(text_col, quality_weights) >= 0)
+    # 2 — contaminated ids: gated docs sharing a word n-gram with the
+    # benchmark.  A flagged doc's exact copies share its text and are
+    # flagged too, so whichever copy the window elects is dropped by the
+    # anti-join below; this second consumer of the gated frame replays
+    # only the narrow scan + gate, never the window.  Only the flag is
+    # needed, so the benchmark's shingles broadcast as they are into a
+    # semi-join (no distinct exchange, unlike `contamination`'s scores).
+    # Shingling multiplies a doc ~100×, so a one-split input is spread
+    # first; the main path is not (Catalyst pushes the gate below a
+    # spread exchange, and the window re-exchanges on its own key).  The
+    # flagged ids are few by the contract that makes the benchmark
+    # broadcastable, so the anti-join broadcasts too.
+    if benchmark is not None:
+        bench = _shingle_rows(
+            benchmark, contamination_n, text_col, id_col, "bench_id"
+        ).select("shingle")
+        bad = (
+            _shingle_rows(
+                spread_small_input(d, id_col), contamination_n, text_col, id_col, id_col
+            )
+            .join(F.broadcast(bench), "shingle", "left_semi")
+            .select(id_col)
+            .distinct()
+        )
+    # 3 — exact-dedup canonical election on the 128-bit content key,
+    # then the flagged ids leave
     w = Window.partitionBy(
         F.xxhash64(F.col(text_col)), F.xxhash64(F.lit("fp2"), F.col(text_col))
     )
@@ -119,24 +145,7 @@ def prepare_training_set(
         .filter(F.col(id_col) == F.col("_cid"))
         .drop("_cid")
     )
-    # 3 — decontamination: drop any doc sharing an n-gram with the bench.
-    # The contaminated-id set is small by the same contract that makes
-    # the benchmark broadcastable, so the anti-join broadcasts too — the
-    # corpus never shuffles to subtract it.
     if benchmark is not None:
-        # the deduped corpus now has TWO consumers (the contamination
-        # shingle side and the anti-join main path) and the broadcast
-        # boundary defeats exchange reuse — without a materialization
-        # the gate + dedup window replay once per consumer (r13,
-        # measured: 5 exchanges, 0 reused).  At 100 TB that replay is a
-        # full corpus pass + corpus-sized window shuffle; the staged
-        # analog is writing the deduped corpus to parquet, the
-        # in-session analog a lazy local checkpoint (same pattern as
-        # prepare_rag_corpus's four-consumer stage).
-        d = d.localCheckpoint(eager=False)
-        bad = contamination(
-            d, benchmark, n=contamination_n, text_col=text_col, id_col=id_col
-        ).select(F.col("doc_id").alias(id_col))
         d = d.join(F.broadcast(bad), id_col, "left_anti")
     # 4 — optional mixture to target source shares
     if mixture_weights:
@@ -207,7 +216,8 @@ def prepare_rag_corpus(
 
     # 1 — quality gate (narrow)
     d = docs.filter(model_quality_margin_expr(text_col, quality_weights) >= 0)
-    # 2 — exact-dedup canonical election on the 128-bit content key
+    # 3 — exact-dedup canonical election on the 128-bit content key,
+    # then the flagged ids leave
     w = Window.partitionBy(
         F.xxhash64(F.col(text_col)), F.xxhash64(F.lit("fp2"), F.col(text_col))
     )

@@ -1259,8 +1259,10 @@ def semantic_dedup(
     path — lowest-id centroids, cosine, round-9 threshold compare — is
     SQL-replayable (suite row `semantic_dedup`) with the default
     ``backend="fold"``.  ``backend="gemm"`` scores each bucket's pair
-    matrix in ONE vectorized NumPy kernel (`applyInPandas` per bucket)
-    instead of the expression-fold equi-join — ~3× faster at sf0.1 and
+    matrix in ONE vectorized NumPy kernel (`applyInPandas` per bucket,
+    emitting every row of the bucket with its verdict — one exchange
+    and one Python pass, no drop set to join back) instead of the
+    expression-fold equi-join — ~3× faster at sf0.1 and
     the form that scales to real cluster sizes; same round-9 threshold
     rule, so the two backends disagree only if a pair's cosine sits
     within a float ulp of the threshold (property-tested equal on the
@@ -1278,7 +1280,7 @@ def semantic_dedup(
 
         thr = float(threshold)
 
-        def bucket_drops(key, pdf):
+        def bucket_verdicts(key, pdf):
             ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
             mat = np.array(list(pdf["cv"]), dtype=np.float64)
             norms = np.linalg.norm(mat, axis=1, keepdims=True)
@@ -1290,31 +1292,36 @@ def semantic_dedup(
             # upper triangle = the fold backend's d1 < d2 pairs)
             drop_mask = np.triu(h, k=1).any(axis=0)
             return pd.DataFrame(
-                {"d2": np.sort(ids[order][drop_mask]).astype(np.int64)}
+                {
+                    id_col: ids[order],
+                    "bucket": np.full(len(ids), key[0], dtype=np.int32),
+                    "is_kept": ~drop_mask,
+                }
             )
 
-        dropped = assigned.groupBy("bucket").applyInPandas(
-            bucket_drops, schema="d2 long"
-        ).distinct()
-    elif backend == "fold":
-        a = assigned.select(
-            F.col("neighbor_id").alias("d1"), "bucket", F.col("cv").alias("v1")
+        # every row of a bucket leaves its kernel with its verdict: one
+        # exchange, one Python pass, no join back onto the assignment
+        return assigned.groupBy("bucket").applyInPandas(
+            bucket_verdicts, schema=f"{id_col} long, bucket int, is_kept boolean"
         )
-        b = assigned.select(
-            F.col("neighbor_id").alias("d2"), "bucket", F.col("cv").alias("v2")
-        )
-        dropped = (
-            a.join(b, "bucket")
-            .filter(F.col("d1") < F.col("d2"))
-            .filter(
-                F.round(cosine(_as_double(F.col("v1")), _as_double(F.col("v2"))), 9)
-                >= threshold
-            )
-            .select("d2")
-            .distinct()
-        )
-    else:
+    if backend != "fold":
         raise ValueError(f"backend must be fold|gemm, got {backend!r}")
+    a = assigned.select(
+        F.col("neighbor_id").alias("d1"), "bucket", F.col("cv").alias("v1")
+    )
+    b = assigned.select(
+        F.col("neighbor_id").alias("d2"), "bucket", F.col("cv").alias("v2")
+    )
+    dropped = (
+        a.join(b, "bucket")
+        .filter(F.col("d1") < F.col("d2"))
+        .filter(
+            F.round(cosine(_as_double(F.col("v1")), _as_double(F.col("v2"))), 9)
+            >= threshold
+        )
+        .select("d2")
+        .distinct()
+    )
     return (
         assigned.join(dropped, assigned["neighbor_id"] == dropped["d2"], "left")
         .select(

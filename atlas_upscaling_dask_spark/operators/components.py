@@ -92,24 +92,24 @@ def component_sizes(components: DataFrame) -> DataFrame:
 
 
 #: Edge-count bound for the driver-local union-find fast path (r13).
-#: The canonical-edge build already computes an EXACT edge count for
-#: the convergence signature, so the gate costs nothing; at or below
-#: it the whole star fixpoint — 2 shuffles, 2 materializations and 2
-#: blocking driver actions PER ROUND — collapses to one collect + an
-#: in-memory union-find + one broadcast map-back join.  2^20 canonical
-#: edges is ~16 MB driver-side (trivial); 100 TB near-dup graphs
-#: (billions of edges) keep the distributed fixpoint.
+#: The gate is one ``limit(threshold + 1)`` collect of the materialized
+#: canonical edge set, and the union-find runs on exactly those rows;
+#: at or below it the whole star fixpoint — 2 shuffles, 2
+#: materializations and 2 blocking driver actions PER ROUND — collapses
+#: to that collect + an in-memory union-find + one broadcast map-back
+#: join.  2^20 canonical edges is ~16 MB driver-side (trivial); 100 TB
+#: near-dup graphs (billions of edges) keep the distributed fixpoint.
 LOCAL_EDGES_THRESHOLD = 1 << 20
 
 
-def _cc_local_mapping(e: DataFrame) -> DataFrame:
-    """Driver-local union-find over a (small, already-distinct) edge
-    frame; returns the (id, comp) mapping for every node APPEARING in
-    an edge, comp = minimum member.  Exact twin of the star fixpoint's
-    converged forest: union-by-min keeps each tree's root at the
-    component minimum (Python's str ordering is codepoint order =
-    Spark's UTF8 binary order, so min semantics agree for string ids
-    too)."""
+def _cc_local_mapping(spark, rows, dtype) -> DataFrame:
+    """Driver-local union-find over (small, already-distinct) collected
+    ``(u, v)`` edge rows of type ``dtype``; returns the (id, comp)
+    mapping for every node APPEARING in an edge, comp = minimum member.
+    Exact twin of the star fixpoint's converged forest: union-by-min
+    keeps each tree's root at the component minimum (Python's str
+    ordering is codepoint order = Spark's UTF8 binary order, so min
+    semantics agree for string ids too)."""
     from pyspark.sql import types as T
 
     parent: dict = {}
@@ -122,8 +122,7 @@ def _cc_local_mapping(e: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for row in e.collect():
-        u, v = row["u"], row["v"]
+    for u, v in rows:
         parent.setdefault(u, u)
         parent.setdefault(v, v)
         ru, rv = find(u), find(v)
@@ -131,13 +130,10 @@ def _cc_local_mapping(e: DataFrame) -> DataFrame:
             if rv < ru:
                 ru, rv = rv, ru
             parent[rv] = ru
-    dtype = e.schema["u"].dataType
     schema = T.StructType(
         [T.StructField("id", dtype, False), T.StructField("comp", dtype, False)]
     )
-    return e.sparkSession.createDataFrame(
-        [(x, find(x)) for x in parent], schema
-    )
+    return spark.createDataFrame([(x, find(x)) for x in parent], schema)
 
 
 def connected_components_edges(
@@ -179,7 +175,9 @@ def connected_components_edges(
     if algorithm != "star":
         raise ValueError(f"algorithm must be 'star' or 'minlabel', got {algorithm!r}")
 
-    # canonical orientation (u > v), self-loops dropped
+    # canonical orientation (u > v), self-loops dropped; the one
+    # materialization of the pair input, shared by the gate and the
+    # star loop
     raw = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
     e = (
         raw.filter(F.col("s") != F.col("d"))
@@ -189,6 +187,20 @@ def connected_components_edges(
         .distinct()
         .localCheckpoint(eager=True)
     )
+    head = e.limit(local_threshold + 1).collect()
+    if len(head) <= local_threshold:
+        # small edge set: those rows ARE the edge set, so the union-find
+        # runs driver-local on them and the node→comp map broadcasts
+        # back onto the vertices.  Identical output to the fixpoint
+        # (pytest-pinned against both algorithms); ``local_threshold=0``
+        # forces the distributed loop on any graph with an edge.
+        mapped = _cc_local_mapping(
+            e.sparkSession, head, e.schema["u"].dataType
+        )
+        return verts.join(F.broadcast(mapped), "id", "left").select(
+            "id", F.coalesce("comp", F.col("id")).alias("comp")
+        )
+
     def _edge_sig(df: DataFrame) -> tuple:
         # (cardinality, order-free hash-sum): one cheap aggregate job
         # over a checkpointed distinct set.  Signature INequality proves
@@ -204,22 +216,8 @@ def connected_components_edges(
         return (r["n"], r["h"])
 
     sig_e = _edge_sig(e)
-    if 0 < sig_e[0] <= local_threshold:
-        # small edge set (exact count from the signature job — no extra
-        # probe): run the union-find driver-local and broadcast the
-        # node→comp map back onto the vertices.  Identical output to
-        # the fixpoint (pytest-pinned against both algorithms);
-        # ``local_threshold=0`` forces the distributed loop.
-        mapped = _cc_local_mapping(e)
-        return (
-            verts.join(F.broadcast(mapped), "id", "left")
-            .select("id", F.coalesce("comp", F.col("id")).alias("comp"))
-            .localCheckpoint(eager=True)
-        )
-    converged = sig_e[0] == 0
+    converged = False
     for _ in range(max_iters):
-        if converged:
-            break
         # large-star: every neighbor LARGER than u links to the min of
         # u's closed neighborhood — long tails collapse geometrically
         sym = e.unionAll(
@@ -266,6 +264,8 @@ def connected_components_edges(
             small.exceptAll(e).unionAll(e.exceptAll(small)).isEmpty()
         )
         e, sig_e = small, sig_s
+        if converged:
+            break
     if not converged:
         raise RuntimeError(
             f"connected_components_edges did not converge in {max_iters} "
@@ -334,6 +334,77 @@ def _cc_minlabel(
     return comp
 
 
+#: phase-1 rows of :func:`connected_components_chunks`: each chunk's
+#: labels + provisional comps ('chunk'/'core'), and its three
+#: positive-direction boundary strips ('strip', keyed by the receiver)
+_CCL_HALO_SCHEMA = (
+    "kind string, cz int, cy int, cx int, z0 long, y0 long, x0 long, "
+    "dz int, dy int, dx int, side string, labels binary, comps binary"
+)
+
+
+def _local_ccl(block: "np.ndarray", origin, shape) -> "np.ndarray":
+    """Min-linear-index propagation inside one chunk: the int64
+    provisional component id of every voxel."""
+    import numpy as np
+
+    z0, y0, x0 = origin
+    _, ydim, xdim = shape
+    dz, dy, dx = block.shape
+    zz, yy, xx = np.meshgrid(
+        np.arange(z0, z0 + dz, dtype=np.int64),
+        np.arange(y0, y0 + dy, dtype=np.int64),
+        np.arange(x0, x0 + dx, dtype=np.int64),
+        indexing="ij",
+    )
+    comp = zz * ydim * xdim + yy * xdim + xx  # int64 provisional ids
+    for _ in range(dz + dy + dx + 1):
+        prev = comp
+        comp = comp.copy()
+        # six directional min-relaxations where labels match
+        same = block[1:] == block[:-1]
+        np.minimum(comp[1:], np.where(same, comp[:-1], comp[1:]), out=comp[1:])
+        np.minimum(comp[:-1], np.where(same, comp[1:], comp[:-1]), out=comp[:-1])
+        same = block[:, 1:] == block[:, :-1]
+        np.minimum(comp[:, 1:], np.where(same, comp[:, :-1], comp[:, 1:]), out=comp[:, 1:])
+        np.minimum(comp[:, :-1], np.where(same, comp[:, 1:], comp[:, :-1]), out=comp[:, :-1])
+        same = block[:, :, 1:] == block[:, :, :-1]
+        np.minimum(comp[:, :, 1:], np.where(same, comp[:, :, :-1], comp[:, :, 1:]), out=comp[:, :, 1:])
+        np.minimum(comp[:, :, :-1], np.where(same, comp[:, :, 1:], comp[:, :, :-1]), out=comp[:, :, :-1])
+        if np.array_equal(comp, prev):
+            break
+    return comp
+
+
+def _ccl_local_kernel(shape):
+    """Phase-1 ``mapInArrow`` kernel of :func:`connected_components_chunks`
+    (CHUNK_SCHEMA in, ``_CCL_HALO_SCHEMA`` out), flushed by
+    ``CHUNK_FLUSH_BYTES``: 12 B/voxel of label + comp payloads."""
+    from ..volume import _iter_chunks, emit_kernel
+
+    def rows(batches):
+        for _vid, (cz, cy, cx), origin, block in _iter_chunks(batches):
+            comp = _local_ccl(block, origin, shape)
+            lab = block.tobytes()
+            cmp_ = comp.tobytes()
+            yield ("chunk", cz, cy, cx, *origin, *block.shape, "core", lab, cmp_), (
+                len(lab) + len(cmp_)
+            )
+            # positive-direction high faces -> the adjacent chunk,
+            # named for the receiver side they abut
+            for face_lab, face_comp, (tz, ty, tx), side in (
+                (block[-1:], comp[-1:], (cz + 1, cy, cx), "zlo"),
+                (block[:, -1:], comp[:, -1:], (cz, cy + 1, cx), "ylo"),
+                (block[:, :, -1:], comp[:, :, -1:], (cz, cy, cx + 1), "xlo"),
+            ):
+                fl, fc = face_lab.tobytes(), face_comp.tobytes()
+                yield ("strip", tz, ty, tx, *origin, *face_lab.shape, side, fl, fc), (
+                    len(fl) + len(fc)
+                )
+
+    return emit_kernel(rows, _CCL_HALO_SCHEMA)
+
+
 def connected_components_chunks(
     chunks: DataFrame,
     shape: tuple[int, int, int],
@@ -372,104 +443,16 @@ def connected_components_chunks(
     """
     import pyarrow as pa
 
-    from ..volume import PAYLOAD_DTYPE, _decode_block
+    from ..volume import PAYLOAD_DTYPE
 
     zdim, ydim, xdim = shape
     if zdim * ydim * xdim >= 2**63:
         raise ValueError("volume exceeds 2^63 addressable linear indices")
 
-    halo_schema = (
-        "kind string, cz int, cy int, cx int, z0 long, y0 long, x0 long, "
-        "dz int, dy int, dx int, side string, labels binary, comps binary"
-    )
-
-    def _local_ccl(block: "np.ndarray", z0: int, y0: int, x0: int):
-        import numpy as np
-
-        dz, dy, dx = block.shape
-        zz, yy, xx = np.meshgrid(
-            np.arange(z0, z0 + dz, dtype=np.int64),
-            np.arange(y0, y0 + dy, dtype=np.int64),
-            np.arange(x0, x0 + dx, dtype=np.int64),
-            indexing="ij",
-        )
-        comp = zz * ydim * xdim + yy * xdim + xx  # int64 provisional ids
-        for _ in range(dz + dy + dx + 1):
-            prev = comp
-            comp = comp.copy()
-            # six directional min-relaxations where labels match
-            same = block[1:] == block[:-1]
-            np.minimum(comp[1:], np.where(same, comp[:-1], comp[1:]), out=comp[1:])
-            np.minimum(comp[:-1], np.where(same, comp[1:], comp[:-1]), out=comp[:-1])
-            same = block[:, 1:] == block[:, :-1]
-            np.minimum(comp[:, 1:], np.where(same, comp[:, :-1], comp[:, 1:]), out=comp[:, 1:])
-            np.minimum(comp[:, :-1], np.where(same, comp[:, 1:], comp[:, :-1]), out=comp[:, :-1])
-            same = block[:, :, 1:] == block[:, :, :-1]
-            np.minimum(comp[:, :, 1:], np.where(same, comp[:, :, :-1], comp[:, :, 1:]), out=comp[:, :, 1:])
-            np.minimum(comp[:, :, :-1], np.where(same, comp[:, :, 1:], comp[:, :, :-1]), out=comp[:, :, :-1])
-            if np.array_equal(comp, prev):
-                break
-        return comp
-
-    def local_kernel(batches):
-        import numpy as np
-
-        for batch in batches:
-            d = batch.to_pydict()
-            rows = []
-            lab_payloads, comp_payloads = [], []
-            for i in range(len(d["cz"])):
-                dz, dy, dx = d["dz"][i], d["dy"][i], d["dx"][i]
-                cz, cy, cx = d["cz"][i], d["cy"][i], d["cx"][i]
-                z0, y0, x0 = d["z0"][i], d["y0"][i], d["x0"][i]
-                vid = d["volume_id"][i]
-                block = _decode_block(d["payload"][i], d["codec"][i], (dz, dy, dx))
-                comp = _local_ccl(block, z0, y0, x0)
-                rows.append(("chunk", cz, cy, cx, z0, y0, x0, dz, dy, dx, "core"))
-                lab_payloads.append(block.tobytes())
-                comp_payloads.append(comp.tobytes())
-                # positive-direction high faces -> the adjacent chunk,
-                # named for the receiver side they abut
-                for face_lab, face_comp, (tz, ty, tx), side in (
-                    (block[-1:], comp[-1:], (cz + 1, cy, cx), "zlo"),
-                    (block[:, -1:], comp[:, -1:], (cz, cy + 1, cx), "ylo"),
-                    (block[:, :, -1:], comp[:, :, -1:], (cz, cy, cx + 1), "xlo"),
-                ):
-                    fl = np.ascontiguousarray(face_lab)
-                    rows.append(
-                        ("strip", tz, ty, tx, z0, y0, x0,
-                         fl.shape[0], fl.shape[1], fl.shape[2], side)
-                    )
-                    lab_payloads.append(fl.tobytes())
-                    comp_payloads.append(np.ascontiguousarray(face_comp).tobytes())
-            if rows:
-                cols = list(zip(*rows))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols[0], type=pa.string()),
-                        pa.array(cols[1], type=pa.int32()),
-                        pa.array(cols[2], type=pa.int32()),
-                        pa.array(cols[3], type=pa.int32()),
-                        pa.array(cols[4], type=pa.int64()),
-                        pa.array(cols[5], type=pa.int64()),
-                        pa.array(cols[6], type=pa.int64()),
-                        pa.array(cols[7], type=pa.int32()),
-                        pa.array(cols[8], type=pa.int32()),
-                        pa.array(cols[9], type=pa.int32()),
-                        pa.array(cols[10], type=pa.string()),
-                        pa.array(lab_payloads, type=pa.binary()),
-                        pa.array(comp_payloads, type=pa.binary()),
-                    ],
-                    [
-                        "kind", "cz", "cy", "cx", "z0", "y0", "x0",
-                        "dz", "dy", "dx", "side", "labels", "comps",
-                    ],
-                )
-
     # phase 1 output is consumed twice (comp volume + pair extraction):
     # checkpoint so the local CCL runs once
     local = (
-        chunks.mapInArrow(local_kernel, schema=halo_schema)
+        chunks.mapInArrow(_ccl_local_kernel(shape), schema=_CCL_HALO_SCHEMA)
         .localCheckpoint(eager=True)
     )
     comp_chunks = local.filter(F.col("kind") == "chunk")
@@ -564,8 +547,9 @@ def connected_components_chunks(
     # chunk faces — makes it O(face voxels), and a collected dict in
     # the kernel closure would then be driver-OOM territory at 100 TB.
     # The join degrades to a shuffle instead, which merely costs an
-    # exchange.  ``roots`` is localCheckpointed by the fixpoint, so AQE
-    # sees its true size when choosing the strategy.
+    # exchange.  Below the union-find gate ``roots`` is a broadcast join
+    # of a driver-built map; above it the fixpoint localCheckpoints it,
+    # so AQE sees its true size when choosing the strategy.
     coo = comp_chunks.mapInArrow(
         unpack_kernel, schema="z long, y long, x long, label long, comp long"
     )

@@ -127,6 +127,59 @@ def outline_join(
 _HALO_SIDES = ("zlo", "zhi", "ylo", "yhi", "xlo", "xhi")
 
 
+#: the halo exchange rows: CHUNK_SCHEMA + the receiver-relative side
+#: ('core' for the chunk itself)
+_HALO_SCHEMA = (
+    "volume_id string, cz int, cy int, cx int, z0 long, y0 long, x0 long, "
+    "dz int, dy int, dx int, codec string, payload binary, side string"
+)
+_HALO_NAMES = tuple(f.split()[0] for f in _HALO_SCHEMA.split(","))
+
+
+def _halo_faces_kernel(grid):
+    """Face extraction of :func:`halo_map_chunks` as a ``mapInArrow``
+    kernel (CHUNK_SCHEMA in, ``_HALO_SCHEMA`` out): each chunk's core
+    row and its six 1-voxel faces addressed to the receiving neighbour,
+    flushed by ``CHUNK_FLUSH_BYTES``.  ``grid`` = the chunk-grid extent
+    for torus wrap, or ``None``."""
+    from ..volume import _decode_block, emit_kernel
+
+    def rows(batches):
+        # ONE pass emits the core row AND its six faces — the source is
+        # scanned once (a union of faces(chunks) with chunks would read
+        # every payload twice from storage).
+        for batch in batches:
+            d = batch.to_pydict()
+            for i in range(batch.num_rows):
+                dz, dy, dx = d["dz"][i], d["dy"][i], d["dx"][i]
+                cz, cy, cx = d["cz"][i], d["cy"][i], d["cx"][i]
+                vid, origin = d["volume_id"][i], (d["z0"][i], d["y0"][i], d["x0"][i])
+                payload, codec = d["payload"][i], d["codec"][i]
+                block = _decode_block(payload, codec, (dz, dy, dx))
+                yield (vid, cz, cy, cx, *origin, dz, dy, dx, codec, payload, "core"), len(
+                    payload
+                )
+                # (my face, receiver delta on the chunk grid, receiver side)
+                emits = (
+                    (block[:1], (-1, 0, 0), "zhi"),
+                    (block[-1:], (1, 0, 0), "zlo"),
+                    (block[:, :1], (0, -1, 0), "yhi"),
+                    (block[:, -1:], (0, 1, 0), "ylo"),
+                    (block[:, :, :1], (0, 0, -1), "xhi"),
+                    (block[:, :, -1:], (0, 0, 1), "xlo"),
+                )
+                for face, (ez, ey, ex), side in emits:
+                    tz, ty, tx = cz + ez, cy + ey, cx + ex
+                    if grid is not None:
+                        tz, ty, tx = tz % grid[0], ty % grid[1], tx % grid[2]
+                    elif tz < 0 or ty < 0 or tx < 0:
+                        continue  # upper-edge misses drop as coreless groups
+                    f = face.tobytes()
+                    yield (vid, tz, ty, tx, *origin, *face.shape, "raw", f, side), len(f)
+
+    return emit_kernel(rows, _HALO_SCHEMA)
+
+
 def halo_map_chunks(
     chunks: DataFrame,
     block_fn=None,
@@ -170,13 +223,9 @@ def halo_map_chunks(
     ``codec`` compresses output payloads in-worker (same contract as
     ``upscale_chunks``).
     """
-    import pyarrow as pa
-
     from ..volume import CHUNK_SCHEMA, _check_codec, _decode_block, chunk_kernel
 
     _check_codec(codec)
-
-    halo_schema = "volume_id string, cz int, cy int, cx int, z0 long, y0 long, x0 long, dz int, dy int, dx int, codec string, payload binary, side string"
 
     if wrap:
         # Grid extent: a metadata-scale agg (3 ints) over the chunk keys
@@ -184,78 +233,11 @@ def halo_map_chunks(
         row = chunks.agg(
             F.max("cz").alias("cz"), F.max("cy").alias("cy"), F.max("cx").alias("cx")
         ).first()
-        ncz, ncy, ncx = row["cz"] + 1, row["cy"] + 1, row["cx"] + 1
+        grid = (row["cz"] + 1, row["cy"] + 1, row["cx"] + 1)
     else:
-        ncz = ncy = ncx = None
+        grid = None
 
-    def _face_batch(rows, payloads):
-        cols = list(zip(*rows)) if rows else [[]] * 12
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(cols[0], type=pa.string()),
-                pa.array(cols[1], type=pa.int32()),
-                pa.array(cols[2], type=pa.int32()),
-                pa.array(cols[3], type=pa.int32()),
-                pa.array(cols[4], type=pa.int64()),
-                pa.array(cols[5], type=pa.int64()),
-                pa.array(cols[6], type=pa.int64()),
-                pa.array(cols[7], type=pa.int32()),
-                pa.array(cols[8], type=pa.int32()),
-                pa.array(cols[9], type=pa.int32()),
-                pa.array(cols[10], type=pa.string()),
-                pa.array(payloads, type=pa.binary()),
-                pa.array(cols[11], type=pa.string()),
-            ],
-            [
-                "volume_id", "cz", "cy", "cx", "z0", "y0", "x0",
-                "dz", "dy", "dx", "codec", "payload", "side",
-            ],
-        )
-
-    def extract_all(batches):
-        # ONE pass emits the core row AND its six faces — the source is
-        # scanned once (a union of faces(chunks) with chunks would read
-        # every payload twice from storage).
-        for batch in batches:
-            d = batch.to_pydict()
-            rows, payloads = [], []
-            for i in range(len(d["cz"])):
-                dz, dy, dx = d["dz"][i], d["dy"][i], d["dx"][i]
-                cz, cy, cx = d["cz"][i], d["cy"][i], d["cx"][i]
-                vid = d["volume_id"][i]
-                block = _decode_block(d["payload"][i], d["codec"][i], (dz, dy, dx))
-                rows.append(
-                    (vid, cz, cy, cx,
-                     d["z0"][i], d["y0"][i], d["x0"][i],
-                     dz, dy, dx, d["codec"][i], "core")
-                )
-                payloads.append(d["payload"][i])
-                # (my face, receiver delta on the chunk grid, receiver side)
-                emits = (
-                    (block[:1], (-1, 0, 0), "zhi"),
-                    (block[-1:], (1, 0, 0), "zlo"),
-                    (block[:, :1], (0, -1, 0), "yhi"),
-                    (block[:, -1:], (0, 1, 0), "ylo"),
-                    (block[:, :, :1], (0, 0, -1), "xhi"),
-                    (block[:, :, -1:], (0, 0, 1), "xlo"),
-                )
-                for face, (ez, ey, ex), side in emits:
-                    tz, ty, tx = cz + ez, cy + ey, cx + ex
-                    if wrap:
-                        tz, ty, tx = tz % ncz, ty % ncy, tx % ncx
-                    elif tz < 0 or ty < 0 or tx < 0:
-                        continue  # upper-edge misses drop as coreless groups
-                    f = np.ascontiguousarray(face)
-                    rows.append(
-                        (vid, tz, ty, tx,
-                         d["z0"][i], d["y0"][i], d["x0"][i],
-                         f.shape[0], f.shape[1], f.shape[2], "raw", side)
-                    )
-                    payloads.append(f.tobytes())
-            if rows:
-                yield _face_batch(rows, payloads)
-
-    tagged = chunks.mapInArrow(extract_all, schema=halo_schema)
+    tagged = chunks.mapInArrow(_halo_faces_kernel(grid), schema=_HALO_SCHEMA)
     exchanged = tagged.repartition("cz", "cy", "cx").sortWithinPartitions(
         "cz", "cy", "cx", "side"
     )
@@ -287,11 +269,6 @@ def halo_map_chunks(
                 padded[1:-1, 1:-1, -1] = face[:, :, 0]
         return core, block, padded
 
-    _NAMES = (
-        "volume_id", "cz", "cy", "cx", "z0", "y0", "x0",
-        "dz", "dy", "dx", "codec", "payload", "side",
-    )
-
     def _groups(batches):
         """Stream key-contiguous row groups off the sorted exchange."""
         group: list[tuple] = []
@@ -299,7 +276,7 @@ def halo_map_chunks(
         for batch in batches:
             d = batch.to_pydict()
             for i in range(len(d["cz"])):
-                row = tuple(d[n][i] for n in _NAMES)
+                row = tuple(d[n][i] for n in _HALO_NAMES)
                 k = (row[1], row[2], row[3])
                 if k != key and group:
                     yield group

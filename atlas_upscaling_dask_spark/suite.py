@@ -2662,10 +2662,11 @@ dropped AS (
 SELECT a.vec_id, a.bucket, d.d2 IS NULL AS is_kept
 FROM assigned a LEFT JOIN dropped d ON a.vec_id = d.d2
 """,
-    # SemDeDup: the pair search must be the bucket equi-join (two
-    # keyed exchanges: bucket join + drop-set distinct) — a cross
-    # product here would be corpus² at scale
-    audit={"max_shuffles": 2},
+    # SemDeDup: the pair search must be bucket-local — ONE keyed
+    # exchange on the bucket, whose kernel emits every row with its
+    # verdict (no drop-set distinct, no join back); a cross product
+    # here would be corpus² at scale
+    audit={"max_shuffles": 1},
 )
 
 

@@ -100,32 +100,6 @@ class VolumeMeta:
 FIXTURE_META = VolumeMeta(16, 16, 16)
 
 
-def _chunk_batch(rows: list[tuple], payloads: list[bytes], codec: str = "raw"):
-    """Build a non-empty Arrow RecordBatch matching CHUNK_SCHEMA with
-    explicit types (int32/int64 mismatches make the JVM-side accessor
-    throw)."""
-    import pyarrow as pa
-
-    cols = list(zip(*rows))
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(cols[0], type=pa.string()),
-            pa.array(cols[1], type=pa.int32()),
-            pa.array(cols[2], type=pa.int32()),
-            pa.array(cols[3], type=pa.int32()),
-            pa.array(cols[4], type=pa.int64()),
-            pa.array(cols[5], type=pa.int64()),
-            pa.array(cols[6], type=pa.int64()),
-            pa.array(cols[7], type=pa.int32()),
-            pa.array(cols[8], type=pa.int32()),
-            pa.array(cols[9], type=pa.int32()),
-            pa.array([codec] * len(payloads), type=pa.string()),
-            pa.array(payloads, type=pa.binary()),
-        ],
-        [f.name for f in CHUNK_SCHEMA.fields],
-    )
-
-
 #: chunk payload codecs.  'lz4'/'zstd' go through pyarrow's bundled C
 #: codecs (~7x faster than zlib level 1 on label payloads, better
 #: ratio) — the closest open analog of the reference's Blosc zstd
@@ -176,12 +150,67 @@ def _decode_payload(payload: bytes, codec: str, size: int | None = None) -> byte
 # codecs and the output-batch bound live in this module only.
 # ---------------------------------------------------------------------------
 
-#: output-batch flush bound of every chunk kernel, in encoded payload
+#: output-batch flush bound of every Arrow emitter (chunk kernels, the
+#: halo faces of ``halo_map_chunks``, the CCL local phase), in payload
 #: bytes.  Arrow binary arrays carry int32 offsets (2 GiB per array),
 #: and a task may own up to ``MAX_TASK_BYTES`` of cells, so a kernel
 #: that batched by input rows could build an unrepresentable array.
 #: Read on the driver when a kernel is built (tests shrink it).
 CHUNK_FLUSH_BYTES = 256 << 20
+
+#: Spark type names (DDL or ``simpleString``) → pyarrow type aliases
+_ARROW_TYPES = {
+    "string": "string", "int": "int32", "long": "int64", "bigint": "int64",
+    "binary": "binary",
+}
+
+
+def _arrow_fields(schema) -> list:
+    """A flat Spark schema (``StructType`` or DDL string) as ``(name,
+    pyarrow type)`` pairs."""
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        pairs = [f.split() for f in schema.split(",")]
+    else:
+        pairs = [(f.name, f.dataType.simpleString()) for f in schema.fields]
+    return [(n, pa.type_for_alias(_ARROW_TYPES[t])) for n, t in pairs]
+
+
+def _arrow_batch(rows: list[tuple], fields: list):
+    """Build a non-empty Arrow RecordBatch from row tuples with explicit
+    column types (int32/int64 mismatches make the JVM-side accessor
+    throw)."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=t) for c, (_, t) in zip(cols, fields)],
+        [n for n, _ in fields],
+    )
+
+
+def emit_kernel(rows_fn, schema):
+    """The one output-batch bound of every Arrow emitter: wrap
+    ``rows_fn(batches)``, which yields ``(row, n_bytes)`` with ``row``
+    in ``schema`` order, as a ``mapInArrow`` kernel.  Rows buffer until
+    their bytes reach ``CHUNK_FLUSH_BYTES`` (read here, on the driver)
+    and leave as one batch."""
+    flush_bytes = CHUNK_FLUSH_BYTES
+
+    def kernel(batches):
+        fields = _arrow_fields(schema)
+        rows, pending = [], 0
+        for row, n_bytes in rows_fn(batches):
+            rows.append(row)
+            pending += n_bytes
+            if pending >= flush_bytes:
+                yield _arrow_batch(rows, fields)
+                rows, pending = [], 0
+        if rows:
+            yield _arrow_batch(rows, fields)
+
+    return kernel
 
 
 def _decode_block(payload: bytes, codec: str, extent) -> np.ndarray:
@@ -227,25 +256,17 @@ def chunk_kernel(items_fn, codec: str | None = None):
     before its first chunk (``malloc_tuning``), so chunk-sized buffers
     reuse heap pages and the heap stays bounded by that batch size."""
     out_codec = _check_codec(codec)
-    flush_bytes = CHUNK_FLUSH_BYTES  # captured on the driver
 
-    def kernel(batches):
+    def rows(batches):
         from atlas_upscaling_dask_spark.malloc_tuning import pin_large_alloc_reuse
 
         pin_large_alloc_reuse()
-        rows, payloads, pending = [], [], 0
         for vid, key, origin, block in items_fn(batches):
             block = np.ascontiguousarray(block, dtype=PAYLOAD_DTYPE)
-            rows.append((vid, *key, *origin, *block.shape))
-            payloads.append(_encode_payload(block, out_codec))
-            pending += len(payloads[-1])
-            if pending >= flush_bytes:
-                yield _chunk_batch(rows, payloads, out_codec)
-                rows, payloads, pending = [], [], 0
-        if rows:
-            yield _chunk_batch(rows, payloads, out_codec)
+            payload = _encode_payload(block, out_codec)
+            yield (vid, *key, *origin, *block.shape, out_codec, payload), len(payload)
 
-    return kernel
+    return emit_kernel(rows, CHUNK_SCHEMA)
 
 
 def map_chunks(chunks: DataFrame, fn, codec: str | None = None) -> DataFrame:
@@ -517,8 +538,7 @@ def merge_chunks(chunks: DataFrame, factor: tuple[int, int, int]) -> DataFrame:
         "mcy", (F.col("cy") / ky).cast("int")
     ).withColumn("mcx", (F.col("cx") / kx).cast("int"))
 
-    def assemble(keys, pdfs: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdfs
+    def assemble(keys, pdf):
         z0 = int(pdf["z0"].min())
         y0 = int(pdf["y0"].min())
         x0 = int(pdf["x0"].min())

@@ -191,6 +191,29 @@ def test_prepare_training_set_composition(spark, docs):
     assert srcs <= {"src0", "src1"}
 
 
+def test_prepare_training_set_contaminated_copy_leaves_no_survivor(spark, docs):
+    # contamination is flagged before the dedup window: when the
+    # benchmark holds a document whose exact copy has a LOWER id, the
+    # window elects that copy, and it must be dropped too
+    from atlas_upscaling_dask_spark.extensions.pipeline import prepare_training_set
+
+    kept = prepare_training_set(docs, seed=3).filter(F.col("n_tokens") >= 5)
+    low = kept.orderBy("doc_id").first()["doc_id"]
+    high = docs.agg(F.max("doc_id")).first()[0] + 1
+    copy = docs.filter(F.col("doc_id") == low).withColumn("doc_id", F.lit(high))
+    corpus = docs.unionByName(copy)
+    bench = corpus.filter(F.col("doc_id") == high)
+
+    def ids(**kw):
+        return {r["doc_id"] for r in prepare_training_set(corpus, seed=3, **kw).collect()}
+
+    clean = ids()
+    assert low in clean and high not in clean  # the copy dedups to `low`
+    dirty = ids(benchmark=bench)
+    assert not {low, high} & dirty
+    assert dirty < clean
+
+
 def test_mixture_upsample_epochs(spark):
     from atlas_upscaling_dask_spark.extensions.training import mixture_upsample
 
@@ -688,6 +711,37 @@ def test_near_dup_clusters_transitive(spark):
     assert out[1] == (1, True) and out[2] == (1, False) and out[3] == (1, False)
     assert out[4] == (4, True)
     assert out[5] == (5, True) and out[6] == (5, False)
+
+
+@pytest.mark.parametrize("threshold", [0, 1 << 20])
+def test_near_dup_clusters_reads_pairs_once(spark, monkeypatch, threshold):
+    # the pair input is evaluated once on both sides of the union-find
+    # gate (threshold 0 forces the distributed star loop)
+    import functools
+
+    from atlas_upscaling_dask_spark.extensions.dedup import near_dup_clusters
+    from atlas_upscaling_dask_spark.operators import components
+
+    monkeypatch.setattr(
+        components,
+        "connected_components_edges",
+        functools.partial(
+            components.connected_components_edges, local_threshold=threshold
+        ),
+    )
+    docs = spark.createDataFrame([(i, f"d{i}") for i in range(1, 9)], "doc_id long, text string")
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6), (6, 7)], "d1 long, d2 long")
+    acc = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for b in batches:
+            acc.add(b.num_rows)
+            yield b
+
+    out = near_dup_clusters(docs, pairs.mapInArrow(count, schema=pairs.schema))
+    got = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 5, 8: 8}
+    assert acc.value == 4
 
 
 def test_quantize_roundtrip_error_bounded(emb):
@@ -1865,6 +1919,17 @@ def test_semantic_dedup_drops_near_duplicates(spark):
     # bucket assignment is cluster-consistent: same cluster -> same bucket
     for i in range(120):
         assert out[i]["bucket"] == out[i % 6]["bucket"]
+
+
+def test_semantic_dedup_gemm_one_row_per_corpus_row(emb):
+    # every vector leaves its bucket kernel exactly once, with its verdict
+    from atlas_upscaling_dask_spark.extensions.similarity import semantic_dedup
+
+    rows = semantic_dedup(emb, 0.3, 16, backend="gemm").collect()
+    ids = [r["vec_id"] for r in rows]
+    assert len(ids) == len(set(ids)) == emb.count()
+    assert set(ids) == {r["vec_id"] for r in emb.select("vec_id").collect()}
+    assert 0 < sum(not r["is_kept"] for r in rows) < len(rows)
 
 
 def test_semantic_dedup_backends_identical(spark, emb):

@@ -224,6 +224,45 @@ def test_chunk_emitter_flushes_and_roundtrips(monkeypatch, codec):
         assert got.shape == want.shape and got.tobytes() == want.tobytes()
 
 
+def _halo_emitter(kind):
+    from atlas_upscaling_dask_spark.operators import components, outline
+
+    if kind == "ccl":
+        return components._ccl_local_kernel((8, 8, 4))
+    return outline._halo_faces_kernel(None if kind == "faces" else (2, 2, 1))
+
+
+@pytest.mark.parametrize("kind", ["ccl", "faces", "faces_wrap"])
+def test_halo_emitters_flush_by_bytes(monkeypatch, kind):
+    # Spark-free: the CCL local phase and the halo face extraction share
+    # the chunk kernels' byte-bounded flush.  Shrunk below one row, every
+    # row leaves in its own batch, and the rows are those of the
+    # default (one-batch) run, in order.
+    import numpy as np
+
+    from atlas_upscaling_dask_spark import volume
+
+    rng = np.random.default_rng(11)
+    items = [
+        ("v", (cz, cy, 0), (4 * cz, 4 * cy, 0), rng.integers(0, 3, size=(4, 4, 4)))
+        for cz in range(2)
+        for cy in range(2)
+    ]
+    chunks = list(volume.chunk_kernel(lambda _batches: iter(items), "zstd")([]))
+
+    def run():
+        return list(_halo_emitter(kind)(iter(chunks)))
+
+    whole = run()
+    assert len(whole) == 1
+    want = whole[0].to_pylist()
+    monkeypatch.setattr(volume, "CHUNK_FLUSH_BYTES", 1)
+    batches = run()
+    assert [b.num_rows for b in batches] == [1] * len(want)
+    assert all(b.schema == whole[0].schema for b in batches)
+    assert [r for b in batches for r in b.to_pylist()] == want
+
+
 def test_meta_physical_size():
     # print_metadata.py:13 — mm = size*spacing/1000
     m = VolumeMeta(456, 320, 528)
@@ -630,6 +669,21 @@ def test_merge_chunks_uneven_edges(spark):
     assert merged.count() == 2 * 2  # cz in {0,1}, cy in {0,1}, cx {0}
 
 
+def test_merge_chunks_emits_no_user_warning(spark):
+    # a kernel hinted on only some arguments makes PySpark warn "Cannot
+    # infer the eval type from type hints" on every call
+    import warnings
+
+    from atlas_upscaling_dask_spark.volume import merge_chunks
+
+    base = synthetic_chunks(spark, VolumeMeta(8, 8, 8), chunk=(4, 4, 4))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        merged = merge_chunks(base, (2, 2, 2))
+    assert merged.count() == 1
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+
+
 def test_histogram_and_extents_chunk_paths(spark):
     from atlas_upscaling_dask_spark.operators.verify import (
         histogram_chunks,
@@ -834,6 +888,54 @@ def test_cc_edges_star_handles_pathological_chain(spark):
     rows = out.collect()
     assert len(rows) == n
     assert all(r["comp"] == 0 for r in rows)
+
+
+def test_cc_edges_union_find_gate_flips_at_threshold(spark, monkeypatch):
+    # the driver-side union-find runs iff the canonical edge set has at
+    # most local_threshold edges; both branches give the same mapping
+    from atlas_upscaling_dask_spark.operators import components
+
+    calls = []
+    local = components._cc_local_mapping
+
+    def counted(*args):
+        calls.append(1)
+        return local(*args)
+
+    monkeypatch.setattr(components, "_cc_local_mapping", counted)
+    verts = spark.range(10).select(F.col("id"))
+    # 4 canonical edges: a reversed duplicate and a self loop drop out
+    edges = spark.createDataFrame(
+        [(1, 0), (2, 1), (1, 2), (5, 4), (7, 8), (9, 9)], "src long, dst long"
+    )
+
+    def run(threshold):
+        calls.clear()
+        out = components.connected_components_edges(
+            verts, edges, local_threshold=threshold
+        )
+        return sorted(map(tuple, out.collect())), len(calls)
+
+    at, n_local = run(4)
+    below, n_star = run(3)
+    assert (n_local, n_star) == (1, 0)
+    assert at == below
+    assert at == [
+        (0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 4), (6, 6), (7, 7), (8, 7),
+        (9, 9),
+    ]
+
+
+@pytest.mark.parametrize("threshold", [0, 1 << 20])
+def test_cc_edges_without_edges_are_singletons(spark, threshold):
+    from atlas_upscaling_dask_spark.operators.components import (
+        connected_components_edges,
+    )
+
+    verts = spark.range(5).select(F.col("id"))
+    edges = spark.createDataFrame([(3, 3)], "src long, dst long")  # self loop only
+    out = connected_components_edges(verts, edges, local_threshold=threshold)
+    assert sorted(map(tuple, out.collect())) == [(i, i) for i in range(5)]
 
 
 def test_cc_edges_star_equals_minlabel_on_random_graph(spark):
