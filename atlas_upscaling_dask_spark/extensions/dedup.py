@@ -1401,17 +1401,18 @@ def _without_tombstoned(
 _INDEX_ID_COLS = ("media_id", "doc_id", "neighbor_id")
 
 
-def purge_index_tombstones(
-    spark, path: str, partition_col: str = "band", id_col: str | None = None
-) -> dict:
+def purge_index_tombstones(spark, path: str) -> dict:
     """Physically remove tombstoned rows from a partitioned index
     (LSH/pHash: ``band``; BM25 postings: ``bucket``; IVF/IVFADC:
     ``bucket`` with ``neighbor_id``): staged rewrite minus the
     tombstone set, sidecar files carried across, tombstones cleared
-    after the swap.  A BM25 ``_corpus_stats.json`` sidecar is adjusted
-    by the purged docs' lengths (exact for every doc that had at least
-    one posting — docs the index never saw keep contributing to the
-    global stats, which only the next full rebuild reclaims).
+    after the swap.  The partition layout is read from the index's own
+    ``key=value`` directories and the id column is the one of
+    ``media_id`` / ``doc_id`` / ``neighbor_id`` the index holds.  A
+    BM25 ``_corpus_stats.json`` sidecar is adjusted by the purged docs'
+    lengths (exact for every doc that had at least one posting — docs
+    the index never saw keep contributing to the global stats, which
+    only the next full rebuild reclaims).
 
     Returns {"tombstones_cleared", "rows_before", "rows_after",
     "rows_purged"} — ``tombstones_cleared`` counts distinct tombstone
@@ -1440,13 +1441,12 @@ def purge_index_tombstones(
             "rows_purged": 0,
         }
     df = spark.read.parquet(path)
+    id_col = next((c for c in df.columns if c in _INDEX_ID_COLS), None)
     if id_col is None:
-        id_col = next((c for c in df.columns if c in _INDEX_ID_COLS), None)
-        if id_col is None:
-            raise ValueError(
-                f"no known id column in index at {path} "
-                f"(columns {df.columns}); pass id_col= explicitly"
-            )
+        raise ValueError(
+            f"no known id column in index at {path} (columns {df.columns})"
+        )
+    partition_cols = fsutil.partition_columns(spark, path)
     before = df.count()
     ts_ids = F.broadcast(
         ts.select(
@@ -1478,7 +1478,7 @@ def purge_index_tombstones(
     (
         kept.observe(obs, F.count(F.lit(1)).alias("rows"))
         .write.mode("overwrite")
-        .partitionBy(partition_col)
+        .partitionBy(*partition_cols)
         .parquet(staging)
     )
     after = int(obs.get["rows"])

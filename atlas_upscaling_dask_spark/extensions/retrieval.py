@@ -373,6 +373,13 @@ def append_to_text_index(
 
     spark = docs.sparkSession
     stats = json.loads(read_text(spark, path.rstrip("/") + "/_corpus_stats.json"))
+    batch_t = docs.schema[id_col].dataType.simpleString()
+    if batch_t != stats.get("id_type", "bigint"):
+        raise ValueError(
+            f"batch id type {batch_t!r} does not match the index's pinned "
+            f"id_type {stats.get('id_type', 'bigint')!r} — appending it "
+            f"would corrupt the schema-explicit postings read"
+        )
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         F.size(F.split(F.col(text_col), " ")).alias("dl"),

@@ -65,3 +65,27 @@ def read_text(spark: SparkSession, path: str) -> str:
         return bytes(baos.toByteArray()).decode("utf-8")
     finally:
         stream.close()
+
+
+def partition_columns(spark: SparkSession, path: str) -> tuple[str, ...]:
+    """The partition columns a ``partitionBy`` table at ``path`` was
+    written with, read from its ``key=value`` directory layout (outer
+    to inner; ``()`` for a flat table).  Hidden ``_``/``.`` entries
+    (sidecars, tombstones, staging) are skipped."""
+    fs, jpath, _, _ = _fs_and_path(spark, path)
+    cols: list[str] = []
+    while True:
+        sub = next(
+            (
+                st.getPath()
+                for st in fs.listStatus(jpath)
+                if st.isDirectory()
+                and "=" in st.getPath().getName()
+                and not st.getPath().getName().startswith(("_", "."))
+            ),
+            None,
+        )
+        if sub is None:
+            return tuple(cols)
+        cols.append(sub.getName().split("=", 1)[0])
+        jpath = sub

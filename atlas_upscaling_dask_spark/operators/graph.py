@@ -60,7 +60,7 @@ def degrees(edges: DataFrame) -> DataFrame:
     return both.groupBy("node").agg(F.count("*").alias("degree"))
 
 
-def triangle_stats(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """One row: (n_nodes, n_edges, n_triangles) of the undirected graph.
 
     Degree-orientation wedge counting — see module docstring.  The
@@ -75,8 +75,7 @@ def triangle_stats(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
     and a 100 TB input would be scanned three times.  Same discipline
     as ``connected_components``'s per-round checkpoint.
     """
-    if checkpoint:
-        edges = edges.localCheckpoint()
+    edges = edges.localCheckpoint()
     deg = degrees(edges)
     rank_w = Window.orderBy(F.col("degree").asc(), F.col("node").asc())
     ranked = deg.select(
@@ -93,8 +92,7 @@ def triangle_stats(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
             F.greatest("rka", "rkb").alias("dst"),
         )
     )
-    if checkpoint:
-        oriented = oriented.localCheckpoint()
+    oriented = oriented.localCheckpoint()
 
     e1 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     e2 = oriented.select(F.col("src").alias("u"), F.col("dst").alias("w"))
@@ -116,7 +114,6 @@ def pagerank(
     edges: DataFrame,
     n_iter: int = 3,
     top_k: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Integer-scaled PageRank (d = 0.85) over canonical undirected edges.
 
@@ -130,11 +127,8 @@ def pagerank(
     instead of exponential in re-expanded subtrees (the integer math is
     deterministic, so truncating lineage loses nothing).
     """
-    if checkpoint:
-        edges = edges.localCheckpoint()
-    deg = degrees(edges)
-    if checkpoint:
-        deg = deg.localCheckpoint()
+    edges = edges.localCheckpoint()
+    deg = degrees(edges).localCheckpoint()
     n_nodes = deg.count()  # scalar driver value: sizes the constants only
     base = (15 * PR_SCALE) // (100 * n_nodes)
     init = PR_SCALE // n_nodes
@@ -142,8 +136,7 @@ def pagerank(
     directed = edges.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionAll(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    if checkpoint:
-        directed = directed.localCheckpoint()
+    directed = directed.localCheckpoint()
 
     rank = deg.select("node", F.lit(init).cast("long").alias("rank_scaled"))
     for _ in range(n_iter):
@@ -170,8 +163,7 @@ def pagerank(
                 ).cast("long").alias("rank_scaled"),
             )
         )
-        if checkpoint:
-            rank = rank.localCheckpoint()
+        rank = rank.localCheckpoint()
     if top_k is not None:
         rank = rank.orderBy(
             F.col("rank_scaled").desc(), F.col("node").asc()

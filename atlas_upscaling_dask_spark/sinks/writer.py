@@ -22,6 +22,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
+from .. import fsutil
 from ..volume import VolumeMeta
 
 COMPRESSORS = {"zstd": "zstd", "lz4": "lz4", "none": "uncompressed"}
@@ -140,15 +141,18 @@ def compact_table(
     spark,
     path: str,
     target_mb: int = 128,
-    partition_cols: tuple[str, ...] = (),
 ) -> dict:
     """Small-file compaction — the maintenance companion of streaming
     ingestion (a drop-folder stream appends one file per trigger; after
     a day the table is thousands of KB-sized files and every scan pays
     per-file open/footer costs and schedules tiny tasks).
 
-    Rewrites the table at ``target_mb`` per output file, preserving any
-    partition layout.  The rewrite stages into a sibling directory and
+    Rewrites the table at ``target_mb`` per output file, preserving its
+    partition layout: the partition columns are read from the table's
+    own ``key=value`` directories, so a partitioned index is never
+    rewritten flat (after a flat rewrite and one append, an index
+    query reads only the appended partition directories and misses
+    every compacted row).  The rewrite stages into a sibling directory and
     swaps via two renames.  **This is NOT transactional** — it assumes a
     single writer on a local POSIX filesystem (``os.rename`` fails
     across filesystems and on most object stores, and each rename is
@@ -200,6 +204,7 @@ def compact_table(
     ]
 
     df = spark.read.parquet(path)
+    partition_cols = fsutil.partition_columns(spark, path)
     staging = path.rstrip("/") + ".__compact__"
     if partition_cols:
         # repartition by the layout key so each output partition dir

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import fsutil
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -1156,7 +1158,7 @@ def warc_ingest_batch(
     )
 
     marker = f"{marker_dir}/ledger_epoch_{epoch}.done" if marker_dir else None
-    if marker is not None and _marker_exists(spark, marker):
+    if marker is not None and fsutil.exists(spark, marker):
         return
     (
         pages.select(
@@ -1167,7 +1169,7 @@ def warc_ingest_batch(
         .parquet(ledger_path)
     )
     if marker is not None:
-        _touch_marker(spark, marker)
+        fsutil.write_text(spark, marker, "done\n")
 
 
 def _read_ledger(
@@ -1178,14 +1180,12 @@ def _read_ledger(
     scans history outside the batch's own hash buckets).  Bucket
     existence goes through the Hadoop FileSystem, so the pruning works
     on whatever store the ledger lives on, not just local disk."""
-    if not _path_exists(spark, ledger_path):
+    if not fsutil.exists(spark, ledger_path):
         return None
-    fs, _ = _hadoop_fs(spark, ledger_path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     hit = [
         f"{ledger_path}/bucket={b}"
         for b in buckets
-        if fs.exists(jvm_path(f"{ledger_path}/bucket={b}"))
+        if fsutil.exists(spark, f"{ledger_path}/bucket={b}")
     ]
     if not hit:
         return None
@@ -1195,34 +1195,6 @@ def _read_ledger(
         .select("bucket", "canonical_url")
         .distinct()
     )
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """The Hadoop FileSystem owning ``path`` — the SAME resolver the
-    parquet reader/writer use, so ledger-bucket probes and epoch
-    markers work wherever the ledger itself lives (file://, hdfs://,
-    s3a://...); a driver-local ``os.path`` probe would silently see
-    nothing on a remote store and dedup would degrade to a no-op."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    fs, jpath = _hadoop_fs(spark, path)
-    return bool(fs.exists(jpath))
-
-
-def _marker_exists(spark: SparkSession, marker: str) -> bool:
-    return _path_exists(spark, marker)
-
-
-def _touch_marker(spark: SparkSession, marker: str) -> None:
-    fs, jpath = _hadoop_fs(spark, marker)
-    fs.mkdirs(jpath.getParent())
-    out = fs.create(jpath, True)
-    out.write(bytearray(b"done\n"))
-    out.close()
 
 
 def start_warc_ingest_stream(

@@ -2670,6 +2670,68 @@ FROM assigned a LEFT JOIN dropped d ON a.vec_id = d.d2
 )
 
 
+def _doc_fixture(
+    spark: SparkSession,
+    sf_dir: str,
+    group: int,
+    schema: str,
+    row_of: Callable,
+) -> DataFrame:
+    """The one skeleton of the documents-derived media fixtures: a
+    ``media_id long, <schema>`` frame with one row per
+    ``documents.doc_id``, whose ``schema`` columns are the tuple
+    ``row_of(d, cache)`` returns for doc ``d``.  ``cache`` is one dict
+    per task: a row function keeps there what its group
+    (``d - d % group``) or another key determines, so each group's
+    payload is built once per task.
+
+    Group-hash spread (r12, guide §2.5 input skew): the sf-dir
+    documents land in ONE input split, which would serialize every
+    encode and decode on one core.  One exchange of 8-byte ids, keyed
+    ``doc_id - doc_id % group`` into the session's shuffle partition
+    count, runs the codec work on every core while each group stays in
+    one task (its cache hits stay task-local).  ``tools/audit_plans.py``
+    matches exactly this exchange (``spread_exchanges``), and this is
+    the only place it is written.
+    """
+    import pandas as pd
+
+    names = ["media_id"] + [c.split()[0] for c in schema.split(",")]
+
+    def kernel(batches):
+        cache: dict = {}
+        for pdf in batches:
+            yield pd.DataFrame(
+                [(d, *row_of(d, cache)) for d in pdf["doc_id"].tolist()],
+                columns=names,
+                dtype=object,
+            )
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .repartition(
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+            F.col("doc_id") - F.col("doc_id") % group,
+        )
+    )
+    return docs.mapInPandas(kernel, schema=f"media_id long, {schema}")
+
+
+def _tiff_bytes(stack) -> bytes:
+    # sources/tiff.py writes to paths only: round-trip a temp file
+    import os
+    import tempfile
+
+    from .sources.tiff import write_tiff
+
+    with tempfile.TemporaryDirectory(prefix="tiffsynth_") as tmp:
+        path = os.path.join(tmp, "x.tif")
+        write_tiff(path, stack)
+        with open(path, "rb") as fh:
+            return fh.read()
+
+
 def _multimodal_audio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REAL end-to-end audio codec exercise with a closed-form oracle:
     # each doc becomes a ±A square-wave WAV (A and length derived from
@@ -2679,46 +2741,21 @@ def _multimodal_audio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # predict every output value without decoding a byte; rms rounds
     # to 9 digits on both sides (float-portability contract: the
     # pairwise-summed mean can drift a ulp from the analytic A).
-    import pandas as pd
-
     from .extensions.multimodal import extract_audio_features
 
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def make_wav(batches):
+    def wav(d, cache):
         import numpy as np
 
         from atlas_upscaling_dask_spark.sources.wav import encode_wav
 
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                a = ((int(did) % 7) + 1) / 10.0
-                n = 100 + int(did) % 50
-                s = np.empty(n, dtype=np.float64)
-                s[0::2] = a
-                s[1::2] = -a
-                payloads.append(encode_wav(s, 8000))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "media_type": "audio",
-                    "payload": payloads,
-                }
-            )
+        a = ((d % 7) + 1) / 10.0
+        s = np.empty(100 + d % 50, dtype=np.float64)
+        s[0::2] = a
+        s[1::2] = -a
+        return ("audio", encode_wav(s, 8000))
 
-    media = docs.mapInPandas(
-        make_wav, schema="media_id long, media_type string, payload binary"
+    media = _doc_fixture(
+        spark, sf_dir, 5, "media_type string, payload binary", wav
     )
     return extract_audio_features(media).select(
         "media_id",
@@ -2758,6 +2795,38 @@ FROM documents
 _PHASH_AS = [1, 2, 4, 5, 8, 10, 11, 13, 16, 17]
 
 
+def _slot_dct_image(a: int, b: int, amp: Callable[[int], float]):
+    """The 32×32 float image of the analytic pHash fixtures: the
+    inverse 2-D DCT ``mᵀ·c·m`` of a coefficient grid with DC 128·32
+    and the AC slots {s ∈ 1..63 : (s·a + b) mod 63 < 32} active, the
+    slot of ascending rank r at amplitude ``amp(r)``.  Callers choose
+    (a, b), the amplitude rule and the quantization."""
+    import numpy as np
+
+    from .extensions.multimodal import _dct_matrix
+
+    slots = sorted(s for s in range(1, 64) if (s * a + b) % 63 < 32)
+    c = np.zeros((32, 32))
+    c[0, 0] = 128.0 * 32
+    for rank, s in enumerate(slots):
+        c[divmod(s, 8)] = amp(rank)
+    m = _dct_matrix(32)
+    return m.T @ c @ m
+
+
+def _amp_16bit(rank: int) -> float:
+    # amplitudes rise with slot order, one unit apart: 16-bit samples
+    # keep quantization noise 256x below that spacing
+    return 10.0 + rank
+
+
+def _amp_8bit(rank: int) -> float:
+    # the (24, 56) pair whose clip-free, bit-exact 8-bit margin (and
+    # unit-quant JPEG roundtrip) tests/test_jpeg.py proves for every
+    # (a, b): the weakest slot IS the median
+    return 24.0 if rank == 0 else 56.0
+
+
 def _phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Deterministic 16-bit grayscale PNGs whose pHash is ANALYTIC:
     # each image is the inverse-DCT of a sparse coefficient grid —
@@ -2768,56 +2837,20 @@ def _phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the weakest, so DuckDB predicts all 63 bits without decoding a
     # byte; 16-bit samples keep quantization noise 256× below the
     # amplitude spacing (the margin that makes the bits exact).
-    # Group-hash repartition before the kernel (r12, guide §2.5 input
-    # skew): the sf-dir documents land in ONE input split, which would
-    # serialize every PNG encode + the downstream phash decode on one
-    # core — one tiny exchange of longs buys 32-way codec parallelism
-    # while keeping each group's encode-cache hits task-local (the
-    # same shape `_webp_phash_media` has had since r11).
-    import pandas as pd
+    def png(d, cache):
+        g = d - d % 7
+        if g not in cache:
+            import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 7,
-        )
-    )
+            from atlas_upscaling_dask_spark.sources.png import encode_png
 
-    def make_png(batches):
-        import numpy as np
-
-        from atlas_upscaling_dask_spark.extensions.multimodal import _dct_matrix
-        from atlas_upscaling_dask_spark.sources.png import encode_png
-
-        m = _dct_matrix(32)
-        cache: dict[int, bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                g = int(did) - int(did) % 7
-                if g not in cache:
-                    a = _PHASH_AS[g % 10]
-                    b = (g // 10) % 63
-                    slots = sorted(
-                        s for s in range(1, 64) if (s * a + b) % 63 < 32
-                    )
-                    c = np.zeros((32, 32))
-                    c[0, 0] = 128.0 * 32
-                    for rank, s in enumerate(slots):
-                        u, v = divmod(s, 8)
-                        c[u, v] = 10.0 + rank
-                    img = m.T @ c @ m
-                    cache[g] = encode_png(
-                        np.round(img * 256).astype(np.uint16)
-                    )
-                payloads.append(cache[g])
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
+            img = _slot_dct_image(
+                _PHASH_AS[g % 10], (g // 10) % 63, _amp_16bit
             )
+            cache[g] = (encode_png(np.round(img * 256).astype(np.uint16)),)
+        return cache[g]
 
-    return docs.mapInPandas(make_png, schema="media_id long, payload binary")
+    return _doc_fixture(spark, sf_dir, 7, "payload binary", png)
 
 
 _PHASH_HASHES_CTE = """
@@ -2946,52 +2979,21 @@ def _phash_media_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the median pins to the weakest with ≥12 coefficient units of
     # headroom over the measured unit-quant noise (std ~0.4) —
     # tests/test_jpeg.py proves the hash EXACT for all 630 patterns.
-    import pandas as pd
+    def jpeg(d, cache):
+        g = d - d % 7
+        if g not in cache:
+            import numpy as np
 
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 7,
-        )
-    )
+            from atlas_upscaling_dask_spark.sources.jpeg import encode_jpeg
 
-    def make_jpeg(batches):
-        import numpy as np
-
-        from atlas_upscaling_dask_spark.extensions.multimodal import _dct_matrix
-        from atlas_upscaling_dask_spark.sources.jpeg import encode_jpeg
-
-        m = _dct_matrix(32)
-        ones = (np.ones((8, 8), np.int64), np.ones((8, 8), np.int64))
-        cache: dict[int, bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                g = int(did) - int(did) % 7
-                if g not in cache:
-                    a = _PHASH_AS[g % 10]
-                    b = (g // 10) % 63
-                    slots = sorted(
-                        s for s in range(1, 64) if (s * a + b) % 63 < 32
-                    )
-                    c = np.zeros((32, 32))
-                    c[0, 0] = 128.0 * 32
-                    for rank, s in enumerate(slots):
-                        u, v = divmod(s, 8)
-                        c[u, v] = 24.0 if rank == 0 else 56.0
-                    img = np.round(m.T @ c @ m).astype(np.uint8)
-                    cache[g] = encode_jpeg(img, quant_tables=ones)
-                payloads.append(cache[g])
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
+            img = _slot_dct_image(_PHASH_AS[g % 10], (g // 10) % 63, _amp_8bit)
+            ones = (np.ones((8, 8), np.int64), np.ones((8, 8), np.int64))
+            cache[g] = (
+                encode_jpeg(np.round(img).astype(np.uint8), quant_tables=ones),
             )
+        return cache[g]
 
-    return docs.mapInPandas(make_jpeg, schema="media_id long, payload binary")
+    return _doc_fixture(spark, sf_dir, 7, "payload binary", jpeg)
 
 
 def _image_phash_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3017,29 +3019,13 @@ SELECT doc_id AS media_id, phash FROM hs
 )
 
 
-def _jpeg_decode_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Bit-exact JPEG decode proof for the driver gate: per doc, a 16×16
-    # grayscale JPEG of four BLOCK-CONSTANT 8×8 tiles (DC-only blocks
-    # with q00 = 8 decode losslessly: sample = DC_quantized + 128,
-    # T.81 A.3.3), encoded with restart_interval=1 so every image
-    # exercises RST segmentation and predictor resets.  The query
-    # decodes and reads back one pixel per tile — the oracle predicts
+def _jpeg_blocks(spark: SparkSession, sf_dir: str, **encode_kw) -> DataFrame:
+    # Per doc, a 16×16 grayscale JPEG of four BLOCK-CONSTANT 8×8 tiles
+    # (DC-only blocks with q00 = 8 decode losslessly: sample =
+    # DC_quantized + 128, T.81 A.3.3), encoded with ``encode_kw``,
+    # decoded, and read back one pixel per tile — the oracle predicts
     # all four values from the doc_id rule without touching a byte.
-    import pandas as pd
-
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def kernel(batches):
+    def tiles(d, cache):
         import numpy as np
 
         from atlas_upscaling_dask_spark.sources.jpeg import (
@@ -3047,41 +3033,25 @@ def _jpeg_decode_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_jpeg,
         )
 
+        vals = np.array(
+            [[d % 256, (d * 7 + 13) % 256], [255 - d % 256, (d // 3) % 256]],
+            dtype=np.uint8,
+        )
+        img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
         q8 = (np.full((8, 8), 8, np.int64), np.full((8, 8), 8, np.int64))
-        for pdf in batches:
-            rows = {"media_id": [], "v00": [], "v01": [], "v10": [], "v11": []}
-            for did in pdf["doc_id"]:
-                d = int(did)
-                vals = np.array(
-                    [
-                        [d % 256, (d * 7 + 13) % 256],
-                        [255 - d % 256, (d // 3) % 256],
-                    ],
-                    dtype=np.uint8,
-                )
-                img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                dec = decode_jpeg(
-                    encode_jpeg(img, quant_tables=q8, restart_interval=1)
-                )
-                rows["media_id"].append(d)
-                rows["v00"].append(int(dec[0, 0]))
-                rows["v01"].append(int(dec[0, 8]))
-                rows["v10"].append(int(dec[8, 0]))
-                rows["v11"].append(int(dec[8, 8]))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(rows["media_id"], dtype="int64"),
-                    "v00": pd.array(rows["v00"], dtype="int32"),
-                    "v01": pd.array(rows["v01"], dtype="int32"),
-                    "v10": pd.array(rows["v10"], dtype="int32"),
-                    "v11": pd.array(rows["v11"], dtype="int32"),
-                }
-            )
+        dec = decode_jpeg(encode_jpeg(img, quant_tables=q8, **encode_kw))
+        return (int(dec[0, 0]), int(dec[0, 8]), int(dec[8, 0]), int(dec[8, 8]))
 
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id long, v00 int, v01 int, v10 int, v11 int",
+    return _doc_fixture(
+        spark, sf_dir, 5, "v00 int, v01 int, v10 int, v11 int", tiles
     )
+
+
+def _jpeg_decode_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Bit-exact JPEG decode proof for the driver gate: the block-
+    # constant tiles of `_jpeg_blocks`, encoded with restart_interval=1
+    # so every image exercises RST segmentation and predictor resets.
+    return _jpeg_blocks(spark, sf_dir, restart_interval=1)
 
 
 _JPEG_BLOCKS_SQL = """
@@ -3110,63 +3080,7 @@ def _jpeg_decode_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs — T.81 Annex G).  Progressive reorganizes the identical
     # quantized coefficients, so the decode is equally LOSSLESS and the
     # SAME closed-form oracle predicts every pixel.
-    import pandas as pd
-
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def kernel(batches):
-        import numpy as np
-
-        from atlas_upscaling_dask_spark.sources.jpeg import (
-            decode_jpeg,
-            encode_jpeg,
-        )
-
-        q8 = (np.full((8, 8), 8, np.int64), np.full((8, 8), 8, np.int64))
-        for pdf in batches:
-            rows = {"media_id": [], "v00": [], "v01": [], "v10": [], "v11": []}
-            for did in pdf["doc_id"]:
-                d = int(did)
-                vals = np.array(
-                    [
-                        [d % 256, (d * 7 + 13) % 256],
-                        [255 - d % 256, (d // 3) % 256],
-                    ],
-                    dtype=np.uint8,
-                )
-                img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                dec = decode_jpeg(
-                    encode_jpeg(img, quant_tables=q8, progressive=True)
-                )
-                rows["media_id"].append(d)
-                rows["v00"].append(int(dec[0, 0]))
-                rows["v01"].append(int(dec[0, 8]))
-                rows["v10"].append(int(dec[8, 0]))
-                rows["v11"].append(int(dec[8, 8]))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(rows["media_id"], dtype="int64"),
-                    "v00": pd.array(rows["v00"], dtype="int32"),
-                    "v01": pd.array(rows["v01"], dtype="int32"),
-                    "v10": pd.array(rows["v10"], dtype="int32"),
-                    "v11": pd.array(rows["v11"], dtype="int32"),
-                }
-            )
-
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id long, v00 int, v01 int, v10 int, v11 int",
-    )
+    return _jpeg_blocks(spark, sf_dir, progressive=True)
 
 
 _register(
@@ -3184,21 +3098,7 @@ def _jpeg_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_components) from the MARKER WALK alone (parse_jpeg_info — no
     # entropy decode), the planning-side op a 100 TB image-corpus
     # profile runs before deciding what to decode.
-    import pandas as pd
-
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def kernel(batches):
+    def dims(d, cache):
         import numpy as np
 
         from atlas_upscaling_dask_spark.sources.jpeg import (
@@ -3206,34 +3106,17 @@ def _jpeg_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
             parse_jpeg_info,
         )
 
-        cache: dict[tuple, bytes] = {}
-        for pdf in batches:
-            out = {"media_id": [], "width": [], "height": [], "n_components": []}
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 8 + d % 40, 8 + (d * 3) % 56
-                color = d % 2 == 1
-                key = (w, h, color)
-                if key not in cache:
-                    img = np.zeros((h, w, 3) if color else (h, w), np.uint8)
-                    cache[key] = encode_jpeg(img, quality=50)
-                info = parse_jpeg_info(cache[key])
-                out["media_id"].append(d)
-                out["width"].append(info["width"])
-                out["height"].append(info["height"])
-                out["n_components"].append(info["n_components"])
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(out["media_id"], dtype="int64"),
-                    "width": pd.array(out["width"], dtype="int32"),
-                    "height": pd.array(out["height"], dtype="int32"),
-                    "n_components": pd.array(out["n_components"], dtype="int32"),
-                }
-            )
+        w, h = 8 + d % 40, 8 + (d * 3) % 56
+        color = d % 2 == 1
+        key = (w, h, color)
+        if key not in cache:
+            img = np.zeros((h, w, 3) if color else (h, w), np.uint8)
+            cache[key] = encode_jpeg(img, quality=50)
+        info = parse_jpeg_info(cache[key])
+        return (info["width"], info["height"], info["n_components"])
 
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id long, width int, height int, n_components int",
+    return _doc_fixture(
+        spark, sf_dir, 5, "width int, height int, n_components int", dims
     )
 
 
@@ -3261,51 +3144,19 @@ def _gif_phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JPEG tests prove over every (a, b); the weakest slot (rank 0,
     # amplitude 24) IS the median, so the hash drops exactly that bit
     # — the same formula `_PHASH_HASHES_CTE` computes.
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so GIF LZW encode/decode runs on every core, groups staying
-    # task-local for the encode cache (see `_phash_media`).
-    import pandas as pd
+    def gif(d, cache):
+        g = d - d % 7
+        if g not in cache:
+            import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 7,
-        )
-    )
+            from atlas_upscaling_dask_spark.sources.gif import encode_gif
 
-    def make_gif(batches):
-        import numpy as np
+            img = _slot_dct_image(_PHASH_AS[g % 10], (g // 10) % 63, _amp_8bit)
+            u8 = np.round(img).astype(np.uint8)
+            cache[g] = (encode_gif(np.repeat(u8[..., None], 3, axis=2)),)
+        return cache[g]
 
-        from atlas_upscaling_dask_spark.extensions.multimodal import _dct_matrix
-        from atlas_upscaling_dask_spark.sources.gif import encode_gif
-
-        m = _dct_matrix(32)
-        cache: dict[int, bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                g = int(did) - int(did) % 7
-                if g not in cache:
-                    a = _PHASH_AS[g % 10]
-                    b = (g // 10) % 63
-                    slots = sorted(
-                        s for s in range(1, 64) if (s * a + b) % 63 < 32
-                    )
-                    c = np.zeros((32, 32))
-                    c[0, 0] = 128.0 * 32
-                    for rank, s in enumerate(slots):
-                        u, v = divmod(s, 8)
-                        c[u, v] = 24.0 if rank == 0 else 56.0
-                    u8 = np.round(m.T @ c @ m).astype(np.uint8)
-                    cache[g] = encode_gif(np.repeat(u8[..., None], 3, axis=2))
-                payloads.append(cache[g])
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(make_gif, schema="media_id long, payload binary")
+    return _doc_fixture(spark, sf_dir, 7, "payload binary", gif)
 
 
 def _gif_phash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3337,53 +3188,22 @@ def _webp_phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DCT construction with the proven (24, 56) amplitude pair,
     # encoded as REAL VP8L lossless bitstreams (subtract-green
     # transform on, so the full transform + prefix-code decode path
-    # runs, not just the literal fast case).  The doc_id frame is
-    # repartitioned BY GROUP before the kernel: sf-dir documents land
-    # in one input split, which would serialize the per-symbol VP8L
-    # work on one core — group-hash partitioning spreads it 32-way
-    # while keeping each group's encode-cache hits local (one tiny
-    # exchange of longs buys parallel codec work; the distributed
-    # shape a real media corpus has for free).
-    import pandas as pd
+    # runs, not just the literal fast case).
+    def webp(d, cache):
+        g = d - d % 7
+        if g not in cache:
+            import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32, F.col("doc_id") - F.col("doc_id") % 7)
-    )
-
-    def make_webp(batches):
-        import numpy as np
-
-        from atlas_upscaling_dask_spark.extensions.multimodal import _dct_matrix
-        from atlas_upscaling_dask_spark.sources.webp import (
-            encode_webp_lossless,
-        )
-
-        m = _dct_matrix(32)
-        cache: dict[int, bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                g = int(did) - int(did) % 7
-                if g not in cache:
-                    a = _PHASH_AS[g % 10]
-                    b = (g // 10) % 63
-                    slots = sorted(
-                        s for s in range(1, 64) if (s * a + b) % 63 < 32
-                    )
-                    c = np.zeros((32, 32))
-                    c[0, 0] = 128.0 * 32
-                    for rank, s in enumerate(slots):
-                        c[divmod(s, 8)] = 24.0 if rank == 0 else 56.0
-                    u8 = np.round(m.T @ c @ m).astype(np.uint8)
-                    cache[g] = encode_webp_lossless(u8, subtract_green=True)
-                payloads.append(cache[g])
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
+            from atlas_upscaling_dask_spark.sources.webp import (
+                encode_webp_lossless,
             )
 
-    return docs.mapInPandas(make_webp, schema="media_id long, payload binary")
+            img = _slot_dct_image(_PHASH_AS[g % 10], (g // 10) % 63, _amp_8bit)
+            u8 = np.round(img).astype(np.uint8)
+            cache[g] = (encode_webp_lossless(u8, subtract_green=True),)
+        return cache[g]
+
+    return _doc_fixture(spark, sf_dir, 7, "payload binary", webp)
 
 
 def _image_phash_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3417,46 +3237,27 @@ def _webp_anim_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # color 5 + (7g + 13f) % 120 over a 10x12 canvas (replace, no
     # dispose, white background, loop 2) — every composited frame is a
     # known constant raster, the same analytic truth as the GIF clip
-    # fixture.  Same partition-from-work shape as `_webp_phash_media`:
-    # the sf-dir documents table is one input split, so without the
-    # group-hash repartition every ANMF encode would serialize on one
-    # core (the exact 15.6 s lesson `image_phash_webp` paid for).
-    import pandas as pd
+    # fixture.
+    def webp(d, cache):
+        g = d - d % 5
+        if g not in cache:
+            import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32, F.col("doc_id") - F.col("doc_id") % 5)
-    )
-
-    def make_webp(batches):
-        import numpy as np
-
-        from atlas_upscaling_dask_spark.sources.webp import (
-            encode_webp_animated,
-        )
-
-        cache: dict[int, bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                g = int(did) - int(did) % 5
-                if g not in cache:
-                    colors = [5 + (7 * g + 13 * f) % 120 for f in range(4)]
-                    frames = [
-                        np.full((10, 12, 3), c, np.uint8) for c in colors
-                    ]
-                    cache[g] = encode_webp_animated(
-                        frames,
-                        durations_ms=[100 * (f + 1) for f in range(4)],
-                        loop=2,
-                    )
-                payloads.append(cache[g])
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
+            from atlas_upscaling_dask_spark.sources.webp import (
+                encode_webp_animated,
             )
 
-    return docs.mapInPandas(make_webp, schema="media_id long, payload binary")
+            colors = [5 + (7 * g + 13 * f) % 120 for f in range(4)]
+            cache[g] = (
+                encode_webp_animated(
+                    [np.full((10, 12, 3), c, np.uint8) for c in colors],
+                    durations_ms=[100 * (f + 1) for f in range(4)],
+                    loop=2,
+                ),
+            )
+        return cache[g]
+
+    return _doc_fixture(spark, sf_dir, 5, "payload binary", webp)
 
 
 def _webp_anim_frame_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3507,39 +3308,23 @@ def _webp_lossy_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the decoded raster is EXACT by construction (sources/vp8.py
     # encode_vp8_gray_blocks: B_DC_PRED chain + DC-only residuals at
     # qindex 0 reconstruct with zero error), so any pixel digest is
-    # analytic.  Group-hash repartition from the one-split documents
-    # table (the partition-from-work lesson, SCALE.md round 10).
-    import pandas as pd
+    # analytic.
+    def webp(d, cache):
+        g = d - d % 5
+        if g not in cache:
+            import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32, F.col("doc_id") - F.col("doc_id") % 5)
-    )
-
-    def make_webp(batches):
-        import numpy as np
-
-        from atlas_upscaling_dask_spark.sources.webp import (
-            encode_webp_lossy_gray_blocks,
-        )
-
-        cache: dict[int, bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                g = int(did) - int(did) % 5
-                if g not in cache:
-                    bi = np.arange(8).reshape(8, 1)
-                    bj = np.arange(8).reshape(1, 8)
-                    bv = 5 + (7 * g + 17 * bi + 29 * bj) % 200
-                    cache[g] = encode_webp_lossy_gray_blocks(bv)
-                payloads.append(cache[g])
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
+            from atlas_upscaling_dask_spark.sources.webp import (
+                encode_webp_lossy_gray_blocks,
             )
 
-    return docs.mapInPandas(make_webp, schema="media_id long, payload binary")
+            bi = np.arange(8).reshape(8, 1)
+            bj = np.arange(8).reshape(1, 8)
+            bv = 5 + (7 * g + 17 * bi + 29 * bj) % 200
+            cache[g] = (encode_webp_lossy_gray_blocks(bv),)
+        return cache[g]
+
+    return _doc_fixture(spark, sf_dir, 5, "payload binary", webp)
 
 
 def _webp_lossy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3606,57 +3391,33 @@ def _webp_lossy_alpha_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # under the GRADIENT filter, the color plane is the same analytic
     # VP8 keyframe as webp_lossy_decode; alpha A(g,x,y) =
     # (11g + 3x + 5y) % 256.  Both planes digest analytically.
-    import pandas as pd
+    def digests(d, cache):
+        g = d - d % 5
+        if g not in cache:
+            import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32, F.col("doc_id") - F.col("doc_id") % 5)
-    )
-
-    def kernel(batches):
-        import numpy as np
-
-        from atlas_upscaling_dask_spark.sources.webp import (
-            decode_webp_rgba,
-            encode_webp_lossy_alpha,
-        )
-
-        x = np.arange(32).reshape(1, 32)
-        yy = np.arange(32).reshape(32, 1)
-        wgt_y = 1 + (7 * x + 13 * yy) % 31
-        wgt_a = 1 + (5 * x + 11 * yy) % 29
-        bi = np.arange(8).reshape(8, 1)
-        bj = np.arange(8).reshape(1, 8)
-        cache: dict[int, tuple[int, int]] = {}
-        for pdf in batches:
-            ys, als = [], []
-            for did in pdf["doc_id"]:
-                g = int(did) - int(did) % 5
-                if g not in cache:
-                    bv = 5 + (7 * g + 17 * bi + 29 * bj) % 200
-                    alpha = ((11 * g + 3 * x + 5 * yy) % 256).astype(
-                        np.uint8
-                    )
-                    data = encode_webp_lossy_alpha(bv, alpha, filtering=3)
-                    rgba = decode_webp_rgba(data)
-                    cache[g] = (
-                        int((rgba[:, :, 0].astype(np.int64) * wgt_y).sum()),
-                        int((rgba[:, :, 3].astype(np.int64) * wgt_a).sum()),
-                    )
-                ys.append(cache[g][0])
-                als.append(cache[g][1])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "y_checksum": pd.array(ys, dtype="int64"),
-                    "alpha_checksum": pd.array(als, dtype="int64"),
-                }
+            from atlas_upscaling_dask_spark.sources.webp import (
+                decode_webp_rgba,
+                encode_webp_lossy_alpha,
             )
 
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id long, y_checksum long, alpha_checksum long",
+            x = np.arange(32).reshape(1, 32)
+            yy = np.arange(32).reshape(32, 1)
+            bi = np.arange(8).reshape(8, 1)
+            bj = np.arange(8).reshape(1, 8)
+            bv = 5 + (7 * g + 17 * bi + 29 * bj) % 200
+            alpha = ((11 * g + 3 * x + 5 * yy) % 256).astype(np.uint8)
+            rgba = decode_webp_rgba(
+                encode_webp_lossy_alpha(bv, alpha, filtering=3)
+            ).astype(np.int64)
+            cache[g] = (
+                int((rgba[:, :, 0] * (1 + (7 * x + 13 * yy) % 31)).sum()),
+                int((rgba[:, :, 3] * (1 + (5 * x + 11 * yy) % 29)).sum()),
+            )
+        return cache[g]
+
+    return _doc_fixture(
+        spark, sf_dir, 5, "y_checksum long, alpha_checksum long", digests
     )
 
 
@@ -3691,47 +3452,25 @@ def _gif_anim_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canvas (disposal "keep", delay 10(f+1) cs, loop 3) — every
     # composited frame is a known constant raster, so digests, sizes
     # and header fields are all analytic.
-    import pandas as pd
+    def gif(d, cache):
+        g = d - d % 5
+        if g not in cache:
+            import numpy as np
 
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
+            from atlas_upscaling_dask_spark.sources.gif import encode_gif
 
-    def make_gif(batches):
-        import numpy as np
-
-        from atlas_upscaling_dask_spark.sources.gif import encode_gif
-
-        cache: dict[int, bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                g = int(did) - int(did) % 5
-                if g not in cache:
-                    colors = [5 + (7 * g + 13 * f) % 120 for f in range(4)]
-                    frames = [
-                        np.full((10, 12, 3), c, np.uint8) for c in colors
-                    ]
-                    cache[g] = encode_gif(
-                        frames,
-                        disposals=[1] * 4,
-                        delays_cs=[10 * (f + 1) for f in range(4)],
-                        loop=3,
-                    )
-                payloads.append(cache[g])
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
+            colors = [5 + (7 * g + 13 * f) % 120 for f in range(4)]
+            cache[g] = (
+                encode_gif(
+                    [np.full((10, 12, 3), c, np.uint8) for c in colors],
+                    disposals=[1] * 4,
+                    delays_cs=[10 * (f + 1) for f in range(4)],
+                    loop=3,
+                ),
             )
+        return cache[g]
 
-    return docs.mapInPandas(make_gif, schema="media_id long, payload binary")
+    return _doc_fixture(spark, sf_dir, 5, "payload binary", gif)
 
 
 def _gif_anim_frame_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3848,44 +3587,23 @@ def _afp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 5-doc group id: the spectral fingerprint is ANALYTIC (bin i =
     # 256 / period of digit i), groups of 5 docs share a clip (planted
     # duplicates), float64 WAV encoding makes the roundtrip lossless.
-    import pandas as pd
+    def wav(d, cache):
+        g = d - d % 5
+        if g not in cache:
+            import numpy as np
 
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
+            from atlas_upscaling_dask_spark.sources.wav import encode_wav
 
-    def make_wav(batches):
-        import numpy as np
+            a = ((g % 7) + 1) / 10.0
+            j = np.arange(256)
+            segs = []
+            for i in range(9):
+                p = _AFP_PERIODS[(g // _AFP_POW6[i]) % 6]
+                segs.append(np.where((j % p) < p // 2, a, -a))
+            cache[g] = (encode_wav(np.concatenate(segs), 8000),)
+        return cache[g]
 
-        from atlas_upscaling_dask_spark.sources.wav import encode_wav
-
-        j = np.arange(256)
-        cache: dict[int, bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                g = int(did) - int(did) % 5
-                if g not in cache:
-                    a = ((g % 7) + 1) / 10.0
-                    segs = []
-                    for i in range(9):
-                        p = _AFP_PERIODS[(g // _AFP_POW6[i]) % 6]
-                        segs.append(np.where((j % p) < p // 2, a, -a))
-                    cache[g] = encode_wav(np.concatenate(segs), 8000)
-                payloads.append(cache[g])
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(make_wav, schema="media_id long, payload binary")
+    return _doc_fixture(spark, sf_dir, 5, "payload binary", wav)
 
 
 _AFP_HASHES_CTE = """
@@ -3962,62 +3680,22 @@ def _video_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DCT-sparse construction of `_phash_media` with parameters
     # (a, b) = (AS[(g+f) % 10], (g//10 + 3f) % 63) — every frame hash
     # is analytic, groups of 5 docs share a clip.
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so TIFF encode/decode runs on every core (see `_phash_media`).
-    import pandas as pd
+    def tiff(d, cache):
+        g = d - d % 5
+        if g not in cache:
+            import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
+            frames = [
+                _slot_dct_image(
+                    _PHASH_AS[(g + f) % 10], (g // 10 + 3 * f) % 63, _amp_16bit
+                )
+                for f in range(4)
+            ]
+            stack = np.round(np.stack(frames) * 256).astype(np.uint16)
+            cache[g] = (_tiff_bytes(stack),)
+        return cache[g]
 
-    def make_tiff(batches):
-        import os
-        import tempfile
-
-        import numpy as np
-
-        from atlas_upscaling_dask_spark.extensions.multimodal import _dct_matrix
-        from atlas_upscaling_dask_spark.sources import tiff as tiffmod
-
-        m = _dct_matrix(32)
-        cache: dict[int, bytes] = {}
-        tmpdir = tempfile.mkdtemp(prefix="vidsynth_")
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                g = int(did) - int(did) % 5
-                if g not in cache:
-                    frames = []
-                    for f in range(4):
-                        a = _PHASH_AS[(g + f) % 10]
-                        b = (g // 10 + 3 * f) % 63
-                        slots = sorted(
-                            s for s in range(1, 64) if (s * a + b) % 63 < 32
-                        )
-                        c = np.zeros((32, 32))
-                        c[0, 0] = 128.0 * 32
-                        for rank, sl in enumerate(slots):
-                            u, v = divmod(sl, 8)
-                            c[u, v] = 10.0 + rank
-                        frames.append(
-                            np.round((m.T @ c @ m) * 256).astype(np.uint16)
-                        )
-                    path = os.path.join(tmpdir, f"g{g}.tif")
-                    tiffmod.write_tiff(path, np.stack(frames))
-                    with open(path, "rb") as fh:
-                        cache[g] = fh.read()
-                    os.unlink(path)
-                payloads.append(cache[g])
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(make_tiff, schema="media_id long, payload binary")
+    return _doc_fixture(spark, sf_dir, 5, "payload binary", tiff)
 
 
 _VIDEO_HASHES_CTE = """
@@ -4100,57 +3778,26 @@ def _avi_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DCT-sparse modular-slot construction of `_video_media` at 8 bits
     # with the (24, 56) amplitude pair whose unit-quant JPEG roundtrip
     # the JPEG tests prove bit-exact — every frame hash stays analytic.
-    import pandas as pd
+    def avi(d, cache):
+        g = d - d % 5
+        if g not in cache:
+            import numpy as np
 
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
+            from atlas_upscaling_dask_spark.sources.avi import encode_avi
+            from atlas_upscaling_dask_spark.sources.jpeg import encode_jpeg
 
-    def make_avi(batches):
-        import numpy as np
+            ones = (np.ones((8, 8), np.int64), np.ones((8, 8), np.int64))
+            jpegs = []
+            for f in range(4):
+                img = _slot_dct_image(
+                    _PHASH_AS[(g + f) % 10], (g // 10 + 3 * f) % 63, _amp_8bit
+                )
+                u8 = np.round(img).astype(np.uint8)
+                jpegs.append(encode_jpeg(u8, quant_tables=ones))
+            cache[g] = (encode_avi(jpegs, width=32, height=32, fps_rate=30),)
+        return cache[g]
 
-        from atlas_upscaling_dask_spark.extensions.multimodal import _dct_matrix
-        from atlas_upscaling_dask_spark.sources.avi import encode_avi
-        from atlas_upscaling_dask_spark.sources.jpeg import encode_jpeg
-
-        ones = (np.ones((8, 8), np.int64), np.ones((8, 8), np.int64))
-        m = _dct_matrix(32)
-        cache: dict[int, bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                g = int(did) - int(did) % 5
-                if g not in cache:
-                    jpegs = []
-                    for f in range(4):
-                        a = _PHASH_AS[(g + f) % 10]
-                        b = (g // 10 + 3 * f) % 63
-                        slots = sorted(
-                            s for s in range(1, 64) if (s * a + b) % 63 < 32
-                        )
-                        c = np.zeros((32, 32))
-                        c[0, 0] = 128.0 * 32
-                        for rank, sl in enumerate(slots):
-                            u, v = divmod(sl, 8)
-                            c[u, v] = 24.0 if rank == 0 else 56.0
-                        u8 = np.round(m.T @ c @ m).astype(np.uint8)
-                        jpegs.append(encode_jpeg(u8, quant_tables=ones))
-                    cache[g] = encode_avi(jpegs, width=32, height=32,
-                                          fps_rate=30)
-                payloads.append(cache[g])
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(make_avi, schema="media_id long, payload binary")
+    return _doc_fixture(spark, sf_dir, 5, "payload binary", avi)
 
 
 def _avi_frame_hashes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4243,75 +3890,39 @@ def _mp4_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are worth handing to a decoder; every field analytic from doc_id.
     # Decode itself stays a contract NotImplementedError (entropy
     # codecs need a media library).
-    import pandas as pd
-
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def kernel(batches):
+    def census(d, cache):
         from atlas_upscaling_dask_spark.sources.mp4 import (
             encode_mp4_stub,
             parse_mp4_info,
         )
 
-        cache: dict[tuple, bytes] = {}
-        for pdf in batches:
-            rows = {
-                "media_id": [], "duration_s": [], "n_tracks": [],
-                "video_codec": [], "width": [], "height": [], "fps": [],
-                "channels": [], "sample_rate": [],
-            }
-            for did in pdf["doc_id"]:
-                d = int(did)
-                key = (
-                    16 * (1 + d % 20), 16 * (1 + d % 12), 1 + d % 10,
-                    12 + d % 5, d % 2 == 0, 8000 * (1 + d % 6), 1 + d % 2,
-                )
-                if key not in cache:
-                    w, h, dur, fps, aud, sr, ch = key
-                    cache[key] = encode_mp4_stub(
-                        width=w, height=h, duration_s=float(dur),
-                        n_video_samples=dur * fps, audio=aud,
-                        sample_rate=sr, channels=ch,
-                    )
-                info = parse_mp4_info(cache[key])
-                rows["media_id"].append(d)
-                rows["duration_s"].append(info["duration_s"])
-                rows["n_tracks"].append(info["n_tracks"])
-                rows["video_codec"].append(info["video_codec"])
-                rows["width"].append(info["width"])
-                rows["height"].append(info["height"])
-                rows["fps"].append(info["fps"])
-                rows["channels"].append(info["channels"])
-                rows["sample_rate"].append(info["sample_rate"])
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(rows["media_id"], dtype="int64"),
-                    "duration_s": pd.array(rows["duration_s"], dtype="float64"),
-                    "n_tracks": pd.array(rows["n_tracks"], dtype="int32"),
-                    "video_codec": rows["video_codec"],
-                    "width": pd.array(rows["width"], dtype="int32"),
-                    "height": pd.array(rows["height"], dtype="int32"),
-                    "fps": pd.array(rows["fps"], dtype="float64"),
-                    "channels": pd.array(rows["channels"], dtype="Int32"),
-                    "sample_rate": pd.array(rows["sample_rate"], dtype="Int32"),
-                }
+        key = (
+            16 * (1 + d % 20), 16 * (1 + d % 12), 1 + d % 10,
+            12 + d % 5, d % 2 == 0, 8000 * (1 + d % 6), 1 + d % 2,
+        )
+        if key not in cache:
+            w, h, dur, fps, aud, sr, ch = key
+            cache[key] = encode_mp4_stub(
+                width=w, height=h, duration_s=float(dur),
+                n_video_samples=dur * fps, audio=aud,
+                sample_rate=sr, channels=ch,
             )
+        info = parse_mp4_info(cache[key])
+        return tuple(
+            info[c]
+            for c in (
+                "duration_s", "n_tracks", "video_codec", "width", "height",
+                "fps", "channels", "sample_rate",
+            )
+        )
 
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id long, duration_s double, n_tracks int, "
-        "video_codec string, width int, height int, fps double, "
-        "channels int, sample_rate int",
+    return _doc_fixture(
+        spark,
+        sf_dir,
+        5,
+        "duration_s double, n_tracks int, video_codec string, width int, "
+        "height int, fps double, channels int, sample_rate int",
+        census,
     )
 
 
@@ -4733,50 +4344,27 @@ def _warc_recrawl_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (caching headers + WARC-Date) → RFC 9111 recrawl times.  Fetch
     # time comes from the record's own WARC-Date (ISO 8601), headers
     # rotate max-age / stale-Expires / bare.
-    import pandas as pd
-
     from .extensions.crawl import recrawl_schedule
     from .sources.warc import warc_records
 
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def make_warc(batches):
+    def warc(d, cache):
         from atlas_upscaling_dask_spark.sources.warc import encode_warc
 
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                hh = {}
-                if d % 3 == 0:
-                    hh["Cache-Control"] = f"max-age={30 * (d % 8 + 1)}"
-                elif d % 3 == 1:
-                    hh["Expires"] = "Wed, 01 Jan 2020 00:00:00 GMT"  # stale
-                records = [
-                    {"type": "response", "uri": f"http://s.com/{d}",
-                     "status": 200, "payload": b"<p>x</p>",
-                     # seconds rotate so fetch_ts is per-doc analytic
-                     "date": f"2026-02-01T00:{d % 60:02d}:{d % 30:02d}Z",
-                     "http_headers": hh},
-                ]
-                payloads.append(encode_warc(records))
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
+        hh = {}
+        if d % 3 == 0:
+            hh["Cache-Control"] = f"max-age={30 * (d % 8 + 1)}"
+        elif d % 3 == 1:
+            hh["Expires"] = "Wed, 01 Jan 2020 00:00:00 GMT"  # stale
+        records = [
+            {"type": "response", "uri": f"http://s.com/{d}",
+             "status": 200, "payload": b"<p>x</p>",
+             # seconds rotate so fetch_ts is per-doc analytic
+             "date": f"2026-02-01T00:{d % 60:02d}:{d % 30:02d}Z",
+             "http_headers": hh},
+        ]
+        return (encode_warc(records),)
 
-    media = docs.mapInPandas(
-        make_warc, schema="media_id long, payload binary"
-    )
+    media = _doc_fixture(spark, sf_dir, 5, "payload binary", warc)
     recs = warc_records(media).filter(F.col("http_status") == 200)
     recs = recs.withColumn(
         "fetch_ts",
@@ -5254,50 +4842,32 @@ def _pdf_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is a CID / Type0 Identity-H fixture: 2-byte hex show-strings
     # decoded through a /ToUnicode CMap (ISO 32000 §9.10.3) — the same
     # page text must extract EXACTLY, proving the CMap path, while the
-    # census flags the font class.  Group-hash repartition from the
-    # one-split documents table (partition-from-work).
-    import pandas as pd
+    # census flags the font class.
+    def pdf(d, cache):
+        g = d - d % 5
+        if g not in cache:
+            from atlas_upscaling_dask_spark.sources.pdf import encode_pdf
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32, F.col("doc_id") - F.col("doc_id") % 5)
-    )
-
-    def make_pdf(batches):
-        from atlas_upscaling_dask_spark.sources.pdf import encode_pdf
-
-        cache: dict[int, bytes] = {}
-        for pdf_batch in batches:
-            payloads = []
-            for did in pdf_batch["doc_id"]:
-                g = int(did) - int(did) % 5
-                if g not in cache:
-                    pages = [
-                        f"p{i} of (doc {g}) \\ end"
-                        for i in range(1 + g % 3)
-                    ]
-                    cache[g] = encode_pdf(
-                        pages,
-                        compress=(g % 10 < 5),
-                        producer=f"gen {g % 7}",
-                        use_tj_array=bool(g % 2),
-                        encrypt=(
-                            None
-                            if g % 35
-                            else ["rc4-40", "rc4-128", "aesv2", "aesv3"][
-                                (g // 35) % 4
-                            ]
-                        ),
-                        use_cid_font=(g % 15 == 5),
-                        use_objstm=(g % 15 == 10 and g % 35 != 0),
-                    )
-                payloads.append(cache[g])
-            yield pd.DataFrame(
-                {"media_id": pdf_batch["doc_id"], "payload": payloads}
+            cache[g] = (
+                encode_pdf(
+                    [f"p{i} of (doc {g}) \\ end" for i in range(1 + g % 3)],
+                    compress=(g % 10 < 5),
+                    producer=f"gen {g % 7}",
+                    use_tj_array=bool(g % 2),
+                    encrypt=(
+                        None
+                        if g % 35
+                        else ["rc4-40", "rc4-128", "aesv2", "aesv3"][
+                            (g // 35) % 4
+                        ]
+                    ),
+                    use_cid_font=(g % 15 == 5),
+                    use_objstm=(g % 15 == 10 and g % 35 != 0),
+                ),
             )
+        return cache[g]
 
-    return docs.mapInPandas(make_pdf, schema="media_id long, payload binary")
+    return _doc_fixture(spark, sf_dir, 5, "payload binary", pdf)
 
 
 def _pdf_info_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5421,30 +4991,11 @@ def _media_census_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE unified header-census pass — magic-byte dispatch to the
     # per-format parse_*_info, zero entropy decode anywhere; every
     # field analytic from doc_id.
-    import pandas as pd
+    from .extensions.multimodal import media_census
 
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def make_media(batches):
-        import os
-        import tempfile
-
+    def media(d, cache):
         import numpy as np
 
-        from atlas_upscaling_dask_spark.extensions.multimodal import (
-            media_census as _,  # noqa: F401 (documents the pairing)
-        )
-        from atlas_upscaling_dask_spark.sources import tiff as tiffmod
         from atlas_upscaling_dask_spark.sources.avi import encode_avi
         from atlas_upscaling_dask_spark.sources.gif import encode_gif
         from atlas_upscaling_dask_spark.sources.jpeg import encode_jpeg
@@ -5456,62 +5007,37 @@ def _media_census_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_webp_lossless,
         )
 
-        tmpdir = tempfile.mkdtemp(prefix="census_")
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 8 + d % 11, 8 + d % 9
-                kind = d % 9
-                if kind == 0:
-                    p = encode_png(np.zeros((h, w), np.uint8))
-                elif kind == 1:
-                    p = encode_jpeg(np.zeros((h, w), np.uint8), quality=50)
-                elif kind == 2:
-                    frames = [
-                        np.zeros((h, w), np.uint8) for _ in range(1 + d % 3)
-                    ]
-                    p = encode_gif(
-                        frames, palette=np.zeros((2, 3), np.uint8)
-                    )
-                elif kind == 3:
-                    path = os.path.join(tmpdir, f"{d}.tif")
-                    tiffmod.write_tiff(
-                        path, np.zeros((2, h, w), np.uint8)
-                    )
-                    with open(path, "rb") as fh:
-                        p = fh.read()
-                    os.unlink(path)
-                elif kind == 4:
-                    p = encode_avi([b"fake-jpeg"] * 3, width=w, height=h)
-                elif kind == 5:
-                    n = 100 + d % 50
-                    p = encode_wav(
-                        np.zeros(n, np.int16), 8000 * (1 + d % 4)
-                    )
-                elif kind == 6:
-                    p = encode_mp4_stub(
-                        width=w, height=h, duration_s=1.0,
-                        n_video_samples=12 * (1 + d % 4),
-                        sample_rate=16000,
-                    )
-                elif kind == 7:
-                    p = encode_webp_lossless(np.zeros((h, w), np.uint8))
-                else:
-                    p = encode_pdf(
-                        ["census page"] * (1 + d % 4), compress=False
-                    )
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
+        w, h = 8 + d % 11, 8 + d % 9
+        kind = d % 9
+        if kind == 0:
+            p = encode_png(np.zeros((h, w), np.uint8))
+        elif kind == 1:
+            p = encode_jpeg(np.zeros((h, w), np.uint8), quality=50)
+        elif kind == 2:
+            frames = [np.zeros((h, w), np.uint8) for _ in range(1 + d % 3)]
+            p = encode_gif(frames, palette=np.zeros((2, 3), np.uint8))
+        elif kind == 3:
+            p = _tiff_bytes(np.zeros((2, h, w), np.uint8))
+        elif kind == 4:
+            p = encode_avi([b"fake-jpeg"] * 3, width=w, height=h)
+        elif kind == 5:
+            n = 100 + d % 50
+            p = encode_wav(np.zeros(n, np.int16), 8000 * (1 + d % 4))
+        elif kind == 6:
+            p = encode_mp4_stub(
+                width=w, height=h, duration_s=1.0,
+                n_video_samples=12 * (1 + d % 4),
+                sample_rate=16000,
             )
+        elif kind == 7:
+            p = encode_webp_lossless(np.zeros((h, w), np.uint8))
+        else:
+            p = encode_pdf(["census page"] * (1 + d % 4), compress=False)
+        return (p,)
 
-    from .extensions.multimodal import media_census
-
-    media = docs.mapInPandas(
-        make_media, schema="media_id long, payload binary"
+    return media_census(
+        _doc_fixture(spark, sf_dir, 5, "payload binary", media)
     )
-    return media_census(media)
 
 
 _register(
@@ -5553,21 +5079,7 @@ def _webp_info_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keyframe header), extended VP8X+ANIM/ANMF with the alpha flag,
     # and extended VP8X-wrapped lossless stills — every field a closed
     # formula on doc_id, zero entropy decode.
-    import pandas as pd
-
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def make_and_parse(batches):
+    def census(d, cache):
         import numpy as np
 
         from atlas_upscaling_dask_spark.sources.webp import (
@@ -5578,68 +5090,45 @@ def _webp_info_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             parse_webp_info,
         )
 
-        cache: dict[tuple, bytes] = {}
-        for pdf in batches:
-            rows = {
-                "media_id": [], "variant": [], "width": [], "height": [],
-                "has_alpha": [], "has_animation": [], "n_frames": [],
-            }
-            for did in pdf["doc_id"]:
-                d = int(did)
-                kind = d % 4
-                if kind == 0:
-                    key = ("l", 5 + d % 9, 4 + d % 7)
-                    if key not in cache:
-                        cache[key] = encode_webp_lossless(
-                            np.zeros((key[2], key[1]), np.uint8)
-                        )
-                elif kind == 1:
-                    key = ("y", 16 + d % 100, 16 + (3 * d) % 50)
-                    if key not in cache:
-                        cache[key] = encode_webp_lossy_stub(key[1], key[2])
-                elif kind == 2:
-                    key = ("x", 10 + d % 20, 8 + d % 10, 1 + d % 6,
-                           (d // 4) % 2)
-                    if key not in cache:
-                        cache[key] = encode_webp_animated_stub(
-                            key[1], key[2], key[3], has_alpha=bool(key[4])
-                        )
-                else:
-                    key = ("xl", 6 + d % 10, 5 + d % 8, (d // 4) % 2)
-                    if key not in cache:
-                        img = np.full(
-                            (key[2], key[1], 4), 200, np.uint8
-                        )
-                        img[:, :, 3] = 255
-                        if key[3]:
-                            img[0, 0, 3] = 0  # transparent px -> alpha
-                        cache[key] = encode_webp_extended_lossless(img)
-                info = parse_webp_info(cache[key])
-                rows["media_id"].append(d)
-                rows["variant"].append(info["variant"])
-                rows["width"].append(info["width"])
-                rows["height"].append(info["height"])
-                rows["has_alpha"].append(int(info["has_alpha"]))
-                rows["has_animation"].append(int(info["has_animation"]))
-                rows["n_frames"].append(info["n_frames"])
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(rows["media_id"], dtype="int64"),
-                    "variant": rows["variant"],
-                    "width": pd.array(rows["width"], dtype="Int32"),
-                    "height": pd.array(rows["height"], dtype="Int32"),
-                    "has_alpha": pd.array(rows["has_alpha"], dtype="Int32"),
-                    "has_animation": pd.array(
-                        rows["has_animation"], dtype="Int32"
-                    ),
-                    "n_frames": pd.array(rows["n_frames"], dtype="Int64"),
-                }
-            )
+        kind = d % 4
+        if kind == 0:
+            key = ("l", 5 + d % 9, 4 + d % 7)
+            if key not in cache:
+                cache[key] = encode_webp_lossless(
+                    np.zeros((key[2], key[1]), np.uint8)
+                )
+        elif kind == 1:
+            key = ("y", 16 + d % 100, 16 + (3 * d) % 50)
+            if key not in cache:
+                cache[key] = encode_webp_lossy_stub(key[1], key[2])
+        elif kind == 2:
+            key = ("x", 10 + d % 20, 8 + d % 10, 1 + d % 6, (d // 4) % 2)
+            if key not in cache:
+                cache[key] = encode_webp_animated_stub(
+                    key[1], key[2], key[3], has_alpha=bool(key[4])
+                )
+        else:
+            key = ("xl", 6 + d % 10, 5 + d % 8, (d // 4) % 2)
+            if key not in cache:
+                img = np.full((key[2], key[1], 4), 200, np.uint8)
+                img[:, :, 3] = 255
+                if key[3]:
+                    img[0, 0, 3] = 0  # transparent px -> alpha
+                cache[key] = encode_webp_extended_lossless(img)
+        info = parse_webp_info(cache[key])
+        return (
+            info["variant"], info["width"], info["height"],
+            int(info["has_alpha"]), int(info["has_animation"]),
+            info["n_frames"],
+        )
 
-    return docs.mapInPandas(
-        make_and_parse,
-        schema="media_id long, variant string, width int, height int, "
-        "has_alpha int, has_animation int, n_frames long",
+    return _doc_fixture(
+        spark,
+        sf_dir,
+        5,
+        "variant string, width int, height int, has_alpha int, "
+        "has_animation int, n_frames long",
+        census,
     )
 
 
@@ -5747,67 +5236,44 @@ def _warc_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hazard-planted with the url_dedup_groups spelling rules, and the
     # HTML carries title/entities/script-noise — every downstream field
     # is a formula of doc_id.
-    import pandas as pd
-
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def make_warc(batches):
+    def warc(d, cache):
         from atlas_upscaling_dask_spark.sources.warc import encode_warc
 
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                g = d - d % 5
-                uri = (
-                    ("HTTP" if d % 2 == 0 else "http") + "://"
-                    + ("SITE" if d % 2 == 0 else "site") + str(g % 30)
-                    + ".Example.com" + (":80" if d % 3 == 0 else "")
-                    + "/w/./" + str(g % 7) + ("/" if d % 2 == 0 else "")
-                    + f"?utm_x={d}&k={g % 9}#{d}"
-                )
-                html = (
-                    f"<html><head><title>Doc {d}</title><style>x "
-                    "{}</style></head><body>"
-                    f"<h1>H{d % 7}</h1><p>w{d % 11} &amp; tail</p>"
-                    "<script>var s = '<p>noise</p>';</script></body></html>"
-                ).encode()
-                records = [
-                    {"type": "warcinfo", "body": b"software: suite\r\n"},
-                    {"type": "request", "uri": uri,
-                     "body": b"GET / HTTP/1.1\r\n\r\n"},
-                    # transport encodings rotate so the SAME oracle rows
-                    # prove chunked/gzip decode, not just plain bodies
-                    {"type": "response", "uri": uri, "status": 200,
-                     "payload": html,
-                     "content_encoding": "gzip" if d % 3 == 1 else None,
-                     "chunked": d % 3 == 2},
-                ]
-                if d % 5 == 0:
-                    records.append(
-                        {"type": "response", "uri": uri + "&gone=1",
-                         "status": 404,
-                         "http_headers": {"Content-Type": "text/plain"},
-                         "payload": b"gone"}
-                    )
-                payloads.append(
-                    encode_warc(records, gzip_per_record=d % 2 == 1)
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
+        g = d - d % 5
+        uri = (
+            ("HTTP" if d % 2 == 0 else "http") + "://"
+            + ("SITE" if d % 2 == 0 else "site") + str(g % 30)
+            + ".Example.com" + (":80" if d % 3 == 0 else "")
+            + "/w/./" + str(g % 7) + ("/" if d % 2 == 0 else "")
+            + f"?utm_x={d}&k={g % 9}#{d}"
+        )
+        html = (
+            f"<html><head><title>Doc {d}</title><style>x "
+            "{}</style></head><body>"
+            f"<h1>H{d % 7}</h1><p>w{d % 11} &amp; tail</p>"
+            "<script>var s = '<p>noise</p>';</script></body></html>"
+        ).encode()
+        records = [
+            {"type": "warcinfo", "body": b"software: suite\r\n"},
+            {"type": "request", "uri": uri,
+             "body": b"GET / HTTP/1.1\r\n\r\n"},
+            # transport encodings rotate so the SAME oracle rows
+            # prove chunked/gzip decode, not just plain bodies
+            {"type": "response", "uri": uri, "status": 200,
+             "payload": html,
+             "content_encoding": "gzip" if d % 3 == 1 else None,
+             "chunked": d % 3 == 2},
+        ]
+        if d % 5 == 0:
+            records.append(
+                {"type": "response", "uri": uri + "&gone=1",
+                 "status": 404,
+                 "http_headers": {"Content-Type": "text/plain"},
+                 "payload": b"gone"}
             )
+        return (encode_warc(records, gzip_per_record=d % 2 == 1),)
 
-    return docs.mapInPandas(make_warc, schema="media_id long, payload binary")
+    return _doc_fixture(spark, sf_dir, 5, "payload binary", warc)
 
 
 def _warc_census_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6043,49 +5509,23 @@ def _warc_errors_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # extinct and unsupported): that one must surface as ONE error row
     # while its archive-mates decode normally; a task-killing reader
     # would return zero rows for the whole archive instead.
-    import pandas as pd
-
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def make_warc(batches):
-        from atlas_upscaling_dask_spark.sources.warc import encode_warc
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                good = f"<p>ok {d}</p>".encode()
-                second = f"<p>zz {d}</p>".encode()
-                records = [
-                    {"type": "response", "uri": f"http://e.com/a/{d}",
-                     "status": 200, "payload": good},
-                    {"type": "response", "uri": f"http://e.com/b/{d}",
-                     "status": 200, "payload": second,
-                     **({"http_headers": {"Content-Encoding": "compress"}}
-                        if d % 4 == 0
-                        else {"content_encoding":
-                              ["gzip", "br", "zstd"][d % 3]})},
-                ]
-                payloads.append(encode_warc(records))
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
     from .sources.warc import warc_records
 
-    media = docs.mapInPandas(
-        make_warc, schema="media_id long, payload binary"
-    )
+    def warc(d, cache):
+        from atlas_upscaling_dask_spark.sources.warc import encode_warc
+
+        records = [
+            {"type": "response", "uri": f"http://e.com/a/{d}",
+             "status": 200, "payload": f"<p>ok {d}</p>".encode()},
+            {"type": "response", "uri": f"http://e.com/b/{d}",
+             "status": 200, "payload": f"<p>zz {d}</p>".encode(),
+             **({"http_headers": {"Content-Encoding": "compress"}}
+                if d % 4 == 0
+                else {"content_encoding": ["gzip", "br", "zstd"][d % 3]})},
+        ]
+        return (encode_warc(records),)
+
+    media = _doc_fixture(spark, sf_dir, 5, "payload binary", warc)
     recs = warc_records(media).filter(F.col("warc_type") == "response")
     return recs.groupBy("media_id").agg(
         F.count(F.lit(1)).alias("n_responses"),
@@ -6120,56 +5560,28 @@ def _warc_zstd_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the row composes container transport x payload coding.  Both
     # layouts must scan identically — frames stream-decode as one
     # sequence and records self-delimit.
-    import pandas as pd
+    from .sources.warc import warc_records
 
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def make_warc(batches):
+    def warc(d, cache):
         from atlas_upscaling_dask_spark.sources.warc import (
             _codec_compress,
             encode_warc,
         )
 
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                records = [
-                    {"type": "response", "uri": f"http://z.com/a/{d}",
-                     "status": 200,
-                     "payload": f"<p>aa {d}</p>".encode()},
-                    {"type": "response", "uri": f"http://z.com/b/{d}",
-                     "status": 200,
-                     "payload": f"<p>bb {d}</p>".encode(),
-                     "content_encoding": ["gzip", "br", "zstd"][d % 3]},
-                ]
-                if d % 2 == 0:
-                    payloads.append(
-                        encode_warc(records, zstd_per_record=True)
-                    )
-                else:
-                    payloads.append(
-                        _codec_compress("zstd", encode_warc(records))
-                    )
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
+        records = [
+            {"type": "response", "uri": f"http://z.com/a/{d}",
+             "status": 200,
+             "payload": f"<p>aa {d}</p>".encode()},
+            {"type": "response", "uri": f"http://z.com/b/{d}",
+             "status": 200,
+             "payload": f"<p>bb {d}</p>".encode(),
+             "content_encoding": ["gzip", "br", "zstd"][d % 3]},
+        ]
+        if d % 2 == 0:
+            return (encode_warc(records, zstd_per_record=True),)
+        return (_codec_compress("zstd", encode_warc(records)),)
 
-    from .sources.warc import warc_records
-
-    media = docs.mapInPandas(
-        make_warc, schema="media_id long, payload binary"
-    )
+    media = _doc_fixture(spark, sf_dir, 5, "payload binary", warc)
     recs = warc_records(media).filter(F.col("warc_type") == "response")
     return recs.groupBy("media_id").agg(
         F.count(F.lit(1)).alias("n_responses"),
@@ -6201,49 +5613,24 @@ def _warc_cdx_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # indexes to (SURT, 14-digit ts, url, status, mime) — all closed
     # formulas.  Offsets/digests are layout-dependent bytes, proven by
     # the random-access fetch test instead of the SQL oracle.
-    import pandas as pd
-
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def make_warc(batches):
-        from atlas_upscaling_dask_spark.sources.warc import encode_warc
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                records = [
-                    {"type": "response",
-                     "uri": f"http://E{d % 5}.Example.com/P/{d}?b=2&a=1",
-                     "status": 200, "date": "2026-03-04T05:06:07Z",
-                     "payload": f"<p>p {d}</p>".encode()},
-                    {"type": "response",
-                     "uri": f"http://E{d % 5}.Example.com/Q/{d}",
-                     "status": 404, "date": "2026-03-04T05:06:08Z",
-                     "payload": b"nope"},
-                ]
-                payloads.append(
-                    encode_warc(records, gzip_per_record=(d % 2 == 0))
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
     from .sources.cdx import warc_cdx_index
 
-    media = docs.mapInPandas(
-        make_warc, schema="media_id long, payload binary"
-    )
+    def warc(d, cache):
+        from atlas_upscaling_dask_spark.sources.warc import encode_warc
+
+        records = [
+            {"type": "response",
+             "uri": f"http://E{d % 5}.Example.com/P/{d}?b=2&a=1",
+             "status": 200, "date": "2026-03-04T05:06:07Z",
+             "payload": f"<p>p {d}</p>".encode()},
+            {"type": "response",
+             "uri": f"http://E{d % 5}.Example.com/Q/{d}",
+             "status": 404, "date": "2026-03-04T05:06:08Z",
+             "payload": b"nope"},
+        ]
+        return (encode_warc(records, gzip_per_record=(d % 2 == 0)),)
+
+    media = _doc_fixture(spark, sf_dir, 5, "payload binary", warc)
     return warc_cdx_index(media).select(
         "media_id", "surt", "ts", "url", "status", "mime"
     )
@@ -6337,65 +5724,42 @@ def _warc_charset_extract_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Content-Type) and windows-1252 (€ as 0x80, declared ONLY by a
     # <meta charset> tag) — `decode_text` must pick the right decoder
     # per page or the non-ASCII characters come out wrong.
-    import pandas as pd
-
-    # Group-hash repartition (r12): spread the one-split doc_id frame
-    # so the per-payload codec work runs on every core; the exchange
-    # moves 8-byte ids only (see `_phash_media`).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            F.col("doc_id") - F.col("doc_id") % 5,
-        )
-    )
-
-    def make_warc(batches):
-        from atlas_upscaling_dask_spark.sources.warc import encode_warc
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                k = d % 3
-                if k == 0:
-                    body = (
-                        f"<html><title>Doc {d}</title>"
-                        f"<p>café € {d % 7}</p></html>"
-                    ).encode("utf-8")
-                    ct = "text/html; charset=utf-8"
-                elif k == 1:
-                    body = (
-                        f"<html><title>Doc {d}</title>"
-                        f"<p>café {d % 7}</p></html>"
-                    ).encode("iso-8859-1")
-                    ct = "text/html; charset=ISO-8859-1"
-                else:
-                    body = (
-                        f'<html><meta charset="windows-1252">'
-                        f"<title>Doc {d}</title>"
-                        f"<p>café € {d % 7}</p></html>"
-                    ).encode("windows-1252")
-                    ct = "text/html"
-                payloads.append(
-                    encode_warc([
-                        {"type": "response", "status": 200,
-                         "uri": f"http://cs.example.com/{d}",
-                         "http_headers": {"Content-Type": ct},
-                         "payload": body}
-                    ])
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
     from .extensions.text import extract_html_text
     from .sources.warc import warc_records
 
-    media = docs.mapInPandas(
-        make_warc, schema="media_id long, payload binary"
-    )
+    def warc(d, cache):
+        from atlas_upscaling_dask_spark.sources.warc import encode_warc
+
+        k = d % 3
+        if k == 0:
+            body = (
+                f"<html><title>Doc {d}</title>"
+                f"<p>café € {d % 7}</p></html>"
+            ).encode("utf-8")
+            ct = "text/html; charset=utf-8"
+        elif k == 1:
+            body = (
+                f"<html><title>Doc {d}</title>"
+                f"<p>café {d % 7}</p></html>"
+            ).encode("iso-8859-1")
+            ct = "text/html; charset=ISO-8859-1"
+        else:
+            body = (
+                f'<html><meta charset="windows-1252">'
+                f"<title>Doc {d}</title>"
+                f"<p>café € {d % 7}</p></html>"
+            ).encode("windows-1252")
+            ct = "text/html"
+        return (
+            encode_warc([
+                {"type": "response", "status": 200,
+                 "uri": f"http://cs.example.com/{d}",
+                 "http_headers": {"Content-Type": ct},
+                 "payload": body}
+            ]),
+        )
+
+    media = _doc_fixture(spark, sf_dir, 5, "payload binary", warc)
     # charset decode happens IN the warc_records kernel (decode_text
     # chain) — the same column the streaming crawl ingest consumes
     recs = warc_records(media).filter(F.col("http_status") == 200)

@@ -2396,11 +2396,57 @@ def test_phash_index_compaction_preserves_queries(spark, tmp_path):
     before = sorted(
         map(tuple, phash_index_query(spark, idx, probe).collect())
     )
-    stats = compact_table(spark, idx, partition_cols=("band",))
+    stats = compact_table(spark, idx)
     assert stats["files_after"] < stats["files_before"]
     after = sorted(map(tuple, phash_index_query(spark, idx, probe).collect()))
     assert after == before and before
     assert os.path.exists(os.path.join(idx, "_phash_index.json"))
+
+
+def test_compaction_keeps_layout_for_later_appends(spark, tmp_path):
+    # compact_table reads the band layout from the index's directories:
+    # a flat rewrite would leave the next append's band= directories as
+    # the only ones an index query reads, dropping every compacted row
+    from atlas_upscaling_dask_spark.extensions.dedup import (
+        append_to_phash_index,
+        build_phash_index,
+        phash_index_query,
+    )
+    from atlas_upscaling_dask_spark.sinks.writer import compact_table
+
+    idx = str(tmp_path / "lidx")
+    build_phash_index(
+        spark.createDataFrame([(1, 5), (2, 7)], "media_id long, phash long"),
+        idx,
+    )
+    compact_table(spark, idx)
+    append_to_phash_index(
+        spark.createDataFrame([(3, 5)], "media_id long, phash long"), idx
+    )
+    probe = spark.createDataFrame([(100, 5)], "media_id long, phash long")
+    hits = phash_index_query(spark, idx, probe).collect()
+    assert {r["corpus_id"] for r in hits} == {1, 2, 3}
+
+
+def test_text_index_append_refuses_wrong_id_type(spark, tmp_path):
+    import pytest as _pytest
+
+    from atlas_upscaling_dask_spark.extensions.retrieval import (
+        append_to_text_index,
+        build_text_index,
+    )
+
+    idx = str(tmp_path / "tidx")
+    build_text_index(
+        spark.createDataFrame([(1, "a b")], "doc_id long, text string"), idx
+    )
+    bad = spark.createDataFrame([("x", "a c")], "doc_id string, text string")
+    with _pytest.raises(ValueError, match="id_type"):
+        append_to_text_index(bad, idx)
+    # refused before any write: the postings keep one id type
+    postings = spark.read.parquet(idx)
+    assert postings.schema["doc_id"].dataType.simpleString() == "bigint"
+    assert postings.count() == 2  # the two postings of doc 1 only
 
 
 def test_hash_features_l2_and_partition_invariance(spark):
@@ -2616,7 +2662,7 @@ def test_bm25_takedown_and_purge(spark, tmp_path):
     import os
 
     stats0 = json.loads(open(os.path.join(idx, "_corpus_stats.json")).read())
-    out = purge_index_tombstones(spark, idx, partition_col="bucket")
+    out = purge_index_tombstones(spark, idx)
     assert out["tombstones_cleared"] == 1
     assert out["rows_purged"] == out["rows_before"] - out["rows_after"]
     stats1 = json.loads(open(os.path.join(idx, "_corpus_stats.json")).read())
@@ -2656,7 +2702,7 @@ def test_ivf_index_takedown(spark, emb, tmp_path):
         purge_index_tombstones,
     )
 
-    out = purge_index_tombstones(spark, idx, partition_col="bucket")
+    out = purge_index_tombstones(spark, idx)
     assert out["tombstones_cleared"] == 1
     assert out["rows_purged"] == 1  # one row per vector in the IVF layout
     raw = {r["neighbor_id"] for r in spark.read.parquet(idx).collect()}
@@ -2708,7 +2754,7 @@ def test_compaction_preserves_pending_tombstones(spark, tmp_path):
         idx,
     )
     add_index_tombstones(spark, idx, spark.createDataFrame([(4,)], "id long"))
-    compact_table(spark, idx, partition_cols=("band",))
+    compact_table(spark, idx)
     # the takedown survives routine maintenance: still excluded
     probe = spark.createDataFrame([(100, 1 << 4)], "media_id long, phash long")
     hits = {r["corpus_id"] for r in phash_index_query(spark, idx, probe).collect()}

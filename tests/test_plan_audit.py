@@ -31,6 +31,46 @@ def test_audited_rows_are_pinned():
         audit_plans.check("", rules)
 
 
+def test_media_spread_lives_in_one_helper():
+    # Spark-free (AST): the documents-derived media fixtures spread the
+    # one-split doc_id frame in ONE place, suite._doc_fixture, so the
+    # spread can be sized from work without touching 25 builders.  Any
+    # other suite function that selects doc_id from documents AND calls
+    # .repartition( is a copy of that skeleton.
+    import ast
+
+    src = Path(__file__).resolve().parents[1] / (
+        "atlas_upscaling_dask_spark/suite.py"
+    )
+
+    def has_const(call, value):
+        return any(
+            isinstance(a, ast.Constant) and a.value == value for a in call.args
+        )
+
+    def method(call, name):
+        return isinstance(call.func, ast.Attribute) and call.func.attr == name
+
+    spreaders = []
+    for fn in ast.walk(ast.parse(src.read_text())):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        calls = [n for n in ast.walk(fn) if isinstance(n, ast.Call)]
+        loads_docs = any(
+            isinstance(c.func, ast.Name)
+            and c.func.id == "load_table"
+            and has_const(c, "documents")
+            for c in calls
+        )
+        selects_id = any(
+            method(c, "select") and has_const(c, "doc_id") for c in calls
+        )
+        spreads = any(method(c, "repartition") for c in calls)
+        if loads_docs and selects_id and spreads:
+            spreaders.append(fn.name)
+    assert spreaders == ["_doc_fixture"]
+
+
 def test_unknown_rule_key_raises():
     # Spark-free: a misspelt or unimplemented key must fail loudly, not
     # be silently ignored.

@@ -218,7 +218,7 @@ def test_compact_table_preserves_content_and_layout(spark, tmp_path):
     write_volume(chunks.repartition(64), path, FIXTURE_META)
     before = spark.read.parquet(path).orderBy("cz", "cy", "cx").collect()
 
-    stats = compact_table(spark, path, target_mb=128, partition_cols=("cz",))
+    stats = compact_table(spark, path, target_mb=128)
     assert stats["files_after"] < stats["files_before"]
     after_df = spark.read.parquet(path)
     after = after_df.orderBy("cz", "cy", "cx").collect()
