@@ -25,8 +25,16 @@ casting elements to double, so results match bitwise.
 
 from __future__ import annotations
 
+import json
+from typing import NamedTuple
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..fsutil import read_text, write_text
+from .dedup import _without_tombstoned
 
 
 def _as_double(arr: Column) -> Column:
@@ -45,6 +53,155 @@ def dot(a: Column, b: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """dot/sqrt(|a|²·|b|²) — the exact expression the oracle mirrors."""
     return dot(a, b) / F.sqrt(dot(a, a) * dot(b, b))
+
+
+# ------------------------------------------- one function per decision
+#
+# Every IVF/PQ operator below makes the same few decisions; each lives
+# in exactly one function here, so a change (batched queries, executor-
+# side LUTs, a different seeding rule) is made once.  The only driver
+# collects are the seeds, the queries, and one Lloyd aggregate per
+# refinement round (`kmeans_centroids`, `refine_pq_codebooks`).
+
+
+def _seed_vectors(corpus: DataFrame, n: int, id_col: str, vec_col: str) -> list:
+    """The ``n`` lowest-id corpus vectors — the no-RNG seeding rule of
+    every quantizer here (IVF centroids, k-means init, PQ codebooks),
+    so the whole path stays SQL-replayable.  One bounded driver collect
+    of ``n`` rows."""
+    return [r[0] for r in corpus.orderBy(id_col).limit(n).select(vec_col).collect()]
+
+
+def _unit_rows(vecs) -> np.ndarray:
+    """``vecs`` as a float64 matrix with every row scaled to unit L2."""
+    mat = np.array(vecs, dtype=np.float64)
+    return mat / np.linalg.norm(mat, axis=1, keepdims=True)
+
+
+class _Queries(NamedTuple):
+    ids: list  # int query ids
+    vecs: list  # raw float64 vectors
+    units: list  # the vectors scaled to unit L2
+    probes: list  # per query, the bucket ids it probes
+
+
+def _collect_queries(
+    queries: DataFrame, id_col: str, vec_col: str, cents=None, n_probe: int = 1
+) -> _Queries:
+    """The one driver collect of the (small-by-contract) query set and
+    the one probe ranking: each query probes the ``n_probe`` centroid
+    buckets nearest by cosine (stable argsort: ties go to the lowest
+    centroid id, the oracle's row_number order).  Without ``cents``
+    every query probes the one all-covering bucket 0.  An empty query
+    set gives empty lists, and every top-k operator then returns an
+    empty frame."""
+    rows = queries.select(id_col, vec_col).collect()
+    vecs = [np.asarray(r[1], dtype=np.float64) for r in rows]
+    units = [v / np.linalg.norm(v) for v in vecs]
+    probes = [
+        [0] if cents is None
+        else [int(b) for b in np.argsort(-(cents @ u), kind="stable")[:n_probe]]
+        for u in units
+    ]
+    return _Queries([int(r[0]) for r in rows], vecs, units, probes)
+
+
+def _nearest_centroid(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Bucket of each row: its nearest centroid by cosine (argmax over
+    the unit rows, lowest id on ties).  Norms floor at 1e-12, so an
+    all-zero row scores 0 against every centroid and lands in bucket 0."""
+    norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    return ((mat / norms) @ cents.T).argmax(axis=1)
+
+
+def _pq_nanos(x: np.ndarray, bk: np.ndarray):
+    """Per subspace ``j``, yield the (rows, k_sub) squared L2 between
+    the j-th subvectors of ``x`` and codebook ``bk[j]``, rounded half-up
+    to 9 digits and held in nanos.  The fold over ``dsub`` runs in
+    strict left-to-right float64 order — the expression backend's
+    ``F.aggregate`` order (np.sum's pairwise blocking would drift a ulp
+    and flip round-9 ties) — and the rounding is explicit half-up
+    (np.round is half-even; distances are non-negative, so
+    +0.5-floor is exact half-up).  Parity with Spark's ``F.round`` and
+    DuckDB's ``round`` is property-tested."""
+    m, k_sub, dsub = bk.shape
+    for j in range(m):
+        xs = x[:, j * dsub : (j + 1) * dsub]
+        d = np.zeros((len(x), k_sub))
+        for t in range(dsub):
+            diff = xs[:, t : t + 1] - bk[j, :, t][None, :]
+            d += diff * diff
+        yield np.floor(d * 1e9 + 0.5)
+
+
+def _pq_codes(x: np.ndarray, bk: np.ndarray) -> np.ndarray:
+    """(rows, m) PQ codes: per subspace, the argmin of the round-9
+    distances (first minimum = the lowest-code tie-break)."""
+    return np.stack([(d / 1e9).argmin(axis=1) for d in _pq_nanos(x, bk)], axis=1)
+
+
+def _fixed_point_mean(frame: DataFrame, keys: list, vec: Column, precision_bits: int) -> DataFrame:
+    """Mean of the array column ``vec`` per (``keys``, dim) in fixed
+    point: (keys..., dim, centroid, n); ``keys`` are column names or
+    aliased columns.
+
+    Floating sums are order-dependent, so a distributed mean would
+    never reproduce bitwise across engines or even across runs with
+    different partitioning.  Scaling by 2^precision_bits is EXACT in
+    binary FP (power-of-two multiply), floor+cast yields exact
+    integers, the sums combine associatively (map-side partial agg),
+    and one final double division is deterministic.  The quantization
+    error is bounded by 2^-precision_bits per element."""
+    scale = float(1 << precision_bits)
+    exploded = frame.select(*keys, F.posexplode(_as_double(vec)).alias("dim", "v"))
+    keys = exploded.columns[: len(keys)]
+    return (
+        exploded.groupBy(*keys, "dim")
+        .agg(
+            F.sum(F.floor(F.col("v") * scale).cast("long")).alias("s_fp"),
+            F.count("*").alias("n"),
+        )
+        .select(
+            *keys,
+            "dim",
+            (F.col("s_fp") / (F.col("n") * F.lit(scale))).alias("centroid"),
+            "n",
+        )
+    )
+
+
+_SIDECAR = "/_ivf_centroids.json"  # a persisted IVF index's JSON sidecar
+
+
+def _ivf_sidecar(spark, path: str) -> dict:
+    """A persisted IVF index's JSON sidecar, centroids as a float64 matrix."""
+    side = json.loads(read_text(spark, path.rstrip("/") + _SIDECAR))
+    side["centroids"] = np.asarray(side["centroids"], dtype=np.float64)
+    return side
+
+
+def _probed_buckets(spark, path: str, q: _Queries) -> DataFrame:
+    """A persisted IVF index restricted to the probed buckets — an IN
+    over the partition column, so unprobed bucket directories are never
+    listed or read (PartitionFilters) — minus tombstoned ids."""
+    probed = sorted({b for bs in q.probes for b in bs})
+    return _without_tombstoned(
+        spark,
+        path,
+        spark.read.parquet(path).filter(F.col("bucket").isin(probed)),
+        "neighbor_id",  # the indexed layout's id column
+    )
+
+
+def _top_k(scored: DataFrame, k: int, score, *order) -> DataFrame:
+    """Per-query top-k window: number each query's rows by ``order``
+    and keep ranks 1..k as (query_id, neighbor_id, score, rk)."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", score, "rk")
+    )
 
 
 def brute_force_topk(
@@ -77,14 +234,7 @@ def brute_force_topk(
             cosine(F.col("qv"), F.col("cv")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    return _top_k(scored, k, "cosine", F.col("cosine").desc(), "neighbor_id")
 
 
 def brute_force_topk_blas(
@@ -96,8 +246,8 @@ def brute_force_topk_blas(
 ) -> DataFrame:
     """Exact cosine top-k via vectorized matrix products — the scale path.
 
-    The query matrix (|Q|×d, normalized) is captured into the closure
-    (broadcast to every task); each corpus partition computes one
+    The query vectors are captured into the closure (broadcast to every
+    task, normalized once per task); each corpus partition computes one
     |part|×|Q| GEMM in NumPy and emits only its **local top-k per
     query** — so the shuffle that follows carries |Q|·k rows per
     partition instead of |Q|·|corpus| scored pairs.  A final per-query
@@ -105,24 +255,17 @@ def brute_force_topk_blas(
     top-k.  This partial-top-k shape is what survives a 100 TB corpus;
     the ``brute_force_topk`` fold variant exists for bitwise oracle
     parity (GEMM sums in a different order, so scores differ in the
-    last ulp).
+    last ulp).  An empty query set returns an empty frame.
     """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
-    if not q_rows:
-        raise ValueError("empty query set")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
+    q_ids, q_vecs, _, _ = _collect_queries(queries, id_col, vec_col)
 
     def local_topk(batches):
+        if not q_ids:
+            return
+        q_mat = _unit_rows(q_vecs)
         for pdf in batches:
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = mat @ q_mat.T  # |part| × |Q|
+            sims = _unit_rows(list(pdf[vec_col])) @ q_mat.T  # |part| × |Q|
             outs = []
             for qi, qid in enumerate(q_ids):
                 col = sims[:, qi]
@@ -147,14 +290,7 @@ def brute_force_topk_blas(
     partial = corpus.mapInPandas(
         local_topk, schema="query_id long, neighbor_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    return _top_k(partial, k, "cosine", F.col("cosine").desc(), "neighbor_id")
 
 
 def _bucket_expr(vec: Column, n_planes: int) -> Column:
@@ -196,14 +332,7 @@ def ann_lsh_topk(
             cosine(F.col("qv"), F.col("cv")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    return _top_k(scored, k, "cosine", F.col("cosine").desc(), "neighbor_id")
 
 
 def embedding_near_dup_pairs(
@@ -252,44 +381,25 @@ def ivf_topk(
     equi-join on the bucket id — at 100 TB the corpus is written
     partitioned by bucket, so probes prune partitions.  Recall/cost is
     tuned by ``n_probe``/``n_centroids`` exactly as in FAISS-style IVF.
+    An empty query set returns an empty frame.
     """
-    cents = _coarse_centroids(corpus, n_centroids, refine_iters, id_col, vec_col)
-    assigned = _assign_buckets(corpus, cents, id_col, vec_col)
-    q_df = _probe_frame(queries, cents, n_probe, id_col, vec_col)
-    return _score_probed(q_df, assigned, k)
-
-
-def _coarse_centroids(corpus, n_centroids, refine_iters, id_col, vec_col):
-    """Coarse quantizer: lowest-id seeds, optional Lloyd refinement."""
-    import numpy as np
-
-    if refine_iters > 0:
-        return kmeans_centroids(
-            corpus, n_centroids, iters=refine_iters,
-            id_col=id_col, vec_col=vec_col,
-        )
-    cent_rows = (
-        corpus.orderBy(id_col).limit(n_centroids).select(id_col, vec_col).collect()
+    cents = kmeans_centroids(
+        corpus, n_centroids, refine_iters, id_col=id_col, vec_col=vec_col
     )
-    cents = np.array([r[1] for r in cent_rows], dtype=np.float64)
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    return cents
+    q = _collect_queries(queries, id_col, vec_col, cents, n_probe)
+    return _score_probed(q, _assign_buckets(corpus, cents, id_col, vec_col), k)
 
 
 def _assign_buckets(corpus: DataFrame, cents, id_col: str, vec_col: str) -> DataFrame:
     """One narrow GEMM pass: (neighbor_id, bucket, cv)."""
-    import numpy as np
-    import pandas as pd
 
     def assign(batches):
         for pdf in batches:
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            bucket = (mat / norms) @ cents.T
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "bucket": bucket.argmax(axis=1).astype(np.int32),
+                    "bucket": _nearest_centroid(mat, cents).astype(np.int32),
                     "cv": pdf[vec_col],
                 }
             )
@@ -303,29 +413,10 @@ def _assign_buckets(corpus: DataFrame, cents, id_col: str, vec_col: str) -> Data
     )
 
 
-def _probe_frame(queries: DataFrame, cents, n_probe: int, id_col: str, vec_col: str) -> DataFrame:
-    """Collect the (small-by-contract) query set and expand each query
-    to its n_probe nearest centroid buckets: (query_id, bucket, qv)."""
-    import numpy as np
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        raise ValueError("empty query set")
-    q_probe = []
-    for r in q_rows:
-        qv = np.asarray(r[1], dtype=np.float64)
-        qv = qv / np.linalg.norm(qv)
-        order = np.argsort(-(cents @ qv), kind="stable")[:n_probe]
-        q_probe.append((int(r[0]), [int(b) for b in order], [float(v) for v in qv]))
-    spark = queries.sparkSession
-    return spark.createDataFrame(
-        [(qid, b, qv) for qid, bs, qv in q_probe for b in bs],
-        "query_id long, bucket int, qv array<double>",
-    )
-
-
-def _score_probed(q_df: DataFrame, assigned: DataFrame, k: int) -> DataFrame:
-    """Broadcast probe join on the bucket key + per-query top-k window.
+def _score_probed(q: _Queries, assigned: DataFrame, k: int) -> DataFrame:
+    """Expand each collected query to its probed buckets (query_id,
+    bucket, unit qv), broadcast-join them onto the bucket key, and keep
+    the per-query top-k.
 
     Ranking orders on the cosine ROUNDED to 9 digits (the same rounding
     the oracle comparison applies), so when two neighbors differ only in
@@ -334,6 +425,10 @@ def _score_probed(q_df: DataFrame, assigned: DataFrame, k: int) -> DataFrame:
     deterministic neighbor_id tie-break governs identically in both
     engines instead of flipping rk on float noise.
     """
+    q_df = assigned.sparkSession.createDataFrame(
+        [(i, b, u.tolist()) for i, u, bs in zip(q.ids, q.units, q.probes) for b in bs],
+        "query_id long, bucket int, qv array<double>",
+    )
     scored = (
         F.broadcast(q_df)
         .join(assigned, "bucket")
@@ -344,13 +439,8 @@ def _score_probed(q_df: DataFrame, assigned: DataFrame, k: int) -> DataFrame:
             cosine(F.col("qv"), _as_double(F.col("cv"))).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cosine"), 9).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
+    return _top_k(
+        scored, k, "cosine", F.round(F.col("cosine"), 9).desc(), "neighbor_id"
     )
 
 
@@ -377,11 +467,9 @@ def build_ivf_index(
     vector data is scanned (`ivf_index_topk` plans a scan with
     PartitionFilters, not a full-corpus pass).
     """
-    import json
-
-    from ..fsutil import write_text
-
-    cents = _coarse_centroids(corpus, n_centroids, refine_iters, id_col, vec_col)
+    cents = kmeans_centroids(
+        corpus, n_centroids, refine_iters, id_col=id_col, vec_col=vec_col
+    )
     assigned = _assign_buckets(corpus, cents, id_col, vec_col)
     assigned.write.mode("overwrite").partitionBy("bucket").parquet(path)
     side = {
@@ -396,11 +484,7 @@ def build_ivf_index(
                 corpus, pq_books, pq_refine_iters, vec_col=vec_col
             )
         side["pq_books"] = pq_books
-    write_text(
-        corpus.sparkSession,
-        path.rstrip("/") + "/_ivf_centroids.json",
-        json.dumps(side),
-    )
+    write_text(corpus.sparkSession, path.rstrip("/") + _SIDECAR, json.dumps(side))
 
 
 def ivf_index_topk(
@@ -417,31 +501,13 @@ def ivf_index_topk(
     The probed-bucket filter is an IN over the partition column, so the
     parquet scan only lists/reads those directories (visible as
     PartitionFilters in the plan) — query cost scales with
-    |Q| · n_probe · bucket-size, independent of corpus size.
+    |Q| · n_probe · bucket-size, independent of corpus size.  The
+    probed buckets come from the probe lists already on the driver; an
+    empty query set returns an empty frame.
     """
-    import json
-
-    import numpy as np
-
-    from ..fsutil import read_text
-
-    cents = np.asarray(
-        json.loads(read_text(spark, path.rstrip("/") + "/_ivf_centroids.json"))[
-            "centroids"
-        ],
-        dtype=np.float64,
-    )
-    q_df = _probe_frame(queries, cents, n_probe, id_col, vec_col)
-    probed = sorted({r["bucket"] for r in q_df.select("bucket").distinct().collect()})
-    from .dedup import _without_tombstoned
-
-    assigned = _without_tombstoned(
-        spark,
-        path,
-        spark.read.parquet(path).filter(F.col("bucket").isin(probed)),
-        "neighbor_id",  # the indexed layout's id column
-    )
-    return _score_probed(q_df, assigned, k)
+    cents = _ivf_sidecar(spark, path)["centroids"]
+    q = _collect_queries(queries, id_col, vec_col, cents, n_probe)
+    return _score_probed(q, _probed_buckets(spark, path, q), k)
 
 
 def quantize_embeddings(
@@ -486,37 +552,16 @@ def label_centroids(
     vec_col: str = "embedding",
     label_col: str = "label",
 ) -> DataFrame:
-    """Per-label centroid of the embedding vectors, in fixed-point.
-
-    Floating sums are order-dependent, so a distributed mean would never
-    reproduce bitwise across engines or even across runs with different
-    partitioning.  Scaling by 2^precision_bits is EXACT in binary FP
-    (power-of-two multiply), floor+cast yields exact integers, the sums
-    combine associatively (map-side partial agg), and one final double
-    division is deterministic.  The quantization error is bounded by
-    2^-precision_bits per element — choose bits for the precision the
-    downstream consumer needs (IVF coarse centroids need far less than
-    20 bits).
+    """Per-label centroid of the embedding vectors, in fixed-point
+    (``_fixed_point_mean``: bitwise reproducible under any partitioning,
+    error ≤ 2^-precision_bits per element — choose bits for the
+    precision the downstream consumer needs; IVF coarse centroids need
+    far less than 20 bits).
 
     Returns (label, dim, centroid, n).
     """
-    scale = float(1 << precision_bits)
-    e = corpus.select(
-        F.col(label_col).alias("label"),
-        F.posexplode(_as_double(F.col(vec_col))).alias("dim", "v"),
-    )
-    return (
-        e.groupBy("label", "dim")
-        .agg(
-            F.sum(F.floor(F.col("v") * scale).cast("long")).alias("s_fp"),
-            F.count("*").alias("n"),
-        )
-        .select(
-            "label",
-            "dim",
-            (F.col("s_fp") / (F.col("n") * F.lit(scale))).alias("centroid"),
-            "n",
-        )
+    return _fixed_point_mean(
+        corpus, [F.col(label_col).alias("label")], F.col(vec_col), precision_bits
     )
 
 
@@ -531,11 +576,11 @@ def kmeans_centroids(
     """Deterministic distributed Lloyd iterations — the IVF coarse
     quantizer's refinement step.
 
-    Init = the ``n_centroids`` lowest-id vectors (reproducible, no RNG).
+    Init = the ``n_centroids`` lowest-id vectors (reproducible, no RNG;
+    ``iters=0`` is the unrefined coarse quantizer of ``ivf_topk``).
     Each iteration: one narrow assignment pass (argmax cosine against
     the broadcast centroids) and one shuffle keyed (bucket, dim) that
-    recomputes means in fixed point (floor(v·2^k) — power-of-2 scaling
-    keeps the distributed sum exact and order-independent, so the SAME
+    recomputes means in fixed point (``_fixed_point_mean``: the SAME
     input yields the SAME centroids under ANY partitioning; a float sum
     would make clustering runs non-reproducible).  Centroids live on
     the driver between rounds: n_centroids × dim floats, trivially
@@ -543,47 +588,23 @@ def kmeans_centroids(
 
     Returns a numpy array (n_centroids, dim), L2-normalized.
     """
-    import numpy as np
-    import pandas as pd
-
-    scale = float(1 << precision_bits)
-    seed_rows = (
-        corpus.orderBy(id_col).limit(n_centroids).select(vec_col).collect()
-    )
-    cents = np.array([r[0] for r in seed_rows], dtype=np.float64)
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-
+    cents = _unit_rows(_seed_vectors(corpus, n_centroids, id_col, vec_col))
     for _ in range(iters):
         bc = cents  # closure snapshot for this round
 
         def assign(batches):
             for pdf in batches:
                 mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-                norms = np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-                bucket = ((mat / norms) @ bc.T).argmax(axis=1).astype(np.int32)
+                bucket = _nearest_centroid(mat, bc).astype(np.int32)
                 yield pd.DataFrame({"bucket": bucket, "v": list(pdf[vec_col])})
 
         assigned = corpus.mapInPandas(assign, schema="bucket int, v array<float>")
-        agg = (
-            assigned.select(
-                "bucket", F.posexplode(_as_double(F.col("v"))).alias("dim", "val")
-            )
-            .groupBy("bucket", "dim")
-            .agg(
-                F.sum(F.floor(F.col("val") * scale).cast("long")).alias("s_fp"),
-                F.count("*").alias("n"),
-            )
-            .collect()
-        )
+        agg = _fixed_point_mean(assigned, ["bucket"], F.col("v"), precision_bits)
+        means = {}
+        for r in agg.collect():
+            means.setdefault(r["bucket"], np.zeros(cents.shape[1]))[r["dim"]] = r["centroid"]
         new = cents.copy()
-        dim = cents.shape[1]
-        sums = {}
-        for r in agg:
-            sums.setdefault(r["bucket"], np.zeros(dim + 1))[r["dim"]] = r["s_fp"] / (
-                r["n"] * scale
-            )
-        for b, vec in sums.items():
-            c = vec[:dim]
+        for b, c in means.items():
             nrm = np.linalg.norm(c)
             if nrm > 0:
                 new[b] = c / nrm
@@ -612,14 +633,13 @@ def pq_codebooks(
     encode/score plumbing; the unrefined books already give the
     recall-vs-brute-force property the tests pin.
     """
-    rows = corpus.orderBy(id_col).limit(k_sub).select(vec_col).collect()
-    return _books_from_vecs([r[0] for r in rows], m, k_sub)
+    return _books_from_vecs(_seed_vectors(corpus, k_sub, id_col, vec_col), m, k_sub)
 
 
 def _books_from_vecs(vecs: list, m: int, k_sub: int):
     """Codebooks from already-collected lowest-id vectors (shared with
-    ``ivf_pq_topk``, whose coarse quantizer collects the same seed rows
-    — one driver job instead of two)."""
+    ``ivf_pq_topk``, whose coarse centroids come from the same seed
+    collect)."""
     if len(vecs) < k_sub:
         raise ValueError(f"corpus has fewer than {k_sub} vectors")
     vecs = vecs[:k_sub]
@@ -657,59 +677,33 @@ def refine_pq_codebooks(
     `build_ivf_index(pq=True)` unchanged — distortion strictly
     improves on clustered data (pinned in tests).
     """
-    import numpy as np
-    import pandas as pd
-
-    m, k_sub, dsub = len(books), len(books[0]), len(books[0][0])
-    scale = float(1 << precision_bits)
     bk = np.asarray(books, dtype=np.float64)
+    m, _, dsub = bk.shape
     for _ in range(iters):
         cur = bk  # closure snapshot for this round
 
         def assign(batches):
             for pdf in batches:
                 x = np.array(list(pdf[vec_col]), dtype=np.float64)
-                js, cs, subs = [], [], []
-                for j in range(m):
-                    xs = x[:, j * dsub : (j + 1) * dsub]
-                    d = np.zeros((len(x), k_sub))
-                    for t in range(dsub):  # encode-contract fold order
-                        diff = xs[:, t : t + 1] - cur[j, :, t][None, :]
-                        d += diff * diff
-                    d = np.floor(d * 1e9 + 0.5) / 1e9
-                    js.append(np.full(len(x), j, dtype=np.int32))
-                    cs.append(d.argmin(axis=1).astype(np.int32))
-                    subs.append(xs)
                 yield pd.DataFrame(
                     {
-                        "j": np.concatenate(js),
-                        "code": np.concatenate(cs),
-                        "sub": [list(r) for r in np.vstack(subs)],
+                        "j": np.repeat(np.arange(m, dtype=np.int32), len(x)),
+                        "code": _pq_codes(x, cur).T.ravel().astype(np.int32),
+                        "sub": list(
+                            np.vstack([x[:, j * dsub : (j + 1) * dsub] for j in range(m)])
+                        ),
                     }
                 )
 
         assigned = corpus.mapInPandas(
             assign, schema="j int, code int, sub array<double>"
         )
-        agg = (
-            assigned.select(
-                "j", "code", F.posexplode("sub").alias("t", "val")
-            )
-            .groupBy("j", "code", "t")
-            .agg(
-                F.sum(F.floor(F.col("val") * scale).cast("long")).alias("s_fp"),
-                F.count("*").alias("n"),
-            )
-            .collect()
-        )
+        agg = _fixed_point_mean(assigned, ["j", "code"], F.col("sub"), precision_bits)
         new = bk.copy()
-        for r in agg:
-            new[r["j"], r["code"], r["t"]] = r["s_fp"] / (r["n"] * scale)
+        for r in agg.collect():
+            new[r["j"], r["code"], r["dim"]] = r["centroid"]
         bk = new
-    return [
-        [[float(v) for v in bk[j, c]] for c in range(k_sub)]
-        for j in range(m)
-    ]
+    return bk.tolist()
 
 
 def _l2sq(a, b):
@@ -726,16 +720,8 @@ def _pq_encode_numpy(
     corpus: DataFrame, books: list, id_col: str, vec_col: str
 ) -> DataFrame:
     """Arrow-batched encode kernel, BITWISE-identical to the expression
-    backend: per-dimension accumulation mirrors the fold's strict
-    left-to-right float64 order (np.sum's pairwise blocking would drift
-    a ulp and flip round-9 ties), and rounding is explicit half-up
-    (np.round is half-even; distances are positive so +0.5-floor is
-    exact half-up), with argmin's first-minimum rule matching the
-    lowest-code tie-break."""
-    import numpy as np
-    import pandas as pd
-
-    m, k_sub, dsub = len(books), len(books[0]), len(books[0][0])
+    backend (``_pq_codes``: the same fold order, rounding and
+    lowest-code tie-break)."""
     bk = np.asarray(books, dtype=np.float64)  # (m, k_sub, dsub)
     # keep the id column's own type (the expr backend already does) —
     # a string or int id must round-trip unchanged, not be cast to long
@@ -744,15 +730,7 @@ def _pq_encode_numpy(
     def kernel(batches):
         for pdf in batches:
             x = np.array(list(pdf[vec_col]), dtype=np.float64)
-            codes = np.empty((len(x), m), dtype=np.int32)
-            for j in range(m):
-                xs = x[:, j * dsub : (j + 1) * dsub]
-                d = np.zeros((len(x), k_sub))
-                for t in range(dsub):  # strict fold order, see docstring
-                    diff = xs[:, t : t + 1] - bk[j, :, t][None, :]
-                    d += diff * diff
-                d = np.floor(d * 1e9 + 0.5) / 1e9  # round half-up to 9
-                codes[:, j] = d.argmin(axis=1)
+            codes = _pq_codes(x, bk).astype(np.int32)
             yield pd.DataFrame(
                 {"vec_id": pdf[id_col], "codes": list(codes)}
             )
@@ -856,7 +834,7 @@ def pq_topk(
       narrow pass; the only exchange is the final per-query ranking
       window over ≤ |Q|·k·n_partitions rows.  The per-(query,neighbor)
       distance is the same exact integer sum of round-to-9 terms the
-      aggregation computes (``_adc_lut_nanos``), so outputs are
+      aggregation computes (``_pq_nanos``), so outputs are
       bitwise identical.
     * ``"agg"`` — the relational dual the SQL oracle replays: codes
       explode to (neighbor, j, code) and join the broadcast codeword
@@ -884,13 +862,10 @@ def pq_topk(
         books = refine_pq_codebooks(corpus, books, refine_iters, vec_col=vec_col)
     if backend == "kernel":
         # one all-covering bucket: every query probes bucket 0
-        q_ids, probes, luts = _adc_probes(queries, None, books, 1, id_col, vec_col)
-        cand = corpus.select(
-            id_col, vec_col, F.lit(0).alias("bucket")
-        )
         return _adc_scan_topk(
-            cand, None, books, probes, luts, q_ids, k, id_col, vec_col,
-            assigned_bucket=True,
+            corpus.select(id_col, vec_col, F.lit(0).alias("bucket")),
+            None, books, _collect_queries(queries, id_col, vec_col), k,
+            id_col, vec_col,
         )
     dsub = len(books[0][0])
     spark = corpus.sparkSession
@@ -929,122 +904,65 @@ def pq_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum(term).cast("double").alias("adist"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "adist", "rk")
-    )
+    return _top_k(scored, k, "adist", "adist", "neighbor_id")
 
 
 # ----------------------------------------------------------------- IVF+PQ
-
-
-def _adc_lut_nanos(books, q_rows, vec_idx: int = 1):
-    """Per-query ADC lookup tables in integer NANOS.
-
-    ``lut[qi][j, code]`` = round-half-up-to-9-digits of the squared L2
-    between query ``qi``'s j-th RAW subvector and codeword ``code``,
-    scaled by 1e9 and held as int64 — so per-neighbor distances sum as
-    exact integers (order-independent, bitwise equal to the oracle's
-    DECIMAL(28,9) term sum).  The fold over ``dsub`` dimensions runs in
-    strict left-to-right order and the rounding is the +0.5-floor
-    half-up recipe — both identical to ``_pq_encode_numpy`` (whose
-    parity with Spark's ``F.round`` / DuckDB's ``round`` is
-    property-tested)."""
-    import numpy as np
-
-    m, k_sub, dsub = len(books), len(books[0]), len(books[0][0])
-    bk = np.asarray(books, dtype=np.float64)  # (m, k_sub, dsub)
-    luts = []
-    for r in q_rows:
-        qv = np.asarray(r[vec_idx], dtype=np.float64)
-        lut = np.zeros((m, k_sub))
-        for j in range(m):
-            qs = qv[j * dsub : (j + 1) * dsub]
-            d = np.zeros(k_sub)
-            for t in range(dsub):  # strict fold order
-                diff = qs[t] - bk[j, :, t]
-                d += diff * diff
-            lut[j] = d
-        luts.append(np.floor(lut * 1e9 + 0.5).astype(np.int64))
-    return luts
 
 
 def _adc_scan_topk(
     candidates: DataFrame,
     cents,
     books,
-    probes: dict,
-    luts,
-    q_ids,
+    q: _Queries,
     k: int,
     id_col: str,
     vec_col: str,
-    assigned_bucket: bool,
 ) -> DataFrame:
     """The narrow ADC kernel: one ``mapInPandas`` pass over candidate
-    partitions that (a) assigns each vector to its IVF bucket (skipped
-    when the scan already carries a ``bucket`` column — the persisted
-    index), (b) PQ-encodes it with the ``_pq_encode_numpy`` fold
-    recipe, (c) scores it against every query whose probe set contains
-    its bucket via the int-nanos LUT, and (d) emits only the partition-
-    local top-k per query.  The ONLY exchange after this is the final
-    per-query ranking window over ≤ |Q|·k·n_partitions rows — no
-    query×corpus pair rows ever move (the `pq_topk` aggregation this
-    replaces shipped |Q|·|corpus| rows; PLANS.md pins the invariant)."""
-    import numpy as np
-    import pandas as pd
+    partitions that (a) assigns each vector to its IVF bucket
+    (``cents=None``: the scan already carries a ``bucket`` column — the
+    persisted index, or ``pq_topk``'s one all-covering bucket), (b)
+    PQ-encodes it (``_pq_codes``), (c) scores it against every query
+    whose probe set contains its bucket via that query's ADC lookup
+    table, and (d) emits only the partition-local top-k per query.
 
-    m, k_sub, dsub = len(books), len(books[0]), len(books[0][0])
-    bk = np.asarray(books, dtype=np.float64)
-    # cents may be None when the caller pre-assigned buckets (pq_topk's
-    # single-bucket kernel path never probes the coarse quantizer)
-    ct = None if cents is None else np.asarray(cents, dtype=np.float64)
-    probe_sets = {int(q): set(map(int, bs)) for q, bs in probes.items()}
+    ``lut[j, code]`` is ``_pq_nanos`` of the query's RAW j-th subvector
+    against codeword ``code``: round-9 terms held as int64 nanos, so
+    per-neighbor distances sum as exact integers (order-independent,
+    bitwise equal to the oracle's DECIMAL(28,9) term sum).  The ONLY
+    exchange after the kernel is the final per-query ranking window
+    over ≤ |Q|·k·n_partitions rows — no query×corpus pair rows ever
+    move (PLANS.md pins the invariant)."""
+    bk = np.asarray(books, dtype=np.float64)  # (m, k_sub, dsub)
+    luts = [np.vstack(list(_pq_nanos(v[None, :], bk))).astype(np.int64) for v in q.vecs]
+    q_ids, probes = q.ids, q.probes  # the kernel's closure: no raw vectors
 
     def kernel(batches):
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if not len(pdf):
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if assigned_bucket:
+            if cents is None:
                 bucket = pdf["bucket"].to_numpy(dtype=np.int64)
             else:
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                bucket = ((mat / norms) @ ct.T).argmax(axis=1)
-            codes = np.empty((n, m), dtype=np.int64)
-            for j in range(m):
-                xs = mat[:, j * dsub : (j + 1) * dsub]
-                d = np.zeros((n, k_sub))
-                for t in range(dsub):  # strict fold order (encode parity)
-                    diff = xs[:, t : t + 1] - bk[j, :, t][None, :]
-                    d += diff * diff
-                d = np.floor(d * 1e9 + 0.5) / 1e9  # round half-up to 9
-                codes[:, j] = d.argmin(axis=1)
+                bucket = _nearest_centroid(mat, cents)
+            codes = _pq_codes(mat, bk)
             outs = []
-            for qi, qid in enumerate(q_ids):
-                mask = np.isin(bucket, list(probe_sets[int(qid)]))
-                mask &= ids != qid
-                cand = np.nonzero(mask)[0]
+            for qid, lut, probe in zip(q_ids, luts, probes):
+                cand = np.nonzero(np.isin(bucket, probe) & (ids != qid))[0]
                 if not len(cand):
                     continue
-                lut = luts[qi]
                 nanos = np.zeros(len(cand), dtype=np.int64)
-                for j in range(m):
+                for j in range(len(bk)):
                     nanos += lut[j, codes[cand, j]]
-                take = min(k, len(cand))
-                order = np.lexsort((ids[cand], nanos))[:take]
-                sel = cand[order]
+                order = np.lexsort((ids[cand], nanos))[:k]
                 outs.append(
                     pd.DataFrame(
                         {
                             "query_id": qid,
-                            "neighbor_id": ids[sel],
+                            "neighbor_id": ids[cand[order]],
                             "adist_nanos": nanos[order],
                         }
                     )
@@ -1055,18 +973,12 @@ def _adc_scan_topk(
     partial = candidates.mapInPandas(
         kernel, schema="query_id long, neighbor_id long, adist_nanos long"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_nanos").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("adist_nanos") / F.lit(1e9)).alias("adist"),
-            "rk",
-        )
+    return _top_k(
+        partial,
+        k,
+        (F.col("adist_nanos") / F.lit(1e9)).alias("adist"),
+        "adist_nanos",
+        "neighbor_id",
     )
 
 
@@ -1109,39 +1021,25 @@ def ivf_pq_topk(
     an empty query set returns an empty frame.
     """
     _require_integral_ids(queries, id_col, corpus)
-    # ONE seed collect serves both deterministic quantizers (r13): the
-    # coarse centroids and the PQ codebooks are both derived from the
-    # lowest-id corpus vectors, so collecting max(n_centroids, k_sub)
-    # rows once replaces two identical driver jobs.
-    import numpy as np
-
-    seed_rows = (
-        corpus.orderBy(id_col)
-        .limit(max(n_centroids, k_sub))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    if len(seed_rows) < n_centroids:
+    # ONE seed collect serves both deterministic quantizers: the coarse
+    # centroids and the PQ codebooks are both lowest-id corpus vectors
+    seeds = _seed_vectors(corpus, max(n_centroids, k_sub), id_col, vec_col)
+    if len(seeds) < n_centroids:
         raise ValueError(
-            f"ivf_pq_topk: corpus has {len(seed_rows)} vectors, fewer than "
+            f"ivf_pq_topk: corpus has {len(seeds)} vectors, fewer than "
             f"n_centroids={n_centroids}; lower n_centroids"
         )
-    cents = np.array(
-        [r[1] for r in seed_rows[:n_centroids]], dtype=np.float64
-    )
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    books = _books_from_vecs([r[1] for r in seed_rows], m, k_sub)
+    cents = _unit_rows(seeds[:n_centroids])
+    books = _books_from_vecs(seeds, m, k_sub)
     if refine_iters > 0:  # Lloyd-refined books: better recall, no oracle
         books = refine_pq_codebooks(corpus, books, refine_iters, vec_col=vec_col)
-    q_ids, probes, luts = _adc_probes(
-        queries, cents, books, n_probe, id_col, vec_col
-    )
     # bucket assignment happens inside the kernel (one pass, no extra
     # scan); nothing here pre-filters because the inline path has no
     # bucket column yet — the index path below prunes partitions instead
     return _adc_scan_topk(
-        corpus, cents, books, probes, luts, q_ids, k, id_col, vec_col,
-        assigned_bucket=False,
+        corpus, cents, books,
+        _collect_queries(queries, id_col, vec_col, cents, n_probe), k,
+        id_col, vec_col,
     )
 
 
@@ -1162,29 +1060,6 @@ def _require_integral_ids(queries: DataFrame, id_col: str, corpus=None) -> None:
             )
 
 
-def _adc_probes(queries, cents, books, n_probe, id_col, vec_col):
-    """Shared IVFADC query prep: collect the (small-by-contract) query
-    set, rank its ``n_probe`` nearest coarse buckets (stable argsort,
-    lowest-cid tie-break — the oracle's row_number order), and build
-    the per-query integer-nanos ADC LUTs.  ``cents=None`` is one
-    all-covering bucket 0.  An empty query set yields empty probes."""
-    import numpy as np
-
-    ct = None if cents is None else np.asarray(cents, dtype=np.float64)
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = [int(r[0]) for r in q_rows]
-    probes = {}
-    for qid, r in zip(q_ids, q_rows):
-        if ct is None:
-            probes[qid] = [0]
-            continue
-        qv = np.asarray(r[1], dtype=np.float64)
-        qv = qv / np.linalg.norm(qv)
-        order = np.argsort(-(ct @ qv), kind="stable")[:n_probe]
-        probes[qid] = [int(b) for b in order]
-    return q_ids, probes, _adc_lut_nanos(books, q_rows)
-
-
 def ivf_pq_index_topk(
     spark,
     path: str,
@@ -1200,37 +1075,16 @@ def ivf_pq_index_topk(
     same narrow ADC kernel as :func:`ivf_pq_topk` scores the pruned
     scan.  Query cost tracks |Q| · n_probe · bucket-size, independent
     of corpus size; the PQ books come from the index sidecar."""
-    import json
-
-    import numpy as np
-
-    from ..fsutil import read_text
-
     _require_integral_ids(queries, id_col)
-    side = json.loads(
-        read_text(spark, path.rstrip("/") + "/_ivf_centroids.json")
-    )
-    cents = np.asarray(side["centroids"], dtype=np.float64)
+    side = _ivf_sidecar(spark, path)
     if "pq_books" not in side:
         raise ValueError(
             "index has no PQ codebooks — rebuild with build_ivf_index(..., pq=True)"
         )
-    books = side["pq_books"]
-    q_ids, probes, luts = _adc_probes(
-        queries, cents, books, n_probe, id_col, vec_col
-    )
-    probed = sorted({b for bs in probes.values() for b in bs})
-    from .dedup import _without_tombstoned
-
-    candidates = _without_tombstoned(
-        spark,
-        path,
-        spark.read.parquet(path).filter(F.col("bucket").isin(probed)),
-        "neighbor_id",  # the indexed layout's id column
-    )
+    q = _collect_queries(queries, id_col, vec_col, side["centroids"], n_probe)
     return _adc_scan_topk(
-        candidates, cents, books, probes, luts, q_ids, k,
-        "neighbor_id", "cv", assigned_bucket=True,
+        _probed_buckets(spark, path, q), None, side["pq_books"], q, k,
+        "neighbor_id", "cv",
     )
 
 
@@ -1272,12 +1126,9 @@ def semantic_dedup(
     memory, or fall back to ``fold``, whose skewed bucket join AQE
     splits.
     """
-    cents = _coarse_centroids(corpus, n_centroids, 0, id_col, vec_col)
+    cents = kmeans_centroids(corpus, n_centroids, 0, id_col=id_col, vec_col=vec_col)
     assigned = _assign_buckets(corpus, cents, id_col, vec_col)
     if backend == "gemm":
-        import numpy as np
-        import pandas as pd
-
         thr = float(threshold)
 
         def bucket_verdicts(key, pdf):
@@ -1347,17 +1198,7 @@ def append_to_ivf_index(
     (pytest parity).  Centroids are deliberately not re-fit here; when
     drift warrants it, rebuild (the FAISS operational convention).
     """
-    import json
-
-    import numpy as np
-
-    from ..fsutil import read_text
-
-    spark = vectors.sparkSession
-    side = json.loads(
-        read_text(spark, path.rstrip("/") + "/_ivf_centroids.json")
-    )
-    cents = np.asarray(side["centroids"], dtype=np.float64)
+    cents = _ivf_sidecar(vectors.sparkSession, path)["centroids"]
     assigned = _assign_buckets(vectors, cents, id_col, vec_col)
     assigned.write.mode("append").partitionBy("bucket").parquet(path)
 

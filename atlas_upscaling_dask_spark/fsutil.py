@@ -41,18 +41,24 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def has_parquet_files(spark: SparkSession, directory: str) -> bool:
-    """True iff ``directory`` exists and directly contains at least one
-    visible ``*.parquet`` file (Hadoop FS listing — works on any
-    supported filesystem, not just local POSIX)."""
+def list_names(spark: SparkSession, directory: str) -> list[str]:
+    """Names of the entries directly under ``directory`` (``[]`` when it
+    does not exist) — a Hadoop FS listing, so it works on any supported
+    filesystem and URI scheme (``file://``, ``s3a://``, ...), not just a
+    local POSIX path."""
     fs, jpath, _, _ = _fs_and_path(spark, directory)
     if not fs.exists(jpath):
-        return False
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith(("_", ".")):
-            return True
-    return False
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(jpath)]
+
+
+def has_parquet_files(spark: SparkSession, directory: str) -> bool:
+    """True iff ``directory`` exists and directly contains at least one
+    visible ``*.parquet`` file."""
+    return any(
+        name.endswith(".parquet") and not name.startswith(("_", "."))
+        for name in list_names(spark, directory)
+    )
 
 
 def read_text(spark: SparkSession, path: str) -> str:

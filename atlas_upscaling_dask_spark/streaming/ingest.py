@@ -439,19 +439,17 @@ def read_agg_state(
     """Latest committed aggregate-state version under ``state_path``
     (optionally only versions strictly BEFORE ``before_epoch`` — what a
     retried micro-batch must fold onto).  Returns None when no state
-    exists yet.  Listing is a directory scan of ``epoch=N`` versions
-    (state tables are |group keys| rows — tiny; an object-store
-    deployment would list via its manifest instead)."""
-    import os
+    exists yet.  The ``epoch=N`` versions are listed through the Hadoop
+    FileSystem, so state written to any URI (``file://``, ``s3a://``,
+    ...) is found (state tables are |group keys| rows — tiny)."""
     import re as _re
 
-    if not os.path.isdir(state_path):
-        return None
-    epochs = []
-    for name in os.listdir(state_path):
-        m = _re.fullmatch(r"epoch=(\d+)", name)
-        if m and (before_epoch is None or int(m.group(1)) < before_epoch):
-            epochs.append(int(m.group(1)))
+    names = fsutil.list_names(spark, state_path)
+    epochs = [
+        int(m.group(1))
+        for m in (_re.fullmatch(r"epoch=(\d+)", n) for n in names)
+        if m and (before_epoch is None or int(m.group(1)) < before_epoch)
+    ]
     if not epochs:
         return None
     return spark.read.parquet(f"{state_path}/epoch={max(epochs)}")
@@ -1351,8 +1349,6 @@ def apply_frontier_updates(
     splitting the same rows into different micro-batches, converges to
     the identical table (tested: replay idempotence + batch ≡ stream
     parity)."""
-    import os as _os
-
     updates = frontier_updates(
         batch, robots=robots, agent=agent, default_ttl=default_ttl,
         max_hops=max_hops,
@@ -1363,14 +1359,11 @@ def apply_frontier_updates(
     touched = [r[0] for r in updates.select("bucket").distinct().collect()]
     if not touched:
         return
-    exists = _os.path.exists(_os.path.join(table_path, "_SUCCESS")) or any(
-        name.startswith("bucket=")
-        for name in (
-            _os.listdir(table_path) if _os.path.isdir(table_path) else []
-        )
-    )
+    # a Hadoop FS listing: a ledger at a file:// or object-store URI
+    # must read as present, or the overwrite below drops its history
+    names = fsutil.list_names(spark, table_path)
     merged = updates
-    if exists:
+    if "_SUCCESS" in names or any(n.startswith("bucket=") for n in names):
         existing = (
             spark.read.parquet(table_path)
             .filter(F.col("bucket").isin(touched))

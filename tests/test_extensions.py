@@ -2060,6 +2060,28 @@ def test_ivf_pq_topk_corpus_smaller_than_centroids_raises(spark):
         ivf_pq_topk(corpus, corpus, k=3, n_centroids=8, m=4, k_sub=4)
 
 
+@pytest.mark.parametrize(
+    "op", ["brute_force_topk_blas", "ivf_topk", "ivf_index_topk"]
+)
+def test_empty_query_set_returns_empty_frame(spark, tmp_path, op):
+    # one empty-query contract across the top-k operators: no queries
+    # -> an empty result frame with the usual columns, not a raise
+    from atlas_upscaling_dask_spark.extensions import similarity as S
+
+    corpus = _tiny_vectors(spark, 40)
+    none = corpus.filter(F.col("vec_id") < 0)
+    if op == "ivf_index_topk":
+        path = str(tmp_path / "ivf")
+        S.build_ivf_index(corpus, path, n_centroids=4)
+        out = S.ivf_index_topk(spark, path, none, k=3, n_probe=2)
+    elif op == "ivf_topk":
+        out = S.ivf_topk(none, corpus, k=3, n_centroids=4, n_probe=2)
+    else:
+        out = S.brute_force_topk_blas(none, corpus, k=3)
+    assert out.columns == ["query_id", "neighbor_id", "cosine", "rk"]
+    assert out.count() == 0
+
+
 def test_ivf_pq_distances_match_pq_on_shared_pairs(spark, emb):
     # IVFADC prunes candidates but must NOT change distances: every
     # (query, neighbor) it returns carries the exact adist pq_topk's
