@@ -467,8 +467,14 @@ def build_ivf_index(
     vector data is scanned (`ivf_index_topk` plans a scan with
     PartitionFilters, not a full-corpus pass).
     """
-    cents = kmeans_centroids(
-        corpus, n_centroids, refine_iters, id_col=id_col, vec_col=vec_col
+    # ONE seed collect serves both deterministic quantizers, as in
+    # ivf_pq_topk: the coarse centroids and the PQ codebooks are both
+    # lowest-id corpus vectors
+    seeds = _seed_vectors(
+        corpus, max(n_centroids, pq_k_sub) if pq else n_centroids, id_col, vec_col
+    )
+    cents = _lloyd_centroids(
+        corpus, _unit_rows(seeds[:n_centroids]), refine_iters, vec_col=vec_col
     )
     assigned = _assign_buckets(corpus, cents, id_col, vec_col)
     assigned.write.mode("overwrite").partitionBy("bucket").parquet(path)
@@ -478,7 +484,7 @@ def build_ivf_index(
         "centroids": cents.tolist(),
     }
     if pq:
-        pq_books = pq_codebooks(corpus, pq_m, pq_k_sub, id_col, vec_col)
+        pq_books = _books_from_vecs(seeds, pq_m, pq_k_sub)
         if pq_refine_iters > 0:
             pq_books = refine_pq_codebooks(
                 corpus, pq_books, pq_refine_iters, vec_col=vec_col
@@ -588,7 +594,19 @@ def kmeans_centroids(
 
     Returns a numpy array (n_centroids, dim), L2-normalized.
     """
-    cents = _unit_rows(_seed_vectors(corpus, n_centroids, id_col, vec_col))
+    seeds = _seed_vectors(corpus, n_centroids, id_col, vec_col)
+    return _lloyd_centroids(corpus, _unit_rows(seeds), iters, precision_bits, vec_col)
+
+
+def _lloyd_centroids(
+    corpus: DataFrame,
+    cents: np.ndarray,
+    iters: int,
+    precision_bits: int = 20,
+    vec_col: str = "embedding",
+) -> np.ndarray:
+    """``iters`` Lloyd rounds of :func:`kmeans_centroids` from the unit
+    rows ``cents``, for callers that already hold the seeds."""
     for _ in range(iters):
         bc = cents  # closure snapshot for this round
 

@@ -18,6 +18,8 @@ Missing keys make it a LEFT OUTER join with ``coalesce(name,
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -70,60 +72,72 @@ def synthetic_regions(spark: SparkSession) -> DataFrame:
     return root.unionByName(mids).unionByName(leaves.select(*REGION_SCHEMA.names))
 
 
+def _ints(*values) -> list[int]:
+    """``values`` as Python ints via ``operator.index``: numpy integers
+    pass, while floats, strings and None raise ``TypeError`` before any
+    job runs.  The lookups below interpolate only these ints into their
+    SQL text, so the text cannot be injected into, and a fractional
+    coordinate can never truncate silently to a neighbouring voxel."""
+    return [operator.index(v) for v in values]
+
+
 def point_lookup(voxels: DataFrame, z: int, y: int, x: int) -> DataFrame:
     """Q1 — ``arr[z,y,x] -> label`` (load_test.py:9).
 
     A conjunctive equality filter; on a chunk-key-partitioned store the
     scan partition-prunes via parquet min/max stats, giving the
     reference's interactive latency at any scale.
+
+    Every lookup here builds its plan from SQL text — one JVM parse per
+    DataFrame step instead of one py4j round trip per Column node
+    (SCALE.md, relational family).
     """
-    return voxels.filter((F.col("z") == z) & (F.col("y") == y) & (F.col("x") == x))
+    z, y, x = _ints(z, y, x)
+    return voxels.filter(f"z = {z} AND y = {y} AND x = {x}")
 
 
 def point_lookup_chunks(chunks: DataFrame, z: int, y: int, x: int) -> DataFrame:
     """Q1 directly on the chunk-packed store — ZERO payload decode,
     zero Python: the containing chunk is found by range predicates on
-    the metadata columns (pushed to the parquet scan, so partition
-    dirs + row groups prune before any payload byte is read), and the
-    single voxel is extracted from the raw C-order payload with SQL
-    byte arithmetic (``substring``+``hex``+``conv`` on the four
-    little-endian bytes at ``((z−z0)·dy·dx + (y−y0)·dx + (x−x0))·4``).
+    the metadata columns, and the single voxel is extracted from the
+    raw C-order payload with SQL byte arithmetic (``substring``+``hex``+
+    ``conv`` on the four little-endian bytes at
+    ``((z−z0)·dy·dx + (y−y0)·dx + (x−x0))·4``).
 
-    At 100 TB this reads ONE row group's worth of one payload column —
-    the chunk-path analog of the reference's memmap single-voxel read
-    (load_test.py:9).  Requires ``codec='raw'`` rows (compressed chunks
-    must decode; use the COO path for those).
+    What prunes: only the lower bounds ``z0/y0/x0 <= (z, y, x)`` and
+    ``codec = 'raw'`` reach the scan's ``PushedFilters``, so parquet
+    min/max stats skip the row groups that start past the point.  The
+    upper bounds (``z0 + dz``) are arithmetic and filter rows after the
+    read, and nothing here names the ``cz`` partition column, so every
+    partition directory is listed and scanned (``PartitionFilters:
+    []``).  A caller that knows the chunk grid can add a ``cz`` filter to
+    prune directories too.  Requires ``codec='raw'`` rows (compressed
+    chunks must decode; use the COO path for those).
     """
+    z, y, x = _ints(z, y, x)
     hit = chunks.filter(
-        (F.col("z0") <= z) & (F.lit(z) < F.col("z0") + F.col("dz"))
-        & (F.col("y0") <= y) & (F.lit(y) < F.col("y0") + F.col("dy"))
-        & (F.col("x0") <= x) & (F.lit(x) < F.col("x0") + F.col("dx"))
-        & (F.col("codec") == "raw")
+        f"z0 <= {z} AND {z} < z0 + dz AND y0 <= {y} AND {y} < y0 + dy"
+        f" AND x0 <= {x} AND {x} < x0 + dx AND codec = 'raw'"
     )
-    off = (
-        (F.lit(z) - F.col("z0")) * F.col("dy") * F.col("dx")
-        + (F.lit(y) - F.col("y0")) * F.col("dx")
-        + (F.lit(x) - F.col("x0"))
-    ) * 4 + 1  # substring is 1-based
-    sel = hit.withColumn("__off", off.cast("int"))
-    label = sum(
-        F.conv(
-            F.hex(F.expr(f"substring(payload, __off + {i}, 1)")), 16, 10
-        ).cast("long")
-        * (256**i)
+    # substring is 1-based
+    off = f"(({z} - z0) * dy * dx + ({y} - y0) * dx + ({x} - x0)) * 4 + 1"
+    label = " + ".join(
+        f"CAST(conv(hex(substring(payload, __off + {i}, 1)), 16, 10) AS BIGINT)"
+        f" * {256**i}"
         for i in range(4)
     )
-    return sel.select(
-        F.lit(z).cast("long").alias("z"),
-        F.lit(y).cast("long").alias("y"),
-        F.lit(x).cast("long").alias("x"),
-        label.alias("label"),
+    return hit.selectExpr("payload", f"CAST({off} AS INT) AS __off").selectExpr(
+        f"CAST({z} AS BIGINT) AS z",
+        f"CAST({y} AS BIGINT) AS y",
+        f"CAST({x} AS BIGINT) AS x",
+        f"{label} AS label",
     )
 
 
 def region_filter(regions: DataFrame, region_id: int) -> DataFrame:
     """Q2 — equality filter on the dim table (lookup_by_id.py:31)."""
-    return regions.filter(F.col("region") == region_id)
+    region_id = operator.index(region_id)
+    return regions.filter(f"region = {region_id}")
 
 
 def decode_labels(voxels: DataFrame, regions: DataFrame) -> DataFrame:
@@ -132,18 +146,20 @@ def decode_labels(voxels: DataFrame, regions: DataFrame) -> DataFrame:
     ``lookup_test2.py:21-29``: voxel value is the join key; missing keys
     yield "Unknown region ID" (lookup_by_id.py:32-33) → LEFT OUTER +
     coalesce.  Broadcast hash join: the dim is 2,692 rows in the
-    reference; the fact side never shuffles.
+    reference; the fact side never shuffles.  The dim is coalesced to
+    one partition first, so building the broadcast is one task however
+    many partitions (or unioned pieces) the dim frame has.
     """
     return voxels.join(
-        F.broadcast(regions), voxels["label"] == regions["region"], "left"
-    ).select(
+        F.broadcast(regions.coalesce(1)), F.expr("label = region"), "left"
+    ).selectExpr(
         "z",
         "y",
         "x",
         "label",
-        F.coalesce(F.col("region_name"), F.lit("Unknown")).alias("region_name"),
-        F.coalesce(F.col("region_abbr"), F.lit("?")).alias("region_abbr"),
-        F.col("level"),
+        "coalesce(region_name, 'Unknown') AS region_name",
+        "coalesce(region_abbr, '?') AS region_abbr",
+        "level",
     )
 
 
@@ -162,14 +178,12 @@ def parent_join(regions: DataFrame) -> DataFrame:
     ``regions r JOIN regions p ON r.parent = p.region`` (the adjacency
     list exposed by the Parent column, Screenshots/lookup_test.png).
     """
-    p = regions.select(
-        F.col("region").alias("p_region"),
-        F.col("region_name").alias("parent_name"),
-        F.col("level").alias("parent_level"),
+    p = regions.selectExpr(
+        "region AS p_region", "region_name AS parent_name", "level AS parent_level"
     )
-    return regions.join(
-        F.broadcast(p), regions["parent"] == p["p_region"], "left"
-    ).select("region", "region_name", "level", "parent", "parent_name", "parent_level")
+    return regions.join(F.broadcast(p), F.expr("parent = p_region"), "left").select(
+        "region", "region_name", "level", "parent", "parent_name", "parent_level"
+    )
 
 
 def ancestor_closure(regions: DataFrame, max_depth: int = 16) -> DataFrame:
@@ -180,26 +194,20 @@ def ancestor_closure(regions: DataFrame, max_depth: int = 16) -> DataFrame:
     both correct and cheap (SURVEY.md §7.3).  Returns
     (region, ancestor, depth) with depth ≥ 1.
     """
-    edges = regions.select(
-        F.col("region"), F.col("parent").alias("ancestor"), F.lit(1).alias("depth")
-    ).filter(F.col("ancestor").isNotNull() & (F.col("ancestor") != 0))
+    edges = regions.selectExpr("region", "parent AS ancestor", "1 AS depth").filter(
+        "ancestor IS NOT NULL AND ancestor != 0"
+    )
     frontier = edges
     closure = edges
-    parent_edge = regions.select(
-        F.col("region").alias("e_child"), F.col("parent").alias("e_parent")
-    ).filter(F.col("e_parent").isNotNull() & (F.col("e_parent") != 0))
+    parent_edge = F.broadcast(
+        regions.selectExpr("region AS e_child", "parent AS e_parent").filter(
+            "e_parent IS NOT NULL AND e_parent != 0"
+        )
+    )
+    step = F.expr("ancestor = e_child")
     for _ in range(max_depth):
-        nxt = (
-            frontier.join(
-                F.broadcast(parent_edge),
-                frontier["ancestor"] == parent_edge["e_child"],
-                "inner",
-            )
-            .select(
-                F.col("region"),
-                F.col("e_parent").alias("ancestor"),
-                (F.col("depth") + 1).alias("depth"),
-            )
+        nxt = frontier.join(parent_edge, step, "inner").selectExpr(
+            "region", "e_parent AS ancestor", "depth + 1 AS depth"
         )
         if nxt.isEmpty():
             break

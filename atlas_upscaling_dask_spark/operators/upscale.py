@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..volume import map_chunks
+from .relational import _ints
 
 
 def upscale_coo(voxels: DataFrame, scale: int) -> DataFrame:
@@ -163,15 +164,16 @@ def point_lookup_upscaled(
     relabels the coordinates.  At 100 TB this is the difference between
     a partition-pruned single-chunk read and an s³-times-larger scan.
     """
+    scale, z, y, x = _ints(scale, z, y, x)
     if scale < 1:
         raise ValueError(f"scale must be >= 1, got {scale}")
     hit = voxels.filter(
-        (F.col("z") == z // scale) & (F.col("y") == y // scale) & (F.col("x") == x // scale)
+        f"z = {z // scale} AND y = {y // scale} AND x = {x // scale}"
     )
-    return hit.select(
-        F.lit(z).cast("long").alias("z"),
-        F.lit(y).cast("long").alias("y"),
-        F.lit(x).cast("long").alias("x"),
+    return hit.selectExpr(
+        f"CAST({z} AS BIGINT) AS z",
+        f"CAST({y} AS BIGINT) AS y",
+        f"CAST({x} AS BIGINT) AS x",
         "label",
     )
 

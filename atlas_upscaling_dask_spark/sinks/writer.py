@@ -38,10 +38,14 @@ def write_volume(
 ) -> None:
     """K1+K2+K3+K5 — overwrite-write the chunk table + JSON sidecar.
 
-    Partitioned by ``cz`` (the coarse chunk key): a z-slab point query
-    prunes whole directories, and parquet min/max stats on cy/cx prune
+    Partitioned by ``cz`` (the coarse chunk key): a query that filters
+    ``cz`` prunes whole directories (``PartitionFilters`` in its scan),
+    and parquet min/max stats on the pushed metadata predicates prune
     row groups within them — the Spark analog of Zarr's chunk grid
-    addressing.
+    addressing.  A query that filters only voxel coordinates, as
+    ``point_lookup_chunks`` does, lists and scans every directory: the
+    store does not record the chunk grid that maps a coordinate to its
+    ``cz``.
     """
     if compressor not in COMPRESSORS:
         raise ValueError(f"compressor must be one of {sorted(COMPRESSORS)}")

@@ -13,8 +13,14 @@ def spark():
     from atlas_upscaling_dask_spark.session import get_spark
 
     # Small shuffle fan-out: test inputs are tiny and window-heavy tests
-    # spend their time on task scheduling otherwise.
-    spark = get_spark("tests", shuffle_partitions=8)
+    # spend their time on task scheduling otherwise.  The daemon module
+    # keeps Python workers from re-reading pyspark.zip before every task
+    # (tests/_pyworker.py).
+    spark = get_spark(
+        "tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.python.daemon.module": "tests._pyworker"},
+    )
     yield spark
 
 

@@ -2176,6 +2176,33 @@ def test_ivf_pq_index_without_books_raises(spark, emb, tmp_path):
         ivf_pq_index_topk(spark, idx, q, k=3, n_probe=2)
 
 
+def test_build_ivf_pq_index_collects_seeds_once(spark, emb, tmp_path, monkeypatch):
+    # one lowest-id seed collect serves the coarse centroids and the PQ
+    # books, and the sidecar is byte-for-byte what the two quantizers
+    # give when each collects its own seeds
+    import json
+
+    from atlas_upscaling_dask_spark.extensions import similarity as S
+
+    cents = S.kmeans_centroids(emb, 8, 1)
+    want = json.dumps({
+        "n_centroids": 8,
+        "dim": int(cents.shape[1]),
+        "centroids": cents.tolist(),
+        "pq_books": S.pq_codebooks(emb, 4, 16),
+    })
+    seeds = S._seed_vectors
+    calls = []
+    monkeypatch.setattr(
+        S, "_seed_vectors", lambda *a: calls.append(a[1]) or seeds(*a)
+    )
+    idx = str(tmp_path / "ivfpq_once")
+    S.build_ivf_index(emb, idx, n_centroids=8, refine_iters=1, pq=True, pq_m=4, pq_k_sub=16)
+    assert calls == [16]
+    with open(idx + S._SIDECAR) as fh:
+        assert fh.read() == want
+
+
 # ----------------------------------------------------------- image phash
 
 

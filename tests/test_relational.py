@@ -1,5 +1,6 @@
 """Relational surface tests (Q1-Q8 semantics from the reference scripts)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,9 +11,11 @@ from atlas_upscaling_dask_spark.operators.relational import (
     lookup_region_at,
     parent_join,
     point_lookup,
+    point_lookup_chunks,
     region_filter,
     synthetic_regions,
 )
+from atlas_upscaling_dask_spark.operators.upscale import point_lookup_upscaled
 from atlas_upscaling_dask_spark.volume import synthetic_voxels
 
 
@@ -219,6 +222,62 @@ def test_point_lookup_chunks_skips_compressed(spark):
         synthetic_chunks(spark, meta, chunk=(4, 8, 8)), codec="zstd"
     )
     assert point_lookup_chunks(compressed, 1, 1, 1).isEmpty()
+
+
+@pytest.fixture(scope="module")
+def stored(spark, tmp_path_factory):
+    # the raw-codec (4, 8, 8)-chunk store of the binary-extraction test
+    from atlas_upscaling_dask_spark.sinks.writer import write_volume
+    from atlas_upscaling_dask_spark.volume import VolumeMeta, synthetic_chunks
+
+    meta = VolumeMeta(16, 16, 16)
+    path = str(tmp_path_factory.mktemp("stored") / "vol")
+    write_volume(synthetic_chunks(spark, meta, chunk=(4, 8, 8)), path, meta,
+                 compressor="none")
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize(
+    "lookup",
+    [
+        lambda vox, stored, regions: point_lookup(vox, 4.5, 4, 4),
+        # truncated to z=4 before: label 15581, where (4, 4, 4) holds 15585
+        lambda vox, stored, regions: point_lookup_chunks(stored, 4.5, 4, 4),
+        # answered z=9 for z=9.5 before
+        lambda vox, stored, regions: point_lookup_upscaled(vox, 2, 9.5, 4, 4),
+        lambda vox, stored, regions: region_filter(regions, 15564.0),
+    ],
+    ids=["point_lookup", "point_lookup_chunks", "point_lookup_upscaled", "region_filter"],
+)
+def test_lookups_reject_non_integral_coordinates(lookup, vox, stored, regions):
+    with pytest.raises(TypeError):
+        lookup(vox, stored, regions)
+
+
+def test_lookups_accept_numpy_integers(vox, stored, regions):
+    four = np.int64(4)
+    assert point_lookup(vox, four, np.int32(4), 4).first()["label"] == 15585
+    assert point_lookup_chunks(stored, four, four, np.uint8(4)).first()["label"] == 15585
+    up = point_lookup_upscaled(vox, np.int16(2), np.int64(9), 8, 8).first()
+    assert (up["z"], up["label"]) == (9, 15585)
+    assert region_filter(regions, np.int64(15564)).count() == 1
+
+
+def test_point_lookup_plan_costs_few_gateway_calls(spark, stored, regions, monkeypatch):
+    # the plan comes from SQL text: one JVM parse per DataFrame step, not
+    # one py4j round trip per Column node (~900 calls that way)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(args[0][:40])
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    decode_labels(point_lookup_chunks(stored, 5, 6, 7), regions)
+    monkeypatch.undo()
+    assert len(calls) <= 60, calls
 
 
 def test_profile_columns_stats_and_rejection(spark):

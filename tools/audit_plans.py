@@ -413,9 +413,9 @@ FIXTURES = {
         lambda spark, sf_dir: _bulk(spark, "upscale"),
         {"no_shuffle": True, "no_python_udf": True},
     ),
-    # binary point lookup on the packed store: range predicates
-    # pushed to the scan, zero Python, zero shuffle — interactive
-    # latency is a pruned single-row-group read at any volume size
+    # binary point lookup on the packed store: the range predicates'
+    # lower bounds pushed to the scan (row-group min/max pruning),
+    # zero Python, zero shuffle
     "point_lookup_chunks_binary": (
         lambda spark, sf_dir: _bulk(spark, "point"),
         {"pushdown": True, "no_shuffle": True, "no_python_udf": True, "codegen": True},
