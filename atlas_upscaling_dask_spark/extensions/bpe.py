@@ -8,9 +8,9 @@ That structure is exactly right for 100 TB: the corpus-size-dependent
 work is ONE aggregation (word counts); every training iteration then
 runs over the distinct-word frame (bounded by vocabulary, millions of
 rows, not the corpus), with pair counting as a weighted narrow explode
-+ one partial-aggregated exchange, and the winning pair reduced to the
-driver as a single row (an ``orderBy(...).limit(1)`` action per merge —
-the only driver traffic).
++ one partial-aggregated exchange, and the top candidate pairs reduced
+to the driver as a few rows (an ``orderBy(...).limit(...)`` action per
+round — the only driver traffic).
 
 Merge application is a fold-left over each word's symbol array
 (``F.aggregate`` with a struct accumulator) — greedy left-to-right,
@@ -27,7 +27,7 @@ as the ``bpe_pair_counts`` suite query (integer-exact).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: end-of-word marker symbol (kept printable and un-splittable: it is
@@ -154,6 +154,26 @@ def _apply_batch_local(syms: list, mapping: dict) -> list:
     return out
 
 
+def _pick_batch(
+    cands: list[tuple[str, str]], want: int
+) -> list[tuple[str, str]]:
+    """Greedy non-conflicting merge batch: walk the rank-ordered
+    candidate pairs and accept up to ``want`` that share no symbol with
+    (and whose merged token does not collide with) a pair accepted
+    before them.  The rank-1 candidate is always accepted, so every
+    round makes progress."""
+    used: set[str] = set()
+    batch: list[tuple[str, str]] = []
+    for s1, s2 in cands:
+        if len(batch) >= want:
+            break
+        if s1 in used or s2 in used or (s1 + s2) in used:
+            continue
+        batch.append((s1, s2))
+        used.update((s1, s2, s1 + s2))
+    return batch
+
+
 def _train_local(
     table: list, n_merges: int, max_batch: int
 ) -> tuple[list, list]:
@@ -173,15 +193,7 @@ def _train_local(
             break
         want = min(max_batch, n_merges - len(merges))
         cands = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[: want * 4]
-        used: set = set()
-        batch: list = []
-        for (s1, s2), _ in cands:
-            if len(batch) >= want:
-                break
-            if s1 in used or s2 in used or (s1 + s2) in used:
-                continue
-            batch.append((s1, s2))
-            used.update((s1, s2, s1 + s2))
+        batch = _pick_batch([pair for pair, _ in cands], want)
         merges.extend(batch)
         mapping = {(a, b): a + b for a, b in batch}
         table = [(w, f, _apply_batch_local(s, mapping)) for w, f, s in table]
@@ -234,53 +246,21 @@ def _collect_local_table(
     ]
 
 
-def _local_symframe(spark: SparkSession, table: list) -> DataFrame:
-    return spark.createDataFrame(
-        table, "word string, freq bigint, syms array<string>"
-    )
-
-
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 10,
     text_col: str = "text",
     local_threshold: int = LOCAL_VOCAB_THRESHOLD,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
-    """Train ``n_merges`` BPE merges; returns (merge list, final symbol
-    frame).  One corpus pass for word counts, then per-iteration work is
-    bounded by the distinct-word table (cached); each iteration's driver
-    traffic is ONE (s1, s2) row.
-
-    r12: vocabularies of at most ``local_threshold`` distinct words
-    train driver-local on the collected word-frequency table (exact
-    same ordering/fold semantics — one corpus pass, zero per-round
-    jobs); pass ``local_threshold=0`` to force the distributed loop.
-    """
-    if local_threshold:
-        table = _collect_local_table(docs, text_col, local_threshold)
-        if table is not None:
-            merges, table = _train_local(table, n_merges, max_batch=1)
-            return merges, _local_symframe(docs.sparkSession, table)
-    # localCheckpoint per round, NOT cache: caching does not truncate
-    # the logical plan, so each round's fold-left would re-analyze an
-    # ever-growing expression tree — at 256 merges that is minutes of
-    # Catalyst analysis for a 31-row frame (the components.py iterative
-    # pitfall, measured here too).
-    syms = to_symbols(word_frequencies(docs, text_col)).localCheckpoint(eager=True)
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        best = (
-            pair_counts(syms)
-            .orderBy(F.col("pair_count").desc(), F.col("s1").asc(), F.col("s2").asc())
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        s1, s2 = best[0]["s1"], best[0]["s2"]
-        merges.append((s1, s2))
-        syms = apply_merge(syms, s1, s2).localCheckpoint(eager=True)
-    return merges, syms
+    """Train ``n_merges`` exact sequential BPE merges — the most
+    frequent pair per round, i.e. :func:`bpe_train_batched` with
+    ``max_batch=1`` (same driver-local path for vocabularies of at most
+    ``local_threshold`` words; ``0`` forces the distributed loop).
+    Returns (merge list, final symbol frame)."""
+    return bpe_train_batched(
+        docs, n_merges, max_batch=1, text_col=text_col,
+        local_threshold=local_threshold,
+    )
 
 
 def apply_merges_batch(
@@ -355,21 +335,27 @@ def bpe_train_batched(
     Heuristic vs exact: later pairs in a batch are accepted on counts
     measured BEFORE the earlier merges applied, so a pair formed by an
     earlier merge (count ≤ its parent's) can in principle overtake
-    them; ``max_batch=1`` reproduces :func:`bpe_train` exactly
-    (property-tested), and larger batches trade that edge case for a
-    ``max_batch``× cut in corpus passes.
+    them; ``max_batch=1`` is exact sequential BPE (:func:`bpe_train`,
+    tested against a pure-Python reference trainer), and larger batches
+    trade that edge case for a ``max_batch``× cut in corpus passes.
     """
     if max_batch < 1:
         raise ValueError("max_batch must be >= 1")
-    # r12: small vocabularies train driver-local (see bpe_train) — the
-    # per-round state is the distinct-word table, and below the
-    # threshold every distributed round is pure job overhead.
+    # r12: small vocabularies train driver-local — the per-round state
+    # is the distinct-word table, and below the threshold every
+    # distributed round is pure job overhead.
     if local_threshold:
         table = _collect_local_table(docs, text_col, local_threshold)
         if table is not None:
             merges, table = _train_local(table, n_merges, max_batch)
-            return merges, _local_symframe(docs.sparkSession, table)
-    # localCheckpoint per round (see bpe_train): plan stays one fold deep
+            return merges, docs.sparkSession.createDataFrame(
+                table, "word string, freq bigint, syms array<string>"
+            )
+    # localCheckpoint per round, NOT cache: caching does not truncate
+    # the logical plan, so each round's fold-left would re-analyze an
+    # ever-growing expression tree — at 256 merges that is minutes of
+    # Catalyst analysis for a 31-row frame (the components.py iterative
+    # pitfall, measured here too).
     syms = to_symbols(word_frequencies(docs, text_col)).localCheckpoint(eager=True)
     merges: list[tuple[str, str]] = []
     while len(merges) < n_merges:
@@ -382,18 +368,7 @@ def bpe_train_batched(
         )
         if not cands:
             break
-        used: set[str] = set()
-        batch: list[tuple[str, str]] = []
-        # the rank-1 candidate is always accepted (used is empty), so
-        # every round makes progress — batch is non-empty here
-        for r in cands:
-            if len(batch) >= want:
-                break
-            s1, s2 = r["s1"], r["s2"]
-            if s1 in used or s2 in used or (s1 + s2) in used:
-                continue
-            batch.append((s1, s2))
-            used.update((s1, s2, s1 + s2))
+        batch = _pick_batch([(r["s1"], r["s2"]) for r in cands], want)
         merges.extend(batch)
         syms = apply_merges_batch(syms, batch).localCheckpoint(eager=True)
     return merges, syms

@@ -34,6 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import index_store
+# the takedown API is public here too
+from .index_store import add_index_tombstones, purge_index_tombstones  # noqa: F401
+
 # Mersenne prime 2^31-1; the (a·x+b) mod p family is the classic
 # universal-hash construction used by MinHash implementations.
 MINHASH_P = 2_147_483_647
@@ -373,28 +377,33 @@ def minhash_lsh_pairs(
     wide = minhash_signatures_wide(
         docs, num_hashes, shingle_n, text_col, id_col, use_dictionary
     )
-    banded = _band_rows(wide, num_hashes, bands)
+    return _bucket_pairs(_band_rows(wide, num_hashes, bands), num_hashes, min_est_sim)
+
+
+def _est_sim(num_hashes: int):
+    """Fraction of equal components of signature arrays arr1, arr2."""
+    eq = F.zip_with(F.col("arr1"), F.col("arr2"), lambda a, b: a == b)
+    return F.size(F.filter(eq, lambda e: e)) / num_hashes
+
+
+def _bucket_pairs(
+    banded: DataFrame, num_hashes: int, min_est_sim: float
+) -> DataFrame:
+    """(d1 < d2, est_sim) pairs sharing a (band, bkey) bucket of
+    ``banded`` rows, at ``min_est_sim``.
+
+    Score INSIDE the bucket join, then deduplicate (d1,d2): est_sim is
+    a pure function of the two signatures, so every band that yields
+    the same pair computes the same score and dropDuplicates is exact.
+    The pair-dedup shuffle then carries one double per candidate
+    instead of two num_hashes-long arrays, and sub-threshold pairs are
+    gone before the exchange (measured 1.45 s → 1.21 s at sf0.1)."""
     l = banded.select(F.col("doc_id").alias("d1"), F.col("sig_arr").alias("arr1"), "band", "bkey")
     rr = banded.select(F.col("doc_id").alias("d2"), F.col("sig_arr").alias("arr2"), "band", "bkey")
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("arr1"), F.col("arr2"), lambda a, b: a == b),
-                lambda eq: eq,
-            )
-        )
-        / num_hashes
-    )
-    # Score INSIDE the bucket join, then deduplicate (d1,d2): est_sim is
-    # a pure function of the two signatures, so every band that yields
-    # the same pair computes the same score and dropDuplicates is exact.
-    # The pair-dedup shuffle then carries one double per candidate
-    # instead of two num_hashes-long arrays, and sub-threshold pairs are
-    # gone before the exchange (measured 1.45 s → 1.21 s at sf0.1).
     return (
         l.join(rr, ["band", "bkey"])
         .filter(F.col("d1") < F.col("d2"))
-        .withColumn("est_sim", est)
+        .withColumn("est_sim", _est_sim(num_hashes))
         .filter(F.col("est_sim") >= min_est_sim)
         .select("d1", "d2", "est_sim")
         .dropDuplicates(["d1", "d2"])
@@ -704,48 +713,22 @@ def build_lsh_index(
     ONCE per corpus — each new crawl batch probes (and can append to)
     the index instead of re-hashing petabytes.
     """
-    import json
-
-    from ..fsutil import write_text
-
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     banded = _banded_signatures(docs, num_hashes, bands, shingle_n, text_col, id_col)
-    banded.write.mode("overwrite").partitionBy("band").parquet(path)
-    write_text(
-        docs.sparkSession,
-        path.rstrip("/") + "/_lsh_index.json",
-        json.dumps(
-            {
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "shingle_n": shingle_n,
-                # pinned so the schema-explicit read (empty-bootstrap
-                # support) works for string/int ids alike
-                "id_type": docs.schema[id_col].dataType.simpleString(),
-            }
-        ),
+    index_store.write(
+        banded,
+        path,
+        index_store.LSH,
+        {
+            "num_hashes": num_hashes,
+            "bands": bands,
+            "shingle_n": shingle_n,
+            # pinned so the schema-explicit read (empty-bootstrap
+            # support) works for string/int ids alike
+            "id_type": index_store.id_type(docs, id_col),
+        },
     )
-
-
-def _lsh_index_params(spark, path: str) -> dict:
-    import json
-
-    from ..fsutil import read_text
-
-    return json.loads(read_text(spark, path.rstrip("/") + "/_lsh_index.json"))
-
-
-def _read_lsh_index(spark, path: str, params: dict) -> DataFrame:
-    """Schema-explicit index scan: a freshly-bootstrapped EMPTY index
-    (zero crawl batches appended yet) has no parquet files to infer a
-    schema from, and a continuous-ingest pipeline must start from
-    exactly that state.  The doc_id type comes from the params sidecar
-    (indexes built before it was pinned default to bigint)."""
-    id_type = params.get("id_type", "bigint")
-    return spark.read.schema(
-        f"doc_id {id_type}, sig_arr array<bigint>, band int, bkey string"
-    ).parquet(path)
 
 
 def lsh_index_pairs(
@@ -756,31 +739,9 @@ def lsh_index_pairs(
     """Corpus-internal near-dup pairs from a persisted index: the same
     bucket self-join + in-bucket scoring as ``minhash_lsh_pairs``, but
     the signature computation is a parquet scan (parity-tested)."""
-    p = _lsh_index_params(spark, path)
-    banded = _read_lsh_index(spark, path, p)
-    lhs = banded.select(
-        F.col("doc_id").alias("d1"), F.col("sig_arr").alias("arr1"), "band", "bkey"
-    )
-    rhs = banded.select(
-        F.col("doc_id").alias("d2"), F.col("sig_arr").alias("arr2"), "band", "bkey"
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("arr1"), F.col("arr2"), lambda a, b: a == b),
-                lambda eq: eq,
-            )
-        )
-        / p["num_hashes"]
-    )
-    return (
-        lhs.join(rhs, ["band", "bkey"])
-        .filter(F.col("d1") < F.col("d2"))
-        .withColumn("est_sim", est)
-        .filter(F.col("est_sim") >= min_est_sim)
-        .select("d1", "d2", "est_sim")
-        .dropDuplicates(["d1", "d2"])
-    )
+    p = index_store.params(spark, path, index_store.LSH)
+    banded = index_store.read(spark, path, index_store.LSH, p)
+    return _bucket_pairs(banded, p["num_hashes"], min_est_sim)
 
 
 def lsh_index_query(
@@ -795,7 +756,7 @@ def lsh_index_query(
     crawl-dedup case): only the probe batch is hashed; the corpus side
     is the index scan, joined per (band, bucket).  Returns
     (probe_id, corpus_id, est_sim) candidates at ``min_est_sim``."""
-    p = _lsh_index_params(spark, path)
+    p = index_store.params(spark, path, index_store.LSH)
     probe = _banded_signatures(
         probe_docs, p["num_hashes"], p["bands"], p["shingle_n"], text_col, id_col
     ).select(
@@ -804,29 +765,15 @@ def lsh_index_query(
         "band",
         "bkey",
     )
-    corpus = _without_tombstoned(
-        spark,
-        path,
-        _read_lsh_index(spark, path, p).select(
-            F.col("doc_id").alias("corpus_id"),
-            F.col("sig_arr").alias("arr2"),
-            "band",
-            "bkey",
-        ),
-        "corpus_id",
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("arr1"), F.col("arr2"), lambda a, b: a == b),
-                lambda eq: eq,
-            )
-        )
-        / p["num_hashes"]
+    corpus = index_store.live(spark, path, index_store.LSH, p).select(
+        F.col("doc_id").alias("corpus_id"),
+        F.col("sig_arr").alias("arr2"),
+        "band",
+        "bkey",
     )
     return (
         probe.join(corpus, ["band", "bkey"])
-        .withColumn("est_sim", est)
+        .withColumn("est_sim", _est_sim(p["num_hashes"]))
         .filter(F.col("est_sim") >= min_est_sim)
         .select("probe_id", "corpus_id", "est_sim")
         .dropDuplicates(["probe_id", "corpus_id"])
@@ -846,17 +793,52 @@ def append_to_lsh_index(
     Typical loop: ``lsh_index_query`` the batch first (dedup against
     the corpus), then append the survivors.
     """
-    p = _lsh_index_params(docs.sparkSession, path)
-    batch_t = docs.schema[id_col].dataType.simpleString()
-    if batch_t != p.get("id_type", "bigint"):
-        raise ValueError(
-            f"batch id type {batch_t!r} does not match the index's pinned "
-            f"id_type {p.get('id_type', 'bigint')!r}"
-        )
+    p = index_store.params(docs.sparkSession, path, index_store.LSH)
     banded = _banded_signatures(
         docs, p["num_hashes"], p["bands"], p["shingle_n"], text_col, id_col
     )
-    banded.write.mode("append").partitionBy("band").parquet(path)
+    index_store.append(banded, path, index_store.LSH, p)
+
+
+def _rarest_first_arrays(
+    docs: DataFrame, threshold: float, n: int, text_col: str, id_col: str
+) -> DataFrame:
+    """(doc_id, grams): each doc's distinct shingles sorted by ascending
+    global document frequency (ties by the gram — a total order), the
+    shared build of the prefix-filtered set-similarity joins.
+
+    The table has three consumers (prefix explode + both verify
+    sides): a lazy local checkpoint materializes it once and truncates
+    its lineage — same pattern as pipeline.py's gate."""
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    g = word_shingles(spread_small_input(docs, id_col), n, text_col, id_col)
+    freq = g.groupBy("gram").agg(F.count("*").alias("df"))
+    return (
+        g.join(freq, "gram")
+        .groupBy("doc_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("df"), F.col("gram")))
+            ).alias("sg")
+        )
+        .select("doc_id", F.expr("transform(sg, s -> s.gram)").alias("grams"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _prefix(threshold: float):
+    """The first ``|x| - ceil(t·|x|) + 1`` (≥ 1 for t ≤ 1) rarest grams:
+    a pair reaching overlap ``ceil(t·|x|)`` must share one of them.
+    Every ceil() of a float product subtracts a 1e-9 guard first: IEEE
+    can render an exactly-integer product as k+ε (0.3·10 = 3.0000…04)
+    and an unguarded ceil then SHORTENS the prefix — a silent
+    missed-pair bug the brute-force oracle would flag only on the right
+    corpus.  The guard only ever lengthens prefixes (safe)."""
+    return F.expr(
+        f"slice(grams, 1, CAST(size(grams) - ceil({threshold!r} * "
+        f"size(grams) - 1e-9) + 1 AS INT))"
+    )
 
 
 def prefix_filter_join(
@@ -897,39 +879,11 @@ def prefix_filter_join(
     oracle computes brute-force all-pairs Jaccard, so ANY pair the
     prefix filter drops would show up as a row-count mismatch.
     """
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    g = word_shingles(spread_small_input(docs, id_col), n, text_col, id_col)
-    freq = g.groupBy("gram").agg(F.count("*").alias("df"))
-    arrs = (
-        g.join(freq, "gram")
-        .groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("df"), F.col("gram")))
-            ).alias("sg")
-        )
-        .select("doc_id", F.expr("transform(sg, s -> s.gram)").alias("grams"))
-    )
-    # three consumers (prefix explode + both verify sides): a lazy
-    # local checkpoint materializes the sorted-array table once and
-    # truncates its lineage — same pattern as pipeline.py's gate
-    arrs = arrs.localCheckpoint(eager=False)
-    # prefix length p = |x| - ceil(t·|x|) + 1 ≥ 1 for t ≤ 1.  Every
-    # ceil() of a float product subtracts a 1e-9 guard first: IEEE can
-    # render an exactly-integer product as k+ε (0.3·10 = 3.0000…04) and
-    # an unguarded ceil then SHORTENS the prefix — a silent missed-pair
-    # bug the brute-force oracle would flag only on the right corpus.
-    # The guard only ever lengthens prefixes / loosens filters (safe).
+    arrs = _rarest_first_arrays(docs, threshold, n, text_col, id_col)
     pref = arrs.select(
         "doc_id",
         F.size("grams").alias("sz"),
-        F.posexplode(
-            F.expr(
-                f"slice(grams, 1, CAST(size(grams) - ceil({threshold!r} * "
-                f"size(grams) - 1e-9) + 1 AS INT))"
-            )
-        ).alias("pos", "tok"),
+        F.posexplode(_prefix(threshold)).alias("pos", "tok"),
     )
     a = pref.select(
         F.col("doc_id").alias("d1"), F.col("sz").alias("sz1"),
@@ -1027,35 +981,15 @@ def containment_join(
     (long/long → IEEE double), so the brute-force DuckDB oracle matches
     bitwise; any pair the prefix filter missed would surface as a
     row-count mismatch.  At 100 TB the posting side is the persisted
-    inverted index (``retrieval.build_inverted_index`` layout) and the
+    inverted index (``retrieval.build_text_index`` layout) and the
     array table stages to parquet — same plan, disk-backed.
     """
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    g = word_shingles(spread_small_input(docs, id_col), n, text_col, id_col)
-    freq = g.groupBy("gram").agg(F.count("*").alias("df"))
-    arrs = (
-        g.join(freq, "gram")
-        .groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("df"), F.col("gram")))
-            ).alias("sg")
-        )
-        .select("doc_id", F.expr("transform(sg, s -> s.gram)").alias("grams"))
-    )
-    arrs = arrs.localCheckpoint(eager=False)
-    # contained-side prefix: p = |in| - ceil(t·|in|) + 1 (1e-9 ceil
-    # guard as in prefix_filter_join — only ever lengthens the prefix)
+    arrs = _rarest_first_arrays(docs, threshold, n, text_col, id_col)
+    # contained-side prefix: p = |in| - ceil(t·|in|) + 1
     probe = arrs.select(
         F.col("doc_id").alias("d_in"),
         F.size("grams").alias("sz_in"),
-        F.explode(
-            F.expr(
-                f"slice(grams, 1, CAST(size(grams) - ceil({threshold!r} * "
-                f"size(grams) - 1e-9) + 1 AS INT))"
-            )
-        ).alias("tok"),
+        F.explode(_prefix(threshold)).alias("tok"),
     )
     posting = arrs.select(
         F.col("doc_id").alias("d_out"),
@@ -1162,17 +1096,25 @@ def hamming_near_dup(
     b = banded.select(
         F.col("media_id").alias("d2"), F.col("phash").alias("_h2"), "band", "bits"
     )
-    cand = (
-        a.join(b, ["band", "bits"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", "_h1", "_h2")
+    cand = a.join(b, ["band", "bits"]).filter(F.col("d1") < F.col("d2"))
+    return _within_hamming(cand, "d1", "d2", max_hamming)
+
+
+def _within_hamming(
+    cand: DataFrame, left: str, right: str, max_hamming: int
+) -> DataFrame:
+    """Distinct (left, right) band-join candidates with the Hamming
+    distance of their hashes ``_h1``/``_h2``, kept within the bound."""
+    return (
+        cand.select(left, right, "_h1", "_h2")
         .distinct()
+        .select(
+            left,
+            right,
+            F.bit_count(F.col("_h1").bitwiseXOR(F.col("_h2"))).alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
     )
-    return cand.select(
-        "d1",
-        "d2",
-        F.bit_count(F.col("_h1").bitwiseXOR(F.col("_h2"))).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 def build_phash_index(
@@ -1198,40 +1140,16 @@ def build_phash_index(
     instead of re-decoding the archive.  A params sidecar pins
     (n_bands, band_bits, id_type) and mismatched probes are refused.
     """
-    import json
-
-    from ..fsutil import write_text
-
-    banded = _banded_hashes(hashes, n_bands, band_bits, id_col, hash_col)
-    banded.write.mode("overwrite").partitionBy("band").parquet(path)
-    write_text(
-        hashes.sparkSession,
-        path.rstrip("/") + "/_phash_index.json",
-        json.dumps(
-            {
-                "n_bands": n_bands,
-                "band_bits": band_bits,
-                "id_type": hashes.schema[id_col].dataType.simpleString(),
-            }
-        ),
+    index_store.write(
+        _banded_hashes(hashes, n_bands, band_bits, id_col, hash_col),
+        path,
+        index_store.PHASH,
+        {
+            "n_bands": n_bands,
+            "band_bits": band_bits,
+            "id_type": index_store.id_type(hashes, id_col),
+        },
     )
-
-
-def _phash_index_params(spark, path: str) -> dict:
-    import json
-
-    from ..fsutil import read_text
-
-    return json.loads(read_text(spark, path.rstrip("/") + "/_phash_index.json"))
-
-
-def _read_phash_index(spark, path: str, params: dict) -> DataFrame:
-    # schema-explicit for the empty-bootstrap case (same contract as
-    # _read_lsh_index)
-    id_type = params.get("id_type", "bigint")
-    return spark.read.schema(
-        f"media_id {id_type}, phash bigint, bits bigint, band int"
-    ).parquet(path)
 
 
 def phash_index_query(
@@ -1247,7 +1165,7 @@ def phash_index_query(
     Hamming bound.  Only the probe batch is banded; the corpus side is
     the index scan joined per (band, bits) — incremental image dedup
     whose cost tracks the batch, not the archive."""
-    p = _phash_index_params(spark, path)
+    p = index_store.params(spark, path, index_store.PHASH)
     if not 0 <= max_hamming < p["n_bands"]:
         raise ValueError(
             f"max_hamming {max_hamming} breaks the pigeonhole guarantee "
@@ -1261,27 +1179,14 @@ def phash_index_query(
         "band",
         "bits",
     )
-    corpus = _without_tombstoned(
-        spark,
-        path,
-        _read_phash_index(spark, path, p).select(
-            F.col("media_id").alias("corpus_id"),
-            F.col("phash").alias("_h2"),
-            "band",
-            "bits",
-        ),
-        "corpus_id",
+    corpus = index_store.live(spark, path, index_store.PHASH, p).select(
+        F.col("media_id").alias("corpus_id"),
+        F.col("phash").alias("_h2"),
+        "band",
+        "bits",
     )
-    cand = (
-        probe.join(corpus, ["band", "bits"])
-        .select("probe_id", "corpus_id", "_h1", "_h2")
-        .distinct()
-    )
-    return cand.select(
-        "probe_id",
-        "corpus_id",
-        F.bit_count(F.col("_h1").bitwiseXOR(F.col("_h2"))).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
+    cand = probe.join(corpus, ["band", "bits"])
+    return _within_hamming(cand, "probe_id", "corpus_id", max_hamming)
 
 
 def append_to_phash_index(
@@ -1295,16 +1200,13 @@ def append_to_phash_index(
     partitions — ingest cost tracks the batch.  Typical loop:
     ``phash_index_query`` the batch first (dedup against the archive),
     then append the survivors."""
-    p = _phash_index_params(hashes.sparkSession, path)
-    batch_t = hashes.schema[id_col].dataType.simpleString()
-    if batch_t != p.get("id_type", "bigint"):
-        raise ValueError(
-            f"batch id type {batch_t!r} does not match the index's pinned "
-            f"id_type {p.get('id_type', 'bigint')!r} — appending it would "
-            f"corrupt the schema-explicit index read"
-        )
-    banded = _banded_hashes(hashes, p["n_bands"], p["band_bits"], id_col, hash_col)
-    banded.write.mode("append").partitionBy("band").parquet(path)
+    p = index_store.params(hashes.sparkSession, path, index_store.PHASH)
+    index_store.append(
+        _banded_hashes(hashes, p["n_bands"], p["band_bits"], id_col, hash_col),
+        path,
+        index_store.PHASH,
+        p,
+    )
 
 
 def set_jaccard_pairs(
@@ -1347,171 +1249,6 @@ def set_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("d1", "d2", "inter", "n1", "n2", "jaccard")
     )
-
-
-def _tombstone_dir(path: str) -> str:
-    # underscore prefix: Spark's scans treat _-prefixed paths as hidden,
-    # so tombstones never leak into the index read itself
-    return path.rstrip("/") + "/_tombstones"
-
-
-def add_index_tombstones(spark, path: str, ids: DataFrame) -> None:
-    """Takedown support for the persisted-index family (LSH, pHash):
-    record ids whose content must stop matching — effective at the NEXT
-    query, without rewriting a single index partition.
-
-    Queries anti-join the (small) tombstone set against their corpus
-    side; the rows stay on disk until ``purge_index_tombstones``
-    rewrites them away.  This is the soft-delete + compaction design
-    every append-only store uses for right-to-be-forgotten: takedown
-    latency is one small parquet append, physical deletion is a
-    schedulable maintenance pass.  ``ids`` is a one-column DataFrame
-    (any id type — matched by value against the index's id column).
-    """
-    ids.toDF("id").write.mode("append").parquet(_tombstone_dir(path))
-
-
-def _read_tombstones(spark, path: str) -> DataFrame | None:
-    from .. import fsutil
-
-    td = _tombstone_dir(path)
-    # Hadoop FS probe, not os.listdir: the index (and so its tombstone
-    # dir) can live on any supported filesystem — a local probe would
-    # silently ignore takedowns on s3a://hdfs:// paths
-    if not fsutil.has_parquet_files(spark, td):
-        return None
-    return spark.read.parquet(td)
-
-
-def _without_tombstoned(
-    spark, path: str, df: DataFrame, id_expr: str
-) -> DataFrame:
-    ts = _read_tombstones(spark, path)
-    if ts is None:
-        return df
-    # cast to the index column's exact type: an equi-join between a
-    # long tombstone and a string id would otherwise coerce both sides
-    # to double and match lossily above 2^53
-    ids = ts.select(
-        F.col("id").cast(df.schema[id_expr].dataType).alias(id_expr)
-    ).distinct()
-    return df.join(F.broadcast(ids), id_expr, "left_anti")
-
-
-_INDEX_ID_COLS = ("media_id", "doc_id", "neighbor_id")
-
-
-def purge_index_tombstones(spark, path: str) -> dict:
-    """Physically remove tombstoned rows from a partitioned index
-    (LSH/pHash: ``band``; BM25 postings: ``bucket``; IVF/IVFADC:
-    ``bucket`` with ``neighbor_id``): staged rewrite minus the
-    tombstone set, sidecar files carried across, tombstones cleared
-    after the swap.  The partition layout is read from the index's own
-    ``key=value`` directories and the id column is the one of
-    ``media_id`` / ``doc_id`` / ``neighbor_id`` the index holds.  A
-    BM25 ``_corpus_stats.json`` sidecar is adjusted by the purged docs'
-    lengths (exact for every doc that had at least one posting — docs
-    the index never saw keep contributing to the global stats, which
-    only the next full rebuild reclaims).
-
-    Returns {"tombstones_cleared", "rows_before", "rows_after",
-    "rows_purged"} — ``tombstones_cleared`` counts distinct tombstone
-    ids (including ids the index never held); ``rows_purged`` is the
-    actual row delta.  The after-count rides the rewrite job as an
-    ``observe`` metric (no output re-scan); the post-swap readability
-    check is a schema-explicit ``limit(1)`` so a fully-purged (empty)
-    index neither crashes schema inference nor aborts the swap.  Same
-    single-writer non-transactional contract as
-    ``sinks.writer.compact_table``.
-    """
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import Observation
-
-    from .. import fsutil
-
-    ts = _read_tombstones(spark, path)
-    if ts is None:
-        return {
-            "tombstones_cleared": 0,
-            "rows_before": 0,
-            "rows_after": 0,
-            "rows_purged": 0,
-        }
-    df = spark.read.parquet(path)
-    id_col = next((c for c in df.columns if c in _INDEX_ID_COLS), None)
-    if id_col is None:
-        raise ValueError(
-            f"no known id column in index at {path} (columns {df.columns})"
-        )
-    partition_cols = fsutil.partition_columns(spark, path)
-    before = df.count()
-    ts_ids = F.broadcast(
-        ts.select(
-            F.col("id").cast(df.schema[id_col].dataType).alias(id_col)
-        ).distinct()
-    )
-    kept = df.join(ts_ids, id_col, "left_anti")
-
-    stats_path = path.rstrip("/") + "/_corpus_stats.json"
-    new_stats = None
-    if fsutil.exists(spark, stats_path) and "dl" in df.columns:
-        removed = (
-            df.join(ts_ids, id_col, "left_semi")
-            .select(id_col, "dl")
-            .distinct()
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
-            )
-            .first()
-        )
-        stats = json.loads(fsutil.read_text(spark, stats_path))
-        stats["n_docs"] = int(stats["n_docs"]) - int(removed["n"])
-        stats["sum_len"] = int(stats["sum_len"]) - int(removed["s"])
-        new_stats = json.dumps(stats)
-
-    staging = path.rstrip("/") + ".__purge__"
-    obs = Observation("purge")
-    (
-        kept.observe(obs, F.count(F.lit(1)).alias("rows"))
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .parquet(staging)
-    )
-    after = int(obs.get["rows"])
-    if after == 0:
-        # partitionBy over zero rows writes no parquet files, which
-        # would leave the index un-inferable — stage one empty,
-        # schema-bearing file instead (partition col inlined)
-        spark.createDataFrame([], df.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-    n_ids = ts.select("id").distinct().count()
-    for f in os.listdir(path):
-        full = os.path.join(path, f)
-        if f.startswith("_") and os.path.isfile(full):
-            shutil.copy2(full, os.path.join(staging, f))
-    if new_stats is not None:
-        fsutil.write_text(
-            spark, staging.rstrip("/") + "/_corpus_stats.json", new_stats
-        )
-    old = path.rstrip("/") + ".__old__"
-    os.rename(path, old)
-    os.rename(staging, path)
-    # confirmed-readable check before dropping .__old__; schema-explicit
-    # so an empty index doesn't trip inference (recovery on failure:
-    # `mv path.__old__ path`)
-    spark.read.schema(df.schema).parquet(path).limit(1).collect()
-    shutil.rmtree(old)
-    return {
-        "tombstones_cleared": n_ids,
-        "rows_before": before,
-        "rows_after": after,
-        "rows_purged": before - after,
-    }
 
 
 # ---------------------------------------------------------------------------

@@ -55,8 +55,13 @@ this is part of the driver-mandated training-data extension brief
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import add
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import index_store
 
 K1_NUM, K1_DEN = 6, 5  # k1 = 1.2
 B_NUM, B_DEN = 3, 4  # b = 0.75
@@ -142,13 +147,16 @@ def bm25_topk(
             t_score = idf * tf / denom
         score = t_score if score is None else score + t_score
 
-    order = [F.col("score").desc(), F.col("doc_id").asc()]
-    topk = (
-        scored.select(F.col(id_col).alias("doc_id"), score.alias("score"))
-        .filter(F.col("score") > 0)
-        .orderBy(*order)
-        .limit(k)
+    return _ranked_topk(
+        scored.select(F.col(id_col).alias("doc_id"), score.alias("score")), k
     )
+
+
+def _ranked_topk(scores: DataFrame, k: int) -> DataFrame:
+    """(doc_id, score, rank) of the ``k`` best positive-score rows of
+    (doc_id, score), total order (score desc, doc_id asc)."""
+    order = [F.col("score").desc(), F.col("doc_id").asc()]
+    topk = scores.filter(F.col("score") > 0).orderBy(*order).limit(k)
     w = Window.orderBy(*order)  # ≤ k rows: single partition is fine
     return topk.select(
         "doc_id", "score", F.row_number().over(w).cast("int").alias("rank")
@@ -211,6 +219,32 @@ def _bucket_of_terms(spark, terms: list[str], n_buckets: int) -> dict[str, int]:
     return {r["term"]: int(r["bucket"]) for r in rows}
 
 
+def _postings(
+    docs: DataFrame, text_col: str, id_col: str, n_buckets: int
+) -> DataFrame:
+    """(term, doc_id, dl, tf, bucket) postings of ``docs`` — one row per
+    distinct (term, doc), the doc's length denormalized in."""
+    toks = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.size(F.split(F.col(text_col), " ")).alias("dl"),
+        F.explode(F.split(F.col(text_col), " ")).alias("term"),
+    )
+    return (
+        toks.groupBy("term", "doc_id", "dl")
+        .agg(F.count("*").alias("tf"))
+        .withColumn("bucket", F.abs(F.xxhash64("term")) % n_buckets)
+    )
+
+
+def _length_stats(docs: DataFrame, text_col: str) -> dict:
+    """{"n_docs", "sum_len"} of ``docs`` in one aggregate (0, 0 when empty)."""
+    stats = docs.agg(
+        F.count("*").alias("n"),
+        F.sum(F.size(F.split(F.col(text_col), " "))).alias("s"),
+    ).collect()[0]
+    return {"n_docs": int(stats["n"]), "sum_len": int(stats["s"] or 0)}
+
+
 def build_text_index(
     docs: DataFrame,
     path: str,
@@ -232,36 +266,15 @@ def build_text_index(
     64-way hash bucket (not by raw term) keeps the directory count
     fixed no matter how large the vocabulary grows.
     """
-    import json
-
-    from ..fsutil import write_text
-
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(F.split(F.col(text_col), " ")).alias("dl"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
-    )
-    postings = (
-        toks.groupBy("term", "doc_id", "dl")
-        .agg(F.count("*").alias("tf"))
-        .withColumn("bucket", F.abs(F.xxhash64("term")) % n_buckets)
-    )
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    stats = docs.agg(
-        F.count("*").alias("n"),
-        F.sum(F.size(F.split(F.col(text_col), " "))).alias("s"),
-    ).collect()[0]
-    write_text(
-        docs.sparkSession,
-        path.rstrip("/") + "/_corpus_stats.json",
-        json.dumps(
-            # stats["s"] is None on an EMPTY bootstrap build (the t=0 of
-            # continuous ingestion — appends fill it in); id_type pins
-            # the schema-explicit read for string/int ids alike
-            {"n_docs": int(stats["n"]), "sum_len": int(stats["s"] or 0),
-             "n_buckets": n_buckets,
-             "id_type": docs.schema[id_col].dataType.simpleString()}
-        ),
+    index_store.write(
+        _postings(docs, text_col, id_col, n_buckets),
+        path,
+        index_store.BM25,
+        # n_docs/sum_len are 0 on an EMPTY bootstrap build (the t=0 of
+        # continuous ingestion — appends fill them in); id_type pins
+        # the schema-explicit read for string/int ids alike
+        {**_length_stats(docs, text_col), "n_buckets": n_buckets,
+         "id_type": index_store.id_type(docs, id_col)},
     )
 
 
@@ -282,31 +295,15 @@ def bm25_index_topk(
     result is bitwise identical to the inline two-scan plan (pytest
     parity + the shared DuckDB oracle).
     """
-    import json
-
-    from ..fsutil import read_text
-
-    stats = json.loads(read_text(spark, path.rstrip("/") + "/_corpus_stats.json"))
+    stats = index_store.params(spark, path, index_store.BM25)
     n, s = stats["n_docs"], stats["sum_len"]
     buckets = sorted(
         set(_bucket_of_terms(spark, query_terms, stats["n_buckets"]).values())
     )
-    # schema-explicit like the LSH index read: an EMPTY bootstrap index
-    # (continuous ingestion's t=0) has no files to infer from; doc_id's
-    # type comes from the stats sidecar (pre-pin indexes: bigint)
-    id_type = stats.get("id_type", "bigint")
-    from .dedup import _without_tombstoned
-
-    postings = _without_tombstoned(
-        spark,
-        path,
-        spark.read.schema(
-            f"term string, doc_id {id_type}, dl int, tf bigint, bucket int"
-        )
-        .parquet(path)
+    postings = (
+        index_store.live(spark, path, index_store.BM25, stats)
         .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term").isin(query_terms)),
-        "doc_id",
+        .filter(F.col("term").isin(query_terms))
     )
     # taken-down docs stop matching AND stop counting toward df here;
     # the global (n_docs, sum_len) stay pre-purge until
@@ -330,21 +327,8 @@ def bm25_index_topk(
     # a fixed order — bitwise equal to the inline scorer's term chain.
     agg_cols = [t_score(t).alias(f"s_{i}") for i, t in enumerate(query_terms)]
     per_doc = postings.groupBy("doc_id").agg(*agg_cols)
-    score: Column | None = None
-    for i in range(len(query_terms)):
-        c = F.col(f"s_{i}")
-        score = c if score is None else score + c
-    order = [F.col("score").desc(), F.col("doc_id").asc()]
-    topk = (
-        per_doc.select("doc_id", score.alias("score"))
-        .filter(F.col("score") > 0)
-        .orderBy(*order)
-        .limit(k)
-    )
-    w = Window.orderBy(*order)
-    return topk.select(
-        "doc_id", "score", F.row_number().over(w).cast("int").alias("rank")
-    )
+    score = reduce(add, [F.col(f"s_{i}") for i in range(len(query_terms))])
+    return _ranked_topk(per_doc.select("doc_id", score.alias("score")), k)
 
 
 def append_to_text_index(
@@ -367,43 +351,23 @@ def append_to_text_index(
     existing doc would double its postings, like any append-only log —
     dedup upstream, e.g. `start_crawl_dedup_stream`).
     """
-    import json
-
-    from ..fsutil import read_text, write_text
-
     spark = docs.sparkSession
-    stats = json.loads(read_text(spark, path.rstrip("/") + "/_corpus_stats.json"))
-    batch_t = docs.schema[id_col].dataType.simpleString()
-    if batch_t != stats.get("id_type", "bigint"):
-        raise ValueError(
-            f"batch id type {batch_t!r} does not match the index's pinned "
-            f"id_type {stats.get('id_type', 'bigint')!r} — appending it "
-            f"would corrupt the schema-explicit postings read"
-        )
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(F.split(F.col(text_col), " ")).alias("dl"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
+    stats = index_store.params(spark, path, index_store.BM25)
+    index_store.append(
+        _postings(docs, text_col, id_col, stats["n_buckets"]),
+        path,
+        index_store.BM25,
+        stats,
     )
-    postings = (
-        toks.groupBy("term", "doc_id", "dl")
-        .agg(F.count("*").alias("tf"))
-        .withColumn("bucket", F.abs(F.xxhash64("term")) % stats["n_buckets"])
-    )
-    postings.write.mode("append").partitionBy("bucket").parquet(path)
-    batch = docs.agg(
-        F.count("*").alias("n"),
-        F.sum(F.size(F.split(F.col(text_col), " "))).alias("s"),
-    ).collect()[0]
-    write_text(
+    batch = _length_stats(docs, text_col)
+    index_store.write_params(
         spark,
-        path.rstrip("/") + "/_corpus_stats.json",
-        json.dumps(
-            {
-                "n_docs": stats["n_docs"] + int(batch["n"]),
-                "sum_len": stats["sum_len"] + int(batch["s"] or 0),
-                "n_buckets": stats["n_buckets"],
-                "id_type": stats.get("id_type", "bigint"),
-            }
-        ),
+        path,
+        index_store.BM25,
+        {
+            "n_docs": stats["n_docs"] + batch["n_docs"],
+            "sum_len": stats["sum_len"] + batch["sum_len"],
+            "n_buckets": stats["n_buckets"],
+            "id_type": stats.get("id_type", "bigint"),
+        },
     )

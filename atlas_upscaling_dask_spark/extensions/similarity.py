@@ -25,7 +25,6 @@ casting elements to double, so results match bitwise.
 
 from __future__ import annotations
 
-import json
 from typing import NamedTuple
 
 import numpy as np
@@ -33,8 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..fsutil import read_text, write_text
-from .dedup import _without_tombstoned
+from . import index_store
 
 
 def _as_double(arr: Column) -> Column:
@@ -170,12 +168,9 @@ def _fixed_point_mean(frame: DataFrame, keys: list, vec: Column, precision_bits:
     )
 
 
-_SIDECAR = "/_ivf_centroids.json"  # a persisted IVF index's JSON sidecar
-
-
 def _ivf_sidecar(spark, path: str) -> dict:
     """A persisted IVF index's JSON sidecar, centroids as a float64 matrix."""
-    side = json.loads(read_text(spark, path.rstrip("/") + _SIDECAR))
+    side = index_store.params(spark, path, index_store.IVF)
     side["centroids"] = np.asarray(side["centroids"], dtype=np.float64)
     return side
 
@@ -185,11 +180,8 @@ def _probed_buckets(spark, path: str, q: _Queries) -> DataFrame:
     over the partition column, so unprobed bucket directories are never
     listed or read (PartitionFilters) — minus tombstoned ids."""
     probed = sorted({b for bs in q.probes for b in bs})
-    return _without_tombstoned(
-        spark,
-        path,
-        spark.read.parquet(path).filter(F.col("bucket").isin(probed)),
-        "neighbor_id",  # the indexed layout's id column
+    return index_store.live(spark, path, index_store.IVF, {}).filter(
+        F.col("bucket").isin(probed)
     )
 
 
@@ -476,8 +468,6 @@ def build_ivf_index(
     cents = _lloyd_centroids(
         corpus, _unit_rows(seeds[:n_centroids]), refine_iters, vec_col=vec_col
     )
-    assigned = _assign_buckets(corpus, cents, id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("bucket").parquet(path)
     side = {
         "n_centroids": int(cents.shape[0]),
         "dim": int(cents.shape[1]),
@@ -490,7 +480,9 @@ def build_ivf_index(
                 corpus, pq_books, pq_refine_iters, vec_col=vec_col
             )
         side["pq_books"] = pq_books
-    write_text(corpus.sparkSession, path.rstrip("/") + _SIDECAR, json.dumps(side))
+    index_store.write(
+        _assign_buckets(corpus, cents, id_col, vec_col), path, index_store.IVF, side
+    )
 
 
 def ivf_index_topk(
@@ -1216,9 +1208,13 @@ def append_to_ivf_index(
     (pytest parity).  Centroids are deliberately not re-fit here; when
     drift warrants it, rebuild (the FAISS operational convention).
     """
-    cents = _ivf_sidecar(vectors.sparkSession, path)["centroids"]
-    assigned = _assign_buckets(vectors, cents, id_col, vec_col)
-    assigned.write.mode("append").partitionBy("bucket").parquet(path)
+    side = _ivf_sidecar(vectors.sparkSession, path)
+    index_store.append(
+        _assign_buckets(vectors, side["centroids"], id_col, vec_col),
+        path,
+        index_store.IVF,
+        side,
+    )
 
 
 def knn_graph_mutual(

@@ -1,4 +1,4 @@
-"""Small-file text I/O through the JVM Hadoop FileSystem API.
+"""Small-file I/O and directory swaps through the JVM Hadoop FileSystem API.
 
 Index builders persist tiny JSON sidecars (LSH params, BM25 corpus
 stats, IVF centroids, volume metadata) next to their parquet data.  The
@@ -7,7 +7,8 @@ parquet goes through Spark's Hadoop FileSystem, so the sidecar must too
 object stores (s3a://, hdfs://, ...).  These helpers route the bytes
 through the same FileSystem the data files use, resolved from the
 active Hadoop configuration, so a sidecar lands wherever its index
-lands.
+lands.  ``read_json``/``write_json`` are the one sidecar codec and
+``staged_swap`` the one staged table rewrite (compaction, purge).
 
 Sidecar names start with ``_`` so Spark's default PathFilter hides them
 from the sibling dataset's file listing.
@@ -15,7 +16,13 @@ from the sibling dataset's file listing.
 
 from __future__ import annotations
 
+import json
+from collections.abc import Callable
+from typing import TypeVar
+
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -52,25 +59,84 @@ def list_names(spark: SparkSession, directory: str) -> list[str]:
     return [st.getPath().getName() for st in fs.listStatus(jpath)]
 
 
-def has_parquet_files(spark: SparkSession, directory: str) -> bool:
-    """True iff ``directory`` exists and directly contains at least one
-    visible ``*.parquet`` file."""
-    return any(
-        name.endswith(".parquet") and not name.startswith(("_", "."))
-        for name in list_names(spark, directory)
-    )
-
-
-def read_text(spark: SparkSession, path: str) -> str:
-    """Read ``path`` as UTF-8 text via Hadoop FS."""
+def read_json(spark: SparkSession, path: str):
+    """Parse the UTF-8 JSON sidecar at ``path`` via Hadoop FS."""
     fs, jpath, conf, jvm = _fs_and_path(spark, path)
     stream = fs.open(jpath)
     try:
         baos = jvm.java.io.ByteArrayOutputStream()
         jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, conf, False)
-        return bytes(baos.toByteArray()).decode("utf-8")
+        return json.loads(bytes(baos.toByteArray()).decode("utf-8"))
     finally:
         stream.close()
+
+
+def write_json(spark: SparkSession, path: str, obj, indent: int | None = None) -> None:
+    """Serialize ``obj`` as the JSON sidecar at ``path`` (overwriting)."""
+    write_text(spark, path, json.dumps(obj, indent=indent))
+
+
+def data_file_sizes(spark: SparkSession, directory: str) -> list[int]:
+    """Byte sizes of the ``*.parquet`` data files under ``directory``
+    (``[]`` when it does not exist), skipping hidden (``_``/``.``)
+    entries such as a tombstone set."""
+    fs, jpath, _, _ = _fs_and_path(spark, directory)
+    sizes: list[int] = []
+    todo = [jpath] if fs.exists(jpath) else []
+    while todo:
+        for st in fs.listStatus(todo.pop()):
+            name = st.getPath().getName()
+            if name.startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                todo.append(st.getPath())
+            elif name.endswith(".parquet"):
+                sizes.append(int(st.getLen()))
+    return sizes
+
+
+def staged_swap(
+    spark: SparkSession,
+    path: str,
+    stage: str,
+    write: Callable[[str], None],
+    check: Callable[[], T],
+    drop: tuple[str, ...] = (),
+) -> T:
+    """Replace the table at ``path`` by the one ``write(path + stage)``
+    writes, carrying over hidden ``_`` entries (sidecars, tombstones)
+    the staged write lacks, except those in ``drop``.  Two renames swap
+    the staging in; ``path.__old__`` is deleted only after ``check()``
+    (whose value is returned) passed.  Single writer, NOT transactional:
+    a crash between the renames leaves the data in ``path.__old__``
+    (recovery: ``mv path.__old__ path``; a left-over one refuses the
+    next swap), and readers can error in the rename window.
+    """
+    base = path.rstrip("/")
+    fs, jpath, conf, jvm = _fs_and_path(spark, base)
+    Path = jvm.org.apache.hadoop.fs.Path
+    staging, old = Path(base + stage), Path(base + ".__old__")
+    if fs.exists(old):
+        raise FileExistsError(
+            f"{base}.__old__ exists: an earlier swap of {base} did not "
+            f"finish (recovery: move it back to {base})"
+        )
+    write(base + stage)
+    staged = set(list_names(spark, base + stage))
+    for st in fs.listStatus(jpath):
+        name = st.getPath().getName()
+        if name.startswith("_") and name not in staged and name not in drop:
+            jvm.org.apache.hadoop.fs.FileUtil.copy(
+                fs, st.getPath(), fs, Path(staging, name), False, conf
+            )
+    for src, dst in ((jpath, old), (staging, jpath)):
+        if not fs.rename(src, dst):
+            raise OSError(f"could not rename {src} to {dst}")
+    # keep .__old__ until the swapped-in table is confirmed readable —
+    # if this check throws, recovery is `mv path.__old__ path`
+    out = check()
+    fs.delete(old, True)
+    return out
 
 
 def partition_columns(spark: SparkSession, path: str) -> tuple[str, ...]:

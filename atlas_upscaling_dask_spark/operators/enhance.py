@@ -132,6 +132,7 @@ def write_enhance_pyramid(
         (out_meta.spacing_z, out_meta.spacing_y, out_meta.spacing_x), 1, levels
     )
     write_sidecar(
+        spark,
         path,
         out_meta,
         scale=scale,

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import fsutil
+
 #: sequence number assigned to base-snapshot rows; any real change wins.
 BASE_SEQ = -1
 
@@ -240,6 +242,9 @@ def table_diff(
     return out
 
 
+_SCD2_SIDECAR = "/_scd2_table.json"  # a persisted SCD2 table's params
+
+
 def write_scd2_table(
     changes: DataFrame,
     path: str,
@@ -256,42 +261,32 @@ def write_scd2_table(
     overwrite), never the whole history.  A params sidecar pins the
     layout; 100 TB of dimension history updates at O(touched buckets).
     """
-    import json
-
-    from ..fsutil import write_text
-
     hist = scd2_build(changes, key_col, attr_cols, ts_col, tiebreak_cols)
     out = hist.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
     )
     out.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    write_text(
+    fsutil.write_json(
         changes.sparkSession,
-        path.rstrip("/") + "/_scd2_table.json",
-        json.dumps(
-            {
-                "key_col": key_col,
-                "attr_cols": list(attr_cols),
-                "n_buckets": n_buckets,
-                "key_type": changes.schema[key_col].dataType.simpleString(),
-                # pinned so a freshly-bootstrapped EMPTY table (no
-                # parquet files yet) still reads — same contract as
-                # the persisted-index family's schema-explicit scans
-                "attr_types": {
-                    c: changes.schema[c].dataType.simpleString()
-                    for c in attr_cols
-                },
-            }
-        ),
+        path.rstrip("/") + _SCD2_SIDECAR,
+        {
+            "key_col": key_col,
+            "attr_cols": list(attr_cols),
+            "n_buckets": n_buckets,
+            "key_type": changes.schema[key_col].dataType.simpleString(),
+            # pinned so a freshly-bootstrapped EMPTY table (no
+            # parquet files yet) still reads — same contract as
+            # the persisted-index family's schema-explicit scans
+            "attr_types": {
+                c: changes.schema[c].dataType.simpleString()
+                for c in attr_cols
+            },
+        },
     )
 
 
 def _scd2_params(spark, path: str) -> dict:
-    import json
-
-    from ..fsutil import read_text
-
-    return json.loads(read_text(spark, path.rstrip("/") + "/_scd2_table.json"))
+    return fsutil.read_json(spark, path.rstrip("/") + _SCD2_SIDECAR)
 
 
 def _read_scd2(spark, path: str, p: dict) -> DataFrame:

@@ -14,8 +14,6 @@ from it (fixing the reference's per-level recompute, SURVEY.md §4.3.1).
 
 from __future__ import annotations
 
-import json
-import os
 import time
 from collections.abc import Iterator
 
@@ -61,18 +59,15 @@ def write_volume(
     for c in bloom_filter_cols:
         writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
     writer.partitionBy("cz").parquet(path)
-    write_sidecar(path, meta, scale=scale, compressor=compressor)
+    write_sidecar(chunks.sparkSession, path, meta, scale=scale, compressor=compressor)
 
 
-def write_sidecar(path: str, meta: VolumeMeta, **extra) -> None:
+def write_sidecar(spark, path: str, meta: VolumeMeta, **extra) -> None:
     """K5 — JSON provenance sidecar (upscale_streaming.py:130-140).
 
-    Routed through the Hadoop FileSystem so the sidecar lands on the
-    same store as the chunk parquet (s3a/hdfs/local alike)."""
-    from pyspark.sql import SparkSession
-
-    from ..fsutil import write_text
-
+    Routed through the Hadoop FileSystem of ``spark`` (the session of
+    the frame just written) so the sidecar lands on the same store as
+    the chunk parquet (s3a/hdfs/local alike)."""
     payload = {
         "source": meta.source,
         "dims_zyx": list(meta.shape),
@@ -81,13 +76,9 @@ def write_sidecar(path: str, meta: VolumeMeta, **extra) -> None:
         "written_unix": int(time.time()),
         **extra,
     }
-    spark = SparkSession.getActiveSession()
-    text = json.dumps(payload, indent=2)
-    if spark is not None:
-        write_text(spark, path.rstrip("/") + "/_volume_meta.json", text)
-    else:  # no active session (plain tooling context): local file
-        with open(os.path.join(path, "_volume_meta.json"), "w") as fh:
-            fh.write(text)
+    fsutil.write_json(
+        spark, path.rstrip("/") + "/_volume_meta.json", payload, indent=2
+    )
 
 
 def write_pyramid(
@@ -130,6 +121,7 @@ def write_pyramid(
         (meta.spacing_z, meta.spacing_y, meta.spacing_x), 1, levels
     )
     write_sidecar(
+        voxels.sparkSession,
         path,
         meta,
         scale=scale,
@@ -156,90 +148,42 @@ def compact_table(
     own ``key=value`` directories, so a partitioned index is never
     rewritten flat (after a flat rewrite and one append, an index
     query reads only the appended partition directories and misses
-    every compacted row).  The rewrite stages into a sibling directory and
-    swaps via two renames.  **This is NOT transactional** — it assumes a
-    single writer on a local POSIX filesystem (``os.rename`` fails
-    across filesystems and on most object stores, and each rename is
-    only individually atomic):
-
-    * a crash between the two renames leaves the table ABSENT at
-      ``path`` with all data intact in ``path.__old__`` — recovery is
-      ``mv path.__old__ path`` (the old directory is only deleted after
-      the new path is confirmed readable);
-    * concurrent readers can error during the rename window; schedule
-      compaction when the table is quiet (real multi-writer semantics
-      need a table format with a transaction log — Delta/Iceberg).
+    every compacted row).  The swap is ``fsutil.staged_swap`` (staged
+    in ``path.__compact__``; sidecars and an index's ``_tombstones``
+    kept — dropping them would revoke every pending takedown), with
+    its single-writer, non-transactional contract.
 
     File count is sized from the table's actual on-disk bytes, not row
     counts, so heavily compressed columns don't over-split.
 
     Returns {"files_before", "files_after", "bytes"}.
     """
-    import shutil
-
-    def _data_files(d: str) -> list[str]:
-        out = []
-        for root, dirs, files in os.walk(d):
-            # prune hidden subtrees (_tombstones etc.) — their parquet
-            # is metadata, not table data, and must not skew sizing
-            dirs[:] = [s for s in dirs if not s.startswith(("_", "."))]
-            out += [
-                os.path.join(root, f)
-                for f in files
-                if f.endswith(".parquet") and not f.startswith("_")
-            ]
-        return out
-
-    before = _data_files(path)
-    total_bytes = sum(os.path.getsize(f) for f in before)
+    before = fsutil.data_file_sizes(spark, path)
+    total_bytes = sum(before)
     n_files = max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
-    sidecars = [
-        f
-        for f in os.listdir(path)
-        if f.startswith("_") and os.path.isfile(os.path.join(path, f))
-    ]
-    # hidden directories (e.g. a persisted index's _tombstones) must
-    # survive the swap too — dropping them would silently revoke every
-    # pending takedown
-    sidecar_dirs = [
-        f
-        for f in os.listdir(path)
-        if f.startswith("_") and os.path.isdir(os.path.join(path, f))
-    ]
-
     df = spark.read.parquet(path)
     partition_cols = fsutil.partition_columns(spark, path)
-    staging = path.rstrip("/") + ".__compact__"
-    if partition_cols:
-        # repartition by the layout key so each output partition dir
-        # gets whole files, then let the writer re-split directories
-        writer = (
-            df.repartition(int(n_files), *[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-        )
-    else:
-        writer = df.repartition(int(n_files)).write.mode("overwrite")
-    writer.parquet(staging)
-    for s in sidecars:  # carry JSON sidecars across the swap
-        shutil.copy2(os.path.join(path, s), os.path.join(staging, s))
-    for s in sidecar_dirs:  # and hidden dirs (tombstones, ...)
-        shutil.copytree(os.path.join(path, s), os.path.join(staging, s))
-    old = path.rstrip("/") + ".__old__"
-    os.rename(path, old)
-    os.rename(staging, path)
-    # keep .__old__ until the swapped-in table is confirmed readable —
-    # if this check throws, recovery is `mv path.__old__ path`
-    after = _data_files(path)
-    if not after:
-        raise RuntimeError(
-            f"compaction swap produced no data files at {path}; "
-            f"original preserved at {old}"
-        )
-    shutil.rmtree(old)
+
+    def write(staging: str) -> None:
+        # repartition by the layout key (if any) so each output partition
+        # dir gets whole files, then let the writer re-split directories
+        df.repartition(int(n_files), *map(F.col, partition_cols)).write.mode(
+            "overwrite"
+        ).partitionBy(*partition_cols).parquet(staging)
+
+    def check() -> int:
+        after = fsutil.data_file_sizes(spark, path)
+        if not after:
+            raise RuntimeError(
+                f"compaction swap produced no data files at {path}; "
+                f"original preserved at {path.rstrip('/')}.__old__"
+            )
+        return len(after)
+
+    files_after = fsutil.staged_swap(spark, path, ".__compact__", write, check)
     return {
         "files_before": len(before),
-        "files_after": len(after),
+        "files_after": files_after,
         "bytes": total_bytes,
     }
 

@@ -667,15 +667,15 @@ def crawl_dedup_batch(
     """
     from pyspark.sql import functions as F
 
+    from ..extensions import index_store
     from ..extensions.dedup import (
-        _lsh_index_params,
         append_to_lsh_index,
         lsh_index_query,
         minhash_lsh_pairs,
     )
 
     def plan(batch: DataFrame):
-        p = _lsh_index_params(spark, index_path)
+        p = index_store.params(spark, index_path, index_store.LSH)
         vs_corpus = (
             lsh_index_query(
                 spark, index_path, batch, min_est_sim, text_col, id_col
@@ -745,21 +745,10 @@ def _screened_ingest_batch(
     replay — the standard at-least-once caveat of non-transactional
     appends.
     """
-    from ..fsutil import read_text, write_text
-
     def _marker(step: str) -> str | None:
         if marker_dir is None:
             return None
         return f"{marker_dir.rstrip('/')}/_append_{int(epoch_id)}.{step}.done"
-
-    def _done(path: str | None) -> bool:
-        if path is None:
-            return False
-        try:
-            read_text(spark, path)
-            return True
-        except Exception:  # noqa: BLE001 — missing marker == not done
-            return False
 
     if batch_df.isEmpty():
         return
@@ -774,10 +763,10 @@ def _screened_ingest_batch(
     if not survivors.isEmpty():
         for step, fn in appends:
             mark = _marker(step)
-            if not _done(mark):
+            if mark is None or not fsutil.exists(spark, mark):
                 fn(survivors)
                 if mark:
-                    write_text(spark, mark, "done")
+                    fsutil.write_text(spark, mark, "done")
 
 
 def start_image_dedup_stream(

@@ -2182,6 +2182,7 @@ def test_build_ivf_pq_index_collects_seeds_once(spark, emb, tmp_path, monkeypatc
     # give when each collects its own seeds
     import json
 
+    from atlas_upscaling_dask_spark.extensions import index_store
     from atlas_upscaling_dask_spark.extensions import similarity as S
 
     cents = S.kmeans_centroids(emb, 8, 1)
@@ -2199,7 +2200,7 @@ def test_build_ivf_pq_index_collects_seeds_once(spark, emb, tmp_path, monkeypatc
     idx = str(tmp_path / "ivfpq_once")
     S.build_ivf_index(emb, idx, n_centroids=8, refine_iters=1, pq=True, pq_m=4, pq_k_sub=16)
     assert calls == [16]
-    with open(idx + S._SIDECAR) as fh:
+    with open(f"{idx}/{index_store.IVF.sidecar}") as fh:
         assert fh.read() == want
 
 
@@ -2808,6 +2809,45 @@ def test_compaction_preserves_pending_tombstones(spark, tmp_path):
     probe = spark.createDataFrame([(100, 1 << 4)], "media_id long, phash long")
     hits = {r["corpus_id"] for r in phash_index_query(spark, idx, probe).collect()}
     assert 4 not in hits
+
+
+def test_phash_index_maintenance_at_file_uri_matches_plain_path(spark, tmp_path):
+    # tombstone purge and compaction swap directories through the
+    # Hadoop FileSystem, so an index at a file:// URI is maintained
+    # exactly like one at a plain path and leaves no staging behind
+    from atlas_upscaling_dask_spark.extensions.dedup import (
+        add_index_tombstones,
+        build_phash_index,
+        phash_index_query,
+        purge_index_tombstones,
+    )
+    from atlas_upscaling_dask_spark.sinks.writer import compact_table
+
+    hashes = spark.createDataFrame(
+        [(i, (1 << i) | (1 << (i + 20))) for i in range(8)],
+        "media_id long, phash long",
+    )
+    probe = spark.createDataFrame(
+        [(100 + i, 1 << i) for i in range(8)], "media_id long, phash long"
+    )
+
+    def run(idx: str):
+        build_phash_index(hashes, idx)
+        add_index_tombstones(spark, idx, spark.createDataFrame([(3,)], "id long"))
+        purged = purge_index_tombstones(spark, idx)
+        compacted = compact_table(spark, idx)
+        hits = sorted(
+            tuple(r) for r in phash_index_query(spark, idx, probe).collect()
+        )
+        return purged, compacted["files_after"] > 0, hits
+
+    plain = run(str(tmp_path / "plain" / "idx"))
+    uri = run((tmp_path / "uri" / "idx").as_uri())
+    assert uri == plain
+    assert plain[0]["rows_purged"] == 8  # one row per band
+    assert all(r[1] != 3 for r in plain[2]) and plain[2]
+    for d in ("plain", "uri"):
+        assert sorted(p.name for p in (tmp_path / d).iterdir()) == ["idx"]
 
 
 def test_tombstone_id_type_cast_matches_exactly(spark, tmp_path):

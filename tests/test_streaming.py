@@ -640,10 +640,8 @@ def test_image_dedup_batch_replay_is_lossless(spark, tmp_path):
     # filter plus the marker fence must keep output and index identical
     import numpy as np
 
-    from atlas_upscaling_dask_spark.extensions.dedup import (
-        _read_phash_index,
-        build_phash_index,
-    )
+    from atlas_upscaling_dask_spark.extensions import index_store
+    from atlas_upscaling_dask_spark.extensions.dedup import build_phash_index
     from atlas_upscaling_dask_spark.streaming.ingest import image_dedup_batch
 
     rng = np.random.default_rng(9)
@@ -662,7 +660,10 @@ def test_image_dedup_batch_replay_is_lossless(spark, tmp_path):
     first = sorted(
         r["media_id"] for r in spark.read.parquet(f"{out}/epoch=0").collect()
     )
-    n_index_rows = _read_phash_index(spark, idx, {"id_type": "bigint"}).count()
+    def n_index_rows() -> int:
+        return index_store.read(spark, idx, index_store.PHASH, {}).count()
+
+    n_before = n_index_rows()
     assert first == [0, 1, 2]
 
     image_dedup_batch(spark, batch, 0, idx, out, marker_dir=mark)  # replay
@@ -670,10 +671,7 @@ def test_image_dedup_batch_replay_is_lossless(spark, tmp_path):
         r["media_id"] for r in spark.read.parquet(f"{out}/epoch=0").collect()
     )
     assert again == first, "replay must not lose survivors to self-matches"
-    assert (
-        _read_phash_index(spark, idx, {"id_type": "bigint"}).count()
-        == n_index_rows
-    ), "marker fence must stop duplicate appends"
+    assert n_index_rows() == n_before, "marker fence must stop duplicate appends"
 
 
 def test_scd2_stream_maintains_history(spark, tmp_path):
